@@ -61,19 +61,22 @@ def _host_pspin() -> float:
             os.cpu_count() or 4)
     if n <= 1:
         return _spin_once()
+    procs: list = []
     try:
         q: mp.Queue = mp.Queue()
-        procs = [
-            mp.Process(target=_pspin_worker, args=(q,)) for _ in range(n)
-        ]
-        for p in procs:
+        for _ in range(n):
+            p = mp.Process(target=_pspin_worker, args=(q,), daemon=True)
             p.start()
+            procs.append(p)
         res = [q.get(timeout=60) for _ in range(n)]
-        for p in procs:
-            p.join(timeout=10)
         return statistics.median(res)
     except Exception:  # noqa: BLE001 — sentinel must never fail the bench
         return -1.0
+    finally:
+        for p in procs:
+            if p.is_alive():
+                p.terminate()
+            p.join(timeout=10)
 
 
 def main() -> None:

@@ -3801,7 +3801,8 @@ def src_iceberg_mor_debt(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics are exact under the single-join shape.  Reference analog:
     Velox applies delete files inside the scan node, never as a
     per-file join chain (gluten-iceberg/.../IcebergScanTransformer
-    .scala:44); measured flat in tools/mor_read_scaling.py."""
+    .scala:44); measured flat in tools/mor_read_scaling.py at commit
+    c2053ca."""
     import shutil
 
     from incubator_gluten_spark.sources import iceberg_v2 as v2

@@ -55,7 +55,12 @@ def get_session(
     cpus = _default_cpus()
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or max(cpus * 2, 8)
-    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # default: half the physical memory, at most 24g (the local driver JVM
+    # is also the executor; Python workers and the page cache need the rest)
+    half_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    driver_memory = driver_memory or os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(24, half_gib))}g"
+    )
 
     builder = (
         SparkSession.builder.master(master)

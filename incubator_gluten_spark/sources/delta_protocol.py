@@ -59,6 +59,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from incubator_gluten_spark.sources import table_core
+
 _LOG = "_delta_log"
 _CDF_KEY = "delta.enableChangeDataFeed"
 # Spark's StructField metadata key for column DEFAULT expressions (the
@@ -302,7 +304,8 @@ def resolve(spark: SparkSession, root: str, version: int | None = None) -> Snaps
 
 # Driver-state envelope: resolve() materializes every checkpoint action
 # on the driver at a measured ~1.3 KB RSS per file
-# (tools/delta_snapshot_scaling.py, SCALE.md) — ~2.6 GB at this bound.
+# (tools/delta_snapshot_scaling.py at commit c2053ca, SCALE.md) — ~2.6 GB
+# at this bound.
 # Past it, read paths route through resolve_pruned (distributed
 # reconstruction over the checkpoint parquet; only the pruned file list
 # is collected) and driver-state surfaces (DML, OPTIMIZE) refuse with a
@@ -1704,12 +1707,10 @@ def _write_actions(root: str, version: int, actions: Iterable[dict]) -> None:
     os.makedirs(_log_dir(root), exist_ok=True)
     actions = _assign_row_ids(root, version, list(actions))
     actions = _stamp_in_commit_timestamp(root, version, actions)
-    path = _commit_path(root, version)
-    if os.path.exists(path):
-        raise FileExistsError(f"commit {version} already exists (conflict)")
-    with open(path, "w") as f:
-        for a in actions:
-            f.write(json.dumps(a) + "\n")
+    table_core.put_if_absent(
+        _commit_path(root, version),
+        "".join(json.dumps(a) + "\n" for a in actions),
+    )
 
 
 def _footer_min_max(meta) -> dict:
@@ -3602,8 +3603,10 @@ def checkpoint(spark: SparkSession, root: str) -> dict:
             w.write_table(table({"add": adds}))
             n_actions += len(adds)
     shutil.move(tmp, _checkpoint_path(root, v))
-    with open(os.path.join(_log_dir(root), "_last_checkpoint"), "w") as f:
-        json.dump({"version": v, "size": n_actions}, f)
+    table_core.replace(
+        os.path.join(_log_dir(root), "_last_checkpoint"),
+        json.dumps({"version": v, "size": n_actions}),
+    )
     return {"version": v, "n_actions": n_actions}
 
 

@@ -39,6 +39,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.sources import table_core
+
 _HOODIE = ".hoodie"
 META_COLS = [
     "_hoodie_commit_time",
@@ -86,16 +88,26 @@ def _next_instant(root: str) -> str:
     return str(int(existing[-1]) + 1).zfill(17)
 
 
+def _three_phase(root: str, instant: str, action: str, body: dict) -> None:
+    """The timeline's three-phase write of every action (commit,
+    deltacommit, clean, rollback, savepoint, restore): requested ->
+    inflight markers, then the completed ``<instant>.<action>``, each
+    put-if-absent so a second writer of the same instant fails instead
+    of overwriting the first."""
+    path = os.path.join(_timeline_dir(root), f"{instant}.{action}")
+    for suffix in (".requested", ".inflight"):
+        table_core.put_if_absent(path + suffix, "{}")
+    table_core.put_if_absent(path, json.dumps(body))
+    for suffix in (".requested", ".inflight"):
+        os.remove(path + suffix)
+
+
 def _commit_instant(
     root: str, instant: str, stats: dict, extra_metadata: dict | None = None
 ) -> None:
     """Three-phase timeline commit: requested -> inflight -> commit.
     ``extra_metadata`` lands under the commit's ``extraMetadata`` map —
     where hudi's own streaming writers store their checkpoint key."""
-    tdir = _timeline_dir(root)
-    for suffix in (".requested", ".inflight"):
-        with open(os.path.join(tdir, f"{instant}.commit{suffix}"), "w") as f:
-            f.write("{}")
     body = {
         "partitionToWriteStats": stats,
         "operation": "upsert",
@@ -103,10 +115,7 @@ def _commit_instant(
     }
     if extra_metadata:
         body["extraMetadata"] = extra_metadata
-    with open(os.path.join(tdir, f"{instant}.commit"), "w") as f:
-        json.dump(body, f)
-    for suffix in (".requested", ".inflight"):
-        os.remove(os.path.join(tdir, f"{instant}.commit{suffix}"))
+    _three_phase(root, instant, "commit", body)
 
 
 def _base_files(root: str) -> list[tuple[str, str, str, str]]:
@@ -395,6 +404,23 @@ def _write_partitioned_groups(
     return stats
 
 
+def _init_table(
+    root: str, name: str, table_type: str, key_col: str, partition_col: str | None
+) -> None:
+    """Drop any table at ``root`` and lay down ``.hoodie`` with its
+    ``hoodie.properties``."""
+    shutil.rmtree(root, ignore_errors=True)
+    os.makedirs(_timeline_dir(root), exist_ok=True)
+    table_core.replace(
+        os.path.join(_timeline_dir(root), "hoodie.properties"),
+        f"hoodie.table.name={name}\n"
+        f"hoodie.table.type={table_type}\n"
+        "hoodie.table.version=6\n"
+        f"hoodie.table.recordkey.fields={key_col}\n"
+        + (f"hoodie.table.partition.fields={partition_col}\n" if partition_col else ""),
+    )
+
+
 def create_table(
     df: DataFrame,
     root: str,
@@ -404,20 +430,7 @@ def create_table(
 ) -> str:
     """Bootstrap a COW table: properties + first commit.  One file group
     per partition value (or one for the whole table)."""
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(_timeline_dir(root), exist_ok=True)
-    with open(os.path.join(_timeline_dir(root), "hoodie.properties"), "w") as f:
-        f.write(
-            f"hoodie.table.name={name}\n"
-            "hoodie.table.type=COPY_ON_WRITE\n"
-            "hoodie.table.version=6\n"
-            f"hoodie.table.recordkey.fields={key_col}\n"
-            + (
-                f"hoodie.table.partition.fields={partition_col}\n"
-                if partition_col
-                else ""
-            )
-        )
+    _init_table(root, name, "COPY_ON_WRITE", key_col, partition_col)
     spark = SparkSession.getActiveSession()
     instant = _next_instant(root)
     stats: dict[str, list] = {}
@@ -528,6 +541,11 @@ def _rewrite_file_groups(
         # the composite key can carry writer-escaped partition characters
         # (the old bare-fid key never did — md5/uuid hex)
         key_v = unescape_path_name(esc_v) or esc_v
+        if key_v not in by_fid:
+            raise HudiFormatError(
+                f"staged segment {seg!r} (key {key_v!r}) matches no "
+                "file group this write touched"
+            )
         raw, esc, fid_v = by_fid[key_v]
         names = sorted(
             n
@@ -659,17 +677,6 @@ def _next_service_instant(root: str) -> str:
     if not existing:
         return "20240101000000000"
     return str(int(existing[-1]) + 1).zfill(17)
-
-
-def _three_phase(root: str, instant: str, action: str, body: dict) -> None:
-    tdir = _timeline_dir(root)
-    for suffix in (".requested", ".inflight"):
-        with open(os.path.join(tdir, f"{instant}.{action}{suffix}"), "w") as f:
-            f.write("{}")
-    with open(os.path.join(tdir, f"{instant}.{action}"), "w") as f:
-        json.dump(body, f)
-    for suffix in (".requested", ".inflight"):
-        os.remove(os.path.join(tdir, f"{instant}.{action}{suffix}"))
 
 
 def clean_horizon(root: str) -> str | None:

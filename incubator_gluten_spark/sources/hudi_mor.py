@@ -58,7 +58,9 @@ from incubator_gluten_spark.sources.hudi_format import (
     META_COLS,
     HudiFormatError,
     _base_files,
+    _init_table,
     _properties,
+    _three_phase,
     _timeline_dir,
     _write_file_group,
     _write_partitioned_groups,
@@ -199,14 +201,9 @@ def _next_instant(root: str) -> str:
 
 
 def _commit_instant(root: str, instant: str, action: str, stats: dict) -> None:
-    tdir = _timeline_dir(root)
-    for suffix in (".requested", ".inflight"):
-        with open(os.path.join(tdir, f"{instant}{action}{suffix}"), "w") as f:
-            f.write("{}")
-    with open(os.path.join(tdir, f"{instant}{action}"), "w") as f:
-        json.dump({"partitionToWriteStats": stats, "operation": action[1:]}, f)
-    for suffix in (".requested", ".inflight"):
-        os.remove(os.path.join(tdir, f"{instant}{action}{suffix}"))
+    _three_phase(
+        root, instant, action, {"partitionToWriteStats": stats, "operation": action}
+    )
 
 
 def _log_files(root: str) -> list[tuple[str, str, str, int, str]]:
@@ -424,20 +421,7 @@ def create_table(
 ) -> str:
     """Bootstrap a MERGE_ON_READ table: base file groups exactly like
     the COW module, table type MOR."""
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(_timeline_dir(root), exist_ok=True)
-    with open(os.path.join(_timeline_dir(root), "hoodie.properties"), "w") as f:
-        f.write(
-            f"hoodie.table.name={name}\n"
-            "hoodie.table.type=MERGE_ON_READ\n"
-            "hoodie.table.version=6\n"
-            f"hoodie.table.recordkey.fields={key_col}\n"
-            + (
-                f"hoodie.table.partition.fields={partition_col}\n"
-                if partition_col
-                else ""
-            )
-        )
+    _init_table(root, name, "MERGE_ON_READ", key_col, partition_col)
     spark = SparkSession.getActiveSession()
     instant = _next_instant(root)
     # one distributed partitionBy write for every value (r7 verdict #4)
@@ -452,7 +436,7 @@ def create_table(
             ]
         }
     )
-    _commit_instant(root, instant, ".deltacommit", stats)
+    _commit_instant(root, instant, "deltacommit", stats)
     return instant
 
 
@@ -541,7 +525,7 @@ def upsert(spark: SparkSession, df: DataFrame, root: str, key_col: str) -> dict:
                 spark, inserts, root, "", uuid.uuid4().hex[:12], instant, key_col
             )
             stats.setdefault("", []).append(ws)
-    _commit_instant(root, instant, ".deltacommit", stats)
+    _commit_instant(root, instant, "deltacommit", stats)
     return {
         "instant": instant,
         "log_blocks_appended": len(accounting),
@@ -641,7 +625,7 @@ def compact(spark: SparkSession, root: str) -> dict:
         )
         n += 1
     shutil.rmtree(staging, ignore_errors=True)
-    _commit_instant(root, instant, ".commit", stats)
+    _commit_instant(root, instant, "commit", stats)
     return {"instant": instant, "file_groups_compacted": n}
 
 
@@ -675,7 +659,7 @@ def savepoint(root: str, instant: str | None = None) -> dict:
             os.path.relpath(p, root) for p in s["log_files"]
         )
     si = hf._next_service_instant(root)
-    hf._three_phase(
+    _three_phase(
         root,
         si,
         "savepoint",
@@ -738,7 +722,7 @@ def restore_to_savepoint(root: str, instant: str) -> dict:
         ):
             os.remove(os.path.join(tdir, name))
     ri = hf._next_service_instant(root)
-    hf._three_phase(
+    _three_phase(
         root,
         ri,
         "restore",

@@ -42,6 +42,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.sources import table_core
 from incubator_gluten_spark.sources.avro import read_container, write_container
 
 ADDED, EXISTING, DELETED = 1, 0, 2
@@ -286,12 +287,44 @@ _MANIFEST_LIST_SCHEMA = {
 # metadata resolution
 
 
+def _hint_path(root: str) -> str:
+    return os.path.join(_meta_dir(root), "version-hint.text")
+
+
+def _metadata_path(root: str, version: int) -> str:
+    return os.path.join(_meta_dir(root), f"v{version}.metadata.json")
+
+
+def _metadata_version(root: str) -> int:
+    """Current metadata version (0 before the first commit): the hint,
+    advanced past any newer ``vN.metadata.json``.  The put-if-absent of
+    the metadata file is the commit point, so a writer that died before
+    repointing the hint still committed (Iceberg's HadoopTableOperations
+    probes past a stale hint the same way)."""
+    try:
+        with open(_hint_path(root)) as f:
+            version = int(f.read().strip())
+    except FileNotFoundError:
+        version = 0
+    while os.path.exists(_metadata_path(root, version + 1)):
+        version += 1
+    return version
+
+
 def _current_metadata(root: str) -> dict:
-    hint = os.path.join(_meta_dir(root), "version-hint.text")
-    with open(hint) as f:
-        v = int(f.read().strip())
-    with open(os.path.join(_meta_dir(root), f"v{v}.metadata.json")) as f:
+    with open(_metadata_path(root, _metadata_version(root))) as f:
         return json.load(f)
+
+
+def _write_metadata(root: str, new_meta: dict) -> int:
+    """Commit ``new_meta`` as the next metadata version and return it:
+    put-if-absent ``v{N+1}.metadata.json``, then repoint the hint.
+    Snapshot commits and metadata-only commits each take the next
+    number (decoupled from snapshot ids)."""
+    version = _metadata_version(root) + 1
+    table_core.put_if_absent(_metadata_path(root, version), json.dumps(new_meta))
+    table_core.replace(_hint_path(root), str(version))
+    return version
 
 
 def _current_schema(meta: dict) -> dict:
@@ -327,14 +360,7 @@ def _commit_schema_evolution(
             for s in spec_fields
             if s.get("spec-id", 0) == meta.get("default-spec-id", 0)
         )
-    version = _next_version(root, meta)
-    with open(
-        os.path.join(_meta_dir(root), f"v{version}.metadata.json"), "w"
-    ) as f:
-        json.dump(new_meta, f)
-    with open(os.path.join(_meta_dir(root), "version-hint.text"), "w") as f:
-        f.write(str(version))
-    return version
+    return _write_metadata(root, new_meta)
 
 
 def _next_schema_id(meta: dict) -> int:
@@ -1449,16 +1475,6 @@ def _default_spec(meta: dict) -> dict:
     return _spec_by_id(meta, meta.get("default-spec-id", 0))
 
 
-def _next_version(root: str, meta: dict | None) -> int:
-    """Metadata file version: snapshot commits AND metadata-only schema
-    commits each take the next number (decoupled from snapshot ids)."""
-    if meta is None:
-        return 1
-    hint = os.path.join(_meta_dir(root), "version-hint.text")
-    with open(hint) as f:
-        return int(f.read().strip()) + 1
-
-
 def _commit_snapshot(
     root: str,
     meta: dict | None,
@@ -1564,13 +1580,7 @@ def _commit_snapshot(
         "refs": refs,
         "snapshots": (meta["snapshots"] if meta else []) + [snapshot],
     }
-    version = _next_version(root, meta)
-    with open(
-        os.path.join(_meta_dir(root), f"v{version}.metadata.json"), "w"
-    ) as f:
-        json.dump(new_meta, f)
-    with open(os.path.join(_meta_dir(root), "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _write_metadata(root, new_meta)
     return snapshot
 
 
@@ -1896,13 +1906,7 @@ def expire_snapshots(root: str, retain_last: int = 1) -> dict:
             pass
     new_meta = dict(meta)
     new_meta["snapshots"] = retained
-    version = _next_version(root, meta)
-    with open(
-        os.path.join(_meta_dir(root), f"v{version}.metadata.json"), "w"
-    ) as f:
-        json.dump(new_meta, f)
-    with open(os.path.join(_meta_dir(root), "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _write_metadata(root, new_meta)
     return {
         "expired_snapshot_ids": [s["snapshot-id"] for s in expired],
         "data_files_deleted": len(doomed_files),
@@ -2463,14 +2467,7 @@ def _commit_refs(root: str, meta: dict, refs: dict) -> int:
     """Metadata-only version with an updated refs map (no snapshot)."""
     new_meta = dict(meta)
     new_meta["refs"] = refs
-    version = _next_version(root, meta)
-    with open(
-        os.path.join(_meta_dir(root), f"v{version}.metadata.json"), "w"
-    ) as f:
-        json.dump(new_meta, f)
-    with open(os.path.join(_meta_dir(root), "version-hint.text"), "w") as f:
-        f.write(str(version))
-    return version
+    return _write_metadata(root, new_meta)
 
 
 def _make_ref(root: str, name: str, ref_type: str, snapshot_id: int | None) -> int:
@@ -2534,14 +2531,7 @@ def _commit_current(root: str, meta: dict, snapshot_id: int) -> int:
     snapshot, no data or manifest writes)."""
     new_meta = dict(meta)
     new_meta["current-snapshot-id"] = snapshot_id
-    version = _next_version(root, meta)
-    with open(
-        os.path.join(_meta_dir(root), f"v{version}.metadata.json"), "w"
-    ) as f:
-        json.dump(new_meta, f)
-    with open(os.path.join(_meta_dir(root), "version-hint.text"), "w") as f:
-        f.write(str(version))
-    return version
+    return _write_metadata(root, new_meta)
 
 
 def cherrypick_snapshot(
@@ -2735,14 +2725,7 @@ def evolve_partition_spec(root: str, partition_cols: list[str]) -> int:
     new_meta["partition-specs"] = list(meta["partition-specs"]) + [new_spec]
     new_meta["default-spec-id"] = new_spec_id
     new_meta["partition-spec"] = fields
-    version = _next_version(root, meta)
-    with open(
-        os.path.join(_meta_dir(root), f"v{version}.metadata.json"), "w"
-    ) as f:
-        json.dump(new_meta, f)
-    with open(os.path.join(_meta_dir(root), "version-hint.text"), "w") as f:
-        f.write(str(version))
-    return version
+    return _write_metadata(root, new_meta)
 
 
 # ---------------------------------------------------------------------------
@@ -2781,13 +2764,7 @@ def set_sort_order(root: str, cols: list[str]) -> int:
     new_meta = dict(meta)
     new_meta["sort-orders"] = orders
     new_meta["default-sort-order-id"] = order_id
-    version = _next_version(root, meta)
-    with open(
-        os.path.join(_meta_dir(root), f"v{version}.metadata.json"), "w"
-    ) as f:
-        json.dump(new_meta, f)
-    with open(os.path.join(_meta_dir(root), "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _write_metadata(root, new_meta)
     return order_id
 
 

@@ -36,7 +36,6 @@ SparkMicroBatchStream; semantics here are the public spec's.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Iterator
 
@@ -44,6 +43,12 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
+)
+
+from incubator_gluten_spark.sources.iceberg_format import (
+    _current_metadata,
+    _current_schema,
+    _default_spec,
 )
 
 __all__ = ["IcebergStreamDataSource", "register_iceberg_stream_source"]
@@ -55,13 +60,6 @@ def _opt(options: dict, *names: str, default: str = "") -> str:
             if k in options:
                 return options[k]
     return default
-
-
-def _current_meta(root: str) -> dict:
-    with open(os.path.join(root, "metadata", "version-hint.text")) as f:
-        v = int(f.read().strip())
-    with open(os.path.join(root, "metadata", f"v{v}.metadata.json")) as f:
-        return json.load(f)
 
 
 class _IcebergTableStreamReader:
@@ -82,7 +80,7 @@ class _IcebergTableStreamReader:
         return {"snapshot": 0}
 
     def read(self, start: dict):
-        meta = _current_meta(self.root)
+        meta = _current_metadata(self.root)
         snaps = meta.get("snapshots", [])
         latest = max((s["snapshot-id"] for s in snaps), default=0)
         lo = start["snapshot"]
@@ -124,7 +122,7 @@ def _plan_data_files(
     opens a data file."""
     from incubator_gluten_spark.sources.avro import read_container
 
-    meta = _current_meta(root)
+    meta = _current_metadata(root)
     schemas = meta.get("schemas") or [meta["schema"]]
     by_id = {s.get("schema-id", 0): s for s in schemas}
     cur = by_id.get(meta.get("current-schema-id", 0), schemas[-1])
@@ -141,10 +139,6 @@ def _plan_data_files(
                 "name-mapped stream with evolved schema history: name "
                 "binding cannot track renames/re-adds — refusing"
             )
-        from incubator_gluten_spark.sources.iceberg_format import (
-            _default_spec,
-        )
-
         spec = _default_spec(meta)
         if any(
             pf.get("transform", "identity") != "identity"
@@ -252,7 +246,7 @@ class _IcebergPartitionedStreamReader(DataSourceStreamReader):
         return {"snapshot": 0}
 
     def latestOffset(self) -> dict:
-        meta = _current_meta(self.root)
+        meta = _current_metadata(self.root)
         latest = max(
             (s["snapshot-id"] for s in meta.get("snapshots", [])), default=0
         )
@@ -301,8 +295,6 @@ def _spark_struct(root: str):
     """pyspark StructType of the CURRENT schema, built sessionless."""
     from pyspark.sql import types as T
 
-    from incubator_gluten_spark.sources.iceberg_format import _current_schema
-
     ice_to_t = {
         "long": T.LongType(),
         "int": T.IntegerType(),
@@ -315,7 +307,7 @@ def _spark_struct(root: str):
         "timestamp": T.TimestampNTZType(),
         "timestamptz": T.TimestampType(),
     }
-    cur = _current_schema(_current_meta(root))
+    cur = _current_schema(_current_metadata(root))
     return T.StructType(
         [
             T.StructField(f["name"], ice_to_t[f["type"]], not f["required"])
@@ -338,10 +330,6 @@ class IcebergStreamDataSource(DataSource):
         # Avro source hit) — map Iceberg types to pyspark type objects
         from pyspark.sql import types as T
 
-        from incubator_gluten_spark.sources.iceberg_format import (
-            _current_schema,
-        )
-
         root = _opt(self.options, "path")
         if not root:
             raise ValueError("graft_iceberg requires .option('path', <root>)")
@@ -357,7 +345,7 @@ class IcebergStreamDataSource(DataSource):
             "timestamp": T.TimestampNTZType(),
             "timestamptz": T.TimestampType(),
         }
-        cur = _current_schema(_current_meta(root))
+        cur = _current_schema(_current_metadata(root))
         return T.StructType(
             [
                 T.StructField(

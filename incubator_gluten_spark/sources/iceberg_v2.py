@@ -36,7 +36,6 @@ already interop-pins against the JVM Avro library.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -52,6 +51,7 @@ from incubator_gluten_spark.sources.iceberg_format import (
     _apply_residual,
     _bounds_keep,
     _build_bound_checks,
+    _current_metadata as _current_metadata_any,
     _iceberg_schema,
     _manifest_entry_schema,
     _meta_dir,
@@ -60,6 +60,7 @@ from incubator_gluten_spark.sources.iceberg_format import (
     _resolve_path,
     _snapshot,
     _write_data_files,
+    _write_metadata,
     spark_ddl_for,
 )
 
@@ -119,10 +120,7 @@ _MANIFEST_LIST_SCHEMA_V2 = {
 
 
 def _current_metadata(root: str) -> dict:
-    with open(os.path.join(_meta_dir(root), "version-hint.text")) as f:
-        v = int(f.read().strip())
-    with open(os.path.join(_meta_dir(root), f"v{v}.metadata.json")) as f:
-        meta = json.load(f)
+    meta = _current_metadata_any(root)
     if meta.get("format-version") != 2:
         raise ValueError(
             f"not a v2 table (format-version={meta.get('format-version')})"
@@ -146,22 +144,6 @@ def _next_snapshot_id(meta: dict | None) -> int:
     if not meta:
         return 1
     return max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-
-
-def _next_meta_version(root: str, meta: dict | None) -> int:
-    if not meta:
-        return 1
-    with open(os.path.join(_meta_dir(root), "version-hint.text")) as f:
-        return int(f.read().strip()) + 1
-
-
-def _write_metadata(root: str, version: int, new_meta: dict) -> None:
-    with open(
-        os.path.join(_meta_dir(root), f"v{version}.metadata.json"), "w"
-    ) as f:
-        json.dump(new_meta, f)
-    with open(os.path.join(_meta_dir(root), "version-hint.text"), "w") as f:
-        f.write(str(version))
 
 
 def _commit_snapshot_v2(
@@ -216,7 +198,7 @@ def _commit_snapshot_v2(
         "current-snapshot-id": snapshot_id,
         "snapshots": (meta["snapshots"] if meta else []) + [snapshot],
     }
-    _write_metadata(root, _next_meta_version(root, meta), new_meta)
+    _write_metadata(root, new_meta)
     return snapshot
 
 
@@ -1049,7 +1031,7 @@ def rewrite_data_files(spark: SparkSession, root: str, where=None) -> dict:
     new_meta["last-sequence-number"] = seq
     new_meta["current-snapshot-id"] = snap_id
     new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    _write_metadata(root, _next_meta_version(root, meta), new_meta)
+    _write_metadata(root, new_meta)
     return {"snapshot_id": snap_id, "files_written": len(data_files)}
 
 
@@ -1198,7 +1180,7 @@ def _rewrite_data_files_scoped(spark: SparkSession, root: str, where) -> dict:
     new_meta["last-sequence-number"] = seq
     new_meta["current-snapshot-id"] = snap_id
     new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    _write_metadata(root, _next_meta_version(root, meta), new_meta)
+    _write_metadata(root, new_meta)
     return {
         "snapshot_id": snap_id,
         "files_written": len(data_files),
@@ -1245,7 +1227,7 @@ def expire_snapshots(root: str, keep_last: int = 1) -> dict:
         os.remove(ml)
     new_meta = dict(meta)
     new_meta["snapshots"] = keep
-    _write_metadata(root, _next_meta_version(root, meta), new_meta)
+    _write_metadata(root, new_meta)
     return {"snapshots_expired": len(drop), "files_deleted": n_files}
 
 
@@ -1351,7 +1333,7 @@ def rewrite_position_deletes(spark: SparkSession, root: str) -> dict:
     new_meta["last-sequence-number"] = seq
     new_meta["current-snapshot-id"] = snap_id
     new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    _write_metadata(root, _next_meta_version(root, meta), new_meta)
+    _write_metadata(root, new_meta)
     return {
         "snapshot_id": snap_id,
         "delete_files_before": before,

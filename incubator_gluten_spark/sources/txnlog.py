@@ -33,6 +33,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from incubator_gluten_spark.sources import table_core
+
 _DATA = "data"
 _LOG = "_txnlog"
 _STATS_MAX_DISTINCT = 16
@@ -147,9 +149,10 @@ def checkpoint(root: str) -> dict:
     is exactly Delta's log-retention trade."""
     v = current_version(root)
     live, schema = resolve(root)
-    path = os.path.join(root, _LOG, f"_checkpoint.{v:08d}.json")
-    with open(path, "w") as f:
-        json.dump({"version": v, "live": live, "schema": schema}, f)
+    table_core.replace(
+        os.path.join(root, _LOG, f"_checkpoint.{v:08d}.json"),
+        json.dumps({"version": v, "live": live, "schema": schema}),
+    )
     return {"version": v, "n_files": len(live)}
 
 
@@ -225,19 +228,12 @@ def _commit(
         raise ValueError(
             f"commit version {version} is at or below checkpoint {ckv}"
         )
-    path = _log_path(root, version)
-    if os.path.exists(path):
-        raise FileExistsError(f"commit {version} already exists (conflict)")
-    with open(path, "w") as f:
-        json.dump(
-            {
-                "version": version,
-                "add": add,
-                "remove": remove,
-                "schema": schema,
-            },
-            f,
-        )
+    table_core.put_if_absent(
+        _log_path(root, version),
+        json.dumps(
+            {"version": version, "add": add, "remove": remove, "schema": schema}
+        ),
+    )
 
 
 def create_table(df: DataFrame, root: str, stats_cols: list[str] | None = None) -> None:

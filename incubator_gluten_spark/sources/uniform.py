@@ -56,6 +56,7 @@ from incubator_gluten_spark.sources.iceberg_format import (
     _resolve_path,
     _snapshot,
     _write_manifest,
+    _write_metadata,
 )
 
 ADDED, EXISTING = 1, 0
@@ -241,14 +242,8 @@ def sync_uniform(spark: SparkSession, root: str) -> dict:
 
 
 def _set_properties(root: str, props: dict) -> None:
-    """Merge table properties into the CURRENT metadata version in
-    place (properties then persist through _commit_snapshot)."""
-    hint = os.path.join(_meta_dir(root), "version-hint.text")
-    with open(hint) as f:
-        v = int(f.read().strip())
-    path = os.path.join(_meta_dir(root), f"v{v}.metadata.json")
-    with open(path) as f:
-        meta = json.load(f)
+    """Merge table properties into a new metadata-only version
+    (properties then persist through _commit_snapshot)."""
+    meta = _current_metadata(root)
     meta["properties"] = {**(meta.get("properties") or {}), **props}
-    with open(path, "w") as f:
-        json.dump(meta, f)
+    _write_metadata(root, meta)

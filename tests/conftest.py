@@ -60,6 +60,20 @@ _SLOW_TESTS: set[str] = {
     "test_unpartitioned_windows_are_whitelisted",  # 356 s, test_plans.py
 }
 
+# oracle-parity cases that stay in the fast tier although their file is
+# slow: one per table log that commits through sources/table_core.py
+_FAST_ORACLE_CASES: set[str] = {
+    f"test_query_matches_oracle[{name}]"
+    for name in (
+        "src_delta_merge",
+        "src_iceberg_refs",
+        "src_iceberg_mor",
+        "src_hudi_services",
+        "src_txnlog_conflict",
+        "src_delta_uniform",
+    )
+}
+
 _slow_env = os.environ.get("SPARK_GRAFT_SLOW_FILES")
 if _slow_env:
     _SLOW_FILES = {s.strip() for s in _slow_env.split(",") if s.strip()}
@@ -69,6 +83,8 @@ def pytest_collection_modifyitems(config, items):
     import pytest as _pytest
 
     for item in items:
+        if item.name in _FAST_ORACLE_CASES:
+            continue
         if (
             os.path.basename(str(item.fspath)) in _SLOW_FILES
             or item.name.split("[", 1)[0] in _SLOW_TESTS

@@ -1,0 +1,215 @@
+"""The shared commit primitive (sources/table_core.py) and the four table
+logs that commit through it: put-if-absent semantics, a multi-process
+commit race on one Delta log, and crash injection between the temp
+write and the publish.  Spark-free: every reader used here replays the
+log files directly, and the race runs in ``spawn`` workers because the
+pytest process may already host a JVM."""
+
+from __future__ import annotations
+
+import multiprocessing
+import os
+from collections import Counter
+
+import pytest
+
+from incubator_gluten_spark.sources import delta_protocol as dp
+from incubator_gluten_spark.sources import hudi_format as hf
+from incubator_gluten_spark.sources import iceberg_format as ice
+from incubator_gluten_spark.sources import table_core
+from incubator_gluten_spark.sources import txnlog
+
+N_PROCS, N_COMMITS = 8, 25
+
+
+def test_put_if_absent_refuses_existing_name(tmp_path):
+    path = str(tmp_path / "00000000000000000000.json")
+    table_core.put_if_absent(path, "first\n")
+    with pytest.raises(FileExistsError):
+        table_core.put_if_absent(path, "second\n")
+    with open(path) as f:
+        assert f.read() == "first\n"
+    assert os.listdir(tmp_path) == ["00000000000000000000.json"]
+
+
+def test_replace_overwrites_and_leaves_no_temp(tmp_path):
+    path = str(tmp_path / "version-hint.text")
+    table_core.replace(path, "1")
+    table_core.replace(path, "2")
+    with open(path) as f:
+        assert f.read() == "2"
+    assert os.listdir(tmp_path) == ["version-hint.text"]
+
+
+def _delta_v0(root: str) -> None:
+    dp._write_actions(
+        root,
+        0,
+        [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {
+                "metaData": {
+                    "id": "race",
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": '{"type":"struct","fields":[{"name":"k",'
+                    '"type":"long","nullable":true,"metadata":{}}]}',
+                    "partitionColumns": [],
+                    "configuration": {},
+                }
+            },
+        ],
+    )
+
+
+def _race_worker(root: str, wid: int, start, out) -> None:
+    """Commit N_COMMITS adds, retrying a lost version at the next one."""
+    start.wait(timeout=60)
+    won = []
+    for i in range(N_COMMITS):
+        add = {
+            "add": {
+                "path": f"w{wid}-{i}.parquet",
+                "partitionValues": {},
+                "size": 1,
+                "modificationTime": 0,
+                "dataChange": True,
+            }
+        }
+        while True:
+            v = dp.current_version(root) + 1
+            try:
+                dp._write_actions(root, v, [add])
+            except FileExistsError:
+                continue
+            won.append(v)
+            break
+    out.put((wid, won))
+
+
+def test_delta_commit_race_loses_no_add(tmp_path):
+    root = str(tmp_path / "race")
+    _delta_v0(root)
+    ctx = multiprocessing.get_context("spawn")
+    start, out = ctx.Event(), ctx.Queue()
+    procs = [
+        ctx.Process(target=_race_worker, args=(root, w, start, out))
+        for w in range(N_PROCS)
+    ]
+    for p in procs:
+        p.start()
+    try:
+        start.set()
+        results = dict(out.get(timeout=120) for _ in procs)
+    finally:
+        for p in procs:
+            p.join(timeout=30)
+            if p.is_alive():
+                p.terminate()
+    assert all(p.exitcode == 0 for p in procs)
+    n = N_PROCS * N_COMMITS
+    assert dp._list_commit_versions(root) == list(range(n + 1))
+    won = [v for vs in results.values() for v in vs]
+    assert sorted(won) == list(range(1, n + 1))  # disjoint across workers
+    adds = Counter(
+        a["add"]["path"]
+        for v in range(1, n + 1)
+        for a in dp._read_commit_actions(root, v)
+        if "add" in a
+    )
+    assert set(adds.values()) == {1}
+    assert set(adds) == {
+        f"w{w}-{i}.parquet" for w in range(N_PROCS) for i in range(N_COMMITS)
+    }
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_on_publish(monkeypatch, match=lambda dst: True):
+    """Make every publish whose target satisfies ``match`` die after the
+    temp file is written and fsynced."""
+    real_link, real_replace = os.link, os.replace
+
+    def link(src, dst, *a, **kw):
+        if match(dst):
+            raise _Crash(dst)
+        return real_link(src, dst, *a, **kw)
+
+    def replace(src, dst, *a, **kw):
+        if match(dst):
+            raise _Crash(dst)
+        return real_replace(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "link", link)
+    monkeypatch.setattr(os, "replace", replace)
+
+
+def _tree(root: str) -> dict[str, list[str]]:
+    return {d: sorted(fs) for d, _, fs in os.walk(root)}
+
+
+def test_crash_before_publish_keeps_previous_version(tmp_path, monkeypatch):
+    delta = str(tmp_path / "delta")
+    _delta_v0(delta)
+
+    iceberg = str(tmp_path / "iceberg")
+    os.makedirs(ice._meta_dir(iceberg))
+    ice._write_metadata(iceberg, {"format-version": 1, "n": 1})
+
+    hudi = str(tmp_path / "hudi")
+    os.makedirs(hf._timeline_dir(hudi))
+    hf._three_phase(hudi, "20240101000000000", "commit", {"n": 1})
+
+    tl = str(tmp_path / "txnlog")
+    txnlog._commit(tl, 0, [{"path": "data/a.parquet"}], [], "k bigint")
+
+    before = _tree(str(tmp_path))
+    _crash_on_publish(monkeypatch)
+    with pytest.raises(_Crash):
+        dp._write_actions(delta, 1, [{"metaData": {"configuration": {}}}])
+    with pytest.raises(_Crash):
+        ice._write_metadata(iceberg, {"format-version": 1, "n": 2})
+    with pytest.raises(_Crash):
+        hf._three_phase(hudi, "20240101000000001", "commit", {"n": 2})
+    with pytest.raises(_Crash):
+        txnlog._commit(tl, 1, [{"path": "data/b.parquet"}], [], "k bigint")
+    with pytest.raises(_Crash):
+        txnlog.checkpoint(tl)
+
+    assert _tree(str(tmp_path)) == before  # no temp file survives either
+    assert dp.current_version(delta) == 0
+    assert ice._current_metadata(iceberg)["n"] == 1
+    assert hf.completed_instants(hudi) == ["20240101000000000"]
+    assert txnlog.current_version(tl) == 0
+    assert txnlog.resolve(tl) == ([{"path": "data/a.parquet"}], "k bigint")
+
+
+def test_crash_between_hudi_markers_and_completion_stays_pending(
+    tmp_path, monkeypatch
+):
+    hudi = str(tmp_path / "hudi")
+    os.makedirs(hf._timeline_dir(hudi))
+    hf._three_phase(hudi, "20240101000000000", "commit", {"n": 1})
+    _crash_on_publish(monkeypatch, lambda dst: dst.endswith(".commit"))
+    with pytest.raises(_Crash):
+        hf._three_phase(hudi, "20240101000000001", "commit", {"n": 2})
+    assert hf.completed_instants(hudi) == ["20240101000000000"]
+    assert hf.pending_instants(hudi) == ["20240101000000001"]
+    assert not any(n.endswith(".tmp") for n in os.listdir(hf._timeline_dir(hudi)))
+
+
+def test_iceberg_crash_after_metadata_put_is_committed(tmp_path, monkeypatch):
+    """The metadata put-if-absent is the commit point: a writer that dies
+    before repointing the hint still committed, and the next writer
+    takes the version after it instead of colliding."""
+    root = str(tmp_path / "iceberg")
+    os.makedirs(ice._meta_dir(root))
+    ice._write_metadata(root, {"format-version": 1, "n": 1})
+    with monkeypatch.context() as m:
+        _crash_on_publish(m, lambda dst: dst.endswith("version-hint.text"))
+        with pytest.raises(_Crash):
+            ice._write_metadata(root, {"format-version": 1, "n": 2})
+    assert ice._current_metadata(root)["n"] == 2
+    assert ice._write_metadata(root, {"format-version": 1, "n": 3}) == 3
+    assert ice._current_metadata(root)["n"] == 3
