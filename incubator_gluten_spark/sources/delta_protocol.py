@@ -60,6 +60,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from incubator_gluten_spark.sources import table_core
+from incubator_gluten_spark.sources.table_core import (  # noqa: F401 — re-export
+    unescape_path_name,
+)
 
 _LOG = "_delta_log"
 _CDF_KEY = "delta.enableChangeDataFeed"
@@ -1714,119 +1717,35 @@ def _write_actions(root: str, version: int, actions: Iterable[dict]) -> None:
 
 
 def _footer_min_max(meta) -> dict:
-    """PROTOCOL.md per-file statistics (minValues/maxValues) straight
-    from the parquet FOOTER's row-group column statistics — no data
-    read.  int/float/str/bool pass through; date/timestamp serialize
+    """PROTOCOL.md per-file statistics (minValues/maxValues/nullCount)
+    from the parquet FOOTER (``table_core.footer_stats`` — no data
+    read).  int/float/str/bool pass through; date/timestamp serialize
     as ISO-8601 strings (PROTOCOL.md's stats encoding — and the
     string ordering matches the chronological one, so skipping and
     ZORDER narrowing work on the most common dimension, event dates);
     decimals and binary are omitted, which readers must treat as "no
-    bounds recorded".
-
-    A column gets bounds ONLY when EVERY row group carries usable stats
-    for it: a row group with omitted stats (oversized strings past
-    parquet-cpp's max_statistics_size, NaN-heavy floats) would otherwise
-    yield bounds NARROWER than the file's true range, and ``merge``'s
-    disjoint-range file skipping would wrongly skip a file containing
-    matching keys (r8 ADVICE).  NaN bounds are dropped for the same
-    reason — and because ``json.dumps`` would emit a bare ``NaN`` token,
-    invalid JSON for external Delta readers."""
-    import math
+    bounds recorded".  ``footer_stats`` already withholds bounds a row
+    group does not cover and NaN bounds — which ``json.dumps`` would
+    also emit as a bare ``NaN`` token, invalid JSON for external Delta
+    readers."""
+    import datetime as _dt
 
     mins: dict = {}
     maxs: dict = {}
     ncs: dict = {}
-    nc_dropped: set = set()
-    dropped: set = set()  # columns with >=1 stats-less / unusable row group
-    for rg in range(meta.num_row_groups):
-        row_group = meta.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if "." in name:  # nested leaf: not a top-level column stat
-                continue
-            try:
-                st = col.statistics
-                has = st is not None and st.has_min_max
-                lo, hi = (st.min, st.max) if has else (None, None)
-            except Exception:
-                # pyarrow can't extract stats for some physical types
-                # (e.g. decimal) — treat as "no bounds recorded"
-                has = False
-                st = None
-            # nullCount (PROTOCOL.md stats): independent of min/max —
-            # an ALL-NULL column has a null count but no bounds
-            # (getattr: stats objects without the accessor contribute
-            # no count, the conservative direction)
-            if st is not None and getattr(st, "has_null_count", False):
-                ncs[name] = ncs.get(name, 0) + st.null_count
-            else:
-                nc_dropped.add(name)
-            if not has:
-                dropped.add(name)
-                continue
-            import datetime as _dt
-
-            if isinstance(lo, bytes) or not isinstance(
-                lo, (int, float, str, bool, _dt.date)
-            ):
-                dropped.add(name)
-                continue
-            if isinstance(lo, float) and (math.isnan(lo) or math.isnan(hi)):
-                dropped.add(name)
-                continue
-            if name not in mins or lo < mins[name]:
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:
-                maxs[name] = hi
-    for name in dropped:
-        mins.pop(name, None)
-        maxs.pop(name, None)
-    for name in nc_dropped:
-        ncs.pop(name, None)
+    for name, (lo, hi, nc) in table_core.footer_stats(meta).items():
+        if nc is not None:
+            ncs[name] = nc
+        if isinstance(lo, (int, float, str, bool, _dt.date)):
+            iso = isinstance(lo, _dt.date)
+            mins[name] = lo.isoformat() if iso else lo
+            maxs[name] = hi.isoformat() if iso else hi
     if not mins and not ncs:
         return {}
-
-    def _iso(v):
-        import datetime as _dt
-
-        return v.isoformat() if isinstance(v, _dt.date) else v
-
-    out = {
-        "minValues": {k: _iso(v) for k, v in mins.items()},
-        "maxValues": {k: _iso(v) for k, v in maxs.items()},
-    }
+    out = {"minValues": mins, "maxValues": maxs}
     if ncs:
         out["nullCount"] = ncs
     return out
-
-
-def unescape_path_name(seg: str) -> str | None:
-    """Inverse of Spark's ``ExternalCatalogUtils.escapePathName``: the
-    writer percent-escapes special chars (``=``, ``:``, ``%``, ...) in
-    Hive-style partition directory names and writes nulls as
-    ``__HIVE_DEFAULT_PARTITION__``; reading the raw segment back into
-    the log would store the escaped text as the typed value (r7 ADVICE).
-    Malformed ``%`` sequences pass through literally, matching Spark."""
-    if seg == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    if "%" not in seg:
-        return seg
-    out = []
-    i = 0
-    while i < len(seg):
-        c = seg[i]
-        if c == "%" and i + 2 <= len(seg) - 1:
-            hx = seg[i + 1 : i + 3]
-            try:
-                out.append(chr(int(hx, 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(c)
-        i += 1
-    return "".join(out)
 
 
 def _stage_data_files(
@@ -1859,68 +1778,46 @@ def _stage_data_files(
         )
         partition_cols = [mapping.get(c, c) for c in partition_cols]
     token = uuid.uuid4().hex[:8]
-    staging = os.path.join(root, f"_staging_{token}")
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
     prefix = f"{_CHANGE_DIR}/" if cdc else ""
     stem = "cdc" if cdc else "part"
     adds = []
-    for dirpath, _, files in os.walk(staging):
-        pvals: dict[str, str] = {}
-        rel_dir = os.path.relpath(dirpath, staging)
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                k, _, v = seg.partition("=")
-                pvals[unescape_path_name(k)] = unescape_path_name(v)
-        for name in sorted(files):
-            if not name.endswith(".parquet"):
-                continue
-            src = os.path.join(dirpath, name)
-            # len(adds) makes the basename unique across partition dirs
-            # (a task writes the same part-NNNNN name into each dir) —
-            # DV/position mapping joins on basenames
-            base = f"{stem}-{token}-{len(adds):05d}.parquet"
-            rel = prefix + (
-                f"{rel_dir}/{base}" if rel_dir != "." else base
-            ).replace(os.sep, "/")
-            dst = os.path.join(root, rel.replace("/", os.sep))
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            import pyarrow.parquet as pq
-
-            meta = pq.read_metadata(src)
-            n_rows = meta.num_rows
-            stats = {"numRecords": n_rows}
-            stats.update(_footer_min_max(meta))
-            shutil.move(src, dst)
-            if cdc:
-                adds.append(
-                    {
-                        "cdc": {
-                            "path": rel,
-                            "partitionValues": pvals,
-                            "size": os.path.getsize(dst),
-                            "dataChange": False,
-                        }
+    for f in table_core.write_staged(df, root, partition_cols, token):
+        # len(adds) makes the basename unique across partition dirs
+        # (a task writes the same part-NNNNN name into each dir) —
+        # DV/position mapping joins on basenames
+        base = f"{stem}-{token}-{len(adds):05d}.parquet"
+        rel = prefix + (f"{f.dir}/{base}" if f.dir else base)
+        dst = os.path.join(root, rel.replace("/", os.sep))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        shutil.move(f.path, dst)
+        if cdc:
+            adds.append(
+                {
+                    "cdc": {
+                        "path": rel,
+                        "partitionValues": f.values,
+                        "size": os.path.getsize(dst),
+                        "dataChange": False,
                     }
-                )
-            else:
-                adds.append(
-                    {
-                        "add": {
-                            "path": rel,
-                            "partitionValues": pvals,
-                            "size": os.path.getsize(dst),
-                            "modificationTime": int(
-                                os.path.getmtime(dst) * 1000
-                            ),
-                            "dataChange": True,
-                            "stats": json.dumps(stats),
-                        }
+                }
+            )
+        else:
+            stats = {"numRecords": f.meta.num_rows}
+            stats.update(_footer_min_max(f.meta))
+            adds.append(
+                {
+                    "add": {
+                        "path": rel,
+                        "partitionValues": f.values,
+                        "size": os.path.getsize(dst),
+                        "modificationTime": int(
+                            os.path.getmtime(dst) * 1000
+                        ),
+                        "dataChange": True,
+                        "stats": json.dumps(stats),
                     }
-                )
-    shutil.rmtree(staging, ignore_errors=True)
+                }
+            )
     return adds
 
 

@@ -53,6 +53,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from incubator_gluten_spark.sources.delta_protocol import (
+    _list_commit_versions,
+    _read_commit_actions,
+    load_dv,
+)
+
 __all__ = ["DeltaStreamDataSource", "register_delta_stream_source"]
 
 
@@ -65,29 +71,14 @@ def _opt(options: dict, *names: str, default: str = "") -> str:
     return default
 
 
-def _log_versions(root: str) -> list[int]:
-    log = os.path.join(root, "_delta_log")
-    out = []
-    for name in os.listdir(log):
-        if name.endswith(".json") and name[:-5].isdigit():
-            out.append(int(name[:-5]))
-    return sorted(out)
-
-
-def _actions(root: str, version: int) -> list[dict]:
-    path = os.path.join(root, "_delta_log", f"{version:020d}.json")
-    with open(path) as f:
-        return [json.loads(line) for line in f if line.strip()]
-
-
 def _metadata_at(root: str, version: int) -> dict:
     """Last metaData action at or before ``version`` (replay, no
     checkpoint shortcuts — a stream source needs the commits anyway)."""
     meta = None
-    for v in _log_versions(root):
+    for v in _list_commit_versions(root):
         if v > version:
             break
-        for a in _actions(root, v):
+        for a in _read_commit_actions(root, v):
             if a.get("metaData"):
                 meta = a["metaData"]
     if meta is None:
@@ -146,11 +137,11 @@ class _DeltaTableStreamReader:
         return {"version": self.start_version - 1}
 
     def latestOffset(self) -> dict:
-        vs = _log_versions(self.root)
+        vs = _list_commit_versions(self.root)
         return {"version": vs[-1] if vs else -1}
 
     def read(self, start: dict):
-        vs = _log_versions(self.root)
+        vs = _list_commit_versions(self.root)
         latest = vs[-1] if vs else -1
         lo = start["version"]
         if latest <= lo:
@@ -201,19 +192,19 @@ def _plan_adds(
     # an UPDATE of already-delivered data, not an insert — delta's
     # source refuses it without ignoreChanges.  Metadata-only replay.
     seen: set[str] = set()
-    for v in _log_versions(root):
+    for v in _list_commit_versions(root):
         if v > lo:
             break
-        for a in _actions(root, v):
+        for a in _read_commit_actions(root, v):
             if a.get("add"):
                 seen.add(a["add"]["path"])
             elif a.get("remove"):
                 seen.discard(a["remove"]["path"])
     out: list[dict] = []
-    for v in _log_versions(root):
+    for v in _list_commit_versions(root):
         if not (lo < v <= hi):
             continue
-        actions = _actions(root, v)
+        actions = _read_commit_actions(root, v)
         adds = [
             a["add"]
             for a in actions
@@ -272,10 +263,10 @@ def _plan_cdc(
     part_cols = set(meta.get("partitionColumns") or [])
     out: list[dict] = []
     cur_meta: dict | None = None
-    for v in _log_versions(root):
+    for v in _list_commit_versions(root):
         if v > hi:
             break
-        actions = _actions(root, v)
+        actions = _read_commit_actions(root, v)
         for a in actions:
             if a.get("metaData"):
                 cur_meta = a["metaData"]
@@ -371,8 +362,6 @@ def _decode_add_table(root: str, add: dict, fields: list, part_cols: set):
     )
     dv = add.get("deletionVector")
     if dv:
-        from incubator_gluten_spark.sources.delta_protocol import load_dv
-
         deleted = np.fromiter(
             (int(p) for p in load_dv(root, dv)), dtype=np.int64
         )
@@ -444,7 +433,7 @@ class _DeltaPartitionedStreamReader(DataSourceStreamReader):
         return {"version": self.start_version - 1}
 
     def latestOffset(self) -> dict:
-        vs = _log_versions(self.root)
+        vs = _list_commit_versions(self.root)
         latest = vs[-1] if vs else -1
         if self.max_versions > 0 and self._hwm is not None:
             latest = max(self._hwm, min(latest, self._hwm + self.max_versions))
@@ -530,7 +519,7 @@ class DeltaStreamDataSource(DataSource):
         root = _opt(self.options, "path")
         if not root:
             raise ValueError("graft_delta requires .option('path', <root>)")
-        vs = _log_versions(root)
+        vs = _list_commit_versions(root)
         meta = _metadata_at(root, vs[-1] if vs else 0)
         _check_not_mapped(meta)
         struct = StructType.fromJson(json.loads(meta["schemaString"]))

@@ -46,9 +46,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import struct
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,14 +54,15 @@ from pyspark.sql.window import Window
 
 from incubator_gluten_spark.sources.hudi_format import (
     META_COLS,
+    _WRITE_TOKEN,
     HudiFormatError,
     _base_files,
     _init_table,
+    _insert_file_groups,
     _properties,
+    _stage_base_files,
     _three_phase,
     _timeline_dir,
-    _write_file_group,
-    _write_partitioned_groups,
 )
 
 LOG_MAGIC = b"#HUDI#"
@@ -345,7 +344,7 @@ def read_incremental(
     preserved through compaction), so the incremental set is one
     filter over it.  Compaction commits are change-INVISIBLE here:
     ``compact`` carries every row's pre-compaction commit time into
-    the new base files (``__ct`` override), exactly like real Hudi —
+    the new base files (its ``__instant`` column), exactly like real Hudi —
     an incremental consumer never re-reads a row because a table
     service rewrote it."""
     committed = sorted(completed_instants(root))
@@ -422,20 +421,9 @@ def create_table(
     """Bootstrap a MERGE_ON_READ table: base file groups exactly like
     the COW module, table type MOR."""
     _init_table(root, name, "MERGE_ON_READ", key_col, partition_col)
-    spark = SparkSession.getActiveSession()
     instant = _next_instant(root)
     # one distributed partitionBy write for every value (r7 verdict #4)
-    stats: dict[str, list] = (
-        _write_partitioned_groups(spark, df, root, partition_col, instant, key_col)
-        if partition_col
-        else {
-            "": [
-                _write_file_group(
-                    spark, df, root, "", uuid.uuid4().hex[:12], instant, key_col
-                )
-            ]
-        }
-    )
+    stats = _insert_file_groups(df, root, partition_col, instant, key_col)
     _commit_instant(root, instant, "deltacommit", stats)
     return instant
 
@@ -514,17 +502,11 @@ def upsert(spark: SparkSession, df: DataFrame, root: str, key_col: str) -> dict:
     inserts = routed.filter(F.col("__fname").isNull()).select(*data_cols)
     n_new = inserts.count()
     if n_new:
-        if partition_col:
-            # one distributed write covers every incoming partition value
-            for part, wss in _write_partitioned_groups(
-                spark, inserts, root, partition_col, instant, key_col
-            ).items():
-                stats.setdefault(part, []).extend(wss)
-        else:
-            ws = _write_file_group(
-                spark, inserts, root, "", uuid.uuid4().hex[:12], instant, key_col
-            )
-            stats.setdefault("", []).append(ws)
+        # one distributed write covers every incoming partition value
+        for part, wss in _insert_file_groups(
+            inserts, root, partition_col, instant, key_col
+        ).items():
+            stats.setdefault(part, []).extend(wss)
     _commit_instant(root, instant, "deltacommit", stats)
     return {
         "instant": instant,
@@ -538,8 +520,8 @@ def compact(spark: SparkSession, root: str) -> dict:
     new ``.commit`` instant.  Old bases + logs stay for time travel;
     the next snapshot read picks the new bases and finds no logs
     attached to them (their baseInstant moved).  Every row's ORIGINAL
-    ``_hoodie_commit_time`` rides through the rewrite (``__ct``
-    override) — real Hudi preserves untouched records' meta, the
+    ``_hoodie_commit_time`` rides through the rewrite (the
+    ``__instant`` column) — real Hudi preserves untouched records' meta, the
     property MOR incremental queries depend on (a compaction must be
     change-invisible to an incremental consumer)."""
     props = _properties(root)
@@ -562,7 +544,7 @@ def compact(spark: SparkSession, root: str) -> dict:
     #
     # r14 optimization (guide §1.2): ALL slices compact in ONE
     # distributed job.  The old loop filtered `routed` per slice and ran
-    # one `_write_file_group` job each — re-executing the full MOR merge
+    # one per-group write job each — re-executing the full MOR merge
     # (base scan + Python log decode + latest-wins window) once PER FILE
     # GROUP, O(groups) sequential jobs.  Now the merge runs once; rows
     # carry their group id and a partitionBy(__fid) write lands one base
@@ -570,9 +552,6 @@ def compact(spark: SparkSession, root: str) -> dict:
     # (metadata-only walk).  Every row's ORIGINAL _hoodie_commit_time
     # still rides through (__instant), the record-level incremental
     # contract compaction must preserve.
-    import pyarrow.parquet as pq
-
-    token = "0-1-0"
     fid = F.split(F.col("__fname"), "_").getItem(0)
     with_meta = routed.filter(F.col("__fname").isNotNull()).select(
         F.col("__instant").alias("_hoodie_commit_time"),
@@ -581,50 +560,21 @@ def compact(spark: SparkSession, root: str) -> dict:
         ).alias("_hoodie_commit_seqno"),
         F.col(key_col).cast("string").alias("_hoodie_record_key"),
         F.col("__part").alias("_hoodie_partition_path"),
-        F.concat(fid, F.lit(f"_{token}_{instant}.parquet")).alias(
+        F.concat(fid, F.lit(f"_{_WRITE_TOKEN}_{instant}.parquet")).alias(
             "_hoodie_file_name"
         ),
         *data_cols,
         fid.alias("__fid"),
     )
-    staging = os.path.join(root, f"_staging_{uuid.uuid4().hex[:8]}")
-    (
-        with_meta.repartition("__fid")
-        .write.mode("overwrite")
-        .partitionBy("__fid")
-        .parquet(staging)
-    )
     by_fid = {s["file_id"]: s for s in slices}
-    stats: dict[str, list] = {}
-    n = 0
-    for seg in sorted(os.listdir(staging)):
-        if not seg.startswith("__fid="):
-            continue
-        fid_v = seg[len("__fid=") :]
-        s = by_fid[fid_v]
-        names = sorted(
-            f
-            for f in os.listdir(os.path.join(staging, seg))
-            if f.endswith(".parquet")
-        )
-        if len(names) != 1:  # repartition guarantees one task per fid
-            raise HudiFormatError(
-                f"expected one compacted base file for group {fid_v!r}, "
-                f"got {len(names)}"
-            )
-        name = f"{fid_v}_{token}_{instant}.parquet"
-        target = os.path.join(os.path.dirname(s["base_file"]), name)
-        shutil.move(os.path.join(staging, seg, names[0]), target)
-        stats.setdefault(s["partition"], []).append(
-            {
-                "fileId": fid_v,
-                "path": os.path.relpath(target, root),
-                "numWrites": pq.read_metadata(target).num_rows,
-                "fileSizeInBytes": os.path.getsize(target),
-            }
-        )
-        n += 1
-    shutil.rmtree(staging, ignore_errors=True)
+
+    def group(f):
+        s = by_fid[f.dir[len("__fid=") :]]
+        disk_dir = os.path.relpath(os.path.dirname(s["base_file"]), root)
+        return s["partition"], disk_dir, s["file_id"]
+
+    stats = _stage_base_files(with_meta, root, instant, "__fid", group)
+    n = sum(len(wss) for wss in stats.values())
     _commit_instant(root, instant, "commit", stats)
     return {"instant": instant, "file_groups_compacted": n}
 

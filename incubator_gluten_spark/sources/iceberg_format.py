@@ -1111,57 +1111,27 @@ def _footer_bounds(
     md, ice_schema: dict
 ) -> tuple[dict[str, bytes], dict[str, bytes], dict[str, int]]:
     """Per-column (lower, upper, null count) maps keyed by str(field
-    id), from the parquet footer's row-group statistics — the
-    pq.read_metadata call finalize already makes, ZERO extra I/O.  A
-    column missing valid min/max (or a null count) in ANY row group
-    contributes no bound / no count (conservative)."""
+    id), encoded from ``table_core.footer_stats`` — the footer the
+    write already read, ZERO extra I/O.  A column whose bounds are
+    unsound (missing in some row group, NaN) gets no bound, and one
+    whose null count is missing in some row group gets no count
+    (conservative)."""
     by_name = {f["name"]: f for f in ice_schema["fields"]}
-    mins: dict[str, tuple] = {}
-    seen: dict[str, int] = {}
-    ncs: dict[str, int] = {}
-    nc_seen: dict[str, int] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            fld = by_name.get(name)
-            if fld is None:
-                continue
-            st = col.statistics
-            if st is not None and getattr(st, "has_null_count", False):
-                nc_seen[name] = nc_seen.get(name, 0) + 1
-                ncs[name] = ncs.get(name, 0) + st.null_count
-            if st is None or not st.has_min_max:
-                continue
-            try:
-                mn, mx = st.min, st.max
-            except Exception:
-                # pyarrow can't cast stats for some physical types
-                # (e.g. INT32-backed decimals) — no bound recorded
-                continue
-            seen[name] = seen.get(name, 0) + 1
-            if name in mins:
-                pmn, pmx = mins[name]
-                mins[name] = (min(pmn, mn), max(pmx, mx))
-            else:
-                mins[name] = (mn, mx)
     lower: dict[str, bytes] = {}
     upper: dict[str, bytes] = {}
-    for name, (mn, mx) in mins.items():
-        if seen[name] != md.num_row_groups:
-            continue  # some row group had no stats: no sound bound
-        fld = by_name[name]
+    nulls: dict[str, int] = {}
+    for name, (mn, mx, nc) in table_core.footer_stats(md).items():
+        fld = by_name.get(name)
+        if fld is None:
+            continue
+        fid = str(fld["id"])
+        if nc is not None:
+            nulls[fid] = nc
         lo = _bound_ser(fld["type"], mn)
         hi = _bound_ser(fld["type"], mx)
         if lo is not None and hi is not None:
-            lower[str(fld["id"])] = lo
-            upper[str(fld["id"])] = hi
-    nulls = {
-        str(by_name[name]["id"]): n
-        for name, n in ncs.items()
-        if nc_seen[name] == md.num_row_groups
-    }
+            lower[fid] = lo
+            upper[fid] = hi
     return lower, upper, nulls
 
 
@@ -1282,7 +1252,6 @@ def _write_data_files(
                  "typ": df.schema[c].dataType.simpleString()}
             )
     part_by = [d["dir"] for d in descr]
-    staging = os.path.join(root, f"_staging_{token}")
     if part_by:
         # Iceberg's write.distribution-mode=hash (r14 optimization,
         # guide §6 / iceberg spark-writes): shuffle by the partition
@@ -1346,46 +1315,19 @@ def _write_data_files(
             df = df.sortWithinPartitions(*part_by, *sort_cols)
     elif sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
-    writer = df.write.mode("overwrite")
-    if part_by:
-        writer = writer.partitionBy(*part_by)
     # Iceberg timestamps are micros (spec); Spark's default INT96 would
     # read back via pyarrow as unreadable nanos and carries no footer
     # min/max stats — stage micros at the source, executor-side (scoped:
-    # restored after the write so session-global parquet staging
-    # elsewhere is untouched)
+    # restored once the staged files are placed, so session-global
+    # parquet staging elsewhere is untouched)
     _TS_KEY = "spark.sql.parquet.outputTimestampType"
     prior_ts = spark.conf.get(_TS_KEY, None)
     spark.conf.set(_TS_KEY, "TIMESTAMP_MICROS")
-    try:
-        writer.parquet(staging)
-    finally:
-        if prior_ts is None:
-            spark.conf.unset(_TS_KEY)
-        else:
-            spark.conf.set(_TS_KEY, prior_ts)
-    import pyarrow.parquet as pq
-
     data_files = []
-    data_dir = os.path.join(root, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    for dirpath, _, names in os.walk(staging):
-        pvals: dict[str, str] = {}
-        rel_dir = os.path.relpath(dirpath, staging)
-        if rel_dir != ".":
-            # dir segments are writer-escaped and nulls are the Hive
-            # sentinel — store TRUE values (r7 ADVICE; shared helper)
-            from incubator_gluten_spark.sources.delta_protocol import (
-                unescape_path_name,
-            )
-
-            for seg in rel_dir.split(os.sep):
-                k, _, v = seg.partition("=")
-                pvals[unescape_path_name(k)] = unescape_path_name(v)
-        for name in sorted(n for n in names if n.endswith(".parquet")):
-            src = os.path.join(dirpath, name)
-            md = pq.read_metadata(src)
-            n_rows = md.num_rows
+    os.makedirs(os.path.join(root, "data"), exist_ok=True)
+    try:
+        for f in table_core.write_staged(df, root, part_by, token):
+            n_rows = f.meta.num_rows
             if n_rows == 0:
                 continue
             # spec lower/upper_bounds + null_value_counts from the SAME
@@ -1393,7 +1335,7 @@ def _write_data_files(
             # lets scans prune by predicate and MERGE plan its candidate
             # files metadata-only (r11 verdict What's-missing #2)
             lower, upper, nulls = (
-                _footer_bounds(md, ice_schema)
+                _footer_bounds(f.meta, ice_schema)
                 if ice_schema
                 else ({}, {}, {})
             )
@@ -1401,9 +1343,10 @@ def _write_data_files(
             # staged files already contain every schema column (identity
             # partitioning strips only the synthetic __p_* copy) — a
             # pure rename, zero data bytes through the driver
-            shutil.move(src, os.path.join(root, rel))
+            shutil.move(f.path, os.path.join(root, rel))
             part_tuple = {
-                d["key"]: _coerce(pvals[d["dir"]], d["typ"]) for d in descr
+                d["key"]: _coerce(f.values[d["dir"]], d["typ"])
+                for d in descr
             }
             data_files.append(
                 {
@@ -1420,7 +1363,11 @@ def _write_data_files(
                     "null_value_counts": nulls or None,
                 }
             )
-    shutil.rmtree(staging, ignore_errors=True)
+    finally:
+        if prior_ts is None:
+            spark.conf.unset(_TS_KEY)
+        else:
+            spark.conf.set(_TS_KEY, prior_ts)
     return data_files
 
 

@@ -35,6 +35,7 @@ import uuid
 
 from pyspark.sql import SparkSession
 
+from incubator_gluten_spark.sources import table_core
 from incubator_gluten_spark.sources.avro import read_container
 from incubator_gluten_spark.sources.iceberg_format import (
     _commit_snapshot,
@@ -63,21 +64,14 @@ def _walk_hive(src_dir: str, partition_cols: list[str]) -> list[tuple]:
     """(rel_path, {col: raw-string-or-None}) for every parquet file,
     partition values parsed from key=value segments (writer-escaped,
     Hive null sentinel honored)."""
-    from incubator_gluten_spark.sources.delta_protocol import (
-        unescape_path_name,
-    )
-
     out = []
     for dirpath, _, names in os.walk(src_dir):
-        if "metadata" in os.path.relpath(dirpath, src_dir).split(os.sep):
-            continue
-        pvals: dict[str, str | None] = {}
         rel_dir = os.path.relpath(dirpath, src_dir)
-        if rel_dir != ".":
-            for seg in rel_dir.split(os.sep):
-                k, eq, v = seg.partition("=")
-                if eq:
-                    pvals[unescape_path_name(k)] = unescape_path_name(v)
+        if "metadata" in rel_dir.split(os.sep):
+            continue
+        pvals = table_core.partition_values(
+            "" if rel_dir == "." else rel_dir.replace(os.sep, "/")
+        )
         for name in sorted(names):
             if not name.endswith(".parquet"):
                 continue

@@ -197,23 +197,17 @@ def _write_data_files(
     import uuid
 
     token = uuid.uuid4().hex[:8]
-    staging = os.path.join(root, f"_staging_{version}_{token}")
-    shutil.rmtree(staging, ignore_errors=True)
     if stats_cols:
         df = df.repartitionByRange(4, *stats_cols)
-    df.write.mode("overwrite").parquet(staging)
     os.makedirs(os.path.join(root, _DATA), exist_ok=True)
     records = []
-    for i, src in enumerate(
-        sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-    ):
-        rel = f"{_DATA}/part-{version:08d}-{i:04d}-{token}.parquet"
+    for f in table_core.write_staged(df, root, token=token):
+        rel = f"{_DATA}/part-{version:08d}-{len(records):04d}-{token}.parquet"
         dst = os.path.join(root, rel)
-        shutil.move(src, dst)
+        shutil.move(f.path, dst)
         rec = {"path": rel}
         rec.update(_file_stats(dst, stats_cols))
         records.append(rec)
-    shutil.rmtree(staging, ignore_errors=True)
     return records
 
 

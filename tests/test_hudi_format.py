@@ -215,17 +215,17 @@ def test_unmatched_staged_segment_names_the_segment(spark, tmp_path, monkeypatch
     """A rewritten segment whose decoded key matches no hit file group
     fails as a HudiFormatError naming the staged segment, and commits
     nothing."""
-    from incubator_gluten_spark.sources import delta_protocol as dp
+    from incubator_gluten_spark.sources import table_core
 
     df = spark.createDataFrame([(1, 1.0, "a"), (2, 2.0, "b")], "k int, v double, p string")
     root = str(tmp_path / "hudi_miss")
     hf.create_table(df, root, key_col="k", partition_col="p")
     before = hf.completed_instants(root)
-    real = dp.unescape_path_name
+    real = table_core.unescape_path_name
     # only the staged "<partition>/<file id>" segments carry an escaped
     # '/'; the partition directories upsert resolves first stay intact
     monkeypatch.setattr(
-        dp,
+        table_core,
         "unescape_path_name",
         lambda s: "no/such-group" if "%2F" in s else real(s),
     )

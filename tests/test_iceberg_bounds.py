@@ -181,3 +181,23 @@ def test_null_value_counts_prune_is_null_and_all_null_files(spark, tmp_path):
         ).count()
         == 50
     )
+
+
+def test_nan_bounds_never_prune_matching_files(spark, tmp_path):
+    """Spark's parquet writer records NaN as a double column's max; a
+    NaN upper bound fails every comparison, so serializing it pruned
+    the one file holding x = 1.0 (and every row for x > 0.5)."""
+    root = str(tmp_path / "b_nan")
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, float("nan")), (3, 2.0)], "k int, x double"
+    ).coalesce(1)
+    ice.create_table(df, root)
+    full = ice.read_table(spark, root)
+
+    def keys(frame):
+        return sorted(r["k"] for r in frame.collect())
+
+    pruned = ice.read_table(spark, root, source_predicates=[("x", "=", 1.0)])
+    assert keys(pruned) == keys(full.filter("x = 1.0")) == [1]
+    pruned = ice.read_table(spark, root, where="x > 0.5")
+    assert keys(pruned) == keys(full.filter("x > 0.5"))

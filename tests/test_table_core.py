@@ -1,12 +1,14 @@
 """The shared commit primitive (sources/table_core.py) and the four table
 logs that commit through it: put-if-absent semantics, a multi-process
 commit race on one Delta log, and crash injection between the temp
-write and the publish.  Spark-free: every reader used here replays the
-log files directly, and the race runs in ``spawn`` workers because the
+write and the publish; plus the ``footer_stats`` contract over fake
+parquet footers.  Spark-free: every reader used here replays the log
+files directly, and the race runs in ``spawn`` workers because the
 pytest process may already host a JVM."""
 
 from __future__ import annotations
 
+import decimal
 import multiprocessing
 import os
 from collections import Counter
@@ -213,3 +215,140 @@ def test_iceberg_crash_after_metadata_put_is_committed(tmp_path, monkeypatch):
     assert ice._current_metadata(root)["n"] == 2
     assert ice._write_metadata(root, {"format-version": 1, "n": 3}) == 3
     assert ice._current_metadata(root)["n"] == 3
+
+
+# ---------------------------------------------------------------------------
+# footer_stats over fake footers (the pyarrow FileMetaData surface it reads)
+
+
+class _St:
+    def __init__(self, lo, hi, nulls=None):
+        self.has_min_max = lo is not None
+        self.min, self.max = lo, hi
+        self.has_null_count = nulls is not None
+        self.null_count = nulls
+
+
+class _Col:
+    def __init__(self, name, st):
+        self.path_in_schema = name
+        self.statistics = st
+
+
+class _RG:
+    def __init__(self, cols):
+        self._c = cols
+        self.num_columns = len(cols)
+
+    def column(self, i):
+        return self._c[i]
+
+
+class _Meta:
+    def __init__(self, rgs):
+        self._r = rgs
+        self.num_row_groups = len(rgs)
+
+    def row_group(self, i):
+        return self._r[i]
+
+
+def test_footer_stats_withholds_bounds_of_partially_covered_columns():
+    """Bounds from only the covered row groups would be narrower than the
+    file's range: a column missing them in ANY row group gets none."""
+    meta = _Meta(
+        [
+            _RG([_Col("a", _St(1, 5, 0)), _Col("b", _St(1, 5, 0))]),
+            _RG([_Col("a", _St(None, None, 2)), _Col("b", _St(3, 9, 1))]),
+        ]
+    )
+    assert table_core.footer_stats(meta) == {
+        "a": (None, None, 2),
+        "b": (1, 9, 1),
+    }
+
+
+def test_footer_stats_drops_nan_bounds():
+    """Spark's writer records NaN as a double column's max; NaN orders
+    against nothing, so the column gets no bounds (its count stays)."""
+    nan = float("nan")
+    meta = _Meta(
+        [
+            _RG([_Col("f", _St(1.0, nan, 0)), _Col("g", _St(1.0, 2.0, 0))]),
+            _RG([_Col("f", _St(0.5, 0.7, 0)), _Col("g", _St(nan, nan, 0))]),
+            _RG([_Col("f", _St(0.1, 0.2, 0)), _Col("g", _St(-1.0, 3.0, 0))]),
+        ]
+    )
+    out = table_core.footer_stats(meta)
+    assert out == {"f": (None, None, 0), "g": (None, None, 0)}
+
+
+def test_footer_stats_missing_stats_and_nested_leaves():
+    meta = _Meta(
+        [
+            _RG(
+                [
+                    _Col("a", None),
+                    _Col("s.x", _St(1, 2, 0)),  # nested leaf: skipped
+                    _Col("b", _St(3, 4)),  # bounds but no null count
+                ]
+            )
+        ]
+    )
+    assert table_core.footer_stats(meta) == {
+        "a": (None, None, None),
+        "b": (3, 4, None),
+    }
+
+
+def test_footer_stats_sums_null_counts_only_when_every_group_counts():
+    meta = _Meta(
+        [
+            _RG([_Col("a", _St(1, 2, 3)), _Col("b", _St(1, 2, 1))]),
+            _RG([_Col("a", _St(None, None, 4)), _Col("b", _St(1, 2))]),
+            _RG([_Col("a", _St(0, 1, 0)), _Col("b", _St(1, 2, 5))]),
+        ]
+    )
+    out = table_core.footer_stats(meta)
+    assert out["a"][2] == 7  # all-null row group: a count, no bounds
+    assert out["b"] == (1, 2, None)
+
+
+def test_footer_stats_passes_decimal_and_bytes_through_raw():
+    """The contract hands values over unencoded; each format decides:
+    Iceberg serializes decimals, Delta omits decimals and binary."""
+    from incubator_gluten_spark.sources import iceberg_format as ice
+
+    d = decimal.Decimal
+    meta = _Meta(
+        [
+            _RG([_Col("d", _St(d("1.50"), d("2.25"), 0)),
+                 _Col("b", _St(b"a", b"q", 0))]),
+            _RG([_Col("d", _St(d("-3.00"), d("0.10"), 1)),
+                 _Col("b", _St(b"c", b"z", 0))]),
+        ]
+    )
+    out = table_core.footer_stats(meta)
+    assert out == {"d": (d("-3.00"), d("2.25"), 1), "b": (b"a", b"z", 0)}
+    assert dp._footer_min_max(meta) == {
+        "minValues": {},
+        "maxValues": {},
+        "nullCount": {"d": 1, "b": 0},
+    }
+    schema = {
+        "fields": [
+            {"id": 1, "name": "d", "type": "decimal(9,2)"},
+            {"id": 2, "name": "b", "type": "binary"},
+        ]
+    }
+    lower, upper, nulls = ice._footer_bounds(meta, schema)
+    assert ice._bound_deser("decimal(9,2)", lower["1"]) == d("-3.00")
+    assert ice._bound_deser("decimal(9,2)", upper["1"]) == d("2.25")
+    assert "2" not in lower and nulls == {"1": 1, "2": 0}
+
+
+def test_footer_stats_unorderable_bounds_are_dropped():
+    meta = _Meta(
+        [_RG([_Col("m", _St(1, 2, 0))]), _RG([_Col("m", _St("a", "b", 0))])]
+    )
+    assert table_core.footer_stats(meta) == {"m": (None, None, 0)}
