@@ -3120,11 +3120,12 @@ def src_iceberg_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("migrate must be zero-copy (no data rewrite)")
     mig.add_files(spark, root, src)
     meta = ice._current_metadata(root)
-    ml = ice._resolve_path(root, ice._snapshot(meta, None)["manifest-list"])
     statuses = [
         status
-        for mf in read_container(ml)
-        for status, _, _ in read_container(ice._resolve_path(root, mf[0]))
+        for mf in ice._manifest_list(root, ice._snapshot(meta, None))
+        for status, _, _ in read_container(
+            ice._resolve_path(root, mf["manifest_path"])
+        )
     ]
     if not (
         statuses.count(mig.EXISTING) == len(before)

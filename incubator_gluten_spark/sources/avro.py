@@ -37,6 +37,8 @@ import struct
 import zlib
 from collections.abc import Iterator, Sequence
 
+from incubator_gluten_spark.sources import table_core
+
 MAGIC = b"Obj\x01"
 AVRO_SPLIT_TARGET = 8 << 20  # ~8 MB of container bytes per read task
 
@@ -680,8 +682,9 @@ def _make_datasource_classes():
                 "files": sorted(m.path for m in messages if m is not None),
                 "rows": sum(m.n_rows for m in messages if m is not None),
             }
-            with open(os.path.join(self.path, "_COMMIT"), "w") as f:
-                json.dump(manifest, f)
+            table_core.replace(
+                os.path.join(self.path, "_COMMIT"), json.dumps(manifest)
+            )
 
         def abort(self, messages) -> None:
             for m in messages:

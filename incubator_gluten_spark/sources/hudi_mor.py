@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from incubator_gluten_spark.sources import table_core
 from incubator_gluten_spark.sources.hudi_format import (
     META_COLS,
     _WRITE_TOKEN,
@@ -217,6 +218,8 @@ def _log_files(root: str) -> list[tuple[str, str, str, int, str]]:
         for name in files:
             if not (name.startswith(".") and ".log." in name):
                 continue
+            if name.endswith(".tmp"):
+                continue  # a table_core temp file, not a log file
             stem, _, tail = name[1:].partition(".log.")
             file_id, _, base_instant = stem.rpartition("_")
             version = int(tail.split("_")[0])
@@ -660,9 +663,10 @@ def restore_to_savepoint(root: str, instant: str) -> dict:
             os.remove(path)
             deleted.append(os.path.relpath(path, root))
         else:
-            with open(path, "wb") as f:
-                for t, h, c in kept:
-                    f.write(pack_log_block(t, h, c))
+            # atomic: a crash mid-truncation must not tear the log
+            table_core.replace(
+                path, b"".join(pack_log_block(t, h, c) for t, h, c in kept)
+            )
             logs_truncated += 1
     tdir = _timeline_dir(root)
     for name in list(os.listdir(tdir)):

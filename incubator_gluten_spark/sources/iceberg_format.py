@@ -43,7 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incubator_gluten_spark.sources import table_core
-from incubator_gluten_spark.sources.avro import read_container, write_container
+from incubator_gluten_spark.sources.avro import (
+    read_container,
+    read_header,
+    write_container,
+)
 
 ADDED, EXISTING, DELETED = 1, 0, 2
 
@@ -186,8 +190,17 @@ def _partition_avro_schema(ice_schema: dict, spec: dict) -> dict:
     return {"type": "record", "name": "r102", "fields": fields}
 
 
-def _manifest_entry_schema(partition_schema: dict) -> dict:
-    """manifest_entry record, Iceberg spec v1 required fields."""
+def _manifest_entry_schema(partition_schema: dict, format_version: int = 1) -> dict:
+    """manifest_entry record: the spec's v1 required fields, plus on v2
+    the data_file ``content`` (134) and ``equality_ids`` (135)."""
+    v2_fields = [
+        {"name": "content", "type": "int", "field-id": 134},
+        {
+            "name": "equality_ids",
+            "type": ["null", {"type": "array", "items": "int"}],
+            "field-id": 135,
+        },
+    ]
     return {
         "type": "record",
         "name": "manifest_entry",
@@ -260,6 +273,7 @@ def _manifest_entry_schema(partition_schema: dict) -> dict:
                             ],
                             "field-id": 110,
                         },
+                        *(v2_fields if format_version >= 2 else []),
                     ],
                 },
             },
@@ -267,20 +281,38 @@ def _manifest_entry_schema(partition_schema: dict) -> dict:
     }
 
 
-_MANIFEST_LIST_SCHEMA = {
-    "type": "record",
-    "name": "manifest_file",
-    "fields": [
-        {"name": "manifest_path", "type": "string", "field-id": 500},
-        {"name": "manifest_length", "type": "long", "field-id": 501},
-        {"name": "partition_spec_id", "type": "int", "field-id": 502},
-        {
-            "name": "added_snapshot_id",
-            "type": ["null", "long"],
-            "field-id": 503,
-        },
-    ],
-}
+def _manifest_list_schema(format_version: int) -> dict:
+    """manifest_file record.  Format version 2 adds ``content`` (0 =
+    data, 1 = deletes) and ``sequence_number`` in front of
+    ``added_snapshot_id``, so positions differ between the versions;
+    ``_manifest_list`` reads entries by field name."""
+    v2_fields = [
+        {"name": "content", "type": "int", "field-id": 517},
+        {"name": "sequence_number", "type": "long", "field-id": 515},
+    ]
+    return {
+        "type": "record",
+        "name": "manifest_file",
+        "fields": [
+            {"name": "manifest_path", "type": "string", "field-id": 500},
+            {"name": "manifest_length", "type": "long", "field-id": 501},
+            {"name": "partition_spec_id", "type": "int", "field-id": 502},
+            *(v2_fields if format_version >= 2 else []),
+            {
+                "name": "added_snapshot_id",
+                "type": ["null", "long"],
+                "field-id": 503,
+            },
+        ],
+    }
+
+
+def _manifest_list(root: str, snap: dict) -> list[dict]:
+    """A snapshot's manifest list, one dict per manifest keyed by the
+    field names in the file's own Avro header."""
+    path = _resolve_path(root, snap["manifest-list"])
+    names = [f["name"] for f in read_header(path)[0]["fields"]]
+    return [dict(zip(names, row)) for row in read_container(path)]
 
 
 # ---------------------------------------------------------------------------
@@ -590,9 +622,9 @@ def plan_files(
                             names.add(f["name"])
             aliases[k] = names
     files: list[dict] = []
-    for mf in read_container(_resolve_path(root, snap["manifest-list"])):
-        manifest_path = _resolve_path(root, mf[0])
-        checks = checks_by_spec.get(mf[2], [])
+    for mf in _manifest_list(root, snap):
+        manifest_path = _resolve_path(root, mf["manifest_path"])
+        checks = checks_by_spec.get(mf["partition_spec_id"], [])
         for status, _snap_id, data_file in read_container(manifest_path):
             if status == DELETED:
                 continue
@@ -629,7 +661,8 @@ def plan_files(
                     continue
             if bound_checks and not _bounds_keep(data_file, bound_checks):
                 continue
-            data_file["_spec_id"] = mf[2]  # internal: the origin spec
+            # internal: the origin spec
+            data_file["_spec_id"] = mf["partition_spec_id"]
             files.append(data_file)
     return sorted(files, key=lambda d: d["file_path"])
 
@@ -1015,17 +1048,23 @@ def _read_name_mapped(
 
 
 def history(root: str) -> list[dict]:
+    """One row per snapshot: id, operation and live data rows (delete
+    files do not count), plus ``sequence_number`` on format version 2."""
     meta = _current_metadata(root)
     out = []
     for s in meta.get("snapshots", []):
-        n_rows = sum(f["record_count"] for f in plan_files(root, s["snapshot-id"]))
-        out.append(
-            {
-                "snapshot_id": s["snapshot-id"],
-                "operation": s.get("summary", {}).get("operation"),
-                "n_rows": n_rows,
-            }
-        )
+        row = {
+            "snapshot_id": s["snapshot-id"],
+            "operation": s.get("summary", {}).get("operation"),
+            "n_rows": sum(
+                f["record_count"]
+                for f in plan_files(root, s["snapshot-id"])
+                if f.get("content", 0) == 0
+            ),
+        }
+        if "sequence-number" in s:
+            row["sequence_number"] = s["sequence-number"]
+        out.append(row)
     return out
 
 
@@ -1393,22 +1432,34 @@ def _write_manifest(
     root: str,
     entries: list[tuple],
     partition_schema: dict,
-    seq: str,
+    token: str | None = None,
     spec_id: int = 0,
+    content: int | None = None,
 ) -> dict:
-    path = os.path.join(_meta_dir(root), f"manifest-{seq}.avro")
+    """Write one manifest; return its manifest-list entry, with
+    ``added_snapshot_id`` left for ``_commit_snapshot`` to fill.  A
+    ``content`` (0 = data, 1 = deletes) makes it a format-version 2
+    manifest, whose data_file records carry ``content`` and
+    ``equality_ids``."""
+    os.makedirs(_meta_dir(root), exist_ok=True)
+    path = os.path.join(
+        _meta_dir(root), f"manifest-{token or uuid.uuid4().hex[:8]}.avro"
+    )
     write_container(
         path,
         iter(entries),
-        _manifest_entry_schema(partition_schema),
+        _manifest_entry_schema(partition_schema, 1 if content is None else 2),
         codec="deflate",
     )
-    return {
+    m = {
         "manifest_path": os.path.relpath(path, root),
         "manifest_length": os.path.getsize(path),
         "partition_spec_id": spec_id,
         "added_snapshot_id": None,
     }
+    if content is not None:
+        m["content"] = content
+    return m
 
 
 def _spec_by_id(meta: dict, spec_id: int) -> dict:
@@ -1422,9 +1473,17 @@ def _default_spec(meta: dict) -> dict:
     return _spec_by_id(meta, meta.get("default-spec-id", 0))
 
 
+def _next_snapshot_id(meta: dict | None) -> int:
+    """max + 1, never count + 1: after expire_snapshots the count can
+    name a snapshot that is still live."""
+    snaps = (meta or {}).get("snapshots") or []
+    return max((s["snapshot-id"] for s in snaps), default=0) + 1
+
+
 def _commit_snapshot(
     root: str,
     meta: dict | None,
+    snapshot_id: int,
     manifests: list[dict],
     operation: str,
     ice_schema: dict,
@@ -1432,29 +1491,53 @@ def _commit_snapshot(
     branch: str | None = None,
     summary_extra: dict | None = None,
     stage_only: bool = False,
+    format_version: int = 1,
 ) -> dict:
-    os.makedirs(_meta_dir(root), exist_ok=True)
-    snapshot_id = (
-        len(meta["snapshots"]) + 1 if meta else 1
-    )  # deterministic ids (spec allows any unique long)
+    """The one snapshot writer, for both format versions: write the
+    manifest list and commit the metadata that adds the snapshot.
+
+    ``manifests`` is the snapshot's FULL manifest list (carried-over
+    entries included), as ``_write_manifest`` / ``_manifest_list`` dicts.
+    A missing ``added_snapshot_id`` becomes ``snapshot_id``; on version
+    2 a missing ``content`` is 0 (data) and a missing
+    ``sequence_number`` is this commit's ``last-sequence-number + 1``.
+    The new metadata is ``meta`` with only the snapshot fields changed,
+    so schemas, specs, properties, sort orders and refs carry forward.
+    ``meta=None`` creates a table of ``format_version``."""
+    base = meta or {
+        "format-version": format_version,
+        "table-uuid": str(uuid.uuid4()),
+        "location": root,
+        "partition-specs": [spec],
+        "default-spec-id": 0,
+        "properties": {},
+        "sort-orders": [],
+        "default-sort-order-id": 0,
+        "current-snapshot-id": None,
+        "snapshots": [],
+    }
+    if any(s["snapshot-id"] == snapshot_id for s in base["snapshots"]):
+        raise ValueError(f"snapshot id {snapshot_id} is already live")
+    version = base["format-version"]
+    seq = base.get("last-sequence-number", 0) + 1
+    rows = []
     for m in manifests:
-        if m["added_snapshot_id"] is None:
+        m = {**m}
+        if m.get("added_snapshot_id") is None:
             m["added_snapshot_id"] = snapshot_id
+        if version >= 2:
+            m.setdefault("content", 0)
+            if m.get("sequence_number") is None:
+                m["sequence_number"] = seq
+        rows.append(m)
+    schema = _manifest_list_schema(version)
     ml_path = os.path.join(
         _meta_dir(root), f"snap-{snapshot_id}-1-{uuid.uuid4().hex[:8]}.avro"
     )
     write_container(
         ml_path,
-        iter(
-            (
-                m["manifest_path"],
-                m["manifest_length"],
-                m["partition_spec_id"],
-                m["added_snapshot_id"],
-            )
-            for m in manifests
-        ),
-        _MANIFEST_LIST_SCHEMA,
+        ([m[f["name"]] for f in schema["fields"]] for m in rows),
+        schema,
         codec="deflate",
     )
     cur_schema_id = ice_schema.get("schema-id", 0)
@@ -1462,17 +1545,14 @@ def _commit_snapshot(
     # committed on top of — branch commits parent off the branch head,
     # main and WAP-staged commits off current.  Ancestry walks (cherry-
     # pick fast-forward, rollback, changelog) follow this chain.
-    if meta is None:
-        parent_id = None
-    elif branch is not None:
-        parent_id = (meta.get("refs") or {}).get(branch, {}).get(
-            "snapshot-id", meta["current-snapshot-id"]
-        )
-    else:
-        parent_id = meta["current-snapshot-id"]
+    refs = dict(base.get("refs") or {})
+    parent_id = base["current-snapshot-id"]
+    if branch is not None:
+        parent_id = refs.get(branch, {}).get("snapshot-id", parent_id)
     snapshot = {
         "snapshot-id": snapshot_id,
         "parent-snapshot-id": parent_id,
+        **({"sequence-number": seq} if version >= 2 else {}),
         "timestamp-ms": 0,
         "summary": {"operation": operation, **(summary_extra or {})},
         "manifest-list": os.path.relpath(ml_path, root),
@@ -1480,53 +1560,37 @@ def _commit_snapshot(
     }
     # evolution-aware: keep every historical schema (time travel needs
     # them); ids are never reused so last-column-id is monotonic
-    schemas = list(meta.get("schemas") or []) if meta else []
+    schemas = list(base.get("schemas") or [])
     if cur_schema_id not in {s.get("schema-id", 0) for s in schemas}:
         schemas.append(ice_schema)
-    prev_last = meta.get("last-column-id", 0) if meta else 0
     # refs (spec "Snapshot References"): a BRANCH commit advances its
     # ref and leaves current-snapshot-id (= main) untouched; a main
     # commit advances current-snapshot-id and leaves refs alone.  Tags
-    # never move (append refuses them).
-    refs = dict(meta.get("refs") or {}) if meta else {}
+    # never move (append refuses them).  A WAP stage commits the
+    # snapshot (audit-able by id) without advancing current —
+    # cherrypick publishes it.
+    current_id = base["current-snapshot-id"]
     if branch is not None:
         refs[branch] = {"snapshot-id": snapshot_id, "type": "branch"}
-        current_id = meta["current-snapshot-id"]
-    elif stage_only:
-        # WAP stage: the snapshot is committed (audit-able by id) but
-        # current-snapshot-id does NOT advance — cherrypick publishes it
-        current_id = meta["current-snapshot-id"] if meta else None
-    else:
+    elif not stage_only:
         current_id = snapshot_id
     new_meta = {
-        "format-version": 1,
-        "table-uuid": meta["table-uuid"] if meta else str(uuid.uuid4()),
-        "location": root,
+        **base,
         "last-updated-ms": 0,
         "last-column-id": max(
-            prev_last, max(f["id"] for f in ice_schema["fields"])
+            base.get("last-column-id", 0),
+            max(f["id"] for f in ice_schema["fields"]),
         ),
         "schema": ice_schema,
         "schemas": schemas,
         "current-schema-id": cur_schema_id,
-        # spec EVOLUTION: keep the table's full spec history — a
-        # snapshot commit never collapses it back to one spec
         "partition-spec": spec["fields"],
-        "partition-specs": (
-            meta["partition-specs"] if meta else [spec]
-        ),
-        "default-spec-id": meta.get("default-spec-id", 0) if meta else 0,
-        # table properties survive snapshot commits (name mapping,
-        # UniForm markers, user properties); so do sort orders
-        "properties": dict(meta.get("properties") or {}) if meta else {},
-        "sort-orders": list(meta.get("sort-orders") or []) if meta else [],
-        "default-sort-order-id": (
-            meta.get("default-sort-order-id", 0) if meta else 0
-        ),
         "current-snapshot-id": current_id,
         "refs": refs,
-        "snapshots": (meta["snapshots"] if meta else []) + [snapshot],
+        "snapshots": base["snapshots"] + [snapshot],
     }
+    if version >= 2:
+        new_meta["last-sequence-number"] = seq
     _write_metadata(root, new_meta)
     return snapshot
 
@@ -1543,14 +1607,13 @@ def create_table(
     data_files = _write_data_files(
         spark, df, root, partition_cols, ice_schema=ice_schema, spec=spec
     )
-    os.makedirs(_meta_dir(root), exist_ok=True)
+    snap_id = _next_snapshot_id(None)
     manifest = _write_manifest(
-        root,
-        [(ADDED, 1, d) for d in data_files],
-        pschema,
-        uuid.uuid4().hex[:8],
+        root, [(ADDED, snap_id, d) for d in data_files], pschema
     )
-    return _commit_snapshot(root, None, [manifest], "append", ice_schema, spec)
+    return _commit_snapshot(
+        root, None, snap_id, [manifest], "append", ice_schema, spec
+    )
 
 
 def rewrite_manifests(root: str) -> dict:
@@ -1571,11 +1634,11 @@ def rewrite_manifests(root: str) -> dict:
     prev = _snapshot(meta, None)
     by_spec: dict[int, list[tuple]] = {}
     n_before = 0
-    for mf in read_container(_resolve_path(root, prev["manifest-list"])):
+    for mf in _manifest_list(root, prev):
         n_before += 1
-        sid = mf[2]
+        sid = mf["partition_spec_id"]
         for status, snap_id, data_file in read_container(
-            _resolve_path(root, mf[0])
+            _resolve_path(root, mf["manifest_path"])
         ):
             if status == DELETED:
                 continue  # deleted entries need no re-statement
@@ -1587,7 +1650,6 @@ def rewrite_manifests(root: str) -> dict:
             root,
             entries,
             _partition_avro_schema(ice_schema, _spec_by_id(meta, sid)),
-            uuid.uuid4().hex[:8],
             spec_id=sid,
         )
         for sid, entries in sorted(by_spec.items())
@@ -1598,6 +1660,7 @@ def rewrite_manifests(root: str) -> dict:
     committed = _commit_snapshot(
         root,
         meta,
+        _next_snapshot_id(meta),
         manifests,
         "replace",
         ice_schema,
@@ -1684,9 +1747,9 @@ def read_changelog(
     changed: dict[str, list[tuple[dict, int]]] = {"insert": [], "delete": []}
     for s in wanted:
         sid = s["snapshot-id"]
-        for mf in read_container(_resolve_path(root, s["manifest-list"])):
+        for mf in _manifest_list(root, s):
             for status, snap_id, data_file in read_container(
-                _resolve_path(root, mf[0])
+                _resolve_path(root, mf["manifest_path"])
             ):
                 if status == ADDED and snap_id == sid:
                     changed["insert"].append((data_file, sid))
@@ -1784,10 +1847,10 @@ def _snapshot_file_sets(root: str, snap: dict) -> tuple[set, set, set]:
     live: set = set()
     referenced: set = set()
     manifests: set = set()
-    for mf in read_container(_resolve_path(root, snap["manifest-list"])):
-        manifests.add(mf[0])
+    for mf in _manifest_list(root, snap):
+        manifests.add(mf["manifest_path"])
         for status, _sid, data_file in read_container(
-            _resolve_path(root, mf[0])
+            _resolve_path(root, mf["manifest_path"])
         ):
             referenced.add(data_file["file_path"])
             if status != DELETED:
@@ -1901,7 +1964,7 @@ def delete_partition(root: str, partition_filter: dict[str, Any]) -> dict:
     this writer's partition specs)."""
     meta = _current_metadata(root)
     ice_schema = _current_schema(meta)
-    snap_id = len(meta["snapshots"]) + 1
+    snap_id = _next_snapshot_id(meta)
     by_spec: dict[int, list[tuple]] = {}
     n_deleted = 0
     for f in plan_files(root):
@@ -1922,13 +1985,13 @@ def delete_partition(root: str, partition_filter: dict[str, Any]) -> dict:
             root,
             entries,
             _partition_avro_schema(ice_schema, _spec_by_id(meta, sid)),
-            uuid.uuid4().hex[:8],
             spec_id=sid,
         )
         for sid, entries in sorted(by_spec.items())
     ]
     _commit_snapshot(
-        root, meta, manifests, "delete", ice_schema, _default_spec(meta)
+        root, meta, snap_id, manifests, "delete", ice_schema,
+        _default_spec(meta),
     )
     return {"snapshot_id": snap_id, "files_deleted": n_deleted}
 
@@ -1969,7 +2032,7 @@ def _cow_rewrite(
     cond = _source_pred_cond(predicates)
     cand = plan_files(root, source_predicates=predicates)
     cand_paths = {f["file_path"] for f in cand}
-    snap_id = len(meta["snapshots"]) + 1
+    snap_id = _next_snapshot_id(meta)
     by_spec: dict[int, list[tuple]] = {}
     n_untouched = 0
     for f in plan_files(root):
@@ -1985,7 +2048,6 @@ def _cow_rewrite(
             root,
             entries,
             _partition_avro_schema(ice_schema, _spec_by_id(meta, sid)),
-            uuid.uuid4().hex[:8],
             spec_id=sid,
         )
         for sid, entries in sorted(by_spec.items())
@@ -2005,12 +2067,11 @@ def _cow_rewrite(
                     root,
                     [(ADDED, snap_id, d) for d in added],
                     _partition_avro_schema(ice_schema, spec),
-                    uuid.uuid4().hex[:8],
                     spec_id=spec.get("spec-id", 0),
                 )
             )
     committed = _commit_snapshot(
-        root, meta, manifests, "overwrite", ice_schema, spec
+        root, meta, snap_id, manifests, "overwrite", ice_schema, spec
     )
     return {
         "snapshot_id": committed["snapshot-id"],
@@ -2138,7 +2199,7 @@ def merge(
     # NULL-key source rows can never match: straight to the insert path
     null_inserts = source.filter(~nn)
     files = plan_files(root)
-    snap_id = len(meta["snapshots"]) + 1
+    snap_id = _next_snapshot_id(meta)
     if source.isEmpty():
         return {
             "snapshot_id": meta.get("current-snapshot-id"),
@@ -2219,7 +2280,6 @@ def merge(
             root,
             entries,
             _partition_avro_schema(ice_schema, _spec_by_id(meta, sid)),
-            uuid.uuid4().hex[:8],
             spec_id=sid,
         )
         for sid, entries in sorted(by_spec.items())
@@ -2285,12 +2345,11 @@ def merge(
                 root,
                 [(ADDED, snap_id, d) for d in added],
                 _partition_avro_schema(ice_schema, spec),
-                uuid.uuid4().hex[:8],
                 spec_id=spec.get("spec-id", 0),
             )
         )
     committed = _commit_snapshot(
-        root, meta, manifests, "overwrite", ice_schema, spec
+        root, meta, snap_id, manifests, "overwrite", ice_schema, spec
     )
     return {
         "snapshot_id": committed["snapshot-id"],
@@ -2349,30 +2408,21 @@ def append(
         spark, df, root, [], ice_schema=ice_schema, spec=spec,
         sort_cols=sort_cols or None,
     )
-    snap_id = len(meta["snapshots"]) + 1
+    snap_id = _next_snapshot_id(meta)
     new_manifest = _write_manifest(
         root,
         [(ADDED, snap_id, d) for d in data_files],
         pschema,
-        uuid.uuid4().hex[:8],
         spec_id=spec.get("spec-id", 0),
     )
     # the parent snapshot's manifests carry over (EXISTING data),
     # each keeping ITS OWN partition_spec_id
     prev = _snapshot(meta, parent_id)
-    prev_manifests = [
-        {
-            "manifest_path": mf[0],
-            "manifest_length": mf[1],
-            "partition_spec_id": mf[2],
-            "added_snapshot_id": mf[3],
-        }
-        for mf in read_container(_resolve_path(root, prev["manifest-list"]))
-    ]
     return _commit_snapshot(
         root,
         meta,
-        prev_manifests + [new_manifest],
+        snap_id,
+        _manifest_list(root, prev) + [new_manifest],
         "append",
         ice_schema,
         spec,
@@ -2538,25 +2588,10 @@ def cherrypick_snapshot(
             "cherrypick replays append snapshots only; "
             f"{snapshot_id} is {summary.get('operation')!r} and main moved"
         )
-    cur = _snapshot(meta, None)
-    cur_manifests = [
-        {
-            "manifest_path": mf[0],
-            "manifest_length": mf[1],
-            "partition_spec_id": mf[2],
-            "added_snapshot_id": mf[3],
-        }
-        for mf in read_container(_resolve_path(root, cur["manifest-list"]))
-    ]
     added = [
-        {
-            "manifest_path": mf[0],
-            "manifest_length": mf[1],
-            "partition_spec_id": mf[2],
-            "added_snapshot_id": mf[3],
-        }
-        for mf in read_container(_resolve_path(root, staged["manifest-list"]))
-        if mf[3] == snapshot_id
+        mf
+        for mf in _manifest_list(root, staged)
+        if mf["added_snapshot_id"] == snapshot_id
     ]
     if not added:
         raise ValueError(f"snapshot {snapshot_id} added no manifests")
@@ -2566,7 +2601,8 @@ def cherrypick_snapshot(
     snap = _commit_snapshot(
         root,
         meta,
-        cur_manifests + added,
+        _next_snapshot_id(meta),
+        _manifest_list(root, _snapshot(meta, None)) + added,
         "append",
         _current_schema(meta),
         _default_spec(meta),
@@ -2833,8 +2869,13 @@ def read_meta_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
     if kind == "manifests":
         snap = _snapshot(meta, None)
         rows = [
-            (mf[0], mf[1], mf[2], mf[3])
-            for mf in read_container(_resolve_path(root, snap["manifest-list"]))
+            (
+                mf["manifest_path"],
+                mf["manifest_length"],
+                mf["partition_spec_id"],
+                mf["added_snapshot_id"],
+            )
+            for mf in _manifest_list(root, snap)
         ]
         return spark.createDataFrame(
             rows,

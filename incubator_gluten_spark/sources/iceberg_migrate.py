@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -43,7 +42,9 @@ from incubator_gluten_spark.sources.iceberg_format import (
     _current_schema,
     _default_spec,
     _iceberg_schema,
+    _manifest_list,
     _meta_dir,
+    _next_snapshot_id,
     _partition_avro_schema,
     _partition_spec,
     _resolve_path,
@@ -204,16 +205,16 @@ def migrate_hive_dir(
     spec = _partition_spec(ice_schema, list(partition_cols))
     pschema = _partition_avro_schema(ice_schema, spec)
     pf = _part_fields_of(ice_schema, spec)
-    os.makedirs(_meta_dir(root), exist_ok=True)
+    snap_id = _next_snapshot_id(None)
     entries = [
-        (ADDED, 1, _file_entry(root, rel, pvals, pf)) for rel, pvals in files
+        (ADDED, snap_id, _file_entry(root, rel, pvals, pf))
+        for rel, pvals in files
     ]
-    manifest = _write_manifest(
-        root, entries, pschema, uuid.uuid4().hex[:8], spec_id=0
-    )
+    manifest = _write_manifest(root, entries, pschema)
     committed = _commit_snapshot(
         root,
         None,
+        snap_id,
         [manifest],
         "append",
         ice_schema,
@@ -272,13 +273,13 @@ def add_files(spark: SparkSession, root: str, src_dir: str) -> dict:
     prev = _snapshot(meta, None)
     first_seen: dict[str, int] = {}
     carried = []
-    for mf in read_container(_resolve_path(root, prev["manifest-list"])):
+    for mf in _manifest_list(root, prev):
         for status, snap_id, data_file in read_container(
-            _resolve_path(root, mf[0])
+            _resolve_path(root, mf["manifest_path"])
         ):
             first_seen[data_file["file_path"]] = snap_id
             carried.append((EXISTING, snap_id, data_file))
-    new_id = len(meta["snapshots"]) + 1
+    new_id = _next_snapshot_id(meta)
     entries = list(carried)
     for rel, pvals in new:
         e = _file_entry(src_dir, rel, pvals, pf)
@@ -286,12 +287,11 @@ def add_files(spark: SparkSession, root: str, src_dir: str) -> dict:
         if e["file_path"] in first_seen:
             raise ValueError(f"{e['file_path']} already registered")
         entries.append((ADDED, new_id, e))
-    manifest = _write_manifest(
-        root, entries, pschema, uuid.uuid4().hex[:8], spec_id=0
-    )
+    manifest = _write_manifest(root, entries, pschema)
     return _commit_snapshot(
         root,
         meta,
+        new_id,
         [manifest],
         "append",
         ice_schema,

@@ -49,6 +49,7 @@ from incubator_gluten_spark.sources.iceberg_format import (
     _current_metadata,
     _current_schema,
     _default_spec,
+    _manifest_list,
 )
 
 __all__ = ["IcebergStreamDataSource", "register_iceberg_stream_source"]
@@ -159,12 +160,11 @@ def _plan_data_files(
         if not (lo < sid <= hi):
             continue
         op = s.get("summary", {}).get("operation", "append")
-        ml = os.path.join(root, s["manifest-list"])
         added = [
             data_file
-            for mf in read_container(ml)
+            for mf in _manifest_list(root, s)
             for status, snap_id, data_file in read_container(
-                os.path.join(root, mf[0])
+                os.path.join(root, mf["manifest_path"])
             )
             if status == _ADDED and snap_id == sid
         ]

@@ -3,35 +3,37 @@
 The reference reads Iceberg v2 tables through its jar module
 (gluten-iceberg/src/main/scala/org/apache/gluten/execution/
 IcebergScanTransformer.scala:44 plans delete files next to data files);
-this container lacks the jar, so — like ``iceberg_format.py`` (v1) —
-this module implements the PUBLIC Iceberg Table Spec v2
-(iceberg.apache.org/spec) directly:
+this container lacks the jar, so this module implements the v2 half of
+the PUBLIC Iceberg Table Spec (iceberg.apache.org/spec) on top of
+``iceberg_format.py``.  Snapshots are not this module's business: every
+commit here — appends, deletes, merges, compactions — goes through
+``iceberg_format._commit_snapshot``, the one snapshot writer for both
+format versions (snapshot id = max + 1, sequence number =
+``last-sequence-number + 1``, metadata carried forward, manifest lists
+read by field name), and ``iceberg_format.expire_snapshots`` /
+``history`` serve v2 tables too.  What is left here:
 
-* **sequence numbers**: every commit gets ``last-sequence-number + 1``;
-  manifest-list entries carry ``sequence_number`` + ``content`` (0 =
-  data, 1 = deletes); carried-over manifests keep their original
-  sequence number (the spec's inheritance rule).
-* **position delete files** (content=1): parquet files with the spec's
-  reserved columns ``file_path`` (field-id 2147483546) and ``pos``
-  (field-id 2147483545), rows sorted by (file_path, pos).  A position
-  delete applies to a data file when ``delete.seq >= data.seq``.
-* **equality delete files** (content=2): parquet files holding the
-  equality columns' values; ``equality_ids`` in the manifest names the
-  schema field-ids.  Applies when ``delete.seq > data.seq`` (strictly —
-  rows appended in the SAME commit as the delete are not affected).
-
-MERGE-ON-READ is the Spark-native part: the reader scans data files
-with the parquet ``_metadata.file_path`` / ``_metadata.row_index``
-virtual columns, attaches each file's sequence number with one
-broadcast join against an O(n_files) mapping, then removes deleted rows
-with broadcast LEFT ANTI hash joins — equi-keyed on (file, pos) /
-null-safe-equi-keyed on the equality columns, with the sequence-number
-rule as the join's residual condition.  No collect of data rows, no
-cartesian: at 100 TB the data scan stays a pruned parquet read and the
-delete application is a broadcast of the (small) delete set.
-
-Avro layers reuse the pure-Python container codec that the v1 module
-already interop-pins against the JVM Avro library.
+* **delete files**: position delete files (content=1; parquet with the
+  spec's reserved columns ``file_path`` (field-id 2147483546) and
+  ``pos`` (field-id 2147483545), rows sorted by (file_path, pos)) apply
+  to a data file when ``delete.seq >= data.seq``; equality delete files
+  (content=2; the equality columns' values, ``equality_ids`` naming the
+  schema field-ids) apply when ``delete.seq > data.seq`` — strictly, so
+  rows appended in the SAME commit as the delete are not affected.
+  Both are listed under content=1 manifests; carried-over manifests keep
+  their original sequence number (the spec's inheritance rule).
+* **scan planning** (``plan_scan``): live data and delete files, each
+  with its inherited sequence number, from the manifests alone.
+* **the merge-on-read fold** (``_mor_fold``): the reader scans data
+  files with the parquet ``_metadata.file_path`` /
+  ``_metadata.row_index`` virtual columns, attaches each file's
+  sequence number with one broadcast join against an O(n_files)
+  mapping, then removes deleted rows with LEFT ANTI hash joins —
+  equi-keyed on (file, pos) / null-safe-equi-keyed on the equality
+  columns, with the sequence-number rule as the join's residual
+  condition.  No collect of data rows, no cartesian: the data scan
+  stays a pruned parquet read and the delete application is a join
+  against the (small) delete set.
 """
 
 from __future__ import annotations
@@ -43,7 +45,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from incubator_gluten_spark.sources.avro import read_container, write_container
+from incubator_gluten_spark.sources.avro import read_container
 from incubator_gluten_spark.sources.iceberg_format import (
     ADDED,
     DELETED,
@@ -51,16 +53,17 @@ from incubator_gluten_spark.sources.iceberg_format import (
     _apply_residual,
     _bounds_keep,
     _build_bound_checks,
+    _commit_snapshot,
     _current_metadata as _current_metadata_any,
     _iceberg_schema,
-    _manifest_entry_schema,
-    _meta_dir,
+    _manifest_list,
+    _next_snapshot_id,
     _partition_avro_schema,
     _partition_spec,
     _resolve_path,
     _snapshot,
     _write_data_files,
-    _write_metadata,
+    _write_manifest,
     spark_ddl_for,
 )
 
@@ -75,50 +78,6 @@ _POS_PATH_FIELD_ID = 2147483546
 _POS_POS_FIELD_ID = 2147483545
 
 
-# ---------------------------------------------------------------------------
-# v2 Avro schemas
-
-
-def _entry_schema_v2(partition_schema: dict) -> dict:
-    """v1 manifest_entry + the v2 data_file fields this writer uses:
-    ``content`` (134) and ``equality_ids`` (135)."""
-    schema = _manifest_entry_schema(partition_schema)
-    data_file = schema["fields"][2]["type"]
-    data_file["fields"].append(
-        {"name": "content", "type": "int", "field-id": 134}
-    )
-    data_file["fields"].append(
-        {
-            "name": "equality_ids",
-            "type": ["null", {"type": "array", "items": "int"}],
-            "field-id": 135,
-        }
-    )
-    return schema
-
-
-_MANIFEST_LIST_SCHEMA_V2 = {
-    "type": "record",
-    "name": "manifest_file",
-    "fields": [
-        {"name": "manifest_path", "type": "string", "field-id": 500},
-        {"name": "manifest_length", "type": "long", "field-id": 501},
-        {"name": "partition_spec_id", "type": "int", "field-id": 502},
-        {"name": "content", "type": "int", "field-id": 517},
-        {"name": "sequence_number", "type": "long", "field-id": 515},
-        {
-            "name": "added_snapshot_id",
-            "type": ["null", "long"],
-            "field-id": 503,
-        },
-    ],
-}
-
-
-# ---------------------------------------------------------------------------
-# metadata
-
-
 def _current_metadata(root: str) -> dict:
     meta = _current_metadata_any(root)
     if meta.get("format-version") != 2:
@@ -126,80 +85,6 @@ def _current_metadata(root: str) -> dict:
             f"not a v2 table (format-version={meta.get('format-version')})"
         )
     return meta
-
-
-def _write_manifest_v2(
-    root: str, entries: list[tuple], partition_schema: dict
-) -> dict:
-    os.makedirs(_meta_dir(root), exist_ok=True)
-    path = os.path.join(_meta_dir(root), f"manifest-{uuid.uuid4().hex[:8]}.avro")
-    write_container(
-        path, iter(entries), _entry_schema_v2(partition_schema), codec="deflate"
-    )
-    return {"manifest_path": os.path.relpath(path, root), "manifest_length": os.path.getsize(path)}
-
-
-def _next_snapshot_id(meta: dict | None) -> int:
-    # max+1, not count+1: ids must stay unique after expire_snapshots
-    if not meta:
-        return 1
-    return max(s["snapshot-id"] for s in meta["snapshots"]) + 1
-
-
-def _commit_snapshot_v2(
-    root: str,
-    meta: dict | None,
-    new_manifests: list[tuple[dict, int]],
-    operation: str,
-    ice_schema: dict,
-    spec: dict,
-    summary_extra: dict | None = None,
-) -> dict:
-    """Write manifest list + metadata JSON.  ``new_manifests`` is
-    [(manifest_dict, content)]; previous manifests carry over with their
-    ORIGINAL sequence numbers (spec inheritance)."""
-    os.makedirs(_meta_dir(root), exist_ok=True)
-    snapshot_id = _next_snapshot_id(meta)
-    seq = (meta.get("last-sequence-number", 0) if meta else 0) + 1
-    rows: list[tuple] = []
-    if meta:
-        prev = _snapshot(meta, None)
-        rows.extend(read_container(_resolve_path(root, prev["manifest-list"])))
-    for m, content in new_manifests:
-        rows.append(
-            (m["manifest_path"], m["manifest_length"], 0, content, seq, snapshot_id)
-        )
-    ml_path = os.path.join(
-        _meta_dir(root), f"snap-{snapshot_id}-1-{uuid.uuid4().hex[:8]}.avro"
-    )
-    write_container(ml_path, iter(rows), _MANIFEST_LIST_SCHEMA_V2, codec="deflate")
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "sequence-number": seq,
-        "timestamp-ms": 0,
-        "summary": {"operation": operation, **(summary_extra or {})},
-        "manifest-list": os.path.relpath(ml_path, root),
-        "schema-id": 0,
-    }
-    new_meta = {
-        "format-version": 2,
-        "table-uuid": meta["table-uuid"] if meta else str(uuid.uuid4()),
-        "location": root,
-        "last-sequence-number": seq,
-        "last-updated-ms": 0,
-        "last-column-id": max(f["id"] for f in ice_schema["fields"]),
-        "schemas": [ice_schema],
-        "schema": ice_schema,
-        "current-schema-id": 0,
-        "partition-specs": [spec],
-        "partition-spec": spec["fields"],
-        "default-spec-id": 0,
-        "properties": {},
-        "current-snapshot-id": snapshot_id,
-        "snapshots": (meta["snapshots"] if meta else []) + [snapshot],
-    }
-    _write_metadata(root, new_meta)
-    return snapshot
 
 
 # ---------------------------------------------------------------------------
@@ -216,9 +101,11 @@ def plan_scan(root: str, snapshot_id: int | None = None) -> dict:
     meta = _current_metadata(root)
     snap = _snapshot(meta, snapshot_id)
     out = {"data": [], "pos_deletes": [], "eq_deletes": []}
-    for mf in read_container(_resolve_path(root, snap["manifest-list"])):
-        m_path, _len, _spec, content, seq, _snap = mf
-        for status, _sid, data_file in read_container(_resolve_path(root, m_path)):
+    for mf in _manifest_list(root, snap):
+        content, seq = mf["content"], mf["sequence_number"]
+        for status, _sid, data_file in read_container(
+            _resolve_path(root, mf["manifest_path"])
+        ):
             if status == 2:  # DELETED manifest entry
                 continue
             if content == DATA_CONTENT:
@@ -400,18 +287,6 @@ def _mor_fold(spark: SparkSession, root: str, meta: dict, scan: dict) -> DataFra
     return df.select(*cols)
 
 
-def history(root: str) -> list[dict]:
-    meta = _current_metadata(root)
-    return [
-        {
-            "snapshot_id": s["snapshot-id"],
-            "sequence_number": s["sequence-number"],
-            "operation": s.get("summary", {}).get("operation"),
-        }
-        for s in meta.get("snapshots", [])
-    ]
-
-
 # ---------------------------------------------------------------------------
 # writers
 
@@ -421,6 +296,71 @@ def _with_v2_fields(d: dict, content: int, eq_ids: list[int] | None = None) -> d
     d["content"] = content
     d["equality_ids"] = eq_ids
     return d
+
+
+def _data_manifest(
+    root: str, snap_id: int, data_files: list[dict], pschema: dict
+) -> dict:
+    """A content=0 manifest ADDing ``data_files`` under ``snap_id``."""
+    return _write_manifest(
+        root,
+        [(ADDED, snap_id, _with_v2_fields(d, DATA_CONTENT)) for d in data_files],
+        pschema,
+        content=DATA_CONTENT,
+    )
+
+
+def _delete_manifest(
+    root: str,
+    meta: dict,
+    snap_id: int,
+    shards: list[tuple[str, int]],
+    content: int,
+    eq_ids: list[int] | None = None,
+) -> dict:
+    """A content=1 manifest ADDing the delete files ``shards`` (relative
+    path, row count) under ``snap_id``; ``content`` is the files' own
+    POS_DELETES / EQ_DELETES."""
+    spec = meta["partition-specs"][0]
+    return _write_manifest(
+        root,
+        [
+            (
+                ADDED,
+                snap_id,
+                _with_v2_fields(
+                    _delete_file_entry(root, rel, n, spec["fields"]),
+                    content,
+                    eq_ids,
+                ),
+            )
+            for rel, n in shards
+        ],
+        _partition_avro_schema(meta["schema"], spec),
+        content=DELETES_MANIFEST,
+    )
+
+
+def _commit_deletes(
+    root: str,
+    meta: dict,
+    shards: list[tuple[str, int]],
+    content: int,
+    eq_ids: list[int] | None = None,
+) -> dict:
+    """One 'delete' snapshot: the current manifests plus one delete
+    manifest for ``shards``."""
+    snap_id = _next_snapshot_id(meta)
+    return _commit_snapshot(
+        root,
+        meta,
+        snap_id,
+        _manifest_list(root, _snapshot(meta, None))
+        + [_delete_manifest(root, meta, snap_id, shards, content, eq_ids)],
+        "delete",
+        meta["schema"],
+        meta["partition-specs"][0],
+    )
 
 
 def create_table(
@@ -435,13 +375,16 @@ def create_table(
     data_files = _write_data_files(
         spark, df, root, partition_cols, ice_schema=ice_schema
     )
-    manifest = _write_manifest_v2(
+    snap_id = _next_snapshot_id(None)
+    return _commit_snapshot(
         root,
-        [(ADDED, 1, _with_v2_fields(d, DATA_CONTENT)) for d in data_files],
-        pschema,
-    )
-    return _commit_snapshot_v2(
-        root, None, [(manifest, DATA_CONTENT)], "append", ice_schema, spec
+        None,
+        snap_id,
+        [_data_manifest(root, snap_id, data_files, pschema)],
+        "append",
+        ice_schema,
+        spec,
+        format_version=2,
     )
 
 
@@ -455,14 +398,16 @@ def append(df: DataFrame, root: str) -> dict:
     data_files = _write_data_files(
         spark, df, root, partition_cols, ice_schema=ice_schema
     )
-    snap_id = len(meta["snapshots"]) + 1
-    manifest = _write_manifest_v2(
+    snap_id = _next_snapshot_id(meta)
+    return _commit_snapshot(
         root,
-        [(ADDED, snap_id, _with_v2_fields(d, DATA_CONTENT)) for d in data_files],
-        pschema,
-    )
-    return _commit_snapshot_v2(
-        root, meta, [(manifest, DATA_CONTENT)], "append", ice_schema, spec
+        meta,
+        snap_id,
+        _manifest_list(root, _snapshot(meta, None))
+        + [_data_manifest(root, snap_id, data_files, pschema)],
+        "append",
+        ice_schema,
+        spec,
     )
 
 
@@ -705,26 +650,7 @@ def position_delete(
     if not shards:
         raise ValueError(f"no rows match: {predicate}")
     n = sum(c for _, c in shards)
-    spec = meta["partition-specs"][0]
-    snap_id = len(meta["snapshots"]) + 1
-    manifest = _write_manifest_v2(
-        root,
-        [
-            (
-                ADDED,
-                snap_id,
-                _with_v2_fields(
-                    _delete_file_entry(root, rel, c, spec["fields"]),
-                    POS_DELETES,
-                ),
-            )
-            for rel, c in shards
-        ],
-        _partition_avro_schema(meta["schema"], spec),
-    )
-    snap = _commit_snapshot_v2(
-        root, meta, [(manifest, DELETES_MANIFEST)], "delete", meta["schema"], spec
-    )
+    snap = _commit_deletes(root, meta, shards, POS_DELETES)
     return {
         "snapshot_id": snap["snapshot-id"],
         "positions_deleted": n,
@@ -750,27 +676,7 @@ def equality_delete(
     if not shards:
         raise ValueError(f"no rows match: {predicate}")
     n = sum(c for _, c in shards)
-    spec = meta["partition-specs"][0]
-    snap_id = len(meta["snapshots"]) + 1
-    manifest = _write_manifest_v2(
-        root,
-        [
-            (
-                ADDED,
-                snap_id,
-                _with_v2_fields(
-                    _delete_file_entry(root, rel, c, spec["fields"]),
-                    EQ_DELETES,
-                    eq_ids,
-                ),
-            )
-            for rel, c in shards
-        ],
-        _partition_avro_schema(meta["schema"], spec),
-    )
-    snap = _commit_snapshot_v2(
-        root, meta, [(manifest, DELETES_MANIFEST)], "delete", meta["schema"], spec
-    )
+    snap = _commit_deletes(root, meta, shards, EQ_DELETES, eq_ids)
     return {"snapshot_id": snap["snapshot-id"], "keys_deleted": n}
 
 
@@ -890,35 +796,19 @@ def merge_mor(
         )
     )
     n = sum(c for _, c in shards)
-    del_manifest = _write_manifest_v2(
-        root,
-        [
-            (
-                ADDED,
-                snap_id,
-                _with_v2_fields(
-                    _delete_file_entry(root, rel, c, spec["fields"]),
-                    EQ_DELETES,
-                    eq_ids,
-                ),
-            )
-            for rel, c in shards
-        ],
-        pschema,
+    del_manifest = _delete_manifest(
+        root, meta, snap_id, shards, EQ_DELETES, eq_ids
     )
     partition_cols = [f["name"] for f in spec["fields"]]
     data_files = _write_data_files(
         spark, source, root, partition_cols, ice_schema=ice_schema
     )
-    data_manifest = _write_manifest_v2(
-        root,
-        [(ADDED, snap_id, _with_v2_fields(d, DATA_CONTENT)) for d in data_files],
-        pschema,
-    )
-    snap = _commit_snapshot_v2(
+    snap = _commit_snapshot(
         root,
         meta,
-        [(del_manifest, DELETES_MANIFEST), (data_manifest, DATA_CONTENT)],
+        snap_id,
+        _manifest_list(root, _snapshot(meta, None))
+        + [del_manifest, _data_manifest(root, snap_id, data_files, pschema)],
         "overwrite",
         ice_schema,
         spec,
@@ -1002,36 +892,13 @@ def rewrite_data_files(spark: SparkSession, root: str, where=None) -> dict:
         spark, merged, root, partition_cols, ice_schema=ice_schema
     )
     snap_id = _next_snapshot_id(meta)
-    manifest = _write_manifest_v2(
-        root,
-        [(ADDED, snap_id, _with_v2_fields(d, DATA_CONTENT)) for d in data_files],
-        _partition_avro_schema(ice_schema, spec),
+    manifest = _data_manifest(
+        root, snap_id, data_files, _partition_avro_schema(ice_schema, spec)
     )
     # fresh manifest list: ONLY the rewritten data (no carry-over)
-    seq = meta.get("last-sequence-number", 0) + 1
-    ml_path = os.path.join(
-        _meta_dir(root), f"snap-{snap_id}-1-{uuid.uuid4().hex[:8]}.avro"
+    _commit_snapshot(
+        root, meta, snap_id, [manifest], "replace", ice_schema, spec
     )
-    write_container(
-        ml_path,
-        iter([(manifest["manifest_path"], manifest["manifest_length"], 0,
-               DATA_CONTENT, seq, snap_id)]),
-        _MANIFEST_LIST_SCHEMA_V2,
-        codec="deflate",
-    )
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": 0,
-        "summary": {"operation": "replace"},
-        "manifest-list": os.path.relpath(ml_path, root),
-        "schema-id": 0,
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["current-snapshot-id"] = snap_id
-    new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    _write_metadata(root, new_meta)
     return {"snapshot_id": snap_id, "files_written": len(data_files)}
 
 
@@ -1111,22 +978,21 @@ def _rewrite_data_files_scoped(spark: SparkSession, root: str, where) -> dict:
         spark, merged, root, partition_cols, ice_schema=ice_schema
     )
     snap_id = _next_snapshot_id(meta)
-    seq = meta.get("last-sequence-number", 0) + 1
     pschema = _partition_avro_schema(ice_schema, spec)
-    rows: list[tuple] = []
-    prev = _snapshot(meta, None)
-    for mf in read_container(_resolve_path(root, prev["manifest-list"])):
-        m_path, _mlen, _specid, content, mseq, msnap = mf
-        if content == DELETES_MANIFEST:
-            rows.append(mf)  # delete debt keeps shadowing kept files
+    manifests: list[dict] = []
+    for mf in _manifest_list(root, _snapshot(meta, None)):
+        if mf["content"] == DELETES_MANIFEST:
+            manifests.append(mf)  # delete debt keeps shadowing kept files
             continue
-        entries = list(read_container(_resolve_path(root, m_path)))
+        entries = list(
+            read_container(_resolve_path(root, mf["manifest_path"]))
+        )
         hit = any(
             st != DELETED and f["file_path"] in match_paths
             for st, _sid, f in entries
         )
         if not hit:
-            rows.append(mf)  # untouched manifest carries verbatim
+            manifests.append(mf)  # untouched manifest carries verbatim
             continue
         rewritten = []
         for st, sid, f in entries:
@@ -1136,99 +1002,24 @@ def _rewrite_data_files_scoped(spark: SparkSession, root: str, where) -> dict:
                 rewritten.append(
                     (EXISTING if st != DELETED else st, sid, f)
                 )
-        m2 = _write_manifest_v2(root, rewritten, pschema)
-        rows.append(
-            (
-                m2["manifest_path"],
-                m2["manifest_length"],
-                0,
-                DATA_CONTENT,
-                mseq,  # ORIGINAL sequence: kept entries inherit it
-                msnap,
-            )
+        m2 = _write_manifest(root, rewritten, pschema, content=DATA_CONTENT)
+        # ORIGINAL sequence number and provenance: kept entries inherit
+        manifests.append(
+            {
+                **m2,
+                "sequence_number": mf["sequence_number"],
+                "added_snapshot_id": mf["added_snapshot_id"],
+            }
         )
-    new_manifest = _write_manifest_v2(
-        root,
-        [(ADDED, snap_id, _with_v2_fields(d, DATA_CONTENT)) for d in data_files],
-        pschema,
+    manifests.append(_data_manifest(root, snap_id, data_files, pschema))
+    _commit_snapshot(
+        root, meta, snap_id, manifests, "replace", ice_schema, spec
     )
-    rows.append(
-        (
-            new_manifest["manifest_path"],
-            new_manifest["manifest_length"],
-            0,
-            DATA_CONTENT,
-            seq,
-            snap_id,
-        )
-    )
-    ml_path = os.path.join(
-        _meta_dir(root), f"snap-{snap_id}-1-{uuid.uuid4().hex[:8]}.avro"
-    )
-    write_container(
-        ml_path, iter(rows), _MANIFEST_LIST_SCHEMA_V2, codec="deflate"
-    )
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": 0,
-        "summary": {"operation": "replace"},
-        "manifest-list": os.path.relpath(ml_path, root),
-        "schema-id": 0,
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["current-snapshot-id"] = snap_id
-    new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    _write_metadata(root, new_meta)
     return {
         "snapshot_id": snap_id,
         "files_written": len(data_files),
         "files_compacted": len(match_paths),
     }
-
-
-def expire_snapshots(root: str, keep_last: int = 1) -> dict:
-    """Snapshot expiration (the spec's maintenance op): drop all but the
-    newest ``keep_last`` snapshots from the metadata, delete their
-    manifest lists/manifests, and delete DATA AND DELETE FILES no longer
-    reachable from any retained snapshot.  Time travel to an expired
-    snapshot then FAILS LOUDLY (snapshot id absent), like the txnlog
-    module's vacuumed-commit refusal."""
-    meta = _current_metadata(root)
-    snaps = meta["snapshots"]
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    keep, drop = snaps[-keep_last:], snaps[:-keep_last]
-    if not drop:
-        return {"snapshots_expired": 0, "files_deleted": 0}
-    reachable: set[str] = set()
-    keep_manifests: set[str] = set()
-    for s in keep:
-        for mf in read_container(_resolve_path(root, s["manifest-list"])):
-            keep_manifests.add(mf[0])
-            for _st, _sid, data_file in read_container(_resolve_path(root, mf[0])):
-                reachable.add(data_file["file_path"])
-    n_files = 0
-    for s in drop:
-        ml = _resolve_path(root, s["manifest-list"])
-        for mf in read_container(ml):
-            if not os.path.exists(_resolve_path(root, mf[0])):
-                continue  # shared manifest already removed via another snapshot
-            for _st, _sid, data_file in read_container(_resolve_path(root, mf[0])):
-                p = data_file["file_path"]
-                if p not in reachable and os.path.exists(_resolve_path(root, p)):
-                    os.remove(_resolve_path(root, p))
-                    n_files += 1
-            if mf[0] not in keep_manifests and os.path.exists(
-                _resolve_path(root, mf[0])
-            ):
-                os.remove(_resolve_path(root, mf[0]))
-        os.remove(ml)
-    new_meta = dict(meta)
-    new_meta["snapshots"] = keep
-    _write_metadata(root, new_meta)
-    return {"snapshots_expired": len(drop), "files_deleted": n_files}
 
 
 def rewrite_position_deletes(spark: SparkSession, root: str) -> dict:
@@ -1276,64 +1067,31 @@ def rewrite_position_deletes(spark: SparkSession, root: str) -> dict:
         ["file_path", "pos"],
     )
     n = sum(c for _, c in shards)
-    spec = meta["partition-specs"][0]
     snap_id = _next_snapshot_id(meta)
-    seq = meta.get("last-sequence-number", 0) + 1
-    rows: list[tuple] = []
-    prev = _snapshot(meta, None)
-    for mf in read_container(_resolve_path(root, prev["manifest-list"])):
-        if mf[3] == DELETES_MANIFEST:
-            entries = list(read_container(_resolve_path(root, mf[0])))
+    manifests: list[dict] = []
+    for mf in _manifest_list(root, _snapshot(meta, None)):
+        if mf["content"] == DELETES_MANIFEST:
+            entries = list(
+                read_container(_resolve_path(root, mf["manifest_path"]))
+            )
             if entries and all(
                 e[2].get("content") == POS_DELETES for e in entries
             ):
                 continue  # pure position-delete manifest: superseded
-        rows.append(mf)
+        manifests.append(mf)
     if shards:
-        manifest = _write_manifest_v2(
-            root,
-            [
-                (
-                    ADDED,
-                    snap_id,
-                    _with_v2_fields(
-                        _delete_file_entry(root, rel, c, spec["fields"]),
-                        POS_DELETES,
-                    ),
-                )
-                for rel, c in shards
-            ],
-            _partition_avro_schema(meta["schema"], spec),
+        manifests.append(
+            _delete_manifest(root, meta, snap_id, shards, POS_DELETES)
         )
-        rows.append(
-            (
-                manifest["manifest_path"],
-                manifest["manifest_length"],
-                0,
-                DELETES_MANIFEST,
-                seq,
-                snap_id,
-            )
-        )
-    ml_path = os.path.join(
-        _meta_dir(root), f"snap-{snap_id}-1-{uuid.uuid4().hex[:8]}.avro"
+    _commit_snapshot(
+        root,
+        meta,
+        snap_id,
+        manifests,
+        "replace",
+        meta["schema"],
+        meta["partition-specs"][0],
     )
-    write_container(
-        ml_path, iter(rows), _MANIFEST_LIST_SCHEMA_V2, codec="deflate"
-    )
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": 0,
-        "summary": {"operation": "replace"},
-        "manifest-list": os.path.relpath(ml_path, root),
-        "schema-id": 0,
-    }
-    new_meta = dict(meta)
-    new_meta["last-sequence-number"] = seq
-    new_meta["current-snapshot-id"] = snap_id
-    new_meta["snapshots"] = meta["snapshots"] + [snapshot]
-    _write_metadata(root, new_meta)
     return {
         "snapshot_id": snap_id,
         "delete_files_before": before,

@@ -22,6 +22,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from incubator_gluten_spark.sources import table_core
+
 
 class _SeqPartition(InputPartition):
     def __init__(self, start: int, end: int) -> None:
@@ -174,8 +176,7 @@ class _JsonlWriter(DataSourceWriter):
             "files": sorted(m.path for m in messages),
             "rows": sum(m.n_rows for m in messages),
         }
-        with open(f"{self.path}/_COMMIT", "w") as f:
-            _json.dump(manifest, f)
+        table_core.replace(f"{self.path}/_COMMIT", _json.dumps(manifest))
 
     def abort(self, messages) -> None:
         import os as _os
@@ -230,8 +231,9 @@ class _JsonlStreamWriter(DataSourceStreamWriter):
             "files": sorted(m.path for m in messages if m is not None),
             "rows": sum(m.n_rows for m in messages if m is not None),
         }
-        with open(f"{self.path}/_BATCH_{batchId:010d}", "w") as f:
-            _json.dump(manifest, f)
+        table_core.replace(
+            f"{self.path}/_BATCH_{batchId:010d}", _json.dumps(manifest)
+        )
 
     def abort(self, messages, batchId: int) -> None:
         import os as _os

@@ -10,16 +10,19 @@ atomically":
   instead of overwriting the first (``os.link`` refuses an existing
   target).  This is the put-if-absent the real Delta, Iceberg and Hudi
   libraries build their commit protocols on.
-* ``replace`` — a pointer file that is rewritten on purpose
+* ``replace`` — a file that is rewritten on purpose: pointer files
   (``version-hint.text``, Delta ``_last_checkpoint``, txnlog
-  checkpoints, ``hoodie.properties``).  Readers see the old or the new
-  contents, never a torn mix.
+  checkpoints, ``hoodie.properties``), the Python DataSource sinks'
+  ``_COMMIT`` / ``_BATCH_<id>`` manifests, and Hudi log files that a
+  restore truncates (bytes).  Readers see the old or the new contents,
+  never a torn mix.
 
 Both write a temp file in the target's directory and fsync it before
 publishing it.  Temp names start with ``.`` and end in ``.tmp``, so no
 log lister matches them: Delta's ``\\d{20}.json``, Hudi's ``*.commit`` /
-``*.deltacommit``, txnlog's ``[0-9]*.json``.  A crash between the temp
-write and the publish leaves the log at its previous version.
+``*.deltacommit``, txnlog's ``[0-9]*.json``; the Hudi log-file lister,
+whose names also start with ``.``, skips ``*.tmp``.  A crash between
+the temp write and the publish leaves the log at its previous version.
 
 Data files.  ``write_staged`` is the one parquet write every format's
 data path goes through: Spark writes the DataFrame (Hive-style
@@ -64,12 +67,14 @@ __all__ = [
 ]
 
 
-def _publish(path: str, text: str, publish: Callable[[str, str], None]) -> None:
+def _publish(
+    path: str, data: str | bytes, publish: Callable[[str, str], None]
+) -> None:
     head, name = os.path.split(path)
     tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
     try:
-        with open(tmp, "x") as f:
-            f.write(text)
+        with open(tmp, "xb" if isinstance(data, bytes) else "x") as f:
+            f.write(data)
             f.flush()
             os.fsync(f.fileno())
         publish(tmp, path)
@@ -86,9 +91,10 @@ def put_if_absent(path: str, text: str) -> None:
     _publish(path, text, os.link)
 
 
-def replace(path: str, text: str) -> None:
-    """Atomically set ``path`` to ``text``, whether or not it exists."""
-    _publish(path, text, os.replace)
+def replace(path: str, data: str | bytes) -> None:
+    """Atomically set ``path`` to ``data`` (text or bytes), whether or
+    not it exists."""
+    _publish(path, data, os.replace)
 
 
 def unescape_path_name(seg: str) -> str | None:

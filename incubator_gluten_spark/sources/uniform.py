@@ -38,7 +38,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -50,7 +49,9 @@ from incubator_gluten_spark.sources.iceberg_format import (
     _current_schema,
     _default_spec,
     _iceberg_schema,
+    _manifest_list,
     _meta_dir,
+    _next_snapshot_id,
     _partition_avro_schema,
     _partition_spec,
     _resolve_path,
@@ -141,18 +142,17 @@ def enable_uniform(spark: SparkSession, root: str) -> dict:
         raise ValueError(f"{root} already has Iceberg metadata")
     snap = dp.resolve(spark, root)
     _check_convertible(snap)
-    os.makedirs(_meta_dir(root), exist_ok=True)
     ice_schema = _iceberg_schema(snap.schema)
     spec = _partition_spec(ice_schema, snap.partition_columns)
     pschema = _partition_avro_schema(ice_schema, spec)
     pf = _part_fields(ice_schema, spec)
-    entries = [(ADDED, 1, _data_file_for(root, a, pf)) for a in snap.adds]
-    manifest = _write_manifest(
-        root, entries, pschema, uuid.uuid4().hex[:8], spec_id=0
-    )
+    snap_id = _next_snapshot_id(None)
+    entries = [(ADDED, snap_id, _data_file_for(root, a, pf)) for a in snap.adds]
+    manifest = _write_manifest(root, entries, pschema)
     committed = _commit_snapshot(
         root,
         None,
+        snap_id,
         [manifest],
         "append",
         ice_schema,
@@ -209,12 +209,12 @@ def sync_uniform(spark: SparkSession, root: str) -> dict:
     pf = _part_fields(ice_schema, spec)
     prev = _snapshot(meta, None)
     first_seen: dict[str, int] = {}
-    for mf in read_container(_resolve_path(root, prev["manifest-list"])):
+    for mf in _manifest_list(root, prev):
         for status, snap_id, data_file in read_container(
-            _resolve_path(root, mf[0])
+            _resolve_path(root, mf["manifest_path"])
         ):
             first_seen[data_file["file_path"]] = snap_id
-    new_id = len(meta["snapshots"]) + 1
+    new_id = _next_snapshot_id(meta)
     entries, n_new = [], 0
     for a in snap.adds:
         if a["path"] in first_seen:
@@ -227,12 +227,11 @@ def sync_uniform(spark: SparkSession, root: str) -> dict:
     live = {a["path"] for a in snap.adds}
     n_gone = len([p for p in first_seen if p not in live])
     op = "append" if n_gone == 0 else "overwrite"
-    manifest = _write_manifest(
-        root, entries, pschema, uuid.uuid4().hex[:8], spec_id=0
-    )
+    manifest = _write_manifest(root, entries, pschema)
     return _commit_snapshot(
         root,
         meta,
+        new_id,
         [manifest],
         op,
         ice_schema,

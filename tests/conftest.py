@@ -61,13 +61,16 @@ _SLOW_TESTS: set[str] = {
 }
 
 # oracle-parity cases that stay in the fast tier although their file is
-# slow: one per table log that commits through sources/table_core.py
+# slow: one per table log that commits through sources/table_core.py,
+# plus the Iceberg v2 merge and delete-file rewrite commits
 _FAST_ORACLE_CASES: set[str] = {
     f"test_query_matches_oracle[{name}]"
     for name in (
         "src_delta_merge",
         "src_iceberg_refs",
         "src_iceberg_mor",
+        "src_iceberg_merge_mor",
+        "src_iceberg_rewrite_posdel",
         "src_hudi_services",
         "src_txnlog_conflict",
         "src_delta_uniform",

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.sources import iceberg_format as ice
 from incubator_gluten_spark.sources import iceberg_v2 as v2
 from incubator_gluten_spark.sources.avro import read_container
 
@@ -122,7 +123,7 @@ def test_mixed_deletes_and_history(spark, sf_dir, tmp_path):
         "o_totalprice >= 20000 AND o_orderpriority <> '4-NOT SPECIFIED'"
     )
     assert _rows(got) == _rows(want)
-    hist = v2.history(root)
+    hist = ice.history(root)
     assert [h["operation"] for h in hist] == ["append", "delete", "delete"]
     assert [h["sequence_number"] for h in hist] == [1, 2, 3]
     with pytest.raises(ValueError, match="no rows match"):
@@ -164,7 +165,7 @@ def test_rewrite_data_files_drops_delete_debt(spark, sf_dir, tmp_path):
     scan = v2.plan_scan(root)
     assert not scan["pos_deletes"] and not scan["eq_deletes"]
     assert _rows(v2.read_table(spark, root)) == before
-    pre = v2.history(root)[-2]["snapshot_id"]
+    pre = ice.history(root)[-2]["snapshot_id"]
     assert _rows(v2.read_table(spark, root, snapshot_id=pre)) == before
     # a fresh delete works on the compacted table (ids stay monotonic)
     v2.position_delete(spark, root, "o_totalprice < 80000")
@@ -181,15 +182,19 @@ def test_expire_snapshots_unreachable_files_removed(spark, sf_dir, tmp_path):
     v2.position_delete(spark, root, "o_totalprice < 40000")
     v2.rewrite_data_files(spark, root)
     current = _rows(v2.read_table(spark, root))
-    out = v2.expire_snapshots(root, keep_last=1)
-    assert out["snapshots_expired"] == 2 and out["files_deleted"] > 0
+    out = ice.expire_snapshots(root, retain_last=1)
+    assert (
+        len(out["expired_snapshot_ids"]) == 2
+        and out["data_files_deleted"] > 0
+    )
     # the retained snapshot still reads
     assert _rows(v2.read_table(spark, root)) == current
     # time travel to an expired snapshot fails loudly
     with pytest.raises(ValueError, match="not found"):
         v2.read_table(spark, root, snapshot_id=1)
     # idempotent when nothing to expire; commits still work after
-    assert v2.expire_snapshots(root, keep_last=1)["snapshots_expired"] == 0
+    out = ice.expire_snapshots(root, retain_last=1)
+    assert len(out["expired_snapshot_ids"]) == 0
     v2.append(base.limit(0), root)  # empty append commits cleanly
     assert _rows(v2.read_table(spark, root)) == current
 
@@ -370,15 +375,17 @@ def test_rewrite_position_deletes_drops_fully_dangling_file(spark, tmp_path):
     entry = v2._with_v2_fields(
         v2._delete_file_entry(root, rel, n, spec["fields"]), v2.POS_DELETES
     )
-    snap_id = v2._next_snapshot_id(meta)
-    manifest = v2._write_manifest_v2(
+    snap_id = ice._next_snapshot_id(meta)
+    manifest = ice._write_manifest(
         root,
         [(v2.ADDED, snap_id, entry)],
         v2._partition_avro_schema(meta["schema"], spec),
+        content=v2.DELETES_MANIFEST,
     )
-    v2._commit_snapshot_v2(
-        root, meta, [(manifest, v2.DELETES_MANIFEST)], "delete",
-        meta["schema"], spec,
+    ice._commit_snapshot(
+        root, meta, snap_id,
+        ice._manifest_list(root, ice._snapshot(meta, None)) + [manifest],
+        "delete", meta["schema"], spec,
     )
     want = sorted(r["k"] for r in v2.read_table(spark, root).collect())
     out = v2.rewrite_position_deletes(spark, root)
@@ -536,7 +543,7 @@ def test_rewrite_data_files_where_partition_scoped(spark, tmp_path):
     # the kept partition's deleted row (k=2) must STILL be deleted
     assert (2, 2.0, "b") not in set(got)
     # changelog shows the compaction as delete+re-insert of 'a' only
-    ch = v2.history(root)
+    ch = ice.history(root)
     assert ch[-1]["operation"] == "replace"
     # non-partition predicate refuses; undecomposable conjunct refuses
     import pytest as _pytest

@@ -217,6 +217,103 @@ def test_iceberg_crash_after_metadata_put_is_committed(tmp_path, monkeypatch):
     assert ice._current_metadata(root)["n"] == 3
 
 
+def _mor_log_across_savepoint(root: str) -> str:
+    """A Hudi MOR layout built from the log and timeline formats alone:
+    two deltacommits whose data blocks share one log file, and a
+    savepoint at the first."""
+    from incubator_gluten_spark.sources import hudi_mor as mor
+
+    first, second = "20240101000000000", "20240101000000001"
+    os.makedirs(hf._timeline_dir(root))
+    hf._three_phase(root, first, "deltacommit", {})
+    hf._three_phase(root, second, "deltacommit", {})
+    hf._three_phase(
+        root,
+        "20240101000000002",
+        "savepoint",
+        {"savepointedAt": first, "retainedFiles": []},
+    )
+    log = os.path.join(root, f".fg1_{first}.log.1_0-1-0")
+    with open(log, "wb") as f:
+        for instant in (first, second):
+            f.write(
+                mor.pack_log_block(
+                    mor.AVRO_DATA_BLOCK,
+                    {mor.HEADER_INSTANT_TIME: instant},
+                    instant.encode(),
+                )
+            )
+    return log
+
+
+def test_crash_while_truncating_hudi_log_keeps_old_bytes(tmp_path, monkeypatch):
+    from incubator_gluten_spark.sources import hudi_mor as mor
+
+    root = str(tmp_path / "mor")
+    log = _mor_log_across_savepoint(root)
+    with open(log, "rb") as f:
+        old = f.read()
+    before = _tree(root)
+    with monkeypatch.context() as m:
+        _crash_on_publish(m, lambda dst: ".log." in dst)
+        with pytest.raises(_Crash):
+            mor.restore_to_savepoint(root, "20240101000000000")
+    assert _tree(root) == before  # no temp file either
+    with open(log, "rb") as f:
+        assert f.read() == old
+    out = mor.restore_to_savepoint(root, "20240101000000000")
+    assert out["logs_truncated"] == 1
+    with open(log, "rb") as f:
+        blocks = mor.unpack_log_blocks(f.read())
+    assert [h[mor.HEADER_INSTANT_TIME] for _t, h, _c in blocks] == [
+        "20240101000000000"
+    ]
+    # a temp file that a killed restore left behind is not a log file
+    open(os.path.join(root, f".{os.path.basename(log)}.0.tmp"), "wb").close()
+    assert [p for *_, p in mor._log_files(root)] == [log]
+
+
+def _sink_commits(path: str) -> dict:
+    """name -> (commit(messages), manifest file) of the Python
+    DataSource sinks that publish a manifest."""
+    from incubator_gluten_spark.sources import avro, pyds
+
+    avro_writer = avro._make_datasource_classes()({"path": path}).writer(
+        None, False
+    )
+    stream = pyds._JsonlStreamWriter({"path": path})
+    return {
+        "avro": (avro_writer.commit, "_COMMIT"),
+        "jsonl": (pyds._JsonlWriter({"path": path}).commit, "_COMMIT"),
+        # a replayed micro-batch rewrites its manifest
+        "jsonl_stream": (lambda ms: stream.commit(ms, 7), "_BATCH_0000000007"),
+    }
+
+
+@pytest.mark.parametrize("sink", ["avro", "jsonl", "jsonl_stream"])
+def test_failed_sink_manifest_publish_keeps_previous(tmp_path, monkeypatch, sink):
+    from types import SimpleNamespace
+
+    path = str(tmp_path / sink)
+    os.makedirs(path)
+    commit, name = _sink_commits(path)[sink]
+    commit([SimpleNamespace(path="part-a", n_rows=1)])
+    with open(os.path.join(path, name)) as f:
+        old = f.read()
+    with monkeypatch.context() as m:
+        _crash_on_publish(m)
+        with pytest.raises(_Crash):
+            commit(
+                [
+                    SimpleNamespace(path="part-a", n_rows=1),
+                    SimpleNamespace(path="part-b", n_rows=2),
+                ]
+            )
+    assert sorted(os.listdir(path)) == [name]
+    with open(os.path.join(path, name)) as f:
+        assert f.read() == old
+
+
 # ---------------------------------------------------------------------------
 # footer_stats over fake footers (the pyarrow FileMetaData surface it reads)
 

@@ -100,8 +100,10 @@ def test_iceberg_mixed_v1_v2_manifest_entries(spark, sf_dir, tmp_path):
     manifest = ice._write_manifest(
         root, [(1, 99, d) for d in data_files], pschema, "v1mix"
     )
-    v2._commit_snapshot_v2(
-        root, meta, [(manifest, 0)], "append", meta["schema"], spec
+    ice._commit_snapshot(
+        root, meta, ice._next_snapshot_id(meta),
+        ice._manifest_list(root, ice._snapshot(meta, None)) + [manifest],
+        "append", meta["schema"], spec,
     )
     scan = v2.plan_scan(root)
     # v1 entries joined the data bucket with the inherited sequence number
