@@ -38,6 +38,7 @@ from incubator_gluten_spark.datapipe.multimodal import (
 )
 from incubator_gluten_spark.datapipe.textstats import token_count_bpe
 from incubator_gluten_spark.plans import Q
+from incubator_gluten_spark.plans.sources_queries import IO_DIR
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -2302,7 +2303,6 @@ def dp_corpus_to_lakehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     capability asserted at the metadata level).  At 100 TB this is
     the same plan: one dedup shuffle + one partitioned write; the
     Delta commit is O(files) metadata."""
-    import os as _os
     import shutil
 
     from incubator_gluten_spark.sources import delta_protocol as dp
@@ -2313,7 +2313,7 @@ def dp_corpus_to_lakehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     released = quality.join(keep, "doc_id", "left_semi").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    root = f"/tmp/spark_graft_io_{_os.getpid()}/dp_corpus_lakehouse"
+    root = f"{IO_DIR}/dp_corpus_lakehouse"
     shutil.rmtree(root, ignore_errors=True)
     dp.create_table(released, root, partition_cols=["lang"])
     snap = dp.resolve(spark, root)

@@ -24,11 +24,11 @@ from incubator_gluten_spark.sources.io import (
     write_partitioned,
 )
 
-# Session-unique scratch root (r5 verdict "what's wrong" #3): a fixed
-# path let two concurrent graders (driver sweep + judge pytest) replay
-# and commit the same txnlog table roots, corrupting each other.  The
-# txnlog COMMIT protocol itself is concurrency-safe; the FIXTURE paths
-# were not.  PID-scoping makes every grading process self-contained.
+# The scratch root every plan module writes its tables under (the only
+# place the prefix is spelled).  Session-unique: a fixed path let two
+# concurrent graders (driver sweep + judge pytest) replay and commit the
+# same table roots, corrupting each other; PID-scoping makes every
+# grading process self-contained.
 IO_DIR = f"/tmp/spark_graft_io_{os.getpid()}"
 
 
@@ -590,38 +590,65 @@ def src_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name)
 
 
+# The src_txnlog_* entries: the commit-log surface (snapshot reads, time
+# travel, copy-on-write DML, compaction, schema evolution, change feed,
+# checkpoints, optimistic concurrency, vacuum) over the Delta wire format.
 _TXNLOG_BUILT: dict[tuple[str, str], str] = {}
 
 
+def _orders_log(
+    spark: SparkSession, sf_dir: str, name: str, **create_kw
+) -> tuple[DataFrame, str]:
+    """A fresh Delta table under ``name``: the 1996 orders (version 0),
+    then the 1997 orders appended (version 1).  Returns (orders, root)."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
+
+    (orders,) = _t(spark, sf_dir, "orders")
+    root = _path(name)
+    year = F.year("o_orderdate")
+    dp.create_table(orders.filter(year == 1996), root, **create_kw)
+    dp.append(orders.filter(year == 1997), root)
+    return orders, root
+
+
 def _txnlog_table(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Build the demo transaction-log table: create(1996 orders) ->
-    append(1997 orders) -> copy-on-write delete of 1-URGENT rows.
-    The build is deterministic, so within one session both txnlog
-    entries share a single materialization per sf_dir (keyed on the
+    """Build the demo commit-log table: create(1996 orders) ->
+    append(1997 orders) -> copy-on-write delete of 1-URGENT rows, on a
+    change-data-feed table partitioned by priority.
+    The build is deterministic, so within one session the entries that
+    read it share a single materialization per sf_dir (keyed on the
     Spark applicationId so a fresh session always rebuilds)."""
-    from incubator_gluten_spark.sources import txnlog
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _TXNLOG_BUILT.get(key)
     if cached is not None:
         return cached
 
-    (orders,) = _t(spark, sf_dir, "orders")
-    root = _path(name)
-    create_df = orders.filter(F.year("o_orderdate") == 1996)
-    txnlog.create_table(create_df, root, stats_cols=["o_orderpriority"])
-    txnlog.append(
-        orders.filter(F.year("o_orderdate") == 1997),
-        root,
-        stats_cols=["o_orderpriority"],
+    _, root = _orders_log(
+        spark,
+        sf_dir,
+        name,
+        partition_cols=["o_orderpriority"],
+        configuration={"delta.enableChangeDataFeed": "true"},
     )
-    outcome = txnlog.delete_where(spark, root, "o_orderpriority", "1-URGENT")
-    # range-clustering on the stats column must let SOME files skip the
-    # rewrite, or the manifest stats are dead weight
+    outcome = dp.delete_where(spark, root, "o_orderpriority = '1-URGENT'")
+    # the partition values in the log must let the other priorities skip
+    # the rewrite, or the layout is dead weight
     if outcome["files_skipped"] == 0:
-        raise RuntimeError(f"txnlog delete pruned nothing: {outcome}")
+        raise RuntimeError(f"delete pruned nothing: {outcome}")
     _TXNLOG_BUILT[key] = root
     return root
+
+
+def _order_totals(snap: DataFrame, *keys) -> DataFrame:
+    """Order count ``n`` and DECIMAL-exact ``total`` price per key."""
+    return snap.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
+        .cast("double")
+        .alias("total"),
+    )
 
 
 @q(
@@ -638,23 +665,16 @@ def _txnlog_table(spark: SparkSession, sf_dir: str, name: str) -> str:
     "sources", "lakehouse",
 )
 def src_txnlog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lakehouse-format analog (gluten-iceberg IcebergScanTransformer
-    .scala:44, gluten-delta/, gluten-hudi/ — jars absent in this
-    container): a JSON transaction log over immutable parquet gives
-    versioned snapshot reads, copy-on-write deletes, and manifest-stats
-    file skipping.  This entry materializes create(1996) ->
-    append(1997) -> delete(1-URGENT) and reads the LATEST snapshot; the
-    oracle states the equivalent final table, so the whole commit
-    protocol is hash-certified end-to-end."""
-    from incubator_gluten_spark.sources import txnlog
+    """Versioned snapshot read of the commit-log table (gluten-delta/
+    DeltaScanTransformer's surface): this entry materializes
+    create(1996) -> append(1997) -> delete(1-URGENT) and reads the
+    LATEST snapshot; the oracle states the equivalent final table, so
+    the whole commit protocol is hash-certified end-to-end."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
     root = _txnlog_table(spark, sf_dir, "txnlog_orders")
-    snap = txnlog.read_snapshot(spark, root)
-    return snap.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("total"),
+    return _order_totals(dp.read_table(spark, root), "o_orderstatus").select(
+        "o_orderstatus", F.col("n").alias("n_orders"), "total"
     )
 
 
@@ -676,18 +696,17 @@ def src_txnlog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_txnlog_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel across the commit log: the same table read AS OF
-    versions 0, 1, and 2 (Delta `VERSION AS OF` / Iceberg snapshot-id
-    analog).  Each snapshot resolves add/remove sets from the log
-    prefix only — no data file is ever mutated, so every historical
-    version stays exactly reproducible (certified by the oracle's
-    per-version row counts)."""
+    versions 0, 1, and 2 (Delta `VERSION AS OF`).  Each snapshot
+    resolves add/remove sets from the log prefix only — no data file is
+    ever mutated, so every historical version stays exactly
+    reproducible (certified by the oracle's per-version row counts)."""
     from functools import reduce
 
-    from incubator_gluten_spark.sources import txnlog
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
     root = _txnlog_table(spark, sf_dir, "txnlog_orders")
     frames = [
-        txnlog.read_snapshot(spark, root, v).agg(
+        dp.read_table(spark, root, version=v).agg(
             F.lit(v).cast("int").alias("version"),
             F.count("*").alias("n_rows"),
         )
@@ -719,41 +738,39 @@ def src_txnlog_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sources", "lakehouse", "merge",
 )
 def src_txnlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO (upsert) on the transaction-log table — Delta's
+    """MERGE INTO (upsert) on the commit-log table — Delta's
     whenMatchedUpdateAll / whenNotMatchedInsertAll over immutable
-    parquet.  Two merges exercise both pruning paths: an UPDATE whose
-    source keys sit in one file's [min,max] bounds (every other file
-    skipped via manifest bounds, asserted), then an INSERT whose keys
-    exceed all bounds (zero files rewritten — a pure append commit,
-    asserted).  The oracle states the equivalent final table, so the
-    merge protocol itself is hash-certified."""
-    from incubator_gluten_spark.sources import txnlog
+    parquet.  The table is range-laid-out on the key into four files,
+    so two merges exercise both pruning paths: an UPDATE whose source
+    keys sit in one file's [min,max] stats (every other file skipped,
+    asserted), then an INSERT whose keys exceed all bounds (zero files
+    rewritten — a pure append commit, asserted).  The oracle states the
+    equivalent final table, so the merge protocol itself is
+    hash-certified."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
     (orders,) = _t(spark, sf_dir, "orders")
     root = _path("txnlog_merge")
     tgt = orders.filter(F.year("o_orderdate") == 1996)
-    txnlog.create_table(tgt, root, stats_cols=["o_orderkey"])
+    dp.create_table(tgt.repartitionByRange(4, "o_orderkey"), root)
 
     upd = tgt.filter(F.col("o_orderkey") < 1000).withColumn(
         "o_orderpriority", F.lit("MERGED")
     )
-    out1 = txnlog.merge_into(spark, root, upd, "o_orderkey")
+    out1 = dp.merge(spark, root, upd, "o_orderkey")
     if out1["files_skipped"] == 0:
         raise RuntimeError(f"update-merge pruned nothing: {out1}")
 
     ins = orders.filter(F.year("o_orderdate") == 1997).withColumn(
         "o_orderkey", F.col("o_orderkey") + F.lit(10_000_000)
     )
-    out2 = txnlog.merge_into(spark, root, ins, "o_orderkey")
+    out2 = dp.merge(spark, root, ins, "o_orderkey")
     if out2["files_rewritten"] != 0:
         raise RuntimeError(f"insert-merge rewrote files: {out2}")
 
-    snap = txnlog.read_snapshot(spark, root)
-    return snap.groupBy(F.col("o_orderpriority").alias("prio")).agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("total"),
+    snap = dp.read_table(spark, root)
+    return _order_totals(snap, F.col("o_orderpriority").alias("prio")).select(
+        "prio", F.col("n").alias("n_orders"), "total"
     )
 
 
@@ -770,44 +787,33 @@ def src_txnlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sources", "lakehouse", "compaction",
 )
 def src_txnlog_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPTIMIZE/compaction on the transaction-log table (Delta OPTIMIZE,
-    Iceberg rewrite_data_files): three append commits fragment the
-    table into small files; one compaction commit swaps them for a
-    single large file WITHOUT changing any row.  Asserted: file count
-    strictly drops, pre-optimize snapshots still resolve (time travel
-    over compaction), and the oracle certifies row-for-row content
-    equality after the rewrite."""
-    from incubator_gluten_spark.sources import txnlog
+    """OPTIMIZE/compaction on the commit-log table (Delta OPTIMIZE):
+    three append commits fragment the table into small files; one
+    compaction commit swaps them for a single large file WITHOUT
+    changing any row.  Asserted: file count strictly drops,
+    pre-optimize snapshots still resolve (time travel over compaction),
+    and the oracle certifies row-for-row content equality after the
+    rewrite."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
     (orders,) = _t(spark, sf_dir, "orders")
     root = _path("txnlog_optimize")
     years = (1995, 1996, 1997)
-    txnlog.create_table(
-        orders.filter(F.year("o_orderdate") == years[0]),
-        root,
-        stats_cols=["o_orderstatus"],
-    )
+    dp.create_table(orders.filter(F.year("o_orderdate") == years[0]), root)
     for y in years[1:]:
-        txnlog.append(
-            orders.filter(F.year("o_orderdate") == y),
-            root,
-            stats_cols=["o_orderstatus"],
-        )
-    before_rows = txnlog.read_snapshot(spark, root).count()
-    out = txnlog.optimize(spark, root, target_files=1)
-    if out["files_after"] >= out["files_before"]:
+        dp.append(orders.filter(F.year("o_orderdate") == y), root)
+    before_rows = dp.read_table(spark, root).count()
+    out = dp.optimize(spark, root, target_files=1)
+    if out["files_added"] >= out["files_removed"]:
         raise RuntimeError(f"compaction did not shrink file count: {out}")
-    if txnlog.read_snapshot(spark, root).count() != before_rows:
+    if dp.read_table(spark, root).count() != before_rows:
         raise RuntimeError("compaction changed row count")
     # pre-optimize snapshot still readable (history preserved)
-    if txnlog.read_snapshot(spark, root, 1).count() == 0:
+    if dp.read_table(spark, root, version=1).count() == 0:
         raise RuntimeError("historical snapshot lost after compaction")
-    snap = txnlog.read_snapshot(spark, root)
-    return snap.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("total"),
+    snap = dp.read_table(spark, root)
+    return _order_totals(snap, "o_orderstatus").select(
+        "o_orderstatus", F.col("n").alias("n_orders"), "total"
     )
 
 
@@ -833,20 +839,20 @@ def src_txnlog_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sources", "lakehouse", "schema-evolution",
 )
 def src_txnlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema evolution across commits (Delta mergeSchema=true write /
-    ALTER TABLE ADD COLUMN): version 0 has no `channel` column, version
-    1 appends rows that do.  The snapshot read merges both schemas —
-    pre-evolution files surface NULL for the new column — and the
-    commit log records the evolved schema.  Oracle states the same
-    union with an explicit NULL column for the legacy half."""
-    from incubator_gluten_spark.sources import txnlog
+    """Schema evolution across commits (Delta mergeSchema=true write):
+    version 0 has no `channel` column, version 1 appends rows that do
+    and widens the log's schema in the same commit.  Files written
+    before the widening read back NULL for the new column.  Oracle
+    states the same union with an explicit NULL column for the legacy
+    half."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
     (orders,) = _t(spark, sf_dir, "orders")
     root = _path("txnlog_schema_evo")
     v0 = orders.filter(F.year("o_orderdate") == 1996).select(
         "o_orderkey", "o_totalprice"
     )
-    txnlog.create_table(v0, root, stats_cols=["o_orderkey"])
+    dp.create_table(v0, root)
     v1 = orders.filter(F.year("o_orderdate") == 1997).select(
         "o_orderkey",
         "o_totalprice",
@@ -856,17 +862,13 @@ def src_txnlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("standard")
         .alias("channel"),
     )
-    txnlog.append(v1, root, stats_cols=["o_orderkey"])
-    snap = txnlog.read_snapshot(spark, root)
+    dp.append(v1, root, merge_schema=True)
+    snap = dp.read_table(spark, root)
     if "channel" not in snap.columns:
         raise RuntimeError("schema evolution lost the new column")
-    return snap.groupBy(
-        F.coalesce(F.col("channel"), F.lit("legacy")).alias("channel")
-    ).agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("total"),
+    channel = F.coalesce(F.col("channel"), F.lit("legacy")).alias("channel")
+    return _order_totals(snap, channel).select(
+        "channel", F.col("n").alias("n_orders"), "total"
     )
 
 
@@ -885,25 +887,37 @@ def src_txnlog_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sources", "lakehouse", "cdc",
 )
 def src_txnlog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change Data Feed between snapshots (Delta table_changes /
-    readChangeFeed, gluten-delta surface): versions 1 -> 2 of the demo
-    table differ by the copy-on-write delete of 1-URGENT rows, so the
-    feed must contain exactly those rows as deletes and nothing as
-    inserts.  table_changes reads ONLY the files the interval touched
-    (unchanged files cancel by identity and are never opened) and
-    derives row-level changes by multiset difference — the oracle
-    recomputes the expected delete set straight from the fixture, so
-    the whole file-action derivation is hash-certified."""
-    from incubator_gluten_spark.sources import txnlog
+    """Change Data Feed of one commit (Delta table_changes /
+    readChangeFeed, gluten-delta surface): version 2 of the demo table
+    is the copy-on-write delete of 1-URGENT rows, so the feed must
+    contain exactly those rows as deletes and nothing as inserts.  The
+    delete wrote them as change-data files in its own commit; the
+    oracle recomputes the expected delete set straight from the
+    fixture."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
     root = _txnlog_table(spark, sf_dir, "txnlog_orders")
-    changes = txnlog.table_changes(spark, root, 1, 2)
-    return changes.groupBy("_change_type", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("total"),
+    return _order_totals(
+        dp.table_changes(spark, root, 2, 2), "_change_type", "o_orderpriority"
     )
+
+
+def _checkpointed_log(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """create(1996) -> append(1997) -> delete(1-URGENT) -> checkpoint at
+    version 2 -> append(1998), then every commit file at or below the
+    checkpoint deleted: the latest snapshot must resolve from the
+    checkpoint and the commits after it alone."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
+
+    orders, root = _orders_log(spark, sf_dir, name)
+    dp.delete_where(spark, root, "o_orderpriority = '1-URGENT'")
+    ck = dp.checkpoint(spark, root)
+    if ck["version"] != 2:
+        raise RuntimeError(f"unexpected checkpoint version: {ck}")
+    dp.append(orders.filter(F.year("o_orderdate") == 1998), root)
+    for v in range(ck["version"] + 1):
+        os.remove(os.path.join(root, "_delta_log", f"{v:020d}.json"))
+    return root
 
 
 @q(
@@ -920,53 +934,16 @@ def src_txnlog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sources", "lakehouse",
 )
 def src_txnlog_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log checkpointing + log VACUUM (Delta _last_checkpoint / Iceberg
-    snapshot manifest-list): after create(1996) -> append(1997) ->
-    delete(1-URGENT), a checkpoint materializes the resolved live set;
-    a further append(1998) lands after it, then the PRE-CHECKPOINT
-    commit files are deleted outright.  The latest snapshot must still
-    resolve correctly from checkpoint + suffix commits alone — reader
-    cost is O(commits since checkpoint), the property that keeps a
-    100 TB table's log replay bounded.  Independent root: this entry
-    mutates its table, so it never shares state with the other txnlog
-    entries."""
-    import os as _os
-    import shutil as _shutil
+    """Log checkpointing + log cleanup (Delta _last_checkpoint): the
+    latest snapshot of ``_checkpointed_log`` resolves from the
+    checkpoint parquet plus the one commit after it — reader cost is
+    O(commits since checkpoint), the property that keeps a 100 TB
+    table's log replay bounded.  Independent root: this entry mutates
+    its table, so it never shares state with the other entries."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
-    from incubator_gluten_spark.sources import txnlog
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    root = _path("txnlog_ckpt")
-    # idempotency within one session: a second build (same PID => same
-    # IO_DIR) must not write a fresh commit 0 into the already
-    # checkpointed+vacuumed table — the ck version==2 check below would
-    # fail on leftover state
-    _shutil.rmtree(root, ignore_errors=True)
-    txnlog.create_table(
-        orders.filter(F.year("o_orderdate") == 1996),
-        root,
-        stats_cols=["o_orderpriority"],
-    )
-    txnlog.append(
-        orders.filter(F.year("o_orderdate") == 1997),
-        root,
-        stats_cols=["o_orderpriority"],
-    )
-    txnlog.delete_where(spark, root, "o_orderpriority", "1-URGENT")
-    ck = txnlog.checkpoint(root)
-    if ck["version"] != 2:
-        raise RuntimeError(f"unexpected checkpoint version: {ck}")
-    txnlog.append(
-        orders.filter(F.year("o_orderdate") == 1998),
-        root,
-        stats_cols=["o_orderpriority"],
-    )
-    # log VACUUM: drop every commit at or below the checkpoint — the
-    # snapshot below must survive on checkpoint + suffix commits alone
-    for v in range(ck["version"] + 1):
-        _os.remove(_os.path.join(root, "_txnlog", f"{v:08d}.json"))
-    snap = txnlog.read_snapshot(spark, root)
-    return snap.agg(
+    root = _checkpointed_log(spark, sf_dir, "txnlog_ckpt")
+    return dp.read_table(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct("o_orderstatus").alias("n_status"),
         F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
@@ -992,75 +969,54 @@ def src_txnlog_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def src_txnlog_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Optimistic-concurrency conflict detection (Delta's
     OptimisticTransaction protocol; gluten-delta surface).  Two
-    deterministic interleavings via the txn's test seam — no sleeps:
+    deterministic interleavings via delete_where's test seam — no
+    sleeps:
 
-    * RETRY path: a delete txn reads version 1, then a DISJOINT append
-      (1998 rows, all '2-HIGH' — manifest stats prove the '1-URGENT'
-      predicate absent) commits first.  The txn must detect the append
-      is conflict-free from stats alone and retry at the next version.
-    * CONFLICT path: a second delete txn plans to rewrite the '5-LOW'
+    * RETRY path: a delete reads version 1, then a DISJOINT append
+      (1998 rows, all '2-HIGH' — its partition value proves the
+      '1-URGENT' predicate absent) commits first.  The delete must
+      find the append conflict-free from the log alone and commit at
+      the next version.
+    * CONFLICT path: a second delete plans to rewrite the '5-LOW'
       files, then a competing delete of the SAME value commits first.
-      The winner's commit removed files the loser's rewrite still
-      references -> ConcurrentWriteError (ConcurrentDeleteDelete), and
-      the loser's staged files are aborted so the table is untouched.
+      The winner removed files the loser also removes ->
+      ConcurrentWriteError (ConcurrentDeleteDelete), and the loser's
+      staged files are deleted so the table is untouched.
 
     The final snapshot (both committed deletes applied, the loser's
     not) is hash-certified against the fixture-derived oracle."""
-    from incubator_gluten_spark.sources import txnlog
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
-    (orders,) = _t(spark, sf_dir, "orders")
-    root = _path("txnlog_conflict")
-    import shutil as _shutil
-
-    _shutil.rmtree(root, ignore_errors=True)
-    txnlog.create_table(
-        orders.filter(F.year("o_orderdate") == 1996),
-        root,
-        stats_cols=["o_orderpriority"],
+    orders, root = _orders_log(
+        spark, sf_dir, "txnlog_conflict", partition_cols=["o_orderpriority"]
     )
-    txnlog.append(
-        orders.filter(F.year("o_orderdate") == 1997),
-        root,
-        stats_cols=["o_orderpriority"],
-    )
-    out = txnlog.txn_delete_where(
+    out = dp.delete_where(
         spark,
         root,
-        "o_orderpriority",
-        "1-URGENT",
-        _before_commit=lambda: txnlog.append(
+        "o_orderpriority = '1-URGENT'",
+        _before_commit=lambda: dp.append(
             orders.filter(
                 (F.year("o_orderdate") == 1998)
                 & (F.col("o_orderpriority") == "2-HIGH")
             ),
             root,
-            stats_cols=["o_orderpriority"],
         ),
     )
     if out["commit_retries"] != 1:
         raise RuntimeError(f"disjoint append should retry once: {out}")
-    conflicted = False
     try:
-        txnlog.txn_delete_where(
+        dp.delete_where(
             spark,
             root,
-            "o_orderpriority",
-            "5-LOW",
-            _before_commit=lambda: txnlog.delete_where(
-                spark, root, "o_orderpriority", "5-LOW"
+            "o_orderpriority = '5-LOW'",
+            _before_commit=lambda: dp.delete_where(
+                spark, root, "o_orderpriority = '5-LOW'"
             ),
         )
-    except txnlog.ConcurrentWriteError:
-        conflicted = True
-    if not conflicted:
         raise RuntimeError("overlapping delete-delete must conflict")
-    snap = txnlog.read_snapshot(spark, root)
-    return snap.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("total"),
-    )
+    except dp.ConcurrentWriteError:
+        pass
+    return _order_totals(dp.read_table(spark, root), "o_orderpriority")
 
 
 @q(
@@ -1076,55 +1032,30 @@ def src_txnlog_conflict(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sources", "lakehouse", "vacuum",
 )
 def src_txnlog_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-file VACUUM with a resolvability retention bound (Delta
-    VACUUM; the log checkpoint draws the boundary).  After create ->
-    append -> COW delete -> checkpoint -> append, the delete's rewritten
-    originals are unreachable from every still-resolvable snapshot;
-    vacuum_data must remove exactly those orphans, keep every referenced
-    file, and time travel to a pre-checkpoint version must now REFUSE
-    (raise) rather than return a half-deleted snapshot.  The surviving
-    latest snapshot is hash-certified against the fixture oracle."""
-    import os as _os
-    import shutil as _shutil
+    """Data-file VACUUM (Delta VACUUM, retaining the latest version):
+    on ``_checkpointed_log`` the delete's rewritten originals are
+    unreachable from the retained snapshot; vacuum must remove exactly
+    the files the snapshot does not reference, and time travel to a
+    version behind the cleaned-up log must REFUSE (raise) rather than
+    return a half-deleted snapshot.  The surviving latest snapshot is
+    hash-certified against the fixture oracle."""
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
-    from incubator_gluten_spark.sources import txnlog
-
-    (orders,) = _t(spark, sf_dir, "orders")
-    root = _path("txnlog_vacuum")
-    _shutil.rmtree(root, ignore_errors=True)
-    txnlog.create_table(
-        orders.filter(F.year("o_orderdate") == 1996),
-        root,
-        stats_cols=["o_orderpriority"],
-    )
-    txnlog.append(
-        orders.filter(F.year("o_orderdate") == 1997),
-        root,
-        stats_cols=["o_orderpriority"],
-    )
-    txnlog.delete_where(spark, root, "o_orderpriority", "1-URGENT")
-    ck = txnlog.checkpoint(root)
-    txnlog.append(
-        orders.filter(F.year("o_orderdate") == 1998),
-        root,
-        stats_cols=["o_orderpriority"],
-    )
-    # log VACUUM up to the checkpoint, then data-file VACUUM
-    for v in range(ck["version"] + 1):
-        _os.remove(_os.path.join(root, "_txnlog", f"{v:08d}.json"))
-    before = len(_os.listdir(_os.path.join(root, "data")))
-    out = txnlog.vacuum_data(root)
-    if out["n_deleted"] == 0:
+    root = _checkpointed_log(spark, sf_dir, "txnlog_vacuum")
+    out = dp.vacuum(spark, root, retain_versions=1)
+    if out["files_deleted"] == 0:
         raise RuntimeError(f"COW delete left no vacuum-able orphans: {out}")
-    if before - out["n_deleted"] != out["n_retained"]:
-        raise RuntimeError(f"vacuum accounting is off: {before} vs {out}")
+    on_disk = {
+        f for f in os.listdir(root) if f.endswith(".parquet")
+    }
+    if on_disk != {a["path"] for a in dp.resolve(spark, root).adds}:
+        raise RuntimeError(f"vacuum kept the wrong files: {sorted(on_disk)}")
     try:
-        txnlog.read_snapshot(spark, root, version=1)
+        dp.read_table(spark, root, version=1)
         raise RuntimeError("time travel past retention must raise")
     except ValueError:
         pass
-    snap = txnlog.read_snapshot(spark, root)
-    return snap.agg(
+    return dp.read_table(spark, root).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")), 2)
         .cast("double")
@@ -1167,7 +1098,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_delta_wire(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta Lake WIRE FORMAT (sources/delta_protocol.py — the public
-    PROTOCOL.md log on disk, not the txnlog analog): create a table
+    PROTOCOL.md log on disk): create a table
     PARTITIONED by o_orderpriority (partition values live in the log's
     add.partitionValues, data files do NOT contain the column — verified
     here), append a second year, COW-delete one partition (the

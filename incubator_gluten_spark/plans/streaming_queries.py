@@ -10,12 +10,11 @@ dedup vs DISTINCT, applyInPandasWithState vs GROUP BY.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from incubator_gluten_spark.plans import Q
+from incubator_gluten_spark.plans.sources_queries import IO_DIR
 from incubator_gluten_spark.streaming.jobs import (
     read_events_stream,
     run_to_memory,
@@ -158,7 +157,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     support); result read back from disk."""
     import uuid
 
-    out = f"/tmp/spark_graft_io_{os.getpid()}/stream_fb_{uuid.uuid4().hex[:8]}"
+    out = f"{IO_DIR}/stream_fb_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(
         F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total")
@@ -512,29 +511,36 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming", "sink", "lakehouse",
 )
 def stream_txnlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-once streaming sink into the transaction-log table:
-    foreachBatch commits each micro-batch at version == batch_id via
-    append_if_absent, so a REPLAYED batch is a no-op (asserted by
-    re-running the last batch by hand and checking both the return
-    flag and the row count).  This is the Delta idempotent-sink
-    pattern (txnAppId/txnVersion) the reference's Kafka->lakehouse
-    pipelines rely on, built on Structured Streaming + the local
-    commit log.  Oracle: the final snapshot equals the plain batch
-    aggregate over events."""
+    """Exactly-once streaming sink into a PARTITIONED Delta table: the
+    ``stream_delta_sink`` pattern with every micro-batch split across
+    one directory per event_type, so each batch commits several files
+    and the replay check covers a multi-file commit.  Oracle: the final
+    snapshot equals the plain batch aggregate over events."""
+    return _delta_stream_sink(
+        spark, sf_dir, "stream_txnlog_sink", partition_cols=["event_type"]
+    )
+
+
+def _delta_stream_sink(
+    spark: SparkSession, sf_dir: str, name: str, partition_cols=None
+) -> DataFrame:
+    """Stream events into the Delta table ``name`` one
+    ``append_stream_batch`` per micro-batch (appId = ``name``), re-deliver
+    the final batch and assert it no-ops, and aggregate the table."""
     import shutil
 
-    from incubator_gluten_spark.sources import txnlog
+    from incubator_gluten_spark.sources import delta_protocol as dp
 
-    # PID-scoped root: concurrent graders must not replay the same table
-    root = f"/tmp/spark_graft_io_{os.getpid()}/stream_txnlog_sink"
+    root = f"{IO_DIR}/{name}"
     shutil.rmtree(root, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir)
+    dp.create_table(
+        ev.sparkSession.createDataFrame([], ev.schema), root, partition_cols
+    )
     replay: dict = {}
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        committed = txnlog.append_if_absent(
-            batch_df, root, batch_id, stats_cols=["event_type"]
-        )
+        committed = dp.append_stream_batch(batch_df, root, name, batch_id)
         replay["last"] = (batch_df, batch_id)
         if not committed:
             raise RuntimeError(f"batch {batch_id} double-committed")
@@ -547,16 +553,13 @@ def stream_txnlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sq.awaitTermination()
 
-    snap_rows = txnlog.read_snapshot(spark, root).count()
-    # exactly-once under replay: re-delivering the final batch no-ops
+    n_before = dp.read_table(spark, root).count()
     batch_df, batch_id = replay["last"]
-    if txnlog.append_if_absent(batch_df, root, batch_id):
+    if dp.append_stream_batch(batch_df, root, name, batch_id):
         raise RuntimeError("replayed batch committed twice")
-    if txnlog.read_snapshot(spark, root).count() != snap_rows:
+    if dp.read_table(spark, root).count() != n_before:
         raise RuntimeError("replay changed the table")
-
-    snap = txnlog.read_snapshot(spark, root)
-    return snap.groupBy("event_type").agg(
+    return dp.read_table(spark, root).groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
         .cast("double")
@@ -582,46 +585,9 @@ def stream_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_stream_batch(app_id, batch_id); a replayed batch finds its
     txn version already committed and NO-OPs (asserted by re-delivering
     the final batch).  Oracle: the final snapshot equals the plain batch
-    aggregate over events.  Compare stream_txnlog_sink: same pattern on
-    the miniature log; this one speaks PROTOCOL.md on disk."""
-    import shutil
-
-    from incubator_gluten_spark.sources import delta_protocol as dp
-
-    root = f"/tmp/spark_graft_io_{os.getpid()}/stream_delta_sink"
-    shutil.rmtree(root, ignore_errors=True)
-    ev = read_events_stream(spark, sf_dir)
-    dp.create_table(ev.sparkSession.createDataFrame([], ev.schema), root)
-    replay: dict = {}
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        committed = dp.append_stream_batch(
-            batch_df, root, "stream_delta_sink", batch_id
-        )
-        replay["last"] = (batch_df, batch_id)
-        if not committed:
-            raise RuntimeError(f"batch {batch_id} double-committed")
-
-    sq = (
-        ev.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
-
-    n_before = dp.read_table(spark, root).count()
-    batch_df, batch_id = replay["last"]
-    if dp.append_stream_batch(batch_df, root, "stream_delta_sink", batch_id):
-        raise RuntimeError("replayed batch committed twice")
-    if dp.read_table(spark, root).count() != n_before:
-        raise RuntimeError("replay changed the table")
-    return dp.read_table(spark, root).groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-        .cast("double")
-        .alias("total"),
-    )
+    aggregate over events.  ``stream_txnlog_sink`` is the partitioned
+    twin."""
+    return _delta_stream_sink(spark, sf_dir, "stream_delta_sink")
 
 
 @q(
@@ -642,14 +608,14 @@ def stream_iceberg_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     sinks use — so a replayed foreachBatch finds its batch already
     committed and NO-OPs (asserted by re-delivering the final batch).
     Oracle: the final snapshot equals the plain batch aggregate over
-    events.  The Delta/txnlog twins are stream_delta_sink /
+    events.  The Delta twins are stream_delta_sink /
     stream_txnlog_sink; this completes the sink matrix across the
     three wire formats."""
     import shutil
 
     from incubator_gluten_spark.sources import iceberg_format as ice
 
-    root = f"/tmp/spark_graft_io_{os.getpid()}/stream_iceberg_sink"
+    root = f"{IO_DIR}/stream_iceberg_sink"
     shutil.rmtree(root, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir)
     ice.create_table(
@@ -720,7 +686,7 @@ def stream_iceberg_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from incubator_gluten_spark.sources import iceberg_v2 as v2
 
-    base = f"/tmp/spark_graft_io_{os.getpid()}/stream_ice_upsert"
+    base = f"{IO_DIR}/stream_ice_upsert"
     shutil.rmtree(base, ignore_errors=True)
     src_dir, root = f"{base}/src", f"{base}/table"
     events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
@@ -798,7 +764,7 @@ def stream_hudi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from incubator_gluten_spark.catalog import load_tables
     from incubator_gluten_spark.sources import hudi_format as hf
 
-    root = f"/tmp/spark_graft_io_{os.getpid()}/stream_hudi_sink"
+    root = f"{IO_DIR}/stream_hudi_sink"
     shutil.rmtree(root, ignore_errors=True)
     events = load_tables(spark, sf_dir, ("events",))["events"]
     hf.create_table(
@@ -869,7 +835,7 @@ def stream_iceberg_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_iceberg_stream_source(spark)
-    base = f"/tmp/spark_graft_io_{os.getpid()}/stream_iceberg_source"
+    base = f"{IO_DIR}/stream_iceberg_source"
     shutil.rmtree(base, ignore_errors=True)
     root, ckpt, sink = f"{base}/tbl", f"{base}/ckpt", f"{base}/sink"
     ev = load_tables(spark, sf_dir, ("events",))["events"].select(
@@ -946,7 +912,7 @@ def stream_delta_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from incubator_gluten_spark.catalog import load_tables
 
     register_delta_stream_source(spark)
-    base = f"/tmp/spark_graft_io_{os.getpid()}/stream_delta_source"
+    base = f"{IO_DIR}/stream_delta_source"
     shutil.rmtree(base, ignore_errors=True)
     root, ckpt, sink = f"{base}/tbl", f"{base}/ckpt", f"{base}/sink"
     ev = load_tables(spark, sf_dir, ("events",))["events"].select(
@@ -1072,7 +1038,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY exactly."""
     import shutil
 
-    ckpt = f"/tmp/spark_graft_io_{os.getpid()}/stream_state_reader_ckpt"
+    ckpt = f"{IO_DIR}/stream_state_reader_ckpt"
     shutil.rmtree(ckpt, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(F.count("*").alias("n"))
@@ -1218,7 +1184,7 @@ def stream_hudi_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_hudi_stream_source(spark)
-    base = f"/tmp/spark_graft_io_{os.getpid()}/stream_hudi_source"
+    base = f"{IO_DIR}/stream_hudi_source"
     shutil.rmtree(base, ignore_errors=True)
     root, ckpt, sink = f"{base}/tbl", f"{base}/ckpt", f"{base}/sink"
     ev = load_tables(spark, sf_dir, ("events",))["events"].select(
@@ -1295,7 +1261,7 @@ def stream_delta_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from incubator_gluten_spark.sources import delta_protocol as dp
 
-    base = f"/tmp/spark_graft_io_{os.getpid()}/stream_delta_upsert"
+    base = f"{IO_DIR}/stream_delta_upsert"
     shutil.rmtree(base, ignore_errors=True)
     src_dir, root = f"{base}/src", f"{base}/table"
     events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
@@ -1399,7 +1365,7 @@ def stream_delta_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from incubator_gluten_spark.catalog import load_tables
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
-    root = f"/tmp/spark_graft_io_{os.getpid()}/delta_cdf_source"
+    root = f"{IO_DIR}/delta_cdf_source"
     shutil.rmtree(root, ignore_errors=True)
     cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
     y = lambda yr: orders.filter(F.year("o_orderdate") == yr).select(*cols)

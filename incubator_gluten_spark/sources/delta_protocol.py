@@ -1,12 +1,12 @@
 """Delta Lake transaction-log WIRE FORMAT reader/writer (no jar needed).
 
 The reference ships a Delta connector as a separate module (gluten-delta/,
-DeltaScanTransformer) whose jar this container lacks; ``sources/txnlog.py``
-covers the capability SURFACE with its own miniature log.  This module
-closes the remaining gap the round-6 verdict named — "the wire formats
-themselves" — for Delta: it speaks the PUBLIC Delta protocol
-(delta-io/delta PROTOCOL.md) on disk, byte-compatible with other
-implementations:
+DeltaScanTransformer) whose jar this container lacks.  This module is the
+one table log behind every Delta and commit-log entry: it speaks the
+PUBLIC Delta protocol (delta-io/delta PROTOCOL.md) on disk,
+byte-compatible with other implementations, and commits optimistically
+through ``_commit`` (version from the read, conflict check, bounded
+retry):
 
 * ``_delta_log/%020d.json`` commits of newline-delimited action objects
   (``protocol`` / ``metaData`` / ``add`` / ``remove`` / ``commitInfo``),
@@ -53,7 +53,6 @@ import os
 import re
 import shutil
 import uuid
-from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -540,49 +539,49 @@ def enable_in_commit_timestamps(spark: SparkSession, root: str) -> int:
     cfg = dict(snap.metadata.get("configuration") or {})
     if cfg.get(_ICT_KEY) == "true":
         return snap.version
-    v = current_version(root) + 1
-    import time
-
     cfg[_ICT_KEY] = "true"
-    cfg["delta.inCommitTimestampEnablementVersion"] = str(v)
-    cfg["delta.inCommitTimestampEnablementTimestamp"] = str(
-        int(time.time() * 1000)
-    )
+    # placeholders: the commit stamps the version and timestamp it
+    # lands at (_stamp_in_commit_timestamp)
+    cfg[_ICT_VERSION_KEY] = cfg[_ICT_TIMESTAMP_KEY] = ""
     meta = dict(snap.metadata)
     meta["configuration"] = cfg
     actions: list[dict] = []
-    proto = snap.protocol
-    if "inCommitTimestamp" not in (proto.get("writerFeatures") or []):
-        wfeats = set(proto.get("writerFeatures") or [])
-        if not wfeats:
-            implied = {
-                2: ["appendOnly", "invariants"],
-                3: ["checkConstraints"],
-                4: ["changeDataFeed", "generatedColumns"],
-                5: ["columnMapping"],
-                6: ["identityColumns"],
-            }
-            for v_, fs in implied.items():
-                if proto.get("minWriterVersion", 2) >= v_:
-                    wfeats.update(fs)
-        wfeats.add("inCommitTimestamp")
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": proto.get("minReaderVersion", 1),
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": proto["readerFeatures"]}
-                        if proto.get("readerFeatures")
-                        else {}
-                    ),
-                    "writerFeatures": sorted(wfeats),
-                }
-            }
-        )
+    if "inCommitTimestamp" not in (snap.protocol.get("writerFeatures") or []):
+        actions.append(_with_writer_feature(snap.protocol, "inCommitTimestamp"))
     actions.append({"metaData": meta})
-    _write_actions(root, v, actions)
-    return v
+    return _commit(root, snap.version, actions)
+
+
+def _with_writer_feature(proto: dict, *features: str) -> dict:
+    """A protocol action adding writer ``features`` to ``proto``.  A
+    legacy protocol (no feature list) upgrades to minWriterVersion 7
+    carrying every feature its old minWriterVersion implied
+    (PROTOCOL.md's upgrade rule); reader requirements stay."""
+    wfeats = set(proto.get("writerFeatures") or [])
+    if not wfeats:
+        implied = {
+            2: ["appendOnly", "invariants"],
+            3: ["checkConstraints"],
+            4: ["changeDataFeed", "generatedColumns"],
+            5: ["columnMapping"],
+            6: ["identityColumns"],
+        }
+        for v, fs in implied.items():
+            if proto.get("minWriterVersion", 2) >= v:
+                wfeats.update(fs)
+    wfeats.update(features)
+    return {
+        "protocol": {
+            "minReaderVersion": proto.get("minReaderVersion", 1),
+            "minWriterVersion": 7,
+            **(
+                {"readerFeatures": proto["readerFeatures"]}
+                if proto.get("readerFeatures")
+                else {}
+            ),
+            "writerFeatures": sorted(wfeats),
+        }
+    }
 
 
 def _stats_keep(add: dict, source_predicates: list[tuple]) -> bool:
@@ -1341,7 +1340,6 @@ def delete_where_dv(spark: SparkSession, root: str, predicate: str) -> dict:
 
     snap = resolve(spark, root)
     _require_mutable(snap.metadata, "DELETE (DV)")
-    v = current_version(root) + 1
     df = _grouped_scan(spark, root, snap, with_positions=True)
     existing = {
         a["path"]: a.get("deletionVector")
@@ -1424,7 +1422,7 @@ def delete_where_dv(spark: SparkSession, root: str, predicate: str) -> dict:
                 os.path.join(abs_root, f"deletion_vector_{u}.bin"), "wb"
             ) as f:
                 f.write(bytes(buf))
-            return _dv_commit(root, snap, v, df, predicate, existing, descriptors)
+            return _dv_commit(root, snap, df, predicate, existing, descriptors)
 
         def frame_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             # [version 0x01] then per DV [size i32 BE][data][crc32 BE];
@@ -1470,13 +1468,12 @@ def delete_where_dv(spark: SparkSession, root: str, predicate: str) -> dict:
         )
     finally:
         blobs.unpersist()
-    return _dv_commit(root, snap, v, df, predicate, existing, descriptors)
+    return _dv_commit(root, snap, df, predicate, existing, descriptors)
 
 
 def _dv_commit(
     root: str,
     snap: Snapshot,
-    v: int,
     df: DataFrame,
     predicate: str,
     existing: dict,
@@ -1543,7 +1540,7 @@ def _dv_commit(
                 mapping=_write_mapping(snap.metadata),
             )
         )
-    _write_actions(root, v, actions)
+    v = _commit(root, snap.version, actions, _read_set(snap, predicate))
     return {
         "version": v,
         "files_with_dv": len(entries),
@@ -1589,13 +1586,12 @@ def _assign_row_ids(root: str, version: int, actions: list[dict]) -> list[dict]:
     baseRowId + position) and ``defaultRowCommitVersion``; the row-id
     high-water mark rides in the ``delta.rowTracking`` domain metadata
     and advances in the SAME commit.  Untracked tables pay one raw
-    newest-first metaData probe (no resolve) per commit."""
-    adds = [
-        a["add"]
-        for a in actions
-        if a.get("add") and a["add"].get("baseRowId") is None
-    ]
-    if not adds:
+    newest-first metaData probe (no resolve) per commit.  ``actions``
+    is left as it is: a retried commit assigns again from the new
+    predecessor's mark."""
+    if not any(
+        a.get("add") and a["add"].get("baseRowId") is None for a in actions
+    ):
         return actions
     meta_action = next(
         (a["metaData"] for a in actions if a.get("metaData")), None
@@ -1623,16 +1619,25 @@ def _assign_row_ids(root: str, version: int, actions: list[dict]) -> list[dict]:
     hwm = json.loads(
         domains.get(_ROW_TRACKING_DOMAIN) or '{"rowIdHighWaterMark": -1}'
     )["rowIdHighWaterMark"]
-    for ad in adds:
-        n = json.loads(ad.get("stats") or "{}").get("numRecords")
-        if n is None:
-            raise DeltaProtocolError(
-                "row tracking requires numRecords stats on every add"
-            )
-        ad["baseRowId"] = hwm + 1
-        ad["defaultRowCommitVersion"] = version
-        hwm += n
-    return list(actions) + [
+    out = []
+    for a in actions:
+        ad = a.get("add")
+        if ad and ad.get("baseRowId") is None:
+            n = json.loads(ad.get("stats") or "{}").get("numRecords")
+            if n is None:
+                raise DeltaProtocolError(
+                    "row tracking requires numRecords stats on every add"
+                )
+            a = {
+                "add": {
+                    **ad,
+                    "baseRowId": hwm + 1,
+                    "defaultRowCommitVersion": version,
+                }
+            }
+            hwm += n
+        out.append(a)
+    return out + [
         {
             "domainMetadata": {
                 "domain": _ROW_TRACKING_DOMAIN,
@@ -1644,6 +1649,8 @@ def _assign_row_ids(root: str, version: int, actions: list[dict]) -> list[dict]:
 
 
 _ICT_KEY = "delta.enableInCommitTimestamps"
+_ICT_VERSION_KEY = "delta.inCommitTimestampEnablementVersion"
+_ICT_TIMESTAMP_KEY = "delta.inCommitTimestampEnablementTimestamp"
 
 
 def _last_ict(root: str, before_version: int) -> int | None:
@@ -1674,7 +1681,11 @@ def _stamp_in_commit_timestamp(
     feature ``inCommitTimestamp``): every commit on an enabled table
     leads with a commitInfo action whose ``inCommitTimestamp`` is
     STRICTLY MONOTONIC (max of the wall clock and predecessor + 1) —
-    the clock-skew-proof basis for timestamp time travel."""
+    the clock-skew-proof basis for timestamp time travel.  The commit
+    that enables the feature (its metaData carries the enablement keys
+    and its predecessor has no timestamp) records the version and
+    timestamp it actually lands at, so a retried enablement stays
+    exact."""
     if any(a.get("commitInfo") for a in actions):
         return actions
     meta_action = next(
@@ -1703,17 +1714,196 @@ def _stamp_in_commit_timestamp(
     ict = int(time.time() * 1000)
     if prev is not None and ict <= prev:
         ict = prev + 1
+    if prev is None and meta_action is not None and _ICT_VERSION_KEY in cfg:
+        enabled = {
+            "metaData": {
+                **meta_action,
+                "configuration": {
+                    **cfg,
+                    _ICT_VERSION_KEY: str(version),
+                    _ICT_TIMESTAMP_KEY: str(ict),
+                },
+            }
+        }
+        actions = [enabled if a.get("metaData") else a for a in actions]
     return [{"commitInfo": {"inCommitTimestamp": ict}}] + actions
 
 
-def _write_actions(root: str, version: int, actions: Iterable[dict]) -> None:
+def _write_actions(root: str, version: int, actions: list[dict]) -> None:
     os.makedirs(_log_dir(root), exist_ok=True)
-    actions = _assign_row_ids(root, version, list(actions))
+    actions = _assign_row_ids(root, version, actions)
     actions = _stamp_in_commit_timestamp(root, version, actions)
     table_core.put_if_absent(
         _commit_path(root, version),
         "".join(json.dumps(a) + "\n" for a in actions),
     )
+
+
+class ConcurrentWriteError(RuntimeError):
+    """A commit lost the race to a concurrent writer whose commit
+    invalidates what this one read or removed (Delta's
+    MetadataChanged / ProtocolChanged / ConcurrentDeleteRead /
+    ConcurrentDeleteDelete / ConcurrentAppend / ConcurrentTransaction
+    exceptions), or lost ``_COMMIT_ATTEMPTS`` races in a row."""
+
+
+# attempts a commit makes before giving up on a log that keeps moving
+# under it without ever conflicting
+_COMMIT_ATTEMPTS = 100
+
+
+def _commit(
+    root: str,
+    read_version: int,
+    actions: list[dict],
+    read_predicates: list[tuple] | None = None,
+) -> int:
+    """The one Delta commit, optimistic as Delta's OptimisticTransaction
+    (VLDB 2020 §3.2).  ``actions`` become version ``read_version + 1``,
+    where ``read_version`` is the snapshot the caller planned against
+    (-1 for a new table).  ``read_predicates`` is what the commit read:
+    None for a blind write that read no rows, otherwise the
+    ``[(col, op, literal)]`` conjuncts of the rows it read (physical
+    column names), so ``[]`` reads the whole table.
+
+    When a concurrent writer took the version first, every winning
+    commit since ``read_version`` is checked; the commit conflicts when
+    a winner
+
+    * changed ``metaData`` or ``protocol``;
+    * removed a file this commit removes, or any file when it read the
+      whole table (its rewrites read exactly the files they remove);
+    * added a file whose partitionValues or stats cannot rule out
+      ``read_predicates`` (``_may_match``);
+    * committed a ``txn`` with one of this commit's appIds.
+
+    Otherwise it retries after the newest winner, re-deriving row ids
+    and the in-commit timestamp from its new predecessor.  A commit
+    that conflicts or runs out of attempts deletes the files its
+    actions introduced and raises ``ConcurrentWriteError``.  Returns the
+    committed version."""
+    removes = {a["remove"]["path"] for a in actions if a.get("remove")}
+    app_ids = {a["txn"]["appId"] for a in actions if a.get("txn")}
+    version = read_version + 1
+    for _ in range(_COMMIT_ATTEMPTS):
+        ck = _read_last_checkpoint(root)
+        if ck is None or version > ck:
+            try:
+                _write_actions(root, version, actions)
+                return version
+            except FileExistsError:
+                pass
+        newest = current_version(root)
+        for w in range(version, newest + 1):
+            why = _conflict(root, w, removes, app_ids, read_predicates)
+            if why:
+                _abort(root, read_version, actions)
+                raise ConcurrentWriteError(
+                    f"commit {w} {why} (this commit read version "
+                    f"{read_version})"
+                )
+        version = newest + 1
+    _abort(root, read_version, actions)
+    raise ConcurrentWriteError(
+        f"gave up after {_COMMIT_ATTEMPTS} lost commit races"
+    )
+
+
+def _conflict(
+    root: str,
+    version: int,
+    removes: set[str],
+    app_ids: set[str],
+    read_predicates: list[tuple] | None,
+) -> str | None:
+    """Why winning commit ``version`` invalidates a commit that removes
+    ``removes``, writes txns for ``app_ids`` and read
+    ``read_predicates`` (``_commit``'s rules), or None."""
+    try:
+        winner = _read_commit_actions(root, version)
+    except FileNotFoundError:
+        return "was cleaned up behind a checkpoint and cannot be checked"
+    for a in winner:
+        if a.get("metaData") or a.get("protocol"):
+            return "changed the table's metaData or protocol"
+        rm = a.get("remove")
+        if rm and (rm["path"] in removes or read_predicates == []):
+            return f"removed {rm['path']}, which this commit read"
+        add = a.get("add")
+        if (
+            add
+            and read_predicates is not None
+            and add.get("dataChange", True)
+            and _may_match(add, read_predicates)
+        ):
+            return (
+                f"added {add['path']}, whose stats cannot rule out "
+                "this commit's read"
+            )
+        txn = a.get("txn")
+        if txn and txn["appId"] in app_ids:
+            return f"committed txn {txn['appId']!r} version {txn['version']}"
+    return None
+
+
+def _may_match(add: dict, preds: list[tuple]) -> bool:
+    """False only when a file provably holds no row satisfying
+    ``preds``: it is empty, or its partition values (entering
+    ``_stats_keep`` as min = max bounds next to its footer stats) rule
+    the rows out.  A string partition value compared with a non-string
+    literal keeps the file."""
+    try:
+        stats = json.loads(add.get("stats") or "{}")
+    except (TypeError, ValueError):
+        stats = {}
+    n = stats.get("numRecords")
+    if n == 0:
+        return False
+    pv = add.get("partitionValues") or {}
+    stats["minValues"] = {**(stats.get("minValues") or {}), **pv}
+    stats["maxValues"] = {**(stats.get("maxValues") or {}), **pv}
+    stats["nullCount"] = {
+        **(stats.get("nullCount") or {}),
+        **{c: (n if v is None else 0) for c, v in pv.items()},
+    }
+    return _stats_keep({"stats": json.dumps(stats)}, preds)
+
+
+def _abort(root: str, read_version: int, actions: list[dict]) -> None:
+    """Delete what a commit that gave up staged: the data, cdc and
+    deletion-vector files its actions name, except any file the log at
+    ``read_version`` already names (restores and deletion-vector
+    commits re-add existing files) and absolute paths (a shallow
+    clone's source files)."""
+    own = {}  # the string the log would hold -> file under root
+    for a in actions:
+        f = a.get("add") or a.get("cdc")
+        if not f:
+            continue
+        if not os.path.isabs(f["path"]):
+            own[f["path"]] = f["path"]
+        dv = f.get("deletionVector")
+        if dv and dv.get("storageType") == "u":
+            own[dv["pathOrInlineDv"]] = _dv_file_rel(dv)
+    if not own:
+        return
+    logged = []
+    for v in _list_commit_versions(root):
+        if v <= read_version:
+            with open(_commit_path(root, v)) as fh:
+                logged.append(fh.read())
+    ck = _read_last_checkpoint(root)
+    if ck is not None and ck <= read_version:
+        import pyarrow.parquet as pq
+
+        adds = pq.read_table(_checkpoint_path(root, ck), columns=["add"])
+        logged.append(json.dumps(adds.column("add").to_pylist(), default=str))
+    for key, rel in own.items():
+        if not any(json.dumps(key) in text for text in logged):
+            try:
+                os.remove(os.path.join(root, rel.replace("/", os.sep)))
+            except FileNotFoundError:
+                pass
 
 
 def _footer_min_max(meta) -> dict:
@@ -2137,7 +2327,7 @@ def create_table(
             "minWriterVersion": 7,
             "writerFeatures": sorted(feats),
         }
-        _write_actions(root, 0, [{"protocol": protocol}, meta, *adds])
+        _commit(root, -1, [{"protocol": protocol}, meta, *adds])
         return
     cluster_actions: list[dict] = []
     if cluster_by:
@@ -2169,9 +2359,7 @@ def create_table(
             "writerFeatures": sorted(feats),
         }
         # meta and adds were staged above (partition_cols is [] here)
-        _write_actions(
-            root, 0, [{"protocol": protocol}, meta, *cluster_actions, *adds]
-        )
+        _commit(root, -1, [{"protocol": protocol}, meta, *cluster_actions, *adds])
         return
     if column_defaults:
         # column defaults have NO legacy writer version — they exist
@@ -2214,7 +2402,7 @@ def create_table(
             "minReaderVersion": reader_v,
             "minWriterVersion": writer_v,
         }
-    _write_actions(root, 0, [{"protocol": protocol}, meta, *adds])
+    _commit(root, -1, [{"protocol": protocol}, meta, *adds])
 
 
 def _align_append_schema(
@@ -2333,7 +2521,6 @@ def append(df: DataFrame, root: str, merge_schema: bool = False) -> int:
     columns (the scan binds to the log's schema — no footer merging).
     Batches missing nullable table columns are NULL-filled either way;
     type mismatches and missing required columns refuse."""
-    v = current_version(root) + 1
     spark = SparkSession.getActiveSession()
     snap = resolve(spark, root)
     gens = _generated_cols(snap.metadata)
@@ -2362,8 +2549,7 @@ def append(df: DataFrame, root: str, merge_schema: bool = False) -> int:
         if id_specs
         else None
     ) or schema_upd
-    _write_actions(root, v, ([meta_upd] if meta_upd else []) + adds)
-    return v
+    return _commit(root, snap.version, ([meta_upd] if meta_upd else []) + adds)
 
 
 def append_stream_batch(
@@ -2390,7 +2576,6 @@ def append_stream_batch(
     if id_specs:
         df = df.select(*[f.name for f in snap.schema.fields])
     _enforce_constraints(df, snap.metadata, "streaming append")
-    v = current_version(root) + 1
     adds = _stage_data_files(
         df, root, snap.partition_columns, mapping=_write_mapping(snap.metadata)
     )
@@ -2399,9 +2584,9 @@ def append_stream_batch(
         if id_specs
         else None
     )
-    _write_actions(
+    _commit(
         root,
-        v,
+        snap.version,
         [
             {"txn": {"appId": app_id, "version": batch_id, "lastUpdated": 0}},
             *([meta_upd] if meta_upd else []),
@@ -2437,6 +2622,22 @@ def _split_by_partition_predicate(
     return rewrite, skipped
 
 
+def _read_set(snap: Snapshot, where) -> list[tuple]:
+    """The rows a DML predicate reads, as ``_commit``'s read predicates:
+    its decomposable conjuncts (``extract_skipping_predicates``; a
+    dropped conjunct only widens the set) in the physical column names
+    the log's stats and partitionValues use."""
+    from incubator_gluten_spark.sources.predicates import (
+        extract_skipping_predicates,
+    )
+
+    mapping = _write_mapping(snap.metadata) or {}
+    return [
+        (mapping.get(c, c), op, v)
+        for c, op, v in extract_skipping_predicates(where)
+    ]
+
+
 def _remove_actions(adds: list[dict]) -> list[dict]:
     return [
         {
@@ -2464,12 +2665,16 @@ def _require_mutable(metadata: dict | None, op: str) -> None:
         )
 
 
-def delete_where(spark: SparkSession, root: str, predicate: str) -> dict:
+def delete_where(
+    spark: SparkSession, root: str, predicate: str, _before_commit=None
+) -> dict:
     """Copy-on-write DELETE: rewrite every file that may contain matching
     rows (partition-pruned via the log's partitionValues when the
     predicate is a partition equality), remove originals.  Returns the
-    file accounting."""
-    v = current_version(root) + 1
+    file accounting; ``commit_retries`` counts the concurrent commits
+    that landed between the read and the commit, each checked for a
+    conflict.  ``_before_commit`` is a test seam called between staging
+    and committing, so race interleavings are deterministic."""
     snap = resolve(spark, root)
     _require_mutable(snap.metadata, "DELETE")
     pcols = snap.partition_columns
@@ -2502,11 +2707,14 @@ def delete_where(spark: SparkSession, root: str, predicate: str) -> dict:
                 _stage_data_files(deleted, root, pcols, cdc=True, mapping=mapping)
             )
     actions.extend(_remove_actions(rewrite))
-    _write_actions(root, v, actions)
+    if _before_commit is not None:
+        _before_commit()
+    v = _commit(root, snap.version, actions, _read_set(snap, predicate))
     return {
         "version": v,
         "files_skipped": len(skipped),
         "files_rewritten": len(rewrite),
+        "commit_retries": v - snap.version - 1,
     }
 
 
@@ -2538,7 +2746,6 @@ def overwrite_where(
     the jar (gluten-delta/src/main/scala/org/apache/gluten/execution/
     DeltaScanTransformer.scala); semantics follow the public Delta
     DataFrameWriter.option("replaceWhere", ...) docs."""
-    v = current_version(root) + 1
     snap = resolve(spark, root)
     _require_mutable(snap.metadata, "replaceWhere OVERWRITE")
     if _identity_cols(snap.metadata):
@@ -2598,7 +2805,7 @@ def overwrite_where(
             _stage_data_files(changes, root, pcols, cdc=True, mapping=mapping)
         )
     actions.extend(_remove_actions(rewrite))
-    _write_actions(root, v, actions)
+    v = _commit(root, snap.version, actions, _read_set(snap, predicate))
     return {
         "version": v,
         "files_skipped": len(skipped),
@@ -2617,7 +2824,6 @@ def update_where(
     ``partitionBy`` moves the rows to their new partition directories.
     The rewrite scans through ``_live_rows`` so deletion-vector deletes
     survive it, same as delete_where."""
-    v = current_version(root) + 1
     snap = resolve(spark, root)
     _require_mutable(snap.metadata, "UPDATE")
     bad_ids = set(assignments) & set(_identity_cols(snap.metadata))
@@ -2635,13 +2841,16 @@ def update_where(
     if rewrite:
         sub = Snapshot(snap.version, snap.metadata, rewrite, snap.protocol)
         # row-tracked tables: updated rows KEEP their row id and take
-        # this commit as their row-commit-version (last modification);
-        # unmodified rows in rewritten files keep both (directive #7)
+        # this commit as their row-commit-version (last modification):
+        # a NULL materialized version reads as the new file's
+        # defaultRowCommitVersion, which the commit assigns.  Unmodified
+        # rows in rewritten files keep both (directive #7)
         live, mat = _live_rows_maybe_tracked(spark, root, sub, snap.metadata)
         cond = F.expr(predicate)
         if mat is not None:
             live = live.withColumn(
-                mat[1], F.when(cond, F.lit(v)).otherwise(F.col(mat[1]))
+                mat[1],
+                F.when(cond, F.lit(None).cast("long")).otherwise(F.col(mat[1])),
             )
         types = {f.name: f.dataType.simpleString() for f in snap.schema.fields}
         updated = live.select(
@@ -2704,12 +2913,19 @@ def update_where(
                 )
             )
     actions.extend(_remove_actions(rewrite))
-    _write_actions(root, v, actions)
+    v = _commit(root, snap.version, actions, _read_set(snap, predicate))
     return {
         "version": v,
         "files_skipped": len(skipped),
         "files_rewritten": len(rewrite),
     }
+
+
+def _key_range(key: str, lo, hi) -> list[tuple] | None:
+    """What a merge read, as ``_commit``'s read predicates: the target
+    rows whose key lies in the source's [lo, hi] (nothing when every
+    source key is NULL)."""
+    return None if lo is None else [(key, ">=", lo), (key, "<=", hi)]
 
 
 # MERGE's CDF image joins hint broadcast only while the rewrite set is
@@ -2738,7 +2954,6 @@ def merge(
     keys raise only when they MATCH a target row (Delta's
     DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW); duplicates that
     match nothing are plain multi-row inserts, which Delta allows."""
-    v = current_version(root) + 1
     snap = resolve(spark, root)
     # merge() always carries an UPDATE clause (whenMatchedUpdateAll)
     _require_mutable(snap.metadata, "MERGE with update clause")
@@ -2759,7 +2974,7 @@ def merge(
         F.max(key_col),
     ).first()
     if n_src == 0:
-        _write_actions(root, v, [])
+        v = _commit(root, snap.version, [])
         return {"version": v, "files_skipped": len(snap.adds), "files_rewritten": 0}
     rewrite, untouched = [], []
     # stats keys are physical names under column mapping; hoisted out of
@@ -2814,10 +3029,12 @@ def merge(
         tgt = tgt.alias("t")
         joined = tgt.join(src_nn, tgt[key_col] == src_nn[key_col], "full_outer")
         matched = src_nn[key_col].isNotNull()
+        # a matched row's NULL materialized version reads as the new
+        # file's defaultRowCommitVersion: this commit
         id_cols = (
             [
                 tgt[mat[0]].alias(mat[0]),
-                F.when(matched, F.lit(v))
+                F.when(matched, F.lit(None).cast("long"))
                 .otherwise(tgt[mat[1]])
                 .alias(mat[1]),
             ]
@@ -2877,7 +3094,7 @@ def merge(
             )
         )
     actions.extend(_remove_actions(rewrite))
-    _write_actions(root, v, actions)
+    v = _commit(root, snap.version, actions, _key_range(phys_key, lo, hi))
     return {
         "version": v,
         "files_skipped": len(untouched),
@@ -2988,7 +3205,6 @@ def merge_clauses(
     if mutating:
         # insert-only merges are legal on appendOnly tables (Delta)
         _require_mutable(snap.metadata, "MERGE with update/delete clauses")
-    v = current_version(root) + 1
     pcols = snap.partition_columns
     has_nmbs = any(c["when"] == "not_matched_by_source" for c in clauses)
     n_src, n_nn, n_keys, lo, hi = source.agg(
@@ -3113,7 +3329,8 @@ def merge_clauses(
     if mat is not None:
         # id: target rows keep theirs, inserted rows have NULL (fresh
         # at read, baseRowId + position); commit-version: any updating
-        # action stamps THIS commit, kept rows carry theirs
+        # action stamps THIS commit (NULL reads as the new file's
+        # defaultRowCommitVersion), kept rows carry theirs
         upd_tags = [
             f"{i}:{c['action']}"
             for i, c in enumerate(clauses)
@@ -3124,7 +3341,7 @@ def merge_clauses(
         )
         out_cols.append(F.col(f"t.{mat[0]}").alias(mat[0]))
         out_cols.append(
-            F.when(upd, F.lit(v))
+            F.when(upd, F.lit(None).cast("long"))
             .otherwise(F.col(f"t.{mat[1]}"))
             .alias(mat[1])
         )
@@ -3194,7 +3411,9 @@ def merge_clauses(
                 }
             },
         )
-    _write_actions(root, v, actions)
+    # a not-matched-by-source clause reads every target row
+    reads = [] if has_nmbs else _key_range(phys_key, lo, hi)
+    v = _commit(root, snap.version, actions, reads)
     return {
         "version": v,
         "files_skipped": len(untouched),
@@ -3410,7 +3629,7 @@ def checkpoint(spark: SparkSession, root: str) -> dict:
     import pyarrow.parquet as pq
 
     snap = resolve(spark, root)
-    v = current_version(root)
+    v = snap.version
     proto = snap.protocol
     schema = _checkpoint_pa_schema()
     names = [f.name for f in schema]
@@ -3556,15 +3775,13 @@ def enable_cdf(spark: SparkSession, root: str) -> int:
     version FORWARD only — earlier commits stay unreadable through
     ``table_changes``, exactly like Delta."""
     snap = resolve(spark, root)
-    v = current_version(root) + 1
     meta = dict(snap.metadata)
     conf = dict(meta.get("configuration") or {})
     conf[_CDF_KEY] = "true"
     meta["configuration"] = conf
     proto = dict(snap.protocol)
     proto["minWriterVersion"] = max(proto.get("minWriterVersion", 2), 4)
-    _write_actions(root, v, [{"protocol": proto}, {"metaData": meta}])
-    return v
+    return _commit(root, snap.version, [{"protocol": proto}, {"metaData": meta}])
 
 
 def _require_mapping(snap: Snapshot, op: str) -> None:
@@ -3582,14 +3799,12 @@ def _commit_schema_change(
     """Metadata-ONLY commit re-stating the metaData with a new field
     list (rename/drop/add under column mapping): zero add/remove
     actions, so the commit is O(1) regardless of table size."""
-    v = current_version(root) + 1
     meta = dict(snap.metadata)
     d = json.loads(meta["schemaString"])
     d["fields"] = fields
     meta["schemaString"] = json.dumps(d)
     meta["partitionColumns"] = partition_cols
-    _write_actions(root, v, [{"metaData": meta}])
-    return v
+    return _commit(root, snap.version, [{"metaData": meta}])
 
 
 def rename_column(spark: SparkSession, root: str, old: str, new: str) -> int:
@@ -3666,15 +3881,13 @@ def add_column(
             },
         }
     )
-    v = current_version(root) + 1
     meta = dict(snap.metadata)
     d = json.loads(meta["schemaString"])
     d["fields"] = fields
     meta["schemaString"] = json.dumps(d)
     conf[_CM_MAXID_KEY] = str(next_id)
     meta["configuration"] = conf
-    _write_actions(root, v, [{"metaData": meta}])
-    return v
+    return _commit(root, snap.version, [{"metaData": meta}])
 
 
 def set_column_default(
@@ -3719,39 +3932,9 @@ def set_column_default(
     if expr is not None and "allowColumnDefaults" not in (
         proto.get("writerFeatures") or []
     ):
-        feats = set(proto.get("writerFeatures") or [])
-        if not feats:
-            # legacy -> v7 upgrade must carry every feature the old
-            # minWriterVersion implied (PROTOCOL.md upgrade rule)
-            implied = {
-                2: ["appendOnly", "invariants"],
-                3: ["checkConstraints"],
-                4: ["changeDataFeed", "generatedColumns"],
-                5: ["columnMapping"],
-                6: ["identityColumns"],
-            }
-            for v_, fs in implied.items():
-                if proto.get("minWriterVersion", 2) >= v_:
-                    feats.update(fs)
-        feats.add("allowColumnDefaults")
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": proto.get("minReaderVersion", 1),
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": proto["readerFeatures"]}
-                        if proto.get("readerFeatures")
-                        else {}
-                    ),
-                    "writerFeatures": sorted(feats),
-                }
-            }
-        )
+        actions.append(_with_writer_feature(proto, "allowColumnDefaults"))
     actions.append({"metaData": meta})
-    v = current_version(root) + 1
-    _write_actions(root, v, actions)
-    return v
+    return _commit(root, snap.version, actions)
 
 
 def alter_cluster_by(
@@ -3775,33 +3958,9 @@ def alter_cluster_by(
         )
     actions: list[dict] = []
     proto = snap.protocol
-    wfeats = set(proto.get("writerFeatures") or [])
-    if "clustering" not in wfeats:
-        if not wfeats:
-            implied = {
-                2: ["appendOnly", "invariants"],
-                3: ["checkConstraints"],
-                4: ["changeDataFeed", "generatedColumns"],
-                5: ["columnMapping"],
-                6: ["identityColumns"],
-            }
-            for v_, fs in implied.items():
-                if proto.get("minWriterVersion", 2) >= v_:
-                    wfeats.update(fs)
-        wfeats.update(["clustering", "domainMetadata"])
+    if "clustering" not in (proto.get("writerFeatures") or []):
         actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": proto.get("minReaderVersion", 1),
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": proto["readerFeatures"]}
-                        if proto.get("readerFeatures")
-                        else {}
-                    ),
-                    "writerFeatures": sorted(wfeats),
-                }
-            }
+            _with_writer_feature(proto, "clustering", "domainMetadata")
         )
     actions.append(
         {
@@ -3814,9 +3973,7 @@ def alter_cluster_by(
             }
         }
     )
-    v = current_version(root) + 1
-    _write_actions(root, v, actions)
-    return v
+    return _commit(root, snap.version, actions)
 
 
 # ---------------------------------------------------------------------------
@@ -3904,10 +4061,13 @@ def alter_column_type(
             "supported widening — only lossless upcasts are allowed "
             "(narrowing would corrupt existing data files)"
         )
-    v = current_version(root) + 1
     md = dict(hit.get("metadata") or {})
     changes = list(md.get("delta.typeChanges") or [])
-    changes.append({"fromType": frm, "toType": to, "tableVersion": v})
+    # the version this change first tries to commit at, as Delta
+    # records it (a retried commit keeps it)
+    changes.append(
+        {"fromType": frm, "toType": to, "tableVersion": snap.version + 1}
+    )
     md["delta.typeChanges"] = changes
     hit["metadata"] = md
     hit["type"] = to
@@ -3916,38 +4076,17 @@ def alter_column_type(
     actions: list[dict] = []
     proto = snap.protocol
     if "typeWidening" not in (proto.get("writerFeatures") or []):
-        wfeats = set(proto.get("writerFeatures") or [])
-        if not wfeats:
-            implied = {
-                2: ["appendOnly", "invariants"],
-                3: ["checkConstraints"],
-                4: ["changeDataFeed", "generatedColumns"],
-                5: ["columnMapping"],
-                6: ["identityColumns"],
-            }
-            for v_, fs in implied.items():
-                if proto.get("minWriterVersion", 2) >= v_:
-                    wfeats.update(fs)
-        wfeats.add("typeWidening")
+        upgrade = _with_writer_feature(proto, "typeWidening")
         rfeats = set(proto.get("readerFeatures") or [])
         if proto.get("minReaderVersion", 1) >= 2:
             rfeats.add("columnMapping")
-        if proto.get("minReaderVersion", 1) >= 3:
-            rfeats.update(proto.get("readerFeatures") or [])
         rfeats.add("typeWidening")
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(rfeats),
-                    "writerFeatures": sorted(wfeats),
-                }
-            }
+        upgrade["protocol"].update(
+            minReaderVersion=3, readerFeatures=sorted(rfeats)
         )
+        actions.append(upgrade)
     actions.append({"metaData": meta})
-    _write_actions(root, v, actions)
-    return v
+    return _commit(root, snap.version, actions)
 
 
 def _scan_file_entries(
@@ -4164,7 +4303,6 @@ def restore(spark: SparkSession, root: str, version: int) -> dict:
             f"cannot restore to version {version}: latest is {cur.version}"
         )
     tgt = resolve(spark, root, version)
-    v = current_version(root) + 1
     cur_by = {a["path"]: a for a in cur.adds}
     tgt_by = {a["path"]: a for a in tgt.adds}
     to_remove = [
@@ -4232,7 +4370,8 @@ def restore(spark: SparkSession, root: str, version: int) -> dict:
             to_add, key=lambda a: a["path"]
         )
     )
-    _write_actions(root, v, actions)
+    # a restore reads the whole table: its diff is against every file
+    v = _commit(root, cur.version, actions, [])
     return {
         "version": v,
         "files_removed": len(to_remove),
@@ -4665,9 +4804,11 @@ def optimize(
     for s in staged:
         s["add"]["dataChange"] = False
         actions.append(s)
-    _write_actions(root, snap.version + 1, actions)
+    # compaction reads exactly the files it removes, and leaves rows
+    # alone: concurrent appends never conflict with it
+    v = _commit(root, snap.version, actions)
     return {
-        "version": snap.version + 1,
+        "version": v,
         "partitions_compacted": n_parts,
         "files_removed": len(victims),
         "files_added": len(staged),
@@ -4843,15 +4984,17 @@ def add_check_constraint(
             f"cannot add CHECK constraint {name!r} ({expr}): existing row "
             f"violates it: {bad[0].asDict()}"
         )
-    v = current_version(root) + 1
     meta = dict(snap.metadata)
     conf = dict(meta.get("configuration") or {})
     conf[_CONSTRAINT_PREFIX + name] = expr
     meta["configuration"] = conf
     proto = dict(snap.protocol)
     proto["minWriterVersion"] = max(proto.get("minWriterVersion", 2), 3)
-    _write_actions(root, v, [{"protocol": proto}, {"metaData": meta}])
-    return v
+    # the check read every row: a concurrent write may have added a
+    # violating one
+    return _commit(
+        root, snap.version, [{"protocol": proto}, {"metaData": meta}], []
+    )
 
 
 def drop_check_constraint(spark: SparkSession, root: str, name: str) -> int:
@@ -4859,13 +5002,11 @@ def drop_check_constraint(spark: SparkSession, root: str, name: str) -> int:
     snap = resolve(spark, root)
     if name not in _table_constraints(snap.metadata):
         raise DeltaProtocolError(f"no such constraint: {name!r}")
-    v = current_version(root) + 1
     meta = dict(snap.metadata)
     conf = dict(meta.get("configuration") or {})
     del conf[_CONSTRAINT_PREFIX + name]
     meta["configuration"] = conf
-    _write_actions(root, v, [{"metaData": meta}])
-    return v
+    return _commit(root, snap.version, [{"metaData": meta}])
 
 
 def clone(spark: SparkSession, src_root: str, dst_root: str) -> dict:
@@ -4902,7 +5043,7 @@ def clone(spark: SparkSession, src_root: str, dst_root: str) -> dict:
             dv["pathOrInlineDv"] = abs_dv
             add["deletionVector"] = dv
         actions.append({"add": add})
-    _write_actions(dst_root, 0, actions)
+    _commit(dst_root, -1, actions)
     return {
         "version": 0,
         "files_referenced": len(snap.adds),

@@ -512,7 +512,9 @@ def plan_files(
     """Metadata-only scan planning: snapshot -> manifest list -> manifest
     entries, partition predicates applied from the manifest's partition
     tuples — no data-file listing or footer reads.  Returns the live
-    data_file dicts (status != DELETED).
+    data_file dicts (status != DELETED); a format-version 2 table's
+    delete files (manifest or entry ``content`` != 0) are not data files
+    and are left out — ``iceberg_v2.plan_scan`` pairs them with the data.
 
     ``partition_filter`` matches identity tuples by exact value (legacy
     surface).  ``source_predicates`` is the HIDDEN-partitioning path:
@@ -623,10 +625,12 @@ def plan_files(
             aliases[k] = names
     files: list[dict] = []
     for mf in _manifest_list(root, snap):
+        if mf.get("content", 0) != 0:
+            continue
         manifest_path = _resolve_path(root, mf["manifest_path"])
         checks = checks_by_spec.get(mf["partition_spec_id"], [])
         for status, _snap_id, data_file in read_container(manifest_path):
-            if status == DELETED:
+            if status == DELETED or data_file.get("content", 0) != 0:
                 continue
             part = data_file.get("partition") or {}
             if partition_filter:
@@ -1057,9 +1061,7 @@ def history(root: str) -> list[dict]:
             "snapshot_id": s["snapshot-id"],
             "operation": s.get("summary", {}).get("operation"),
             "n_rows": sum(
-                f["record_count"]
-                for f in plan_files(root, s["snapshot-id"])
-                if f.get("content", 0) == 0
+                f["record_count"] for f in plan_files(root, s["snapshot-id"])
             ),
         }
         if "sequence-number" in s:

@@ -1,9 +1,8 @@
 """What every table format shares: the commit primitive, data-file
 staging and footer statistics.
 
-Commits.  Delta commits, Iceberg metadata versions, Hudi timeline
-instants and txnlog commits are all "publish this text under this name,
-atomically":
+Commits.  Delta commits, Iceberg metadata versions and Hudi timeline
+instants are all "publish this text under this name, atomically":
 
 * ``put_if_absent`` — a log entry.  The name appears whole or not at
   all, and a second writer of the same name gets ``FileExistsError``
@@ -11,8 +10,8 @@ atomically":
   target).  This is the put-if-absent the real Delta, Iceberg and Hudi
   libraries build their commit protocols on.
 * ``replace`` — a file that is rewritten on purpose: pointer files
-  (``version-hint.text``, Delta ``_last_checkpoint``, txnlog
-  checkpoints, ``hoodie.properties``), the Python DataSource sinks'
+  (``version-hint.text``, Delta ``_last_checkpoint``,
+  ``hoodie.properties``), the Python DataSource sinks'
   ``_COMMIT`` / ``_BATCH_<id>`` manifests, and Hudi log files that a
   restore truncates (bytes).  Readers see the old or the new contents,
   never a torn mix.
@@ -20,7 +19,7 @@ atomically":
 Both write a temp file in the target's directory and fsync it before
 publishing it.  Temp names start with ``.`` and end in ``.tmp``, so no
 log lister matches them: Delta's ``\\d{20}.json``, Hudi's ``*.commit`` /
-``*.deltacommit``, txnlog's ``[0-9]*.json``; the Hudi log-file lister,
+``*.deltacommit``; the Hudi log-file lister,
 whose names also start with ``.``, skips ``*.tmp``.  A crash between
 the temp write and the publish leaves the log at its previous version.
 

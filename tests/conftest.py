@@ -53,7 +53,6 @@ _SLOW_FILES: set[str] = {
     "test_iceberg_refs.py",          # 1.4
     "test_delta_dv.py",              # 1.4
     "test_delta_optimize.py",        # 1.3
-    "test_txnlog.py",                # 1.2
 }
 # single outlier tests inside otherwise-fast files
 _SLOW_TESTS: set[str] = {
@@ -62,7 +61,8 @@ _SLOW_TESTS: set[str] = {
 
 # oracle-parity cases that stay in the fast tier although their file is
 # slow: one per table log that commits through sources/table_core.py,
-# plus the Iceberg v2 merge and delete-file rewrite commits
+# the Delta commit's retry/conflict, checkpoint and vacuum paths, plus
+# the Iceberg v2 merge and delete-file rewrite commits
 _FAST_ORACLE_CASES: set[str] = {
     f"test_query_matches_oracle[{name}]"
     for name in (
@@ -73,6 +73,8 @@ _FAST_ORACLE_CASES: set[str] = {
         "src_iceberg_rewrite_posdel",
         "src_hudi_services",
         "src_txnlog_conflict",
+        "src_txnlog_checkpoint",
+        "src_txnlog_vacuum",
         "src_delta_uniform",
     )
 }

@@ -160,9 +160,9 @@ def test_remove_without_cdc_is_refused(spark, tmp_path):
     root = str(tmp_path / "cdf_bad")
     dp.create_table(_mk(spark, [(1, 10.0, "a")]), root, configuration=CDF)
     snap = dp.resolve(spark, root)
-    dp._write_actions(
+    dp._commit(
         root,
-        1,
+        snap.version,
         [
             {
                 "remove": {

@@ -904,3 +904,246 @@ def test_resolve_pruned_long_tail_uses_join_not_inlist(
     monkeypatch.setattr(dp, "_TOMBSTONE_INLIST_MAX", 0)  # force the join
     joined = {a["path"] for a in dp.resolve_pruned(spark, root).adds}
     assert inlist == want and joined == want
+
+
+# ---------------------------------------------------------------------------
+# commit-log cases: snapshot isolation and time travel, optimistic
+# concurrency (_commit's retry and conflict rules), checkpoints and log
+# cleanup, retention, idempotent streaming appends
+
+
+def _kt(spark, rows, schema="k bigint, tag string"):
+    return spark.createDataFrame(rows, schema)
+
+
+def _logged_adds(root: str) -> set[str]:
+    return {
+        a["add"]["path"]
+        for v in dp._list_commit_versions(root)
+        for a in dp._read_commit_actions(root, v)
+        if "add" in a
+    }
+
+
+def _parquet_on_disk(root: str) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(d, f), root).replace(os.sep, "/")
+        for d, _, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet") and "_delta_log" not in d
+    }
+
+
+def test_orders_snapshots_time_travel_and_immutable_history(
+    spark, sf_dir, tmp_path
+):
+    from incubator_gluten_spark.catalog import load_tables
+
+    orders = load_tables(spark, sf_dir, ("orders",))["orders"]
+    root = str(tmp_path / "orders_log")
+    year = F.year("o_orderdate")
+    dp.create_table(
+        orders.filter(year == 1996), root, partition_cols=["o_orderpriority"]
+    )
+    dp.append(orders.filter(year == 1997), root)
+    v0 = dp.read_table(spark, root, version=0).count()
+    v1 = dp.read_table(spark, root, version=1).count()
+    assert (v0, v1) == (
+        orders.filter(year == 1996).count(),
+        orders.filter(year.isin(1996, 1997)).count(),
+    )
+    assert dp.read_table(spark, root).count() == v1
+    mtimes = {
+        p: os.path.getmtime(os.path.join(root, p)) for p in _parquet_on_disk(root)
+    }
+    out = dp.delete_where(spark, root, "o_orderpriority = '1-URGENT'")
+    # partition values in the log skip every other priority's files
+    assert out["files_skipped"] > 0 and out["files_rewritten"] > 0
+    after = dp.read_table(spark, root)
+    assert after.filter(F.col("o_orderpriority") == "1-URGENT").count() == 0
+    assert after.count() == orders.filter(
+        year.isin(1996, 1997) & (F.col("o_orderpriority") != "1-URGENT")
+    ).count()
+    hist = dp.history(spark, root)
+    assert [h["version"] for h in hist] == [0, 1, 2]
+    assert hist[1]["n_rows"] > hist[2]["n_rows"]
+    v1_again = dp.read_table(spark, root, version=1)
+    assert v1_again.filter(F.col("o_orderpriority") == "1-URGENT").count() > 0
+    # data files are immutable: a rewrite adds files, never edits one
+    for p, m in mtimes.items():
+        assert os.path.getmtime(os.path.join(root, p)) == m
+
+
+def test_stale_blind_commit_lands_after_the_winner(spark, tmp_path):
+    """A blind commit planned on an old version is retried past winners
+    it cannot conflict with, instead of failing on the taken version."""
+    root = str(tmp_path / "stale_blind")
+    dp.create_table(_kt(spark, [(1, "a")]), root)
+    dp.append(_kt(spark, [(2, "b")]), root)
+    assert dp._commit(root, 0, []) == 2
+    assert dp.current_version(root) == 2
+
+
+def test_delete_retries_past_disjoint_append(spark, tmp_path):
+    """A concurrent append whose stats prove the delete predicate absent
+    does not conflict: the delete commits at the next version and both
+    commits survive."""
+    root = str(tmp_path / "retry")
+    dp.create_table(_kt(spark, [(1, "hot"), (2, "cold"), (3, "hot")]), root)
+    out = dp.delete_where(
+        spark,
+        root,
+        "tag = 'hot'",
+        _before_commit=lambda: dp.append(_kt(spark, [(9, "mild")]), root),
+    )
+    assert out["commit_retries"] == 1 and out["version"] == 2
+    rows = sorted((r.k, r.tag) for r in dp.read_table(spark, root).collect())
+    assert rows == [(2, "cold"), (9, "mild")]
+
+
+def test_delete_conflicts_with_stats_blind_append(spark, tmp_path):
+    """A concurrent add carrying no stats for the predicate column cannot
+    be proven disjoint (Delta's ConcurrentAppend)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "blind")
+    dp.create_table(_kt(spark, [(1, "hot"), (2, "cold")]), root)
+
+    def stats_blind_append():
+        path = os.path.join(root, "blind.parquet")
+        pq.write_table(pa.table({"k": [9], "tag": ["hot"]}), path)
+        add = {
+            "path": "blind.parquet",
+            "partitionValues": {},
+            "size": os.path.getsize(path),
+            "modificationTime": 0,
+            "dataChange": True,
+        }
+        dp._commit(root, dp.current_version(root), [{"add": add}])
+
+    with pytest.raises(dp.ConcurrentWriteError, match="stats"):
+        dp.delete_where(
+            spark, root, "tag = 'hot'", _before_commit=stats_blind_append
+        )
+    assert _parquet_on_disk(root) == _logged_adds(root)
+
+
+def test_replayed_or_racing_stream_batch_commits_once(spark, tmp_path, monkeypatch):
+    """A replayed batch is a no-op; a writer that loses the race to the
+    same appId's batch raises and removes the files it staged."""
+    root = str(tmp_path / "idem")
+    df = _kt(spark, [(1, "a"), (2, "b")])
+    dp.create_table(df.limit(0), root)
+    assert dp.append_stream_batch(df, root, "app", 1) is True
+    files = _parquet_on_disk(root)
+    assert dp.append_stream_batch(df, root, "app", 1) is False
+    assert _parquet_on_disk(root) == files
+    real_resolve = dp.resolve
+
+    def read_then_lose_the_race(*args, **kwargs):
+        snap = real_resolve(*args, **kwargs)
+        monkeypatch.setattr(dp, "resolve", real_resolve)
+        assert dp.append_stream_batch(df, root, "app", 2) is True
+        return snap
+
+    monkeypatch.setattr(dp, "resolve", read_then_lose_the_race)
+    with pytest.raises(dp.ConcurrentWriteError, match="txn 'app'"):
+        dp.append_stream_batch(df, root, "app", 2)
+    assert dp.current_version(root) == 2
+    assert dp.read_table(spark, root).count() == 4
+    assert _parquet_on_disk(root) == _logged_adds(root)
+
+
+def test_merge_source_null_overwrites_whole_row(spark, tmp_path):
+    """whenMatchedUpdateAll takes the source row whole: a NULL non-key
+    source value replaces the target value."""
+    root = str(tmp_path / "null_merge")
+    schema = "k bigint, tag string, v double"
+    dp.create_table(
+        _kt(spark, [(1, "keep", 10.0), (2, "stale", 20.0)], schema), root
+    )
+    src = _kt(spark, [(2, None, 99.0)], schema)
+    dp.merge(spark, root, src, "k")
+    rows = {r.k: (r.tag, r.v) for r in dp.read_table(spark, root).collect()}
+    assert rows == {1: ("keep", 10.0), 2: (None, 99.0)}
+
+
+def _drop_commits(root: str, upto: int) -> None:
+    for v in range(upto + 1):
+        os.remove(dp._commit_path(root, v))
+
+
+def test_checkpoint_survives_log_cleanup(spark, tmp_path):
+    root = str(tmp_path / "ckpt")
+    dp.create_table(_kt(spark, [(1, "a"), (2, "b")]), root)
+    dp.append(_kt(spark, [(3, "c")]), root)
+    assert dp.checkpoint(spark, root)["version"] == 1
+    dp.append(_kt(spark, [(4, "d")]), root)
+    _drop_commits(root, 1)
+    assert sorted(r.k for r in dp.read_table(spark, root).collect()) == [1, 2, 3, 4]
+    # the checkpoint itself still answers its own version
+    assert dp.read_table(spark, root, version=1).count() == 3
+
+
+def test_append_after_full_log_cleanup_lands_above_checkpoint(spark, tmp_path):
+    """With every commit file gone behind the checkpoint, the next
+    version is still checkpoint + 1 — a commit below the checkpoint
+    would never be replayed."""
+    root = str(tmp_path / "ckpt_append")
+    dp.create_table(_kt(spark, [(1, "a")]), root)
+    dp.append(_kt(spark, [(2, "b")]), root)
+    dp.checkpoint(spark, root)
+    _drop_commits(root, 1)
+    assert dp.current_version(root) == 1
+    assert dp.append(_kt(spark, [(3, "c")]), root) == 2
+    assert sorted(r.k for r in dp.read_table(spark, root).collect()) == [1, 2, 3]
+
+
+def test_commit_read_below_cleaned_checkpoint_conflicts(spark, tmp_path):
+    """A commit planned on a version whose successors were cleaned up
+    behind a checkpoint cannot be checked against them: it raises
+    instead of writing a commit the checkpoint hides."""
+    root = str(tmp_path / "ckpt_refuse")
+    dp.create_table(_kt(spark, [(1, "a")]), root)
+    dp.append(_kt(spark, [(2, "b")]), root)
+    dp.checkpoint(spark, root)
+    _drop_commits(root, 1)
+    with pytest.raises(dp.ConcurrentWriteError, match="cleaned up"):
+        dp._commit(root, 0, [])
+    assert dp._list_commit_versions(root) == []
+
+
+def test_time_travel_past_retention_raises(spark, tmp_path):
+    root = str(tmp_path / "retention")
+    dp.create_table(_kt(spark, [(1, "a")]), root)
+    dp.append(_kt(spark, [(2, "b")]), root)
+    dp.append(_kt(spark, [(3, "c")]), root)
+    assert dp.checkpoint(spark, root)["version"] == 2
+    dp.append(_kt(spark, [(4, "d")]), root)
+    _drop_commits(root, 2)
+    for gone in (0, 1):
+        with pytest.raises(ValueError, match="vacuumed"):
+            dp.resolve(spark, root, gone)
+    assert dp.read_table(spark, root, version=2).count() == 3
+    assert dp.read_table(spark, root).count() == 4
+    with pytest.raises(ValueError, match="does not exist"):
+        dp.resolve(spark, root, 7)
+    # a gap inside the replay range refuses too
+    dp.append(_kt(spark, [(5, "e")]), root)
+    os.remove(dp._commit_path(root, 3))
+    with pytest.raises(ValueError, match="missing"):
+        dp.resolve(spark, root)
+
+
+def test_vacuum_deletes_only_files_no_retained_version_reads(spark, tmp_path):
+    root = str(tmp_path / "vacuum")
+    dp.create_table(_kt(spark, [(1, "hot"), (2, "cold"), (3, "hot")]), root)
+    dp.delete_where(spark, root, "tag = 'hot'")
+    assert dp.vacuum(spark, root, retain_versions=2)["files_deleted"] == 0
+    assert dp.read_table(spark, root, version=0).count() == 3
+    assert dp.vacuum(spark, root, retain_versions=1)["files_deleted"] > 0
+    assert [r.k for r in dp.read_table(spark, root).collect()] == [2]
+    assert _parquet_on_disk(root) == {
+        a["path"] for a in dp.resolve(spark, root).adds
+    }

@@ -126,3 +126,17 @@ def test_commit_refuses_a_live_snapshot_id(spark, tmp_path):
             ice._default_spec(meta),
         )
     assert ice._current_metadata(root) == meta
+
+
+def test_v1_readers_skip_v2_delete_files(spark, tmp_path):
+    """``plan_files`` lists data files only: after a v2 position delete,
+    the files meta table shows the one data file (the delete file is not
+    data), and the merge-on-read view still applies the delete."""
+    root = str(tmp_path / "v2_deletes")
+    v2.create_table(_mk(spark, [1, 2, 3, 4, 5]), root)
+    v2.position_delete(spark, root, "k = 1")
+    files = ice.read_meta_table(spark, root, "files").collect()
+    assert [f.record_count for f in files] == [5]
+    assert not any(f.file_path.endswith("-deletes.parquet") for f in files)
+    assert [f["content"] for f in ice.plan_files(root)] == [0]
+    assert sorted(r.k for r in v2.read_table(spark, root).collect()) == [2, 3, 4, 5]

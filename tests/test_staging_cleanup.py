@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from incubator_gluten_spark.sources import delta_protocol as dp
 from incubator_gluten_spark.sources import hudi_format as hf
 from incubator_gluten_spark.sources import iceberg_format as ice
-from incubator_gluten_spark.sources import txnlog
 
 
 def _listing(root: str) -> list[str]:
@@ -48,7 +47,6 @@ _WRITERS = {
         lambda df, root: hf.create_table(df, root, key_col="k"),
         lambda s, df, root: hf.upsert(s, df, root, "k"),
     ),
-    "txnlog": (txnlog.create_table, lambda s, df, root: txnlog.append(df, root)),
 }
 
 

@@ -1,4 +1,4 @@
-"""The shared commit primitive (sources/table_core.py) and the four table
+"""The shared commit primitive (sources/table_core.py) and the three table
 logs that commit through it: put-if-absent semantics, a multi-process
 commit race on one Delta log, and crash injection between the temp
 write and the publish; plus the ``footer_stats`` contract over fake
@@ -19,7 +19,6 @@ from incubator_gluten_spark.sources import delta_protocol as dp
 from incubator_gluten_spark.sources import hudi_format as hf
 from incubator_gluten_spark.sources import iceberg_format as ice
 from incubator_gluten_spark.sources import table_core
-from incubator_gluten_spark.sources import txnlog
 
 N_PROCS, N_COMMITS = 8, 25
 
@@ -44,9 +43,9 @@ def test_replace_overwrites_and_leaves_no_temp(tmp_path):
 
 
 def _delta_v0(root: str) -> None:
-    dp._write_actions(
+    dp._commit(
         root,
-        0,
+        -1,
         [
             {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
             {
@@ -64,7 +63,7 @@ def _delta_v0(root: str) -> None:
 
 
 def _race_worker(root: str, wid: int, start, out) -> None:
-    """Commit N_COMMITS adds, retrying a lost version at the next one."""
+    """Commit N_COMMITS blind adds; ``_commit`` retries a lost version."""
     start.wait(timeout=60)
     won = []
     for i in range(N_COMMITS):
@@ -77,14 +76,7 @@ def _race_worker(root: str, wid: int, start, out) -> None:
                 "dataChange": True,
             }
         }
-        while True:
-            v = dp.current_version(root) + 1
-            try:
-                dp._write_actions(root, v, [add])
-            except FileExistsError:
-                continue
-            won.append(v)
-            break
+        won.append(dp._commit(root, dp.current_version(root), [add]))
     out.put((wid, won))
 
 
@@ -163,28 +155,19 @@ def test_crash_before_publish_keeps_previous_version(tmp_path, monkeypatch):
     os.makedirs(hf._timeline_dir(hudi))
     hf._three_phase(hudi, "20240101000000000", "commit", {"n": 1})
 
-    tl = str(tmp_path / "txnlog")
-    txnlog._commit(tl, 0, [{"path": "data/a.parquet"}], [], "k bigint")
-
     before = _tree(str(tmp_path))
     _crash_on_publish(monkeypatch)
     with pytest.raises(_Crash):
-        dp._write_actions(delta, 1, [{"metaData": {"configuration": {}}}])
+        dp._commit(delta, 0, [{"metaData": {"configuration": {}}}])
     with pytest.raises(_Crash):
         ice._write_metadata(iceberg, {"format-version": 1, "n": 2})
     with pytest.raises(_Crash):
         hf._three_phase(hudi, "20240101000000001", "commit", {"n": 2})
-    with pytest.raises(_Crash):
-        txnlog._commit(tl, 1, [{"path": "data/b.parquet"}], [], "k bigint")
-    with pytest.raises(_Crash):
-        txnlog.checkpoint(tl)
 
     assert _tree(str(tmp_path)) == before  # no temp file survives either
     assert dp.current_version(delta) == 0
     assert ice._current_metadata(iceberg)["n"] == 1
     assert hf.completed_instants(hudi) == ["20240101000000000"]
-    assert txnlog.current_version(tl) == 0
-    assert txnlog.resolve(tl) == ([{"path": "data/a.parquet"}], "k bigint")
 
 
 def test_crash_between_hudi_markers_and_completion_stays_pending(

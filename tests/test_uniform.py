@@ -182,9 +182,7 @@ def test_refusals(spark):
         {"name": "extra", "type": "integer", "nullable": True, "metadata": {}}
     )
     meta_action["schemaString"] = json.dumps(schema)
-    dp._write_actions(
-        root, dp.current_version(root) + 1, [{"metaData": meta_action}]
-    )
+    dp._commit(root, snap.version, [{"metaData": meta_action}])
     with pytest.raises(ValueError, match="schema changed"):
         uf.sync_uniform(spark, root)
 
@@ -200,9 +198,7 @@ def test_sync_refuses_partition_column_drift(spark):
     snap = dp.resolve(spark, root)
     meta_action = dict(snap.metadata)
     meta_action["partitionColumns"] = []
-    dp._write_actions(
-        root, dp.current_version(root) + 1, [{"metaData": meta_action}]
-    )
+    dp._commit(root, snap.version, [{"metaData": meta_action}])
     with pytest.raises(ValueError, match="partition columns"):
         uf.sync_uniform(spark, root)
 
