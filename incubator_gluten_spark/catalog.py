@@ -6,14 +6,26 @@ creates temp views per parquet dir). Adds one normalization: the events
 table stores TIMESTAMP(NANOS) which Spark reads as raw int64 under
 spark.sql.legacy.parquet.nanosAsLong — we convert to timestamp (micros,
 truncating) so batch SQL, streaming and the DuckDB oracle agree.
+
+* Schema memo: ``spark.read.parquet`` without a schema launches a
+  footer-inference job on every call, so ``load_table`` keeps the
+  inferred schema per path and reads with it while the path's stamp is
+  unchanged.  The stamp is the sorted ``(name, size, mtime_ns)`` listing
+  of the path (one ``os.scandir``, or ``os.stat`` for a single file)
+  plus the session's parquet-inference confs (``_INFERENCE_CONFS``).
+  A path with a URI scheme, a listing that fails or one that holds a
+  subdirectory (a partitioned layout) infers on every call, as before,
+  and stores nothing.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -52,9 +64,57 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
             pass
 
 
+# Session confs that change the schema parquet footer inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# path -> (stamp, inferred schema); see the module docstring.  Threads
+# that miss together each infer and store a whole entry whose stamp was
+# taken before its read, so a race costs a second inference, never a
+# stale schema.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple | None:
+    """What the schema inferred for ``path`` depends on, or None when
+    the path cannot be memoized (not local, partitioned, unlistable)."""
+    if urlparse(path).scheme:
+        return None
+    try:
+        with os.scandir(path) as it:
+            listing = []
+            for e in it:
+                if e.is_dir():
+                    return None
+                st = e.stat()
+                listing.append((e.name, st.st_size, st.st_mtime_ns))
+    except NotADirectoryError:
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        listing = [(os.path.basename(path), st.st_size, st.st_mtime_ns)]
+    except OSError:
+        return None
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return tuple(sorted(listing)), confs
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    stamp = _stamp(spark, path)
+    hit = _SCHEMAS.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        df = spark.read.schema(hit[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if stamp is not None:
+            _SCHEMAS[path] = (stamp, df.schema)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # int64 nanos -> timestamp_ntz micros; integer division truncates
         # exactly like DuckDB's CAST(ts AS TIMESTAMP).

@@ -1540,6 +1540,7 @@ def _dv_commit(
                 mapping=_write_mapping(snap.metadata),
             )
         )
+    _unchanged_rewrite(snap.metadata, actions)
     v = _commit(root, snap.version, actions, _read_set(snap, predicate))
     return {
         "version": v,
@@ -1961,7 +1962,10 @@ def _stage_data_files(
     the df arrives with LOGICAL names and is renamed to physical before
     the write, so data files, partition directory names, extracted
     ``partitionValues`` keys, and footer-derived ``stats`` keys are all
-    physical — exactly what PROTOCOL.md requires in the log."""
+    physical — exactly what PROTOCOL.md requires in the log.
+
+    Files whose footer holds 0 rows (Spark writes one per empty task)
+    get no action: they stay in the staging directory and go with it."""
     if mapping:
         df = df.select(
             *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
@@ -1972,6 +1976,8 @@ def _stage_data_files(
     stem = "cdc" if cdc else "part"
     adds = []
     for f in table_core.write_staged(df, root, partition_cols, token):
+        if f.meta.num_rows == 0:
+            continue
         # len(adds) makes the basename unique across partition dirs
         # (a task writes the same part-NNNNN name into each dir) —
         # DV/position mapping joins on basenames
@@ -2651,6 +2657,19 @@ def _remove_actions(adds: list[dict]) -> list[dict]:
     ]
 
 
+def _unchanged_rewrite(metadata: dict | None, actions: list[dict]) -> None:
+    """A CDF writer routes every changed row through cdc files, and 0-row
+    files are never staged, so on a CDF table a commit without a cdc
+    action changed no row: its adds and removes only rewrite files.  Mark
+    them ``dataChange: false``, as OPTIMIZE's are, so CDF readers skip
+    the commit instead of refusing it as a writer-contract violation."""
+    if _cdf_enabled(metadata) and not any(a.get("cdc") for a in actions):
+        for a in actions:
+            f = a.get("add") or a.get("remove")
+            if f is not None:
+                f["dataChange"] = False
+
+
 def _require_mutable(metadata: dict | None, op: str) -> None:
     """delta.appendOnly=true (writer protocol feature ``appendOnly``,
     minWriterVersion 2): any operation that removes or rewrites data
@@ -2709,6 +2728,7 @@ def delete_where(
     actions.extend(_remove_actions(rewrite))
     if _before_commit is not None:
         _before_commit()
+    _unchanged_rewrite(snap.metadata, actions)
     v = _commit(root, snap.version, actions, _read_set(snap, predicate))
     return {
         "version": v,
@@ -2805,6 +2825,7 @@ def overwrite_where(
             _stage_data_files(changes, root, pcols, cdc=True, mapping=mapping)
         )
     actions.extend(_remove_actions(rewrite))
+    _unchanged_rewrite(snap.metadata, actions)
     v = _commit(root, snap.version, actions, _read_set(snap, predicate))
     return {
         "version": v,
@@ -2913,6 +2934,7 @@ def update_where(
                 )
             )
     actions.extend(_remove_actions(rewrite))
+    _unchanged_rewrite(snap.metadata, actions)
     v = _commit(root, snap.version, actions, _read_set(snap, predicate))
     return {
         "version": v,
@@ -3094,6 +3116,7 @@ def merge(
             )
         )
     actions.extend(_remove_actions(rewrite))
+    _unchanged_rewrite(snap.metadata, actions)
     v = _commit(root, snap.version, actions, _key_range(phys_key, lo, hi))
     return {
         "version": v,
@@ -3413,6 +3436,7 @@ def merge_clauses(
         )
     # a not-matched-by-source clause reads every target row
     reads = [] if has_nmbs else _key_range(phys_key, lo, hi)
+    _unchanged_rewrite(snap.metadata, actions)
     v = _commit(root, snap.version, actions, reads)
     return {
         "version": v,
@@ -4371,6 +4395,7 @@ def restore(spark: SparkSession, root: str, version: int) -> dict:
         )
     )
     # a restore reads the whole table: its diff is against every file
+    _unchanged_rewrite(cur.metadata, actions)
     v = _commit(root, cur.version, actions, [])
     return {
         "version": v,

@@ -671,6 +671,28 @@ def plan_files(
     return sorted(files, key=lambda d: d["file_path"])
 
 
+def _refuse_delete_files(root: str, meta: dict, snap: dict, op: str) -> None:
+    """``plan_files`` leaves delete files out, so a reader or rewrite
+    planned on it would return (or re-state as live) the rows a format
+    version 2 delete removed.  Raise when ``snap`` has a live delete
+    file: a manifest or entry with ``content`` != 0."""
+    if meta.get("format-version", 1) < 2:
+        return
+    for mf in _manifest_list(root, snap):
+        for status, _sid, data_file in read_container(
+            _resolve_path(root, mf["manifest_path"])
+        ):
+            if status != DELETED and (
+                mf.get("content", 0) != 0 or data_file.get("content", 0) != 0
+            ):
+                raise ValueError(
+                    f"{op}: snapshot {snap['snapshot-id']} has delete files "
+                    "this reader does not apply; read it with "
+                    "iceberg_v2.read_table, or compact the deletes away "
+                    "with iceberg_v2.rewrite_data_files first"
+                )
+
+
 def _build_bound_checks(
     ice_schema: dict, source_predicates: list[tuple]
 ) -> list[tuple]:
@@ -780,6 +802,7 @@ def read_table(
     schemas = meta.get("schemas") or [meta["schema"]]
     by_id = {s.get("schema-id", 0): s for s in schemas}
     snap = _snapshot(meta, snapshot_id)
+    _refuse_delete_files(root, meta, snap, "read_table")
     if snapshot_id is None:
         schema = by_id.get(meta.get("current-schema-id", 0), schemas[-1])
     else:
@@ -1965,6 +1988,7 @@ def delete_partition(root: str, partition_filter: dict[str, Any]) -> dict:
     still sees the deleted rows.  Identity transforms only (matching
     this writer's partition specs)."""
     meta = _current_metadata(root)
+    _refuse_delete_files(root, meta, _snapshot(meta, None), "delete_partition")
     ice_schema = _current_schema(meta)
     snap_id = _next_snapshot_id(meta)
     by_spec: dict[int, list[tuple]] = {}
@@ -2029,6 +2053,7 @@ def _cow_rewrite(
             f"{op_name} on a name-mapped table is not supported (no "
             "field ids in the data files to rewrite against)"
         )
+    _refuse_delete_files(root, meta, _snapshot(meta, None), op_name)
     ice_schema = _current_schema(meta)
     spec = _default_spec(meta)
     cond = _source_pred_cond(predicates)
@@ -2184,6 +2209,7 @@ def merge(
             "MERGE on a name-mapped table is not supported (no field "
             "ids in the data files to rewrite against)"
         )
+    _refuse_delete_files(root, meta, _snapshot(meta, None), "MERGE")
     ice_schema = _current_schema(meta)
     spec = _default_spec(meta)
     cols = [f["name"] for f in ice_schema["fields"]]

@@ -140,3 +140,26 @@ def test_v1_readers_skip_v2_delete_files(spark, tmp_path):
     assert not any(f.file_path.endswith("-deletes.parquet") for f in files)
     assert [f["content"] for f in ice.plan_files(root)] == [0]
     assert sorted(r.k for r in v2.read_table(spark, root).collect()) == [2, 3, 4, 5]
+
+
+def test_v1_reader_and_rewrites_refuse_v2_deletes(spark, tmp_path):
+    """The v1 reader and its copy-on-write rewrites plan through
+    ``plan_files`` and never apply delete files: on a snapshot with live
+    deletes they refuse instead of returning (or re-stating as live) the
+    deleted row.  The snapshot before the delete still reads."""
+    root = str(tmp_path / "v2_deletes_v1_reader")
+    v2.create_table(_mk(spark, [1, 2, 3, 4, 5]), root)
+    first = ice._current_metadata(root)["current-snapshot-id"]
+    v2.position_delete(spark, root, "k = 1")
+    with pytest.raises(ValueError, match=r"iceberg_v2\.read_table"):
+        ice.read_table(spark, root).count()
+    with pytest.raises(ValueError, match="delete files"):
+        ice.delete_where(spark, root, [("k", "=", 2)])
+    with pytest.raises(ValueError, match="delete files"):
+        ice.delete_partition(root, {"k": 2})
+    with pytest.raises(ValueError, match="delete files"):
+        ice.merge(spark, root, _mk(spark, [1, 6]), ["k"])
+    assert ice.read_table(spark, root, snapshot_id=first).count() == 5
+    assert v2.read_table(spark, root).count() == 4
+    v2.rewrite_data_files(spark, root)
+    assert sorted(r.k for r in ice.read_table(spark, root).collect()) == [2, 3, 4, 5]

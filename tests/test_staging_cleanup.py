@@ -2,10 +2,13 @@
 it found it: every format stages through ``table_core.write_staged``,
 which removes its ``_staging_<token>`` directory on the way out, and no
 commit is made.  Delta's ``vacuum`` never looks inside ``_staging_*``,
-so a leftover staging directory would never be reclaimed."""
+so a leftover staging directory would never be reclaimed.  A Delta
+commit names no 0-row file: the empty files Spark writes for empty tasks
+stay in the staging directory and go with it."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -59,3 +62,46 @@ def test_failed_write_leaves_the_table_untouched(spark, tmp_path, fmt):
     with pytest.raises(Exception, match="staged write boom"):
         write(spark, _failing(spark), root)
     assert _listing(root) == before
+
+
+def _stats(root: str, version: int) -> list[dict]:
+    return [
+        json.loads(a["add"]["stats"])
+        for a in dp._read_commit_actions(root, version)
+        if a.get("add")
+    ]
+
+
+def test_delta_commits_no_empty_data_file(spark, tmp_path):
+    root = str(tmp_path / "sparse")
+    rows = spark.sparkContext.parallelize([(1, 1.0), (2, 2.0), (3, 3.0)], 4)
+    dp.create_table(spark.createDataFrame(rows, "k bigint, v double"), root)
+    stats = _stats(root, 0)
+    assert stats and all(s["numRecords"] > 0 for s in stats)
+    assert sum(s["numRecords"] for s in stats) == 3
+    assert dp.read_table(spark, root).count() == 3
+    data = [n for n in _listing(root) if n.endswith(".parquet")]
+    assert len(data) == len(stats)
+
+
+def test_delta_empty_create_commits_no_add(spark, tmp_path):
+    root = str(tmp_path / "empty")
+    empty = spark.createDataFrame([], "k bigint, s string")
+    dp.create_table(empty, root)
+    assert _stats(root, 0) == []
+    df = dp.read_table(spark, root)
+    assert df.schema.simpleString() == empty.schema.simpleString()
+    assert df.count() == 0
+
+
+def test_delta_cdf_rewrite_without_changes_reads_no_change(spark, tmp_path):
+    """With no empty cdc file staged, a CDF delete that matches no row
+    commits a pure rewrite (dataChange false), which the change feed
+    skips instead of refusing."""
+    root = str(tmp_path / "cdf_noop")
+    dp.create_table(
+        _good(spark), root, configuration={"delta.enableChangeDataFeed": "true"}
+    )
+    dp.delete_where(spark, root, "k = 99")
+    assert dp.table_changes(spark, root, 1, 1).count() == 0
+    assert dp.read_table(spark, root).count() == 2
