@@ -8,9 +8,10 @@ spark.sql.legacy.parquet.nanosAsLong — we convert to timestamp (micros,
 truncating) so batch SQL, streaming and the DuckDB oracle agree.
 
 * Schema memo: ``spark.read.parquet`` without a schema launches a
-  footer-inference job on every call, so ``load_table`` keeps the
-  inferred schema per path and reads with it while the path's stamp is
-  unchanged.  The stamp is the sorted ``(name, size, mtime_ns)`` listing
+  footer-inference job on every call, so ``parquet_schema`` keeps the
+  inferred schema per path and returns it while the path's stamp is
+  unchanged; ``load_table`` and ``streaming.jobs.read_events_stream``
+  read with it.  The stamp is the sorted ``(name, size, mtime_ns)`` listing
   of the path (one ``os.scandir``, or ``os.stat`` for a single file)
   plus the session's parquet-inference confs (``_INFERENCE_CONFS``).
   A path with a URI scheme, a listing that fails or one that holds a
@@ -104,17 +105,23 @@ def _stamp(spark: SparkSession, path: str) -> tuple | None:
     return tuple(sorted(listing)), confs
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    ensure_runtime_confs(spark)
-    path = f"{sf_dir}/{name}.parquet"
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, from the memo while
+    the path's stamp holds (module docstring)."""
     stamp = _stamp(spark, path)
     hit = _SCHEMAS.get(path)
     if stamp is not None and hit is not None and hit[0] == stamp:
-        df = spark.read.schema(hit[1]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if stamp is not None:
-            _SCHEMAS[path] = (stamp, df.schema)
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    if stamp is not None:
+        _SCHEMAS[path] = (stamp, schema)
+    return schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    ensure_runtime_confs(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # int64 nanos -> timestamp_ntz micros; integer division truncates
         # exactly like DuckDB's CAST(ts AS TIMESTAMP).

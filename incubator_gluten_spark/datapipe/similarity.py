@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.session import local_frame
+
 
 def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -572,7 +574,8 @@ def ivf_build_centroids(
         # an emptied cluster keeps its previous centroid (standard Lloyd)
         C = np.array([new.get(i, C[i].tolist()) for i in range(k)])
     vecs.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, [float(x) for x in C[i]]) for i in range(k)],
         "cluster int, c array<double>",
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from incubator_gluten_spark.plans import Q
 from incubator_gluten_spark.plans.sources_queries import IO_DIR
+from incubator_gluten_spark.session import local_frame
 from incubator_gluten_spark.streaming.jobs import (
     read_events_stream,
     run_to_memory,
@@ -535,7 +536,7 @@ def _delta_stream_sink(
     shutil.rmtree(root, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir)
     dp.create_table(
-        ev.sparkSession.createDataFrame([], ev.schema), root, partition_cols
+        local_frame(ev.sparkSession, [], ev.schema), root, partition_cols
     )
     replay: dict = {}
 
@@ -618,9 +619,7 @@ def stream_iceberg_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = f"{IO_DIR}/stream_iceberg_sink"
     shutil.rmtree(root, ignore_errors=True)
     ev = read_events_stream(spark, sf_dir)
-    ice.create_table(
-        ev.sparkSession.createDataFrame([], ev.schema), root
-    )
+    ice.create_table(local_frame(ev.sparkSession, [], ev.schema), root)
     replay: dict = {}
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:

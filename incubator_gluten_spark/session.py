@@ -40,7 +40,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _default_cpus() -> int:
@@ -140,3 +141,39 @@ def get_session(
             pass  # static conf on a live session — builder already tried
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema``'s field
+    order, ``[]`` for an empty frame), built as a ``pyarrow.Table``.
+
+    Why not ``spark.createDataFrame(rows, schema)``: that pickles the
+    rows into a Python-backed ``LogicalRDD``, so every execution of the
+    frame (each join it feeds, each write of an empty table) runs
+    Python worker tasks to unpickle them, and Catalyst cannot see that
+    an empty frame is empty.  An Arrow table goes to the JVM once, as a
+    ``LocalRelation``; past ``spark.sql.execution.arrow.
+    localRelationThreshold`` Spark keeps it as an RDD of Arrow batches
+    that the JVM decodes.  Neither starts a Python worker.
+
+    ``schema`` is a ``StructType`` (its field metadata is kept) or a
+    DDL string.  Values convert as ``pyarrow.array`` converts them: a
+    struct from a tuple or dict, a map from a dict, a decimal from a
+    ``Decimal``.  A naive ``datetime`` in a TIMESTAMP column is read as
+    wall time in the session time zone, as the Arrow path of
+    ``createDataFrame`` reads it; TIMESTAMP_NTZ keeps it as is."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    rows = list(rows)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(col, to_arrow_type(f.dataType, timestamp_utc=False))
+            for col, f in zip(columns, struct.fields)
+        ],
+        names=struct.names,
+    )
+    return spark.createDataFrame(table, struct)

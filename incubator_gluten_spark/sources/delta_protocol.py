@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from incubator_gluten_spark.session import local_frame
 from incubator_gluten_spark.sources import table_core
 from incubator_gluten_spark.sources.table_core import (  # noqa: F401 — re-export
     unescape_path_name,
@@ -259,9 +260,7 @@ def resolve(spark: SparkSession, root: str, version: int | None = None) -> Snaps
                 "state surfaces (DML, OPTIMIZE) refuse at this scale — "
                 "compact or partition the log first"
             )
-        ck = spark.read.parquet(_checkpoint_path(root, ck_version))
-        for row in ck.collect():
-            d = row.asDict(recursive=True)
+        for d in _checkpoint_actions(root, ck_version):
             _apply_action(live, state, {k: v for k, v in d.items() if v})
         start = ck_version
     elif versions and versions[0] != 0:
@@ -324,6 +323,54 @@ _TOMBSTONE_INLIST_MAX = 1000
 # carries millions of duplicated keys must let AQE size the semi-join
 # instead of funneling them through the driver.
 _MERGE_DUP_PROBE_BROADCAST_MAX = 1_000_000
+
+
+def _checkpoint_actions(root: str, ck_version: int):
+    """The checkpoint's rows, one dict per row, read with pyarrow in
+    ``_CHECKPOINT_BATCH_ROWS`` batches (no Spark job on the driver path).
+    Each dict equals ``Row.asDict(recursive=True)`` of a Spark read of
+    the same file: structs and maps become dicts, lists stay lists."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(_checkpoint_path(root, ck_version))
+    conv = _maps_to_dicts(pa.struct(list(pf.schema_arrow))) or (lambda r: r)
+    for batch in pf.iter_batches(batch_size=_CHECKPOINT_BATCH_ROWS):
+        yield from map(conv, batch.to_pylist())
+
+
+def _maps_to_dicts(typ):
+    """A function that turns a pyarrow ``to_pylist`` value of ``typ``
+    into one whose maps (lists of key/value pairs there) are dicts, or
+    None when ``typ`` holds no map."""
+    import pyarrow as pa
+
+    if pa.types.is_map(typ):
+        item = _maps_to_dicts(typ.item_type) or (lambda x: x)
+
+        def conv(v):
+            return {k: item(x) for k, x in v}
+
+    elif pa.types.is_struct(typ):
+        fields = [(f.name, _maps_to_dicts(f.type)) for f in typ]
+        fields = [(n, c) for n, c in fields if c is not None]
+        if not fields:
+            return None
+
+        def conv(v):
+            return {**v, **{n: c(v[n]) for n, c in fields}}
+
+    elif pa.types.is_list(typ) or pa.types.is_large_list(typ):
+        elem = _maps_to_dicts(typ.value_type)
+        if elem is None:
+            return None
+
+        def conv(v):
+            return [elem(x) for x in v]
+
+    else:
+        return None
+    return lambda v: None if v is None else conv(v)
 
 
 def _checkpoint_footer_rows(root: str, ck_version: int) -> int | None:
@@ -447,8 +494,8 @@ def resolve_pruned(
             # become a 100k-literal plan tree — same defect class as
             # the r13 partition-tuple scan chain; broadcast anti-join
             # keeps plan width O(1)
-            tdf = spark.createDataFrame(
-                [(p,) for p in sorted(touched)], "__tpath string"
+            tdf = local_frame(
+                spark, [(p,) for p in sorted(touched)], "__tpath string"
             )
             adds_df = adds_df.join(
                 F.broadcast(tdf),
@@ -754,7 +801,7 @@ def _live_rows(spark: SparkSession, root: str, snap: Snapshot) -> DataFrame:
     ``merge``) so a rewrite can never resurrect DV-deleted rows."""
     schema = snap.schema
     if not snap.adds:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     has_dv = any(a.get("deletionVector") for a in snap.adds)
     df = _grouped_scan(spark, root, snap, with_positions=has_dv)
     if not has_dv:
@@ -792,7 +839,7 @@ def _live_rows_with_ids(
 
     schema = snap.schema
     if not snap.adds:
-        return spark.createDataFrame([], schema).select(
+        return local_frame(spark, [], schema).select(
             "*",
             F.lit(None).cast("long").alias("_row_id"),
             F.lit(None).cast("long").alias("_row_commit_version"),
@@ -815,7 +862,8 @@ def _live_rows_with_ids(
             & (df["__pos"] == dels["pos"]),
             "left_anti",
         )
-    base_map = spark.createDataFrame(
+    base_map = local_frame(
+        spark,
         [
             (
                 a["path"],
@@ -987,7 +1035,7 @@ def _grouped_scan(
         )
         if with_positions:
             base = base.add("__rel", "string").add("__pos", "long")
-        return spark.createDataFrame([], base)
+        return local_frame(spark, [], base)
     # logical->physical map when column mapping is on: data files and
     # partitionValues keys carry PHYSICAL names, the output is logical
     mapping = _write_mapping(snap.metadata)
@@ -1046,7 +1094,8 @@ def _grouped_scan(
                 (os.path.basename(a["path"]), a["path"])
                 + tuple(pv.get(k) for k in inj_phys)
             )
-        pmap = spark.createDataFrame(
+        pmap = local_frame(
+            spark,
             rows,
             "__base string, __rel string"
             + "".join(f", __pv{i} string" for i in range(len(inj_phys))),
@@ -1144,13 +1193,13 @@ def load_dv(root: str, descriptor: dict):
     return positions
 
 
-# Positions materialized as Python ints per createDataFrame slice — the
-# cap on transient driver state during DV expansion.  A table's TOTAL DV
-# cardinality can be billions at 100 TB; holding every position as a
-# Python object simultaneously (the r8 shape) would be tens of GB on the
-# driver.  Slicing keeps the peak at ~one slice of ints (the numpy array
-# from load_dv is 8 B/position and per-file transient); each slice ships
-# to the JVM as its own LocalTableScan and the slices union.
+# Positions per local_frame slice — the cap on transient driver state
+# during DV expansion.  A table's TOTAL DV cardinality can be billions at
+# 100 TB; holding every position at once would be tens of GB on the
+# driver.  Slicing keeps the peak at ~one slice of positions (numpy
+# arrays from load_dv, 8 B/position, copied once into an Arrow column);
+# each slice ships to the JVM as its own LocalRelation and the slices
+# union.
 _DV_POSITIONS_PER_SLICE = 1_000_000
 # Above this many TOTAL deleted positions, the anti-join's delete side
 # spills to a scratch parquet instead of inline local relations.
@@ -1233,8 +1282,8 @@ def _dv_positions_spilled(
             for a in snap.adds
             if a.get("deletionVector")
         ]
-        ddf = spark.createDataFrame(
-            descs, "file_path string, dv_json string"
+        ddf = local_frame(
+            spark, descs, "file_path string, dv_json string"
         ).repartition(min(len(descs), _DV_SPILL_MAX_TASKS))
         abs_root = os.path.abspath(root)
         batch = _DV_POSITIONS_PER_SLICE
@@ -1264,8 +1313,8 @@ def _dv_positions_df(spark: SparkSession, root: str, snap: Snapshot) -> DataFram
     once on the driver (checksummed) and expansion happens JVM-side via
     ``explode`` — whole-stage codegen, no Python in the read plan.
     Driver materialization is BOUNDED: at most ``_DV_POSITIONS_PER_SLICE``
-    positions become Python ints at a time (r8 verdict "what's wrong" #2
-    held all DVs' positions simultaneously).
+    positions are gathered into one Arrow slice at a time (r8 verdict
+    "what's wrong" #2 held all DVs' positions simultaneously).
 
     r13: past ``_DV_SPILL_POSITIONS`` total cardinality (known from the
     descriptors, no decode needed to choose) the positions SPILL to one
@@ -1287,7 +1336,7 @@ def _dv_positions_df(spark: SparkSession, root: str, snap: Snapshot) -> DataFram
     def flush():
         nonlocal rows, n
         if rows:
-            slices.append(spark.createDataFrame(rows, schema))
+            slices.append(local_frame(spark, rows, schema))
             rows, n = [], 0
 
     for a in snap.adds:
@@ -1298,7 +1347,7 @@ def _dv_positions_df(spark: SparkSession, root: str, snap: Snapshot) -> DataFram
             chunk = pos[i : i + _DV_POSITIONS_PER_SLICE]
             if n and n + len(chunk) > _DV_POSITIONS_PER_SLICE:
                 flush()
-            rows.append((a["path"], [int(p) for p in chunk]))
+            rows.append((a["path"], chunk))
             n += len(chunk)
     flush()
     out = slices[0]
@@ -4286,7 +4335,8 @@ def table_changes(
     if not parts:
         from pyspark.sql.types import LongType, StringType
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 (

@@ -39,6 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.session import local_frame
 from incubator_gluten_spark.sources import table_core
 
 _HOODIE = ".hoodie"
@@ -234,8 +235,8 @@ def read_incremental(
         > begin_instant
     ]
     if not files:
-        return spark.createDataFrame(
-            [], read_table(spark, root, drop_meta_cols=drop_meta_cols).schema
+        return local_frame(
+            spark, [], read_table(spark, root, drop_meta_cols=drop_meta_cols).schema
         )
     df = spark.read.parquet(*files).filter(
         (F.col("_hoodie_commit_time") > begin_instant)

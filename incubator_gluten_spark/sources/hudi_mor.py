@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from incubator_gluten_spark.session import local_frame
 from incubator_gluten_spark.sources import table_core
 from incubator_gluten_spark.sources.hudi_format import (
     META_COLS,
@@ -381,8 +382,8 @@ def _decode_logs_df(
         f"{c} {dict(base.dtypes)[c]}" for c in data_cols
     )
     committed_list = sorted(committed)
-    paths_df = spark.createDataFrame(
-        [(p,) for p in log_paths], "path string"
+    paths_df = local_frame(
+        spark, [(p,) for p in log_paths], "path string"
     ).repartition(min(len(log_paths), 32))
 
     def decode(batches):

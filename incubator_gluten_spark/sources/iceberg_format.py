@@ -42,6 +42,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.session import local_frame
 from incubator_gluten_spark.sources import table_core
 from incubator_gluten_spark.sources.avro import (
     read_container,
@@ -816,7 +817,7 @@ def read_table(
         preds += extract_skipping_predicates(where)
     files = plan_files(root, snapshot_id, partition_filter, preds or None)
     if not files:
-        return spark.createDataFrame([], _spark_struct_for(schema))
+        return local_frame(spark, [], _spark_struct_for(schema))
     if (meta.get("properties") or {}).get("schema.name-mapping.default"):
         # NAME MAPPING (spec Appendix C): data files written WITHOUT
         # Iceberg field ids (Hive migration via add_files, Delta UniForm)
@@ -1046,7 +1047,8 @@ def _read_name_mapped(
                 for name, src_f in part_fields
             )
         )
-    pmap = spark.createDataFrame(
+    pmap = local_frame(
+        spark,
         rows,
         "__pkey string"
         + "".join(f", __pv{i} string" for i in range(len(part_fields))),
@@ -1816,7 +1818,8 @@ def read_changelog(
             spark, root, meta, ice_schema, [f for f, _ in pairs],
             with_path=True,
         )
-        smap = spark.createDataFrame(
+        smap = local_frame(
+            spark,
             [(n, sid) for n, (_f, sid) in zip(names, pairs)],
             "__cbase string, _commit_snapshot_id long",
         )
@@ -1833,7 +1836,7 @@ def read_changelog(
         )
     if not parts:
         ddl = spark_ddl_for(ice_schema)
-        empty = spark.createDataFrame([], ddl).withColumn(
+        empty = local_frame(spark, [], ddl).withColumn(
             "_change_type", F.lit("")
         )
         if not net:
@@ -2888,7 +2891,8 @@ def read_meta_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
             )
             for f in plan_files(root)
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "file_path string, file_format string, partition string, "
             "spec_id int, record_count bigint, file_size_in_bytes bigint, "
@@ -2905,7 +2909,8 @@ def read_meta_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
             )
             for mf in _manifest_list(root, snap)
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "path string, length bigint, partition_spec_id int, "
             "added_snapshot_id bigint",
@@ -2920,7 +2925,8 @@ def read_meta_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
             )
             for s in meta.get("snapshots", [])
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "snapshot_id bigint, operation string, manifest_list string, "
             "schema_id int",
@@ -2933,7 +2939,8 @@ def read_meta_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
             (s["snapshot-id"], s["snapshot-id"] in chain)
             for s in meta.get("snapshots", [])
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows, "snapshot_id bigint, is_current_ancestor boolean"
         )
     if kind == "partitions":
@@ -2950,7 +2957,8 @@ def read_meta_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
         rows = [
             (k, n, fc, sz) for k, (n, fc, sz) in sorted(agg.items())
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "partition string, record_count bigint, file_count bigint, "
             "total_size_in_bytes bigint",
@@ -2960,7 +2968,8 @@ def read_meta_table(spark: SparkSession, root: str, kind: str) -> DataFrame:
         rows = [
             (name, r["type"], r["snapshot-id"]) for name, r in sorted(refs.items())
         ] + [("main", "branch", meta["current-snapshot-id"])]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows, "name string, type string, snapshot_id bigint"
         )
     raise ValueError(

@@ -45,6 +45,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.session import local_frame
 from incubator_gluten_spark.sources.avro import read_container
 from incubator_gluten_spark.sources.iceberg_format import (
     ADDED,
@@ -129,7 +130,8 @@ def _seq_map_df(spark: SparkSession, data: list[tuple]) -> DataFrame:
     names = [os.path.basename(f["file_path"]) for f, _ in data]
     if len(set(names)) != len(names):
         raise ValueError("duplicate data-file basenames")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (os.path.basename(f["file_path"]), f["file_path"], seq)
             for f, seq in data
@@ -171,7 +173,8 @@ def _delete_side(
     dels = reader.parquet(
         *[_resolve_path(root, f["file_path"]) for f, *_ in files]
     )
-    dmap = spark.createDataFrame(
+    dmap = local_frame(
+        spark,
         [(os.path.basename(f["file_path"]), seq) for f, seq, *_ in files],
         "__dbase string, __delseq bigint",
     )
@@ -245,7 +248,7 @@ def _mor_fold(spark: SparkSession, root: str, meta: dict, scan: dict) -> DataFra
     ice_schema = meta["schema"]
     ddl = spark_ddl_for(ice_schema)
     if not scan["data"]:
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
     df = spark.read.schema(ddl).parquet(
         *[_resolve_path(root, f["file_path"]) for f, _ in scan["data"]]
     )
@@ -1056,8 +1059,8 @@ def rewrite_position_deletes(spark: SparkSession, root: str) -> dict:
     dels = spark.read.schema("file_path string, pos bigint").parquet(
         *[_resolve_path(root, f["file_path"]) for f, _ in scan["pos_deletes"]]
     )
-    live_df = spark.createDataFrame(
-        [(p,) for p in sorted(live)], "file_path string"
+    live_df = local_frame(
+        spark, [(p,) for p in sorted(live)], "file_path string"
     )
     kept = dels.join(F.broadcast(live_df), "file_path")
     shards = _write_delete_parquets(

@@ -19,10 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-# schema-inference cache, keyed by parquet path (fixtures are immutable
-# within a session; a regenerated fixture lands in a fresh process)
-_EVENTS_SCHEMA_CACHE: dict[str, object] = {}
-
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source micro-batch stream over the events parquet.
@@ -31,20 +27,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader survives fixture regeneration (round 3's fixture stored int64
     nanos; round 4's stores TIMESTAMP(MICROS) — a hardcoded bigint schema
     silently read raw micros as nanos and collapsed every event to 1970).
-    The inferred schema is cached per path: the one-off footer read cost
-    every streaming entry ~0.2s per build (the round-4 stream_tumbling/
-    stream_session bench regression).
+    The inferred schema comes from ``catalog.parquet_schema``, memoized
+    per path until the file's size or mtime changes: the one-off footer
+    read cost every streaming entry ~0.2s per build (the round-4
+    stream_tumbling/stream_session bench regression).
     """
     from pyspark.sql.types import LongType, TimestampType
 
-    from incubator_gluten_spark.catalog import ensure_runtime_confs
+    from incubator_gluten_spark.catalog import ensure_runtime_confs, parquet_schema
 
     ensure_runtime_confs(spark)  # nanosAsLong + UTC on foreign sessions
-    events_path = f"{sf_dir}/events.parquet"
-    batch_schema = _EVENTS_SCHEMA_CACHE.get(events_path)
-    if batch_schema is None:
-        batch_schema = spark.read.parquet(events_path).schema
-        _EVENTS_SCHEMA_CACHE[events_path] = batch_schema
+    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     raw = (
         spark.readStream.schema(batch_schema)
         # the file stream source wants a directory; glob-filter to the one table

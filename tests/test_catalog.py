@@ -1,8 +1,9 @@
 """``catalog.load_table`` infers a table's schema once per path: a second
 load of an unchanged path reads with the memoized schema and launches no
 Spark job; a changed file listing or inference conf infers again; and
-the events ``ts`` conversion holds on both paths.  Also the session's
-codegen class cache size (``session.get_session``)."""
+the events ``ts`` conversion holds on both paths.  The events stream
+reads with the same memo, so a rewritten events file is re-inferred.
+Also the session's codegen class cache size (``session.get_session``)."""
 
 from __future__ import annotations
 
@@ -95,3 +96,32 @@ def test_cached_events_ts_is_timestamp_ntz(spark, sf_dir, tmp_path):
 def test_session_sizes_codegen_cache(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.sql.codegen.cache.maxEntries") == "4000"
+
+
+def test_stream_schema_follows_a_rewritten_events_file(spark, sf_dir, tmp_path):
+    """Rewriting events.parquet in-process with ``ts`` in the other
+    TIMESTAMP unit (NANOS, which Spark reads as a long here, or MICROS):
+    the next stream over it infers the new type and reads the same
+    instants."""
+    from incubator_gluten_spark.streaming.jobs import read_events_stream, run_to_memory
+
+    d = str(tmp_path)
+    path = os.path.join(d, "events.parquet")
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), path)
+
+    def stream_ts():
+        df = run_to_memory(read_events_stream(spark, d).select("ts"))
+        return sorted(r.ts for r in df.collect())
+
+    before = stream_ts()
+    t = pq.read_table(path)
+    i = t.schema.get_field_index("ts")
+    unit = "us" if t.schema.field(i).type.unit == "ns" else "ns"
+    pq.write_table(
+        t.set_column(i, "ts", t["ts"].cast(pa.timestamp(unit), safe=False)), path
+    )
+    after = stream_ts()
+    assert before and before[0].year > 1970
+    assert after == before
+    want = "long" if unit == "ns" else "timestamp_ntz"
+    assert catalog.parquet_schema(spark, path)["ts"].dataType.typeName() == want

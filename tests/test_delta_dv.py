@@ -228,7 +228,7 @@ def test_dv_expansion_driver_materialization_bounded(
 ):
     """r8 verdict directive #3: DV expansion must not hold every
     position as a Python int simultaneously — at most
-    _DV_POSITIONS_PER_SLICE positions per createDataFrame slice, slices
+    _DV_POSITIONS_PER_SLICE positions per local_frame slice, slices
     unioned, result and plan unchanged.  At 100 TB a table's total DV
     cardinality can be billions; the peak driver allocation must be the
     slice cap, not the table's deletion count."""
@@ -245,9 +245,10 @@ def test_dv_expansion_driver_materialization_bounded(
         def __init__(self, s):
             self._s = s
 
-        def createDataFrame(self, rows, schema):
-            calls.append(sum(len(r[1]) for r in rows))
-            return self._s.createDataFrame(rows, schema)
+        def createDataFrame(self, table, schema):
+            # local_frame hands over each slice as one Arrow table
+            calls.append(sum(map(len, table.column("positions").to_pylist())))
+            return self._s.createDataFrame(table, schema)
 
         def __getattr__(self, name):
             return getattr(self._s, name)

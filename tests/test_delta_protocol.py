@@ -826,8 +826,10 @@ def test_partitioned_read_plan_width_constant(spark, sf_dir, tmp_path):
     phys = df._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in opt  # no per-tuple subtree chain
     assert phys.count("FileScan parquet") == 1  # ONE scan, 40 dirs inside
-    # the only other leaf is the O(n_files) partition-value map
-    assert phys.count("Scan ExistingRDD") == 1
+    # the only other leaf is the O(n_files) partition-value map, an
+    # Arrow local relation (no Python-backed RDD)
+    assert phys.count("LocalTableScan") == 1
+    assert "Scan ExistingRDD" not in phys
     # and it still reads the right values
     got = sorted(map(tuple, df.collect()))
     assert got == sorted(map(tuple, base.collect()))
