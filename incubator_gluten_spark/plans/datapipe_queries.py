@@ -2299,11 +2299,16 @@ def dp_corpus_to_lakehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     back through the snapshot and aggregate.  The read-back agg
     hash-matching the pure-SQL oracle certifies the whole chain —
     dedup semantics AND the wire-format roundtrip.  In-entry: the
-    log's partitionValues must cover every released lang (pruning
-    capability asserted at the metadata level).  At 100 TB this is
-    the same plan: one dedup shuffle + one partitioned write; the
-    Delta commit is O(files) metadata."""
+    log's partitionValues must equal the set of released langs
+    (pruning capability asserted at the metadata level).  The released
+    langs come from an ``Observation`` on the write itself
+    (``collect_set``), not from a second action, which would run the
+    dedup, shuffle and semi join again just to list them.  At 100 TB
+    this is the same plan: one dedup shuffle + one partitioned write;
+    the Delta commit is O(files) metadata."""
     import shutil
+
+    from pyspark.sql import Observation
 
     from incubator_gluten_spark.sources import delta_protocol as dp
 
@@ -2315,10 +2320,18 @@ def dp_corpus_to_lakehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     root = f"{IO_DIR}/dp_corpus_lakehouse"
     shutil.rmtree(root, ignore_errors=True)
-    dp.create_table(released, root, partition_cols=["lang"])
+    # the observed frame is never provably empty (CollectMetrics stays
+    # in its plan), so the write runs and obs.get cannot wait forever;
+    # the struct keeps a NULL lang, which collect_set would skip
+    obs = Observation()
+    dp.create_table(
+        released.observe(obs, F.collect_set(F.struct("lang")).alias("langs")),
+        root,
+        partition_cols=["lang"],
+    )
     snap = dp.resolve(spark, root)
     langs_in_log = {a["partitionValues"]["lang"] for a in snap.adds}
-    want_langs = {r.lang for r in released.select("lang").distinct().collect()}
+    want_langs = {r.lang for r in obs.get["langs"]}
     if langs_in_log != want_langs:
         raise RuntimeError(
             f"log partitions {langs_in_log} != released langs {want_langs}"

@@ -1383,12 +1383,18 @@ def src_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     three row kinds: matched updates (doubled price, remapped
     priority), unmatched inserts (1997 keys, absent from the table),
     and one NULL-key row — which per Delta semantics never matches and
-    must INSERT via whenNotMatchedInsertAll (asserted present; the
-    pre-r9 shape silently dropped it).  Hash-matching the oracle —
+    must INSERT via whenNotMatchedInsertAll (asserted present exactly
+    once; the pre-r9 shape silently dropped it).  The assertion reads
+    the merge snapshot's per-file ``nullCount`` of the key from the
+    log, which the writer takes from each file's footer, instead of
+    scanning the table; a file without that count (or with a deletion
+    vector, whose count covers deleted rows too) sends it back to
+    counting the rows.  Hash-matching the oracle —
     which recomputes MERGE as target-anti-join ∪ source — certifies
     file skipping, whole-row update, insert, and NULL-key semantics
     end to end.  Reference analog: gluten-delta DeltaSuite MERGE
     scans."""
+    import json
     import shutil
 
     from incubator_gluten_spark.sources import delta_protocol as dp
@@ -1420,7 +1426,19 @@ def src_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     if out["files_skipped"] == 0:
         raise RuntimeError(f"stats-based file skipping never fired: {out}")
     result = dp.read_table(spark, root)
-    if result.filter(F.col("o_orderkey").isNull()).count() != 1:
+    null_counts = [
+        None
+        if a.get("deletionVector")
+        else (json.loads(a.get("stats") or "{}").get("nullCount") or {}).get(
+            "o_orderkey"
+        )
+        for a in dp.resolve(spark, root).adds
+    ]
+    if None in null_counts:
+        n_null = result.filter(F.col("o_orderkey").isNull()).count()
+    else:
+        n_null = sum(null_counts)
+    if n_null != 1:
         raise RuntimeError("NULL-key source row was not inserted")
     return result.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),

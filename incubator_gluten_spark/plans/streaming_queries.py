@@ -522,12 +522,33 @@ def stream_txnlog_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _assert_replay_noop(replay, log_head) -> None:
+    """Re-deliver a committed micro-batch through ``replay()`` and
+    require that the sink no-ops: ``replay()`` reports no commit and
+    ``log_head()``, the table log's head read from the log alone, does
+    not move.  A replay that commits anything, even rows the aggregate
+    would not notice, moves the head, so this is stricter than
+    comparing row counts before and after, and it launches no Spark
+    job."""
+    head = log_head()
+    if replay():
+        raise RuntimeError("replayed batch committed twice")
+    if log_head() != head:
+        raise RuntimeError("replay changed the table")
+
+
 def _delta_stream_sink(
     spark: SparkSession, sf_dir: str, name: str, partition_cols=None
 ) -> DataFrame:
     """Stream events into the Delta table ``name`` one
     ``append_stream_batch`` per micro-batch (appId = ``name``), re-deliver
-    the final batch and assert it no-ops, and aggregate the table."""
+    the final batch and assert it no-ops, and aggregate the table.
+
+    The replay check reads the Delta log, not the data: the replay must
+    not move ``current_version`` (``_assert_replay_noop``).  The empty
+    table is created from a ``local_frame``, which stages no file.  So
+    nothing before the returned aggregate runs a Spark job outside the
+    stream's own batches."""
     import shutil
 
     from incubator_gluten_spark.sources import delta_protocol as dp
@@ -554,12 +575,11 @@ def _delta_stream_sink(
     )
     sq.awaitTermination()
 
-    n_before = dp.read_table(spark, root).count()
     batch_df, batch_id = replay["last"]
-    if dp.append_stream_batch(batch_df, root, name, batch_id):
-        raise RuntimeError("replayed batch committed twice")
-    if dp.read_table(spark, root).count() != n_before:
-        raise RuntimeError("replay changed the table")
+    _assert_replay_noop(
+        lambda: dp.append_stream_batch(batch_df, root, name, batch_id),
+        lambda: dp.current_version(root),
+    )
     return dp.read_table(spark, root).groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
@@ -585,9 +605,10 @@ def stream_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes to the log.  foreachBatch commits each micro-batch with
     append_stream_batch(app_id, batch_id); a replayed batch finds its
     txn version already committed and NO-OPs (asserted by re-delivering
-    the final batch).  Oracle: the final snapshot equals the plain batch
-    aggregate over events.  ``stream_txnlog_sink`` is the partitioned
-    twin."""
+    the final batch: the log's version must not move, which no commit
+    can slip past and which reads the log instead of counting the table
+    twice).  Oracle: the final snapshot equals the plain batch aggregate
+    over events.  ``stream_txnlog_sink`` is the partitioned twin."""
     return _delta_stream_sink(spark, sf_dir, "stream_delta_sink")
 
 
@@ -637,14 +658,13 @@ def stream_iceberg_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     sq.awaitTermination()
-    n_before = ice.read_table(spark, root).count()
     batch_df, batch_id = replay["last"]
-    if ice.append_stream_batch(
-        batch_df, root, "stream_iceberg_sink", batch_id
-    ):
-        raise RuntimeError("replayed batch committed twice")
-    if ice.read_table(spark, root).count() != n_before:
-        raise RuntimeError("replay changed the table")
+    _assert_replay_noop(
+        lambda: ice.append_stream_batch(
+            batch_df, root, "stream_iceberg_sink", batch_id
+        ),
+        lambda: ice._metadata_version(root),
+    )
     return ice.read_table(spark, root).groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
@@ -683,6 +703,7 @@ def stream_iceberg_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits), scanned by gluten-iceberg's delete-file read path."""
     import shutil
 
+    from incubator_gluten_spark.sources import iceberg_format as ice
     from incubator_gluten_spark.sources import iceberg_v2 as v2
 
     base = f"{IO_DIR}/stream_ice_upsert"
@@ -723,14 +744,13 @@ def stream_iceberg_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan = v2.plan_scan(root)
     if not scan["eq_deletes"]:
         raise RuntimeError("no cross-batch shadowing happened")
-    n_before = v2.read_table(spark, root).count()
     src, batch_id = replay["last"]
-    if v2.merge_mor_stream_batch(
-        spark, src, root, "stream_ice_upsert", batch_id, ["user_id"]
-    ):
-        raise RuntimeError("replayed batch committed twice")
-    if v2.read_table(spark, root).count() != n_before:
-        raise RuntimeError("replay changed the table")
+    _assert_replay_noop(
+        lambda: v2.merge_mor_stream_batch(
+            spark, src, root, "stream_ice_upsert", batch_id, ["user_id"]
+        ),
+        lambda: ice._metadata_version(root),
+    )
     return v2.read_table(spark, root).groupBy("status").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum(F.col("score").cast("decimal(18,4)")), 2)
@@ -788,14 +808,13 @@ def stream_hudi_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     sq.awaitTermination()
-    n_before = hf.read_table(spark, root).count()
     batch_df, batch_id = replay["last"]
-    if hf.append_stream_batch(
-        spark, batch_df, root, "event_id", "stream_hudi_sink", batch_id
-    ):
-        raise RuntimeError("replayed batch committed twice")
-    if hf.read_table(spark, root).count() != n_before:
-        raise RuntimeError("replay changed the table")
+    _assert_replay_noop(
+        lambda: hf.append_stream_batch(
+            spark, batch_df, root, "event_id", "stream_hudi_sink", batch_id
+        ),
+        lambda: hf.completed_instants(root),
+    )
     return hf.read_table(spark, root).groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
@@ -1295,14 +1314,13 @@ def stream_delta_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     sq.awaitTermination()
-    n_before = dp.read_table(spark, root).count()
     src, batch_id = replay["last"]
-    if dp.merge_stream_batch(
-        spark, src, root, "user_id", "stream_delta_upsert", batch_id
-    ):
-        raise RuntimeError("replayed batch committed twice")
-    if dp.read_table(spark, root).count() != n_before:
-        raise RuntimeError("replay changed the table")
+    _assert_replay_noop(
+        lambda: dp.merge_stream_batch(
+            spark, src, root, "user_id", "stream_delta_upsert", batch_id
+        ),
+        lambda: dp.current_version(root),
+    )
     return dp.read_table(spark, root).groupBy("status").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum(F.col("score").cast("decimal(18,4)")), 2)

@@ -268,7 +268,11 @@ def _stage_base_files(
     the raw unescaped value would let a value containing '/' write
     outside the partition dir and '..' escape the table root (r8
     ADVICE).  The RAW value goes into ``_hoodie_partition_path`` (a
-    column the caller built) and the commit stats."""
+    column the caller built) and the commit stats.
+
+    An empty frame still writes its one 0-row base file
+    (``write_empty``): a snapshot reads the schema from its base files,
+    so a table without one could not be read."""
     if route_col:
         df, by = df.repartition(route_col), [route_col]
     else:
@@ -276,7 +280,7 @@ def _stage_base_files(
     stats: dict[str, list] = {}
     placed: set[str] = set()
     abs_root = os.path.abspath(root)
-    for f in table_core.write_staged(df, root, by):
+    for f in table_core.write_staged(df, root, by, write_empty=True):
         if f.dir in placed:  # repartition guarantees one task per segment
             raise HudiFormatError(
                 f"expected one base file for staged segment {f.dir!r}, got more"

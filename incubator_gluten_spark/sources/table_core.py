@@ -33,6 +33,13 @@ directory is removed when the walk ends, including when the write or
 the caller fails.  Staging directories are always named ``_staging_<token>``
 directly under the table root — Delta's ``vacuum`` skips them and
 Iceberg's ``remove_orphan_files`` reclaims any a killed process left.
+A provably empty frame (``provably_empty``: built on the driver, and
+Catalyst folds it to an empty ``LocalRelation``, as it folds
+``session.local_frame(spark, [], schema)``) stages nothing: no Spark
+job, no staging directory, no file.  A
+write would only have produced the 0-row file that Delta and Iceberg
+drop anyway; Hudi, whose snapshot is its base files, asks for that
+file with ``write_empty=True``.
 
 ``footer_stats`` is the one row-group statistics loop: per top-level
 column, (min, max, null_count) over the whole file.  A column's bounds
@@ -59,6 +66,7 @@ __all__ = [
     "Staged",
     "footer_stats",
     "partition_values",
+    "provably_empty",
     "put_if_absent",
     "replace",
     "unescape_path_name",
@@ -144,16 +152,50 @@ class Staged(NamedTuple):
     meta: Any  # pyarrow FileMetaData: num_rows, row-group statistics
 
 
+def provably_empty(df) -> bool:
+    """True when ``df`` is built on the driver (every leaf of its
+    analyzed plan is a ``LocalRelation``) and Catalyst's optimized plan
+    of it is an empty ``LocalRelation``: the frame holds no row whatever
+    runs it, and knowing that launches no Spark job.  A frame over files
+    or an RDD is never provably empty, so its write pays no second
+    optimizer pass (tens of ms on a merge plan; the write optimizes the
+    plan again in its own query).  A Python-row frame
+    (``spark.createDataFrame([], ddl)``) is a ``LogicalRDD`` and an
+    observed one (``df.observe``) keeps its ``CollectMetrics`` node, so
+    neither is provably empty."""
+    qe = df._jdf.queryExecution()
+    leaves = qe.analyzed().collectLeaves()
+    if any(
+        leaves.apply(i).getClass().getSimpleName() != "LocalRelation"
+        for i in range(leaves.size())
+    ):
+        return False
+    plan = qe.optimizedPlan()
+    return (
+        plan.getClass().getSimpleName() == "LocalRelation"
+        and plan.data().isEmpty()
+    )
+
+
 def write_staged(
-    df, root: str, partition_by=(), token: str | None = None
+    df,
+    root: str,
+    partition_by=(),
+    token: str | None = None,
+    *,
+    write_empty: bool = False,
 ) -> Iterator[Staged]:
     """Write ``df`` as parquet into ``<root>/_staging_<token>`` (a fresh
     token unless given) and yield every file it wrote, directories and
     names in sorted order.  The staging directory is removed when the
     iteration ends, is closed, or the write raises; a file the caller
-    has not moved out by then goes with it."""
+    has not moved out by then goes with it.  A ``provably_empty`` frame
+    yields nothing and launches no job, unless ``write_empty`` asks for
+    the 0-row file Spark writes for it."""
     import pyarrow.parquet as pq
 
+    if not write_empty and provably_empty(df):
+        return
     staging = os.path.join(root, f"_staging_{token or uuid.uuid4().hex[:8]}")
     try:
         writer = df.write.mode("overwrite")

@@ -4,7 +4,9 @@ which removes its ``_staging_<token>`` directory on the way out, and no
 commit is made.  Delta's ``vacuum`` never looks inside ``_staging_*``,
 so a leftover staging directory would never be reclaimed.  A Delta
 commit names no 0-row file: the empty files Spark writes for empty tasks
-stay in the staging directory and go with it."""
+stay in the staging directory and go with it.  A provably empty frame
+(``session.local_frame(spark, [], ...)``) stages nothing at all: no job,
+no staging directory; Hudi still writes its 0-row base file."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.session import local_frame
 from incubator_gluten_spark.sources import delta_protocol as dp
 from incubator_gluten_spark.sources import hudi_format as hf
 from incubator_gluten_spark.sources import iceberg_format as ice
@@ -84,14 +87,94 @@ def test_delta_commits_no_empty_data_file(spark, tmp_path):
     assert len(data) == len(stats)
 
 
+def _jobs(spark, group: str, fn) -> int:
+    """Run ``fn()`` under job group ``group``; the number of Spark jobs
+    it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _log_shape(root: str) -> list:
+    """Commit 0's actions without the per-table id and clock."""
+    out = []
+    for a in dp._read_commit_actions(root, 0):
+        (kind, body), = a.items()
+        if kind == "metaData":
+            body = {k: v for k, v in body.items() if k not in ("id", "createdTime")}
+        out.append((kind, body))
+    return out
+
+
+_EMPTY_DDL = "k bigint, s string, ts timestamp"
+
+
 def test_delta_empty_create_commits_no_add(spark, tmp_path):
-    root = str(tmp_path / "empty")
-    empty = spark.createDataFrame([], "k bigint, s string")
-    dp.create_table(empty, root)
-    assert _stats(root, 0) == []
-    df = dp.read_table(spark, root)
-    assert df.schema.simpleString() == empty.schema.simpleString()
-    assert df.count() == 0
+    """Python-row and Arrow empty frames commit the same log (protocol
+    and metaData, no add); only the Arrow frame, an empty
+    ``LocalRelation`` after optimization, skips the Spark write."""
+    for part in ([], ["s"]):
+        roots, launched = {}, {}
+        for kind, empty in (
+            ("rows", spark.createDataFrame([], _EMPTY_DDL)),
+            ("local", local_frame(spark, [], _EMPTY_DDL)),
+        ):
+            root = roots[kind] = str(tmp_path / f"{kind}{len(part)}")
+            launched[kind] = _jobs(
+                spark, root, lambda: dp.create_table(empty, root, part)
+            )
+            assert _stats(root, 0) == []
+            assert not [n for n in os.listdir(root) if n.startswith("_staging_")]
+            df = dp.read_table(spark, root)
+            assert df.schema.simpleString() == empty.schema.simpleString()
+            assert df.count() == 0
+        assert launched["rows"] >= 1 and launched["local"] == 0
+        assert _log_shape(roots["local"]) == _log_shape(roots["rows"])
+        assert _listing(roots["local"]) == [
+            "./_delta_log/",
+            "_delta_log/00000000000000000000.json",
+        ]
+
+
+def test_iceberg_empty_create_stages_nothing(spark, tmp_path):
+    rows_root, local_root = str(tmp_path / "rows"), str(tmp_path / "local")
+    rows = spark.createDataFrame([], _EMPTY_DDL)
+    local = local_frame(spark, [], _EMPTY_DDL)
+    assert _jobs(spark, "ice-rows", lambda: ice.create_table(rows, rows_root)) >= 1
+    assert _jobs(spark, "ice-local", lambda: ice.create_table(local, local_root)) == 0
+    for root in (rows_root, local_root):
+        meta = ice._current_metadata(root)
+        assert meta["current-snapshot-id"] is not None
+        assert ice.plan_files(root) == []
+        assert not [n for n in os.listdir(root) if n.startswith("_staging_")]
+        assert os.listdir(os.path.join(root, "data")) == []
+        df = ice.read_table(spark, root)
+        assert df.schema.simpleString() == local.schema.simpleString()
+        assert df.count() == 0
+    assert ice._current_metadata(local_root)["schemas"] == (
+        ice._current_metadata(rows_root)["schemas"]
+    )
+
+
+def test_hudi_empty_create_keeps_its_empty_base_file(spark, tmp_path):
+    """A Hudi snapshot is its base files, so an empty create still writes
+    one 0-row base file, from an Arrow frame as from Python rows."""
+    for kind, empty in (
+        ("rows", spark.createDataFrame([], _EMPTY_DDL)),
+        ("local", local_frame(spark, [], _EMPTY_DDL)),
+    ):
+        root = str(tmp_path / kind)
+        hf.create_table(empty, root, key_col="k")
+        files = hf.snapshot_files(root)
+        assert len(files) == 1 and files[0].endswith(".parquet")
+        df = hf.read_table(spark, root)
+        assert df.schema.simpleString() == empty.schema.simpleString()
+        assert df.count() == 0
+        assert not [n for n in os.listdir(root) if n.startswith("_staging_")]
 
 
 def test_delta_cdf_rewrite_without_changes_reads_no_change(spark, tmp_path):
