@@ -107,8 +107,11 @@ def get_session(
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # --- managed-table warehouse: /tmp, because the in-memory catalog
-        # forgets tables between sessions while their directories persist
-        .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
+        # forgets tables between sessions while their directories persist;
+        # one per process, so two sessions on a host never share a table
+        .config(
+            "spark.sql.warehouse.dir", f"/tmp/spark_graft_warehouse_{os.getpid()}"
+        )
         # --- determinism / interop
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

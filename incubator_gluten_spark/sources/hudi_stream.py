@@ -1,12 +1,11 @@
-"""Hudi COW table as a STRUCTURED STREAMING SOURCE (Spark 4 Python
-DataSource ``SimpleDataSourceStreamReader``).
+"""Hudi COW table as a STRUCTURED STREAMING SOURCE, on the shared
+``file_stream.FileStreamReader``.
 
 ``spark.readStream.format("graft_hudi").option("path", root)`` tails the
-timeline: offsets are COMPLETED COMMIT INSTANTS (engine-checkpointed
-dicts; deterministic ``readBetweenOffsets`` replay = exactly-once), each
-micro-batch is the RECORD-LEVEL incremental pull of ``(start, end]`` —
-``hoodie.datasource.query.type=incremental`` semantics, the contract
-Hudi's own DeltaStreamer chains on:
+timeline: offsets are COMPLETED COMMIT INSTANTS (``{"instant": t}``),
+and each micro-batch is the RECORD-LEVEL incremental pull of ``(start,
+end]`` — ``hoodie.datasource.query.type=incremental`` semantics, the
+contract Hudi's own DeltaStreamer chains on:
 
 * inserts stream through once, at their commit instant;
 * an UPSERT delivers exactly the records it changed (at their new
@@ -22,17 +21,14 @@ Hudi's own DeltaStreamer chains on:
 * MERGE_ON_READ tables refuse (``snapshot_files`` raises — log-block
   merge belongs to sources/hudi_mor.py).
 
-Base-file pruning is by NAME alone: a COW base file written at instant
-``i`` holds only commit times <= ``i``, so files named <= start are
-skipped without opening them — an incremental micro-batch off a 100 TB
-table reads the recently-written file groups, not the table.  Two
-readers share the same planning + decode helpers (the Delta stream
-source's r10 shape): ``_HudiPartitionedStreamReader`` (engine default
-via ``streamReader()``) keeps the timeline walk + name pruning
-driver-side (metadata-bounded) and runs parquet decode + the
-record-level commit-time filter EXECUTOR-side with Arrow transfer;
-``_HudiTableStreamReader`` keeps the simple-API offset math
-unit-testable.
+Options: ``startingInstant``, ``maxCommitsPerBatch``.  Base-file pruning
+is by NAME alone: a COW base file written at instant ``i`` holds only
+commit times <= ``i``, so files named <= start are skipped without
+opening them — an incremental micro-batch off a 100 TB table reads the
+recently-written file groups, not the table.  One input partition per
+candidate base file; the parquet decode and the record-level
+commit-time filter run in executor workers.  The schema is the newest
+base file's footer, read once per micro-batch.
 
 Reference analog: gluten-hudi scans through the Hudi jar's relations
 (gluten-hudi/src/main/scala/org/apache/gluten/execution/HudiScanTransformer.scala);
@@ -42,111 +38,36 @@ semantics here are the public incremental-query contract.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from incubator_gluten_spark.sources.file_stream import (
+    FileStreamDataSource,
+    FileStreamReader,
+)
+from incubator_gluten_spark.sources.hudi_format import (
+    META_COLS,
+    completed_instants,
+    snapshot_files,
 )
 
 __all__ = ["HudiStreamDataSource", "register_hudi_stream_source"]
 
 
+def _instant_of(path: str) -> str:
+    """The commit instant in a base-file name
+    (``<file_id>_<write_token>_<instant>.parquet``)."""
+    return os.path.basename(path)[: -len(".parquet")].split("_")[2]
+
+
 def _newest_base_file(files: list[str]) -> str:
-    """Newest by the COMMIT INSTANT embedded in the base-file name
-    (``<file_id>_<write_token>_<instant>.parquet``) — basenames START
-    with the md5 file_id, so lexicographic max picks an arbitrary file
-    group, not the latest write (r9 ADVICE)."""
-    return max(
-        files,
-        key=lambda p: os.path.basename(p)[: -len(".parquet")].split("_")[2],
-    )
-
-
-def _opt(options: dict, *names: str, default: str = "") -> str:
-    for n in names:
-        for k in (n, n.lower()):
-            if k in options:
-                return options[k]
-    return default
-
-
-class _HudiTableStreamReader:
-    """SimpleDataSourceStreamReader over a Hudi COW table."""
-
-    def __init__(self, options: dict) -> None:
-        self.root = _opt(options, "path")
-        if not self.root:
-            raise ValueError("graft_hudi requires .option('path', <root>)")
-        self.start_instant = _opt(options, "startingInstant", default="")
-        self.max_commits = int(_opt(options, "maxCommitsPerBatch", default="0"))
-
-    # --- offsets -----------------------------------------------------
-    def initialOffset(self) -> dict:
-        return {"instant": self.start_instant}
-
-    def latestOffset(self) -> dict:
-        from incubator_gluten_spark.sources.hudi_format import (
-            completed_instants,
-        )
-
-        committed = completed_instants(self.root)
-        return {"instant": committed[-1] if committed else ""}
-
-    def read(self, start: dict):
-        from incubator_gluten_spark.sources.hudi_format import (
-            completed_instants,
-        )
-
-        lo = start["instant"]
-        newer = [i for i in completed_instants(self.root) if i > lo]
-        if not newer:
-            return iter(()), {"instant": lo}
-        if self.max_commits > 0:
-            newer = newer[: self.max_commits]
-        end = newer[-1]
-        # list iterator, never a generator: the engine's prefetch cache
-        # copy.copy()s the batch iterator (same gotcha as delta_stream)
-        return iter(list(self._rows(lo, end))), {"instant": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(list(self._rows(start["instant"], end["instant"])))
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    # --- record-level incremental decode -------------------------------
-    def _rows(self, lo: str, hi: str) -> Iterator[tuple]:
-        names = self._data_columns()
-        for path in _plan_base_files(self.root, lo, hi):
-            table = _emit_table(path, lo, hi, names)
-            if table.num_rows:
-                yield from zip(*[c.to_pylist() for c in table.columns])
-
-    def _data_columns(self) -> list[str]:
-        return _data_columns(self.root)
-
-
-def _plan_base_files(root: str, lo: str, hi: str) -> list[str]:
-    """Driver-side plan: candidate base files of the ``as_of=hi``
-    snapshot, name-pruned (a COW base file written at instant <= lo
-    holds only commit times <= lo — skipped without opening it).
-    METADATA-BOUNDED: timeline + directory walk, no parquet reads."""
-    from incubator_gluten_spark.sources.hudi_format import snapshot_files
-
-    out = []
-    for path in snapshot_files(root, as_of=hi):
-        instant = os.path.basename(path)[: -len(".parquet")].split("_")[2]
-        if instant > lo:
-            out.append(path)
-    return out
+    """Newest by the COMMIT INSTANT embedded in the base-file name —
+    basenames START with the md5 file_id, so lexicographic max picks an
+    arbitrary file group, not the latest write."""
+    return max(files, key=_instant_of)
 
 
 def _emit_table(path: str, lo: str, hi: str, names: list[str]):
     """pyarrow Table of one base file's records with commit time in
-    ``(lo, hi]`` — the record-level incremental filter.  Runs wherever
-    the caller runs (executor-side in the partition-planned reader)."""
+    ``(lo, hi]`` — the record-level incremental filter."""
     import pyarrow.parquet as pq
 
     table = pq.read_table(path)
@@ -155,146 +76,58 @@ def _emit_table(path: str, lo: str, hi: str, names: list[str]):
     return table.take(keep).select(names)
 
 
-def _data_columns(root: str) -> list[str]:
-    import pyarrow.parquet as pq
-
-    from incubator_gluten_spark.sources.hudi_format import (
-        META_COLS,
-        snapshot_files,
-    )
-
-    files = snapshot_files(root)
-    if not files:
-        raise ValueError(f"no committed snapshot in {root}")
-    schema = pq.read_schema(_newest_base_file(files))
-    return [n for n in schema.names if n not in META_COLS]
-
-
-class _BaseFilePartition(InputPartition):
-    """One candidate base file = one input partition."""
-
-    def __init__(self, path, lo, hi, names, arrow_schema):
-        self.path = path
-        self.lo = lo
-        self.hi = hi
-        self.names = names
-        self.arrow_schema = arrow_schema  # None -> tuple fallback
-
-
-class _HudiPartitionedStreamReader(DataSourceStreamReader):
-    """Full DataSourceStreamReader: timeline walk + base-file name
-    pruning stay driver-side (metadata-bounded); parquet decode + the
-    record-level commit-time filter + Arrow transfer run in executor
-    workers — same upgrade shape as the Delta/Iceberg stream sources."""
+class _HudiStreamReader(FileStreamReader):
+    FORMAT = "graft_hudi"
+    KEY = "instant"
+    PACE = "maxCommitsPerBatch"
 
     def __init__(self, options: dict) -> None:
-        s = _HudiTableStreamReader(options)
-        self.root = s.root
-        self.start_instant = s.start_instant
-        self.max_commits = s.max_commits
-        self._hwm: str | None = None
+        super().__init__(options)
+        self.start = self.opt("startingInstant", "")
+        self._struct = None  # footer schema read by the last plan
 
-    def initialOffset(self) -> dict:
-        self._hwm = self.start_instant
-        return {"instant": self.start_instant}
+    def committed(self) -> list[str]:
+        return completed_instants(self.root)
 
-    def latestOffset(self) -> dict:
-        from incubator_gluten_spark.sources.hudi_format import (
-            completed_instants,
-        )
-
-        committed = completed_instants(self.root)
-        if self.max_commits > 0 and self._hwm is not None:
-            newer = [i for i in committed if i > self._hwm][: self.max_commits]
-            return {"instant": newer[-1] if newer else self._hwm}
-        return {"instant": committed[-1] if committed else ""}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start["instant"], end["instant"]
-        self._hwm = max(self._hwm or hi, hi)
-        names = _data_columns(self.root)
-        try:
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            from incubator_gluten_spark.sources.avro import _arrow_schema_for
-
-            import pyarrow.parquet as pq
-            from incubator_gluten_spark.sources.hudi_format import (
-                snapshot_files,
-            )
-
-            full = from_arrow_schema(
-                pq.read_schema(_newest_base_file(snapshot_files(self.root)))
-            )
-            from pyspark.sql.types import StructType
-
-            struct = StructType([f for f in full.fields if f.name in names])
-            aschema = _arrow_schema_for(struct)
-        except Exception:  # noqa: BLE001 — complex type: row fallback
-            aschema = None
+    def plan(self, lo: str, hi: str) -> list[tuple]:
+        self._struct = None
+        names = self.struct().fieldNames()
+        # name-pruned candidates of the as_of=hi snapshot: timeline and
+        # directory walk only, no parquet read
         return [
-            _BaseFilePartition(p, lo, hi, names, aschema)
-            for p in _plan_base_files(self.root, lo, hi)
+            (path, lo, hi, names)
+            for path in snapshot_files(self.root, as_of=hi)
+            if _instant_of(path) > lo
         ]
 
-    def read(self, partition: _BaseFilePartition):
-        table = _emit_table(
-            partition.path, partition.lo, partition.hi, partition.names
-        )
-        if partition.arrow_schema is not None:
-            try:
-                return iter(table.cast(partition.arrow_schema).to_batches())
-            except Exception:  # noqa: BLE001 — cast mismatch: row path
-                pass
-        if table.num_rows == 0:
-            return iter(())
-        return iter(zip(*[c.to_pylist() for c in table.columns]))
+    @staticmethod
+    def decode(payload):
+        return _emit_table(*payload)
 
-    def commit(self, end: dict) -> None:
-        pass
+    def struct(self):
+        # built SESSIONLESS from the newest base file's parquet footer
+        # (the data-source worker has no JVM); from_arrow_schema is
+        # pure Python
+        if self._struct is None:
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import from_arrow_schema
+            from pyspark.sql.types import StructType
+
+            files = snapshot_files(self.root)
+            if not files:
+                raise ValueError(f"no committed snapshot in {self.root}")
+            full = from_arrow_schema(pq.read_schema(_newest_base_file(files)))
+            self._struct = StructType(
+                [f for f in full.fields if f.name not in META_COLS]
+            )
+        return self._struct
 
 
-class HudiStreamDataSource(DataSource):
+class HudiStreamDataSource(FileStreamDataSource):
     """``spark.readStream.format("graft_hudi")`` — commit-instant-offset
     record-level incremental micro-batches over a Hudi COW table."""
 
-    @classmethod
-    def name(cls) -> str:
-        return "graft_hudi"
-
-    def schema(self):
-        # built SESSIONLESS from the newest base file's parquet footer
-        # (the data-source worker has no JVM — same constraint as the
-        # Avro/Iceberg stream sources); from_arrow_schema is pure Python
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        from incubator_gluten_spark.sources.hudi_format import (
-            META_COLS,
-            snapshot_files,
-        )
-
-        root = _opt(self.options, "path")
-        if not root:
-            raise ValueError("graft_hudi requires .option('path', <root>)")
-        files = snapshot_files(root)
-        if not files:
-            raise ValueError(f"no committed snapshot in {root}")
-        schema = pq.read_schema(_newest_base_file(files))
-        full = from_arrow_schema(schema)
-        from pyspark.sql.types import StructType
-
-        return StructType([f for f in full.fields if f.name not in META_COLS])
-
-    def streamReader(self, schema):
-        # preferred by the engine over simpleStreamReader: per-file
-        # input partitions, executor-side parquet decode, Arrow transfer
-        return _HudiPartitionedStreamReader(self.options)
-
-    def simpleStreamReader(self, schema):
-        # unused while streamReader exists; kept as the documented
-        # simple-API fallback (its offset math is unit-pinned directly)
-        return _HudiTableStreamReader(self.options)
+    READER = _HudiStreamReader
 
 
 def register_hudi_stream_source(spark) -> None:

@@ -1274,6 +1274,12 @@ def _write_data_files(
     Reference analog: gluten-iceberg delegates writes to Iceberg's
     distributed writers (gluten-iceberg/.../IcebergWriteExec.scala) —
     no driver data pass."""
+    os.makedirs(os.path.join(root, "data"), exist_ok=True)
+    # checked before the field-id stamp and the hash repartition: a root
+    # RepartitionByExpression hides the empty LocalRelation from
+    # write_staged's own check
+    if table_core.provably_empty(df):
+        return []
     if ice_schema is not None:
         spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
         df = _stamp_field_ids(df, ice_schema)
@@ -1390,7 +1396,6 @@ def _write_data_files(
     prior_ts = spark.conf.get(_TS_KEY, None)
     spark.conf.set(_TS_KEY, "TIMESTAMP_MICROS")
     data_files = []
-    os.makedirs(os.path.join(root, "data"), exist_ok=True)
     try:
         for f in table_core.write_staged(df, root, part_by, token):
             n_rows = f.meta.num_rows

@@ -1,12 +1,11 @@
-"""Iceberg table as a STRUCTURED STREAMING SOURCE (Spark 4 Python
-DataSource ``SimpleDataSourceStreamReader``).
+"""Iceberg table as a STRUCTURED STREAMING SOURCE, on the shared
+``file_stream.FileStreamReader``.
 
 ``spark.readStream.format("graft_iceberg").option("path", root)`` tails
-the snapshot log: offsets are SNAPSHOT IDS (engine-checkpointed dicts;
-deterministic ``readBetweenOffsets`` replay = exactly-once), each
-micro-batch is the ADDED manifest entries of the snapshots in
-``(start, end]`` — the same incremental-append contract as Iceberg's
-own Spark streaming source:
+the snapshot log: offsets are SNAPSHOT IDS (``{"snapshot": id}``), and
+each micro-batch is the ADDED manifest entries of the snapshots in
+``(start, end]``, one input partition per data file — the same
+incremental-append contract as Iceberg's own Spark streaming source:
 
 * append snapshots stream through as inserts (Iceberg-written data
   files carry EVERY column; name-mapped tables — Hive migrate, Delta
@@ -21,14 +20,10 @@ own Spark streaming source:
   file lacks read as NULL) — field-id evolution tables stream with
   their current names.
 
-Two readers share the same planning + decode helpers (the Delta stream
-source's r10 shape): ``_IcebergPartitionedStreamReader`` (engine
-default via ``streamReader()``) plans one InputPartition per ADDED
-data_file from metadata alone — manifest Avro decodes through this
-repo's pure-Python codec, driver-side and metadata-bounded — while
-parquet decode + Arrow transfer run EXECUTOR-side;
-``_IcebergTableStreamReader`` keeps the simple-API offset math
-unit-testable.  Per-batch size is paced by ``maxSnapshotsPerBatch``.
+Options: ``maxSnapshotsPerBatch``, ``ignoreChanges``.  Planning walks
+the metadata JSON and the manifest Avro (this repo's pure-Python codec)
+on the driver; the parquet decode runs in executor workers.  Pacing
+counts snapshot ids, which this library numbers ``max + 1``.
 
 Reference analog: gluten-iceberg streams through the jar's
 SparkMicroBatchStream; semantics here are the public spec's.
@@ -37,15 +32,15 @@ SparkMicroBatchStream; semantics here are the public spec's.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from pyspark.sql import types as T
+
+from incubator_gluten_spark.sources.file_stream import (
+    FileStreamDataSource,
+    FileStreamReader,
 )
-
 from incubator_gluten_spark.sources.iceberg_format import (
+    ADDED,
     _current_metadata,
     _current_schema,
     _default_spec,
@@ -54,140 +49,53 @@ from incubator_gluten_spark.sources.iceberg_format import (
 
 __all__ = ["IcebergStreamDataSource", "register_iceberg_stream_source"]
 
+# Iceberg primitive -> pyspark type object.  Built SESSIONLESS: the
+# data-source worker has no JVM, so _parse_datatype_string is
+# unavailable (the same constraint the Avro source hit).
+_ICE_TO_T = {
+    "long": T.LongType(),
+    "int": T.IntegerType(),
+    "double": T.DoubleType(),
+    "float": T.FloatType(),
+    "string": T.StringType(),
+    "boolean": T.BooleanType(),
+    "binary": T.BinaryType(),
+    "date": T.DateType(),
+    "timestamp": T.TimestampNTZType(),
+    "timestamptz": T.TimestampType(),
+}
 
-def _opt(options: dict, *names: str, default: str = "") -> str:
-    for n in names:
-        for k in (n, n.lower()):
-            if k in options:
-                return options[k]
-    return default
 
-
-class _IcebergTableStreamReader:
-    """SimpleDataSourceStreamReader over an Iceberg v1 table."""
-
-    def __init__(self, options: dict) -> None:
-        self.root = _opt(options, "path")
-        if not self.root:
-            raise ValueError("graft_iceberg requires .option('path', <root>)")
-        self.ignore_changes = (
-            _opt(options, "ignoreChanges", default="false") == "true"
+def _part_inject(meta: dict, cur: dict) -> dict[str, str]:
+    """Identity partition columns to inject from the manifest tuple.
+    Name-mapped tables (Hive migrate, Delta UniForm) strip them from
+    EVERY data file: without injection the stream would silently
+    NULL-fill them while the batch path (_read_name_mapped) sources them
+    from the manifest partition tuple.  Mirrors the batch path's
+    refusals too."""
+    if not (meta.get("properties") or {}).get("schema.name-mapping.default"):
+        return {}
+    if len(meta.get("schemas") or [meta["schema"]]) > 1:
+        raise ValueError(
+            "name-mapped stream with evolved schema history: name "
+            "binding cannot track renames/re-adds — refusing"
         )
-        self.max_snapshots = int(
-            _opt(options, "maxSnapshotsPerBatch", default="0")
+    spec = _default_spec(meta)
+    if any(pf.get("transform", "identity") != "identity" for pf in spec["fields"]):
+        raise ValueError(
+            "name-mapped stream supports identity partition specs only"
         )
-
-    def initialOffset(self) -> dict:
-        return {"snapshot": 0}
-
-    def read(self, start: dict):
-        meta = _current_metadata(self.root)
-        snaps = meta.get("snapshots", [])
-        latest = max((s["snapshot-id"] for s in snaps), default=0)
-        lo = start["snapshot"]
-        if latest <= lo:
-            return iter(()), {"snapshot": lo}
-        end = (
-            latest
-            if self.max_snapshots <= 0
-            else min(lo + self.max_snapshots, latest)
-        )
-        return iter(list(self._rows(lo, end))), {"snapshot": end}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(list(self._rows(start["snapshot"], end["snapshot"])))
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def _rows(self, lo: int, hi: int) -> Iterator[tuple]:
-        entries, names, part_inject = _plan_data_files(
-            self.root, lo, hi, self.ignore_changes
-        )
-        for data_file in entries:
-            table = _emit_table(self.root, data_file, names, part_inject)
-            if table.num_rows:
-                yield from zip(*[c.to_pylist() for c in table.columns])
-
-
-_ADDED = 1
-
-
-def _plan_data_files(
-    root: str, lo: int, hi: int, ignore_changes: bool
-) -> tuple[list[dict], list[str], dict]:
-    """Driver-side plan of the snapshots in ``(lo, hi]``: validates the
-    append-only contract and returns the ADDED data_file entries plus
-    the current column names and the identity-partition injection map.
-    METADATA-BOUNDED — walks metadata JSON + manifest Avro only, never
-    opens a data file."""
-    from incubator_gluten_spark.sources.avro import read_container
-
-    meta = _current_metadata(root)
-    schemas = meta.get("schemas") or [meta["schema"]]
-    by_id = {s.get("schema-id", 0): s for s in schemas}
-    cur = by_id.get(meta.get("current-schema-id", 0), schemas[-1])
-    names = [f["name"] for f in cur["fields"]]
-    # name-mapped tables (Hive migrate, Delta UniForm) strip identity
-    # partition columns from EVERY data file: without injection the
-    # stream would silently NULL-fill them while the batch path
-    # (_read_name_mapped) sources them from the manifest partition
-    # tuple — r9 ADVICE.  Mirror the batch path's refusals too.
-    part_inject: dict[str, str] = {}
-    if (meta.get("properties") or {}).get("schema.name-mapping.default"):
-        if len(schemas) > 1:
-            raise ValueError(
-                "name-mapped stream with evolved schema history: name "
-                "binding cannot track renames/re-adds — refusing"
-            )
-        spec = _default_spec(meta)
-        if any(
-            pf.get("transform", "identity") != "identity"
-            for pf in spec["fields"]
-        ):
-            raise ValueError(
-                "name-mapped stream supports identity partition "
-                "specs only"
-            )
-        fld = {f["id"]: f for f in cur["fields"]}
-        part_inject = {
-            fld[pf["source-id"]]["name"]: fld[pf["source-id"]]["type"]
-            for pf in spec["fields"]
-        }
-    entries: list[dict] = []
-    for s in meta.get("snapshots", []):
-        sid = s["snapshot-id"]
-        if not (lo < sid <= hi):
-            continue
-        op = s.get("summary", {}).get("operation", "append")
-        added = [
-            data_file
-            for mf in _manifest_list(root, s)
-            for status, snap_id, data_file in read_container(
-                os.path.join(root, mf["manifest_path"])
-            )
-            if status == _ADDED and snap_id == sid
-        ]
-        if op != "append" and not ignore_changes:
-            if op == "replace" and not added:
-                # metadata-only manifest rewrite (rewrite_manifests):
-                # zero new rows, nothing lost — safe to pass silently
-                continue
-            raise ValueError(
-                f"snapshot {sid} is a {op!r}, not an append. Streaming "
-                "past deletes/compactions loses or re-delivers rows; "
-                "opt in with .option('ignoreChanges', 'true') — "
-                "iceberg's own streaming-source contract"
-            )
-        entries.extend(added)
-    return entries, names, part_inject
+    fld = {f["id"]: f for f in cur["fields"]}
+    return {
+        fld[pf["source-id"]]["name"]: fld[pf["source-id"]]["type"]
+        for pf in spec["fields"]
+    }
 
 
 def _emit_table(root: str, data_file: dict, names: list[str], part_inject: dict):
     """pyarrow Table for one ADDED data_file: by-name binding against
     the current schema, identity partition injection from the manifest
-    tuple, NULL-fill for pre-evolution files.  Runs wherever the caller
-    runs — executor-side in the partition-planned reader."""
+    tuple, NULL-fill for pre-evolution files."""
     import datetime as _dt
 
     import pyarrow as pa
@@ -215,155 +123,75 @@ def _emit_table(root: str, data_file: dict, names: list[str], part_inject: dict)
     return pa.table(dict(zip(names, arrays)))
 
 
-class _SnapshotFilePartition(InputPartition):
-    """One ADDED data_file = one input partition (the split unit
-    gluten-iceberg's SparkMicroBatchStream plans)."""
-
-    def __init__(self, root, data_file, names, part_inject, arrow_schema):
-        self.root = root
-        self.data_file = data_file
-        self.names = names
-        self.part_inject = part_inject
-        self.arrow_schema = arrow_schema  # None -> tuple fallback
-
-
-class _IcebergPartitionedStreamReader(DataSourceStreamReader):
-    """Full DataSourceStreamReader: snapshot walk + manifest decode stay
-    driver-side (metadata-bounded), parquet decode + Arrow transfer run
-    in executor workers — same upgrade shape as the Delta stream source
-    (r9 verdict directive #4; gluten-iceberg's SparkMicroBatchStream
-    plans splits, it never materializes rows on the driver)."""
+class _IcebergStreamReader(FileStreamReader):
+    FORMAT = "graft_iceberg"
+    KEY = "snapshot"
+    PACE = "maxSnapshotsPerBatch"
 
     def __init__(self, options: dict) -> None:
-        s = _IcebergTableStreamReader(options)
-        self.root = s.root
-        self.ignore_changes = s.ignore_changes
-        self.max_snapshots = s.max_snapshots
-        self._hwm: int | None = None
+        super().__init__(options)
+        self.start = 0
+        self.ignore_changes = self.opt("ignoreChanges", "false") == "true"
+        self._meta: dict | None = None  # table metadata of the last plan
 
-    def initialOffset(self) -> dict:
-        self._hwm = 0
-        return {"snapshot": 0}
-
-    def latestOffset(self) -> dict:
+    def committed(self) -> list[int]:
         meta = _current_metadata(self.root)
-        latest = max(
-            (s["snapshot-id"] for s in meta.get("snapshots", [])), default=0
-        )
-        if self.max_snapshots > 0 and self._hwm is not None:
-            latest = max(
-                self._hwm, min(latest, self._hwm + self.max_snapshots)
-            )
-        return {"snapshot": latest}
+        return sorted(s["snapshot-id"] for s in meta.get("snapshots", []))
 
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start["snapshot"], end["snapshot"]
-        self._hwm = max(self._hwm if self._hwm is not None else hi, hi)
-        entries, names, part_inject = _plan_data_files(
-            self.root, lo, hi, self.ignore_changes
-        )
-        try:
-            from incubator_gluten_spark.sources.avro import _arrow_schema_for
+    def plan(self, lo: int, hi: int) -> list[tuple]:
+        from incubator_gluten_spark.sources.avro import read_container
 
-            aschema = _arrow_schema_for(_spark_struct(self.root))
-        except Exception:  # noqa: BLE001 — complex type: row fallback
-            aschema = None
-        return [
-            _SnapshotFilePartition(self.root, df, names, part_inject, aschema)
-            for df in entries
-        ]
+        meta = self._meta = _current_metadata(self.root)
+        cur = _current_schema(meta)
+        names = [f["name"] for f in cur["fields"]]
+        part_inject = _part_inject(meta, cur)
+        out: list[tuple] = []
+        for s in meta.get("snapshots", []):
+            sid = s["snapshot-id"]
+            if not (lo < sid <= hi):
+                continue
+            op = s.get("summary", {}).get("operation", "append")
+            added = [
+                data_file
+                for mf in _manifest_list(self.root, s)
+                for status, snap_id, data_file in read_container(
+                    os.path.join(self.root, mf["manifest_path"])
+                )
+                if status == ADDED and snap_id == sid
+            ]
+            if op != "append" and not self.ignore_changes:
+                if op == "replace" and not added:
+                    # metadata-only manifest rewrite (rewrite_manifests):
+                    # zero new rows, nothing lost — safe to pass silently
+                    continue
+                raise ValueError(
+                    f"snapshot {sid} is a {op!r}, not an append. Streaming "
+                    "past deletes/compactions loses or re-delivers rows; "
+                    "opt in with .option('ignoreChanges', 'true') — "
+                    "iceberg's own streaming-source contract"
+                )
+            out.extend((self.root, df, names, part_inject) for df in added)
+        return out
 
-    def read(self, partition: _SnapshotFilePartition):
-        table = _emit_table(
-            partition.root, partition.data_file, partition.names,
-            partition.part_inject,
-        )
-        if partition.arrow_schema is not None:
-            try:
-                return iter(table.cast(partition.arrow_schema).to_batches())
-            except Exception:  # noqa: BLE001 — cast mismatch: row path
-                pass
-        if table.num_rows == 0:
-            return iter(())
-        return iter(zip(*[c.to_pylist() for c in table.columns]))
+    @staticmethod
+    def decode(payload):
+        return _emit_table(*payload)
 
-    def commit(self, end: dict) -> None:
-        pass
-
-
-def _spark_struct(root: str):
-    """pyspark StructType of the CURRENT schema, built sessionless."""
-    from pyspark.sql import types as T
-
-    ice_to_t = {
-        "long": T.LongType(),
-        "int": T.IntegerType(),
-        "double": T.DoubleType(),
-        "float": T.FloatType(),
-        "string": T.StringType(),
-        "boolean": T.BooleanType(),
-        "binary": T.BinaryType(),
-        "date": T.DateType(),
-        "timestamp": T.TimestampNTZType(),
-        "timestamptz": T.TimestampType(),
-    }
-    cur = _current_schema(_current_metadata(root))
-    return T.StructType(
-        [
-            T.StructField(f["name"], ice_to_t[f["type"]], not f["required"])
-            for f in cur["fields"]
-        ]
-    )
-
-
-class IcebergStreamDataSource(DataSource):
-    """``spark.readStream.format("graft_iceberg")`` — snapshot-id-offset
-    micro-batches over an Iceberg v1 table."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "graft_iceberg"
-
-    def schema(self):
-        # built SESSIONLESS: the data-source worker has no JVM, so
-        # _parse_datatype_string is unavailable (same constraint the
-        # Avro source hit) — map Iceberg types to pyspark type objects
-        from pyspark.sql import types as T
-
-        root = _opt(self.options, "path")
-        if not root:
-            raise ValueError("graft_iceberg requires .option('path', <root>)")
-        ice_to_t = {
-            "long": T.LongType(),
-            "int": T.IntegerType(),
-            "double": T.DoubleType(),
-            "float": T.FloatType(),
-            "string": T.StringType(),
-            "boolean": T.BooleanType(),
-            "binary": T.BinaryType(),
-            "date": T.DateType(),
-            "timestamp": T.TimestampNTZType(),
-            "timestamptz": T.TimestampType(),
-        }
-        cur = _current_schema(_current_metadata(root))
+    def struct(self) -> T.StructType:
+        cur = _current_schema(self._meta or _current_metadata(self.root))
         return T.StructType(
             [
-                T.StructField(
-                    f["name"], ice_to_t[f["type"]], not f["required"]
-                )
+                T.StructField(f["name"], _ICE_TO_T[f["type"]], not f["required"])
                 for f in cur["fields"]
             ]
         )
 
-    def streamReader(self, schema):
-        # preferred by the engine over simpleStreamReader: per-file
-        # input partitions, executor-side parquet decode, Arrow transfer
-        return _IcebergPartitionedStreamReader(self.options)
 
-    def simpleStreamReader(self, schema):
-        # unused while streamReader exists; kept as the documented
-        # simple-API fallback (its offset math is unit-pinned directly)
-        return _IcebergTableStreamReader(self.options)
+class IcebergStreamDataSource(FileStreamDataSource):
+    """``spark.readStream.format("graft_iceberg")`` — snapshot-id-offset
+    micro-batches over an Iceberg v1 table."""
+
+    READER = _IcebergStreamReader
 
 
 def register_iceberg_stream_source(spark) -> None:

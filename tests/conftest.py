@@ -117,3 +117,28 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def _micro_batch(reader, start=None, end=None):
+    """Run one micro-batch through a ``DataSourceStreamReader`` the way
+    the engine does: ``initialOffset()`` when no ``start`` is given,
+    ``latestOffset()`` when no ``end`` is given, then ``partitions(start,
+    end)`` on the driver and ``read(p)`` for every partition, as the
+    executors would.  Returns the rows as tuples and the end offset."""
+    if start is None:
+        start = reader.initialOffset()
+    if end is None:
+        end = reader.latestOffset()
+    rows = []
+    for p in reader.partitions(start, end):
+        for item in reader.read(p):
+            if hasattr(item, "columns"):  # pyarrow RecordBatch
+                rows.extend(zip(*[c.to_pylist() for c in item.columns]))
+            else:
+                rows.append(tuple(item))
+    return rows, end
+
+
+@pytest.fixture()
+def micro_batch():
+    return _micro_batch

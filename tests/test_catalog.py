@@ -3,7 +3,8 @@ load of an unchanged path reads with the memoized schema and launches no
 Spark job; a changed file listing or inference conf infers again; and
 the events ``ts`` conversion holds on both paths.  The events stream
 reads with the same memo, so a rewritten events file is re-inferred.
-Also the session's codegen class cache size (``session.get_session``)."""
+Also the session's codegen class cache size and its per-process
+warehouse directory (``session.get_session``)."""
 
 from __future__ import annotations
 
@@ -96,6 +97,13 @@ def test_cached_events_ts_is_timestamp_ntz(spark, sf_dir, tmp_path):
 def test_session_sizes_codegen_cache(spark):
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.sql.codegen.cache.maxEntries") == "4000"
+
+
+def test_session_warehouse_is_per_process(spark):
+    """Managed tables of two sessions on one host land in two warehouse
+    directories: the default is scoped to the process id."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    assert wh.endswith(f"/spark_graft_warehouse_{os.getpid()}")
 
 
 def test_stream_schema_follows_a_rewritten_events_file(spark, sf_dir, tmp_path):

@@ -13,9 +13,7 @@ from pyspark.sql import functions as F
 
 from incubator_gluten_spark.sources import delta_protocol as dp
 from incubator_gluten_spark.sources.delta_stream import (
-    _DeltaPartitionedStreamReader,
-    _decode_cdc_table,
-    _plan_cdc,
+    _DeltaStreamReader,
     register_delta_stream_source,
 )
 
@@ -38,28 +36,17 @@ def table(spark, tmp_path):
     return root
 
 
-def _all_changes(root, lo=-1, hi=None):
-    import json as _json
-    import os as _os
-
-    if hi is None:
-        hi = max(
-            int(n[:-5])
-            for n in _os.listdir(_os.path.join(root, "_delta_log"))
-            if n.endswith(".json")
-        )
-    entries, fields, part_cols = _plan_cdc(root, lo, hi)
-    out = []
-    for e in entries:
-        t = _decode_cdc_table(root, e, fields, part_cols)
-        out.extend(
-            zip(*(t.column(c).to_pylist() for c in t.column_names))
-        )
-    return sorted(out)
+def _all_changes(micro_batch, root, lo=-1, hi=None):
+    """The change rows of ``(lo, hi]`` (``hi`` defaults to the latest
+    version), planned and decoded as one micro-batch."""
+    r = _DeltaStreamReader({"path": root, "readChangeFeed": "true"})
+    end = None if hi is None else {"version": hi}
+    rows, _ = micro_batch(r, {"version": lo}, end)
+    return sorted(rows)
 
 
-def test_plan_and_decode_full_history(table):
-    got = _all_changes(table)
+def test_plan_and_decode_full_history(table, micro_batch):
+    got = _all_changes(micro_batch, table)
     kinds = sorted((k, ct, cv) for k, _v, ct, cv in got)
     assert (1, "insert", 0) in kinds and (3, "insert", 0) in kinds
     assert (4, "insert", 1) in kinds
@@ -71,19 +58,19 @@ def test_plan_and_decode_full_history(table):
     assert post == [(1, "a2", "update_postimage", 2)]
 
 
-def test_cdc_commits_are_exclusive(table):
+def test_cdc_commits_are_exclusive(table, micro_batch):
     # v2 (update) rewrote files: its adds/removes must NOT leak as
     # inserts — only the cdc images appear for that commit
-    got = [r for r in _all_changes(table, lo=1, hi=2)]
+    got = [r for r in _all_changes(micro_batch, table, lo=1, hi=2)]
     assert {r[2] for r in got} == {"update_preimage", "update_postimage"}
 
 
-def test_cdf_off_refuses(spark, tmp_path):
+def test_cdf_off_refuses(spark, tmp_path, micro_batch):
     root = str(tmp_path / "no_cdf")
     dp.create_table(_mk(spark, [(1, "a")]), root)
     dp.append(_mk(spark, [(2, "b")]), root)
     with pytest.raises(ValueError, match="not enabled"):
-        _plan_cdc(root, -1, 1)
+        _all_changes(micro_batch, root, -1, 1)
 
 
 def test_engine_driven_cdf_stream(table, spark, tmp_path):

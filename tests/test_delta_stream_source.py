@@ -2,9 +2,10 @@
 exactly-once replay, the delete/rewrite option contract, DV-aware
 emission, column-mapping refusal.
 
-Unit-level pins drive the SimpleDataSourceStreamReader directly (its
-offset math must hold without an engine); end-to-end pins run real
-readStream -> availableNow -> memory/foreachBatch queries including a
+Unit-level pins drive the stream reader directly, one micro-batch at a
+time through the ``micro_batch`` fixture (latestOffset -> partitions ->
+read, without an engine); end-to-end pins run real readStream ->
+availableNow -> memory/foreachBatch queries including a
 checkpoint-restart exactly-once round trip.
 """
 
@@ -17,7 +18,7 @@ from pyspark.sql import functions as F
 
 from incubator_gluten_spark.sources import delta_protocol as dp
 from incubator_gluten_spark.sources.delta_stream import (
-    _DeltaTableStreamReader,
+    _DeltaStreamReader,
     register_delta_stream_source,
 )
 
@@ -52,10 +53,12 @@ def table(spark, sf_dir, tmp_path):
 # reader unit pins (no engine)
 
 
-def test_offsets_and_replay_are_deterministic(table, spark, sf_dir):
-    r = _DeltaTableStreamReader({"path": table})
+def test_offsets_and_replay_are_deterministic(
+    table, spark, sf_dir, micro_batch
+):
+    r = _DeltaStreamReader({"path": table})
     assert r.initialOffset() == {"version": -1}
-    rows, off = r.read({"version": -1})
+    rows, off = micro_batch(r, {"version": -1})
     rows = sorted(rows)
     assert off == {"version": 1}  # create=0, append=1
     want = _rows(
@@ -63,63 +66,69 @@ def test_offsets_and_replay_are_deterministic(table, spark, sf_dir):
     )
     assert sorted(map(tuple, rows), key=lambda t: tuple(map(str, t))) == want
     # replay of the same window is byte-identical (exactly-once lever)
-    replay = sorted(r.readBetweenOffsets({"version": -1}, {"version": 1}))
+    replay = sorted(micro_batch(r, {"version": -1}, {"version": 1})[0])
     assert replay == rows
     # caught-up read advances nothing and emits nothing
-    rows2, off2 = r.read(off)
+    rows2, off2 = micro_batch(r, off)
     assert list(rows2) == [] and off2 == off
 
 
-def test_incremental_batch_sees_only_new_version(table, spark, sf_dir):
-    r = _DeltaTableStreamReader({"path": table})
-    _, off = r.read({"version": -1})
+def test_incremental_batch_sees_only_new_version(
+    table, spark, sf_dir, micro_batch
+):
+    r = _DeltaStreamReader({"path": table})
+    _, off = micro_batch(r, {"version": -1})
     dp.append(_orders(spark, sf_dir, 1995), table)
-    rows, off2 = r.read(off)
+    rows, off2 = micro_batch(r, off)
     assert off2 == {"version": 2}
     got = sorted(map(tuple, rows), key=lambda t: tuple(map(str, t)))
     assert got == _rows(_orders(spark, sf_dir, 1995))
 
 
-def test_max_versions_per_batch_paces_the_backlog(table):
-    r = _DeltaTableStreamReader({"path": table, "maxversionsperbatch": "1"})
-    _, off = r.read({"version": -1})
+def test_max_versions_per_batch_paces_the_backlog(table, micro_batch):
+    r = _DeltaStreamReader({"path": table, "maxversionsperbatch": "1"})
+    _, off = micro_batch(r)  # from initialOffset: {"version": -1}
     assert off == {"version": 0}
-    _, off = r.read(off)
+    _, off = micro_batch(r, off)
     assert off == {"version": 1}
 
 
-def test_delete_commit_requires_opt_in(table, spark):
+def test_delete_commit_requires_opt_in(table, spark, micro_batch):
     dp.delete_where(spark, table, "o_totalprice > 150000")  # COW rewrite
-    r = _DeltaTableStreamReader({"path": table})
+    r = _DeltaStreamReader({"path": table})
     with pytest.raises(ValueError, match="ignoreChanges"):
-        list(r.read({"version": -1})[0])
+        micro_batch(r, {"version": -1})
     # ignoreChanges re-emits the restaged survivors (delta's contract)
-    r2 = _DeltaTableStreamReader({"path": table, "ignorechanges": "true"})
-    rows, off = r2.read({"version": -1})
+    r2 = _DeltaStreamReader({"path": table, "ignorechanges": "true"})
+    rows, off = micro_batch(r2, {"version": -1})
     assert off == {"version": 2}
     emitted = list(rows)
     survivors = dp.read_table(spark, table).count()
     total_v01 = sum(
-        1 for _ in _DeltaTableStreamReader(
-            {"path": table, "ignorechanges": "true"}
-        ).readBetweenOffsets({"version": -1}, {"version": 1})
+        1 for _ in micro_batch(
+            _DeltaStreamReader({"path": table, "ignorechanges": "true"}),
+            {"version": -1},
+            {"version": 1},
+        )[0]
     )
     assert len(emitted) == total_v01 + survivors  # duplicates, documented
 
 
-def test_dv_commit_needs_ignore_changes_and_emits_live_rows(table, spark):
+def test_dv_commit_needs_ignore_changes_and_emits_live_rows(
+    table, spark, micro_batch
+):
     out = dp.delete_where_dv(spark, table, "o_totalprice > 150000")
     assert out["rows_deleted"] > 0
     # a DV delete RE-ADDS existing paths: an update of already-delivered
     # data — refused without ignoreChanges even though no remove exists
     with pytest.raises(ValueError, match="ignoreChanges"):
-        list(
-            _DeltaTableStreamReader({"path": table}).readBetweenOffsets(
-                {"version": 1}, {"version": 2}
-            )
+        micro_batch(
+            _DeltaStreamReader({"path": table}),
+            {"version": 1},
+            {"version": 2},
         )
-    r = _DeltaTableStreamReader({"path": table, "ignorechanges": "true"})
-    rows = list(r.readBetweenOffsets({"version": 1}, {"version": 2}))
+    r = _DeltaStreamReader({"path": table, "ignorechanges": "true"})
+    rows = micro_batch(r, {"version": 1}, {"version": 2})[0]
     # emitted = live rows of exactly the re-added (DV-carrying) files
     import pyarrow.parquet as pq
     import os
@@ -138,27 +147,24 @@ def test_dv_commit_needs_ignore_changes_and_emits_live_rows(table, spark):
     assert all(v[1] <= 150000 for v in rows)
 
 
-def test_column_mapped_table_is_refused(spark, sf_dir, tmp_path):
+def test_column_mapped_table_is_refused(spark, sf_dir, tmp_path, micro_batch):
     root = str(tmp_path / "mapped")
     dp.create_table(
         _orders(spark, sf_dir, 1996), root, column_mapping="name"
     )
     with pytest.raises(ValueError, match="column-mapped"):
-        list(_DeltaTableStreamReader({"path": root})._rows(-1, 0))
+        micro_batch(
+            _DeltaStreamReader({"path": root}), {"version": -1}, {"version": 0}
+        )
 
 
 # ---------------------------------------------------------------------------
-# partition-planned reader (r9 verdict directive #4): per-file input
-# partitions planned driver-side from the log alone, parquet decode
-# executor-side
+# per-file input partitions planned driver-side from the log alone,
+# parquet decode executor-side
 
 
 def test_partitioned_reader_plans_one_partition_per_add(table, spark, sf_dir):
-    from incubator_gluten_spark.sources.delta_stream import (
-        _DeltaPartitionedStreamReader,
-    )
-
-    r = _DeltaPartitionedStreamReader({"path": table})
+    r = _DeltaStreamReader({"path": table})
     assert r.initialOffset() == {"version": -1}
     assert r.latestOffset() == {"version": 1}
     parts = r.partitions({"version": -1}, {"version": 1})
@@ -177,22 +183,14 @@ def test_partitioned_reader_plans_one_partition_per_add(table, spark, sf_dir):
 
 
 def test_partitioned_reader_validation_happens_at_planning(table, spark):
-    from incubator_gluten_spark.sources.delta_stream import (
-        _DeltaPartitionedStreamReader,
-    )
-
     dp.delete_where(spark, table, "o_totalprice > 150000")
-    r = _DeltaPartitionedStreamReader({"path": table})
+    r = _DeltaStreamReader({"path": table})
     with pytest.raises(ValueError, match="ignoreChanges"):
         r.partitions({"version": -1}, {"version": 2})
 
 
 def test_partitioned_reader_paces_with_max_versions(table):
-    from incubator_gluten_spark.sources.delta_stream import (
-        _DeltaPartitionedStreamReader,
-    )
-
-    r = _DeltaPartitionedStreamReader(
+    r = _DeltaStreamReader(
         {"path": table, "maxversionsperbatch": "1"}
     )
     r.initialOffset()
@@ -203,7 +201,7 @@ def test_partitioned_reader_paces_with_max_versions(table):
 
 def test_stream_microbatch_is_partitioned_per_file(table, spark):
     """Executor-side instrumentation: the micro-batch DataFrame must
-    carry one partition per planned add-file (the simple reader's
+    carry one partition per planned add-file (a simple reader's
     prefetched driver list collapses to a single partition) — proof the
     engine took streamReader() and the decode ran where partitions run."""
     register_delta_stream_source(spark)
@@ -285,14 +283,10 @@ def test_pacing_resumes_after_checkpoint_restart(table, spark, sf_dir):
     offset only via partitions(start, end), so the FIRST post-restart
     batch is uncapped (documented best-effort, exactly-once exact) —
     but from the SECOND batch on, pacing must hold again."""
-    from incubator_gluten_spark.sources.delta_stream import (
-        _DeltaPartitionedStreamReader,
-    )
-
     for yr in (1992, 1993, 1994, 1995):  # versions 2..5
         dp.append(_orders(spark, sf_dir, yr), table)
     # fresh reader, initialOffset NEVER called = engine restart path
-    r = _DeltaPartitionedStreamReader(
+    r = _DeltaStreamReader(
         {"path": table, "maxVersionsPerBatch": "1"}
     )
     # first post-restart batch: no hwm -> uncapped to the true latest

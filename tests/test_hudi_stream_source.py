@@ -94,9 +94,9 @@ def test_upsert_delivers_changed_records_only(spark):
     assert {r.v for r in rows if r.k == 1} == {2, 1000}
 
 
-def test_max_commits_per_batch_paces_backlog(spark):
-    """Three commits with maxCommitsPerBatch=1: the reader's read()
-    advances one instant per call (paced backlog drain)."""
+def test_max_commits_per_batch_paces_backlog(spark, micro_batch):
+    """Three commits with maxCommitsPerBatch=1: each micro-batch
+    advances one instant (paced backlog drain)."""
     register_hudi_stream_source(spark)
     root = _fresh("paced")
     df1 = spark.range(3).select(F.col("id").alias("k"), F.col("id").alias("v"))
@@ -110,27 +110,25 @@ def test_max_commits_per_batch_paces_backlog(spark):
             root,
             key_col="k",
         )
-    from incubator_gluten_spark.sources.hudi_stream import (
-        _HudiTableStreamReader,
-    )
+    from incubator_gluten_spark.sources.hudi_stream import _HudiStreamReader
 
-    rd = _HudiTableStreamReader({"path": root, "maxCommitsPerBatch": "1"})
+    rd = _HudiStreamReader({"path": root, "maxCommitsPerBatch": "1"})
     committed = hf.completed_instants(root)
     off = rd.initialOffset()
     seen = []
     for expect in committed:
-        it, off = rd.read(off)
+        it, off = micro_batch(rd, off)
         seen.append((off["instant"], len(list(it))))
     assert [i for i, _ in seen] == committed
     assert [n for _, n in seen] == [3, 3, 3]
     # drained: a further read is empty and holds the offset
-    it, off2 = rd.read(off)
+    it, off2 = micro_batch(rd, off)
     assert list(it) == [] and off2 == off
 
 
-def test_replay_between_offsets_is_deterministic(spark):
-    """readBetweenOffsets replays the same (start, end] rows the live
-    read delivered — the exactly-once recovery path."""
+def test_replay_between_offsets_is_deterministic(spark, micro_batch):
+    """Re-planning (start, end] replays the same rows the live
+    micro-batch delivered — the exactly-once recovery path."""
     register_hudi_stream_source(spark)
     root = _fresh("replay")
     df1 = spark.range(4).select(F.col("id").alias("k"), F.col("id").alias("v"))
@@ -141,19 +139,19 @@ def test_replay_between_offsets_is_deterministic(spark):
         root,
         key_col="k",
     )
-    from incubator_gluten_spark.sources.hudi_stream import (
-        _HudiTableStreamReader,
-    )
+    from incubator_gluten_spark.sources.hudi_stream import _HudiStreamReader
 
     c = hf.completed_instants(root)
-    rd = _HudiTableStreamReader({"path": root})
-    live = sorted(rd._rows(c[0], c[1]))
-    replay = sorted(rd.readBetweenOffsets({"instant": c[0]}, {"instant": c[1]}))
+    rd = _HudiStreamReader({"path": root})
+    live, end = micro_batch(rd, {"instant": c[0]})
+    assert end == {"instant": c[1]}
+    live = sorted(live)
+    replay = sorted(micro_batch(rd, {"instant": c[0]}, {"instant": c[1]})[0])
     assert live == replay
     assert sorted(r[0] for r in live) == [2, 9]
 
 
-def test_mor_table_refuses(spark):
+def test_mor_table_refuses(spark, micro_batch):
     """A MERGE_ON_READ table refuses at schema/plan time instead of
     returning base-file-only wrong answers."""
     register_hudi_stream_source(spark)
@@ -166,13 +164,11 @@ def test_mor_table_refuses(spark):
     with open(props_path, "w") as f:
         f.write(props.replace("COPY_ON_WRITE", "MERGE_ON_READ"))
     from incubator_gluten_spark.sources.hudi_format import HudiFormatError
-    from incubator_gluten_spark.sources.hudi_stream import (
-        _HudiTableStreamReader,
-    )
+    from incubator_gluten_spark.sources.hudi_stream import _HudiStreamReader
 
-    rd = _HudiTableStreamReader({"path": root})
+    rd = _HudiStreamReader({"path": root})
     with pytest.raises(HudiFormatError, match="MERGE_ON_READ"):
-        list(rd._rows("", "99999999999999999"))
+        micro_batch(rd, {"instant": ""}, {"instant": "99999999999999999"})
 
 
 def test_newest_base_file_by_instant_not_basename():
@@ -191,12 +187,10 @@ def test_newest_base_file_by_instant_not_basename():
 
 
 def test_partitioned_reader_per_file_and_executor_decode(spark):
-    """r10: one InputPartition per candidate base file; the engine-side
+    """One InputPartition per candidate base file; the engine-side
     micro-batch carries one partition per file and the record-level
     commit-time filter runs executor-side."""
-    from incubator_gluten_spark.sources.hudi_stream import (
-        _HudiPartitionedStreamReader,
-    )
+    from incubator_gluten_spark.sources.hudi_stream import _HudiStreamReader
 
     root = _fresh("part_reader")
     df1 = spark.range(4).select(
@@ -211,7 +205,7 @@ def test_partitioned_reader_per_file_and_executor_decode(spark):
         root,
         key_col="k",
     )
-    r = _HudiPartitionedStreamReader({"path": root})
+    r = _HudiStreamReader({"path": root})
     r.initialOffset()
     end = r.latestOffset()
     parts = r.partitions({"instant": ""}, end)

@@ -109,10 +109,12 @@ def test_rewrite_manifests_coalesces_metadata_only(spark, tmp_path):
     assert ids == {1, 2, 3, 4}
 
 
-def test_rewrite_manifests_invisible_to_stream_source(spark, tmp_path):
+def test_rewrite_manifests_invisible_to_stream_source(
+    spark, tmp_path, micro_batch
+):
     from incubator_gluten_spark.sources import iceberg_format as ice
     from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergTableStreamReader,
+        _IcebergStreamReader,
     )
 
     root = str(tmp_path / "rm_stream")
@@ -121,14 +123,14 @@ def test_rewrite_manifests_invisible_to_stream_source(spark, tmp_path):
     ).coalesce(1)
     ice.create_table(mk(0, 3), root)
     ice.append(mk(3, 6), root)
-    rd = _IcebergTableStreamReader({"path": root})
-    rows, off = rd.read({"snapshot": 0})
+    rd = _IcebergStreamReader({"path": root})
+    rows, off = micro_batch(rd, {"snapshot": 0})
     assert len(list(rows)) == 6
     ice.rewrite_manifests(root)  # replace snapshot, zero new rows
-    rows2, off2 = rd.read(off)
+    rows2, off2 = micro_batch(rd, off)
     assert list(rows2) == []  # silently skipped, no refusal
     ice.append(mk(6, 8), root)
-    rows3, _ = rd.read(off2)
+    rows3, _ = micro_batch(rd, off2)
     assert sorted(r[0] for r in rows3) == [6, 7]
 
 

@@ -148,19 +148,19 @@ def test_add_files_refuses_unmigrated_and_double_register(spark):
         mig.add_files(spark, root, src)
 
 
-def test_migrated_table_streams_with_partition_injection(spark):
+def test_migrated_table_streams_with_partition_injection(spark, micro_batch):
     """The Iceberg stream source over a migrated (name-mapped) table
     must inject identity partition values from the manifest tuple —
     the r9 ADVICE silent-NULL case."""
     from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergTableStreamReader,
+        _IcebergStreamReader,
     )
 
     root = _fresh("stream_inject")
     _hive_dir(spark, root)
     mig.migrate_hive_dir(spark, root, partition_cols={"p": "string"})
-    rd = _IcebergTableStreamReader({"path": root})
-    rows, _ = rd.read({"snapshot": 0})
+    rd = _IcebergStreamReader({"path": root})
+    rows, _ = micro_batch(rd, {"snapshot": 0})
     rows = list(rows)
     assert len(rows) == 12
     # schema order: k, v, p — p must carry the injected dir value

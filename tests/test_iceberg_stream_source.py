@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from incubator_gluten_spark.sources import iceberg_format as ice
 from incubator_gluten_spark.sources.iceberg_stream import (
-    _IcebergTableStreamReader,
+    _IcebergStreamReader,
     register_iceberg_stream_source,
 )
 
@@ -32,41 +32,42 @@ def table(spark, tmp_path):
     return root
 
 
-def test_offsets_and_replay(table, spark):
-    r = _IcebergTableStreamReader({"path": table})
+def test_offsets_and_replay(table, spark, micro_batch):
+    r = _IcebergStreamReader({"path": table})
     assert r.initialOffset() == {"snapshot": 0}
-    rows, off = r.read({"snapshot": 0})
+    rows, off = micro_batch(r, {"snapshot": 0})
     rows = sorted(rows)
     assert off == {"snapshot": 2}
     assert rows == [(1, "a"), (2, "b"), (3, "c")]
-    assert sorted(r.readBetweenOffsets({"snapshot": 0}, {"snapshot": 2})) == rows
-    empty, off2 = r.read(off)
+    replay = micro_batch(r, {"snapshot": 0}, {"snapshot": 2})[0]
+    assert sorted(replay) == rows
+    empty, off2 = micro_batch(r, off)
     assert list(empty) == [] and off2 == off
     # incremental: a new append streams alone
     ice.append(_mk(spark, [(4, "d")]), table)
-    inc, off3 = r.read(off)
+    inc, off3 = micro_batch(r, off)
     assert sorted(inc) == [(4, "d")] and off3 == {"snapshot": 3}
 
 
-def test_identity_partition_values_present(table, spark):
+def test_identity_partition_values_present(table, spark, micro_batch):
     # Iceberg data files carry the partition column — the stream reads
     # it straight from parquet (delta would need log injection)
-    r = _IcebergTableStreamReader({"path": table})
-    rows = sorted(r.readBetweenOffsets({"snapshot": 0}, {"snapshot": 1}))
+    r = _IcebergStreamReader({"path": table})
+    rows = sorted(micro_batch(r, {"snapshot": 0}, {"snapshot": 1})[0])
     assert rows == [(1, "a"), (2, "b")]
 
 
-def test_non_append_snapshot_refuses_without_opt_in(table, spark):
+def test_non_append_snapshot_refuses_without_opt_in(table, spark, micro_batch):
     ice.delete_partition(table, {"grp": "a"})
-    r = _IcebergTableStreamReader({"path": table})
+    r = _IcebergStreamReader({"path": table})
     with pytest.raises(ValueError, match="ignoreChanges"):
-        list(r.readBetweenOffsets({"snapshot": 2}, {"snapshot": 3}))
-    r2 = _IcebergTableStreamReader({"path": table, "ignorechanges": "true"})
+        micro_batch(r, {"snapshot": 2}, {"snapshot": 3})
+    r2 = _IcebergStreamReader({"path": table, "ignorechanges": "true"})
     # the delete snapshot ADDED no files -> zero rows, stream continues
-    assert list(r2.readBetweenOffsets({"snapshot": 2}, {"snapshot": 3})) == []
+    assert micro_batch(r2, {"snapshot": 2}, {"snapshot": 3})[0] == []
 
 
-def test_schema_evolution_nulls_for_old_files(table, spark):
+def test_schema_evolution_nulls_for_old_files(table, spark, micro_batch):
     ice.add_column(table, "note", "string")
     ice.append(
         spark.createDataFrame(
@@ -74,9 +75,9 @@ def test_schema_evolution_nulls_for_old_files(table, spark):
         ).coalesce(1),
         table,
     )
-    r = _IcebergTableStreamReader({"path": table})
+    r = _IcebergStreamReader({"path": table})
     rows = sorted(
-        r.readBetweenOffsets({"snapshot": 0}, {"snapshot": 3}),
+        micro_batch(r, {"snapshot": 0}, {"snapshot": 3})[0],
         key=lambda t: t[0],
     )
     assert rows == [
@@ -117,14 +118,9 @@ def test_checkpoint_restart_is_exactly_once(table, spark, tmp_path):
 
 
 def test_partitioned_reader_per_file_and_executor_decode(table, spark):
-    """r10: the partition-planned reader plans one InputPartition per
-    ADDED data_file; the engine-side micro-batch DataFrame carries one
+    """The reader plans one InputPartition per ADDED data_file; the engine-side micro-batch DataFrame carries one
     partition per file (proof the decode ran where partitions run)."""
-    from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergPartitionedStreamReader,
-    )
-
-    r = _IcebergPartitionedStreamReader({"path": table})
+    r = _IcebergStreamReader({"path": table})
     r.initialOffset()
     end = r.latestOffset()
     parts = r.partitions({"snapshot": 0}, end)
@@ -154,11 +150,7 @@ def test_partitioned_reader_per_file_and_executor_decode(table, spark):
 
 
 def test_partitioned_reader_validates_at_planning(table, spark):
-    from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergPartitionedStreamReader,
-    )
-
     ice.delete_partition(table, {"grp": "a"})
-    r = _IcebergPartitionedStreamReader({"path": table})
+    r = _IcebergStreamReader({"path": table})
     with pytest.raises(ValueError, match="ignoreChanges"):
         r.partitions({"snapshot": 0}, {"snapshot": 3})

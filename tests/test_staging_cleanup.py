@@ -141,23 +141,28 @@ def test_delta_empty_create_commits_no_add(spark, tmp_path):
 
 
 def test_iceberg_empty_create_stages_nothing(spark, tmp_path):
-    rows_root, local_root = str(tmp_path / "rows"), str(tmp_path / "local")
-    rows = spark.createDataFrame([], _EMPTY_DDL)
-    local = local_frame(spark, [], _EMPTY_DDL)
-    assert _jobs(spark, "ice-rows", lambda: ice.create_table(rows, rows_root)) >= 1
-    assert _jobs(spark, "ice-local", lambda: ice.create_table(local, local_root)) == 0
-    for root in (rows_root, local_root):
-        meta = ice._current_metadata(root)
-        assert meta["current-snapshot-id"] is not None
-        assert ice.plan_files(root) == []
-        assert not [n for n in os.listdir(root) if n.startswith("_staging_")]
-        assert os.listdir(os.path.join(root, "data")) == []
-        df = ice.read_table(spark, root)
-        assert df.schema.simpleString() == local.schema.simpleString()
-        assert df.count() == 0
-    assert ice._current_metadata(local_root)["schemas"] == (
-        ice._current_metadata(rows_root)["schemas"]
-    )
+    """Partitioned too: the hash repartition by the partition columns
+    hides the empty ``LocalRelation`` from ``write_staged``."""
+    for part in ([], ["s"]):
+        rows_root = str(tmp_path / f"rows{len(part)}")
+        local_root = str(tmp_path / f"local{len(part)}")
+        rows = spark.createDataFrame([], _EMPTY_DDL)
+        local = local_frame(spark, [], _EMPTY_DDL)
+        create = lambda df, root: ice.create_table(df, root, part)
+        assert _jobs(spark, rows_root, lambda: create(rows, rows_root)) >= 1
+        assert _jobs(spark, local_root, lambda: create(local, local_root)) == 0
+        for root in (rows_root, local_root):
+            meta = ice._current_metadata(root)
+            assert meta["current-snapshot-id"] is not None
+            assert ice.plan_files(root) == []
+            assert not [n for n in os.listdir(root) if n.startswith("_staging_")]
+            assert os.listdir(os.path.join(root, "data")) == []
+            df = ice.read_table(spark, root)
+            assert df.schema.simpleString() == local.schema.simpleString()
+            assert df.count() == 0
+        assert ice._current_metadata(local_root)["schemas"] == (
+            ice._current_metadata(rows_root)["schemas"]
+        )
 
 
 def test_hudi_empty_create_keeps_its_empty_base_file(spark, tmp_path):

@@ -97,11 +97,11 @@ def test_sync_marks_existing_vs_added(spark):
     assert added and all(statuses[p][1] == snap2["snapshot-id"] for p in added)
 
 
-def test_stream_source_delivers_each_file_once(spark):
+def test_stream_source_delivers_each_file_once(spark, micro_batch):
     """The Iceberg streaming source over a UniForm table: after a sync,
     only the NEW files' rows stream (EXISTING entries skipped)."""
     from incubator_gluten_spark.sources.iceberg_stream import (
-        _IcebergTableStreamReader,
+        _IcebergStreamReader,
     )
 
     root = _fresh("stream_once")
@@ -116,9 +116,9 @@ def test_stream_source_delivers_each_file_once(spark):
         root,
     )
     uf.sync_uniform(spark, root)
-    rd = _IcebergTableStreamReader({"path": root})
-    batch1 = list(rd._rows(0, 1))
-    batch2 = list(rd._rows(1, 2))
+    rd = _IcebergStreamReader({"path": root})
+    batch1 = micro_batch(rd, {"snapshot": 0}, {"snapshot": 1})[0]
+    batch2 = micro_batch(rd, {"snapshot": 1}, {"snapshot": 2})[0]
     assert len(batch1) == 10 and len(batch2) == 4
     assert {r[0] for r in batch2} == {10, 11, 12, 13}
     # UniForm data files lack identity partition columns; the stream
