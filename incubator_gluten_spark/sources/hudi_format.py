@@ -1,4 +1,5 @@
-"""Apache Hudi COPY_ON_WRITE table format reader/writer (no jar needed).
+"""Apache Hudi table format (no jar needed): the timeline of both table
+types, and the COPY_ON_WRITE reader/writer.
 
 The reference ships Hudi scan offload as a jar module (gluten-hudi/,
 HudiSuite.scala) absent from this container; like ``delta_protocol.py``
@@ -6,22 +7,28 @@ and ``iceberg_format.py`` this speaks the PUBLIC Hudi table layout
 (hudi.apache.org/docs — timeline + file groups) directly:
 
 * ``.hoodie/hoodie.properties`` (table name/type/version),
-* timeline instants ``<instant>.commit`` holding the classic JSON commit
-  metadata (``partitionToWriteStats``), with ``.requested``/
-  ``.inflight`` markers written first, the spec's three-phase commit,
+* timeline instants ``<instant>.<action>`` holding JSON bodies (a write's
+  ``partitionToWriteStats``), with ``.requested``/``.inflight`` markers
+  written first, the spec's three-phase commit,
 * data files named ``<fileId>_<writeToken>_<instantTime>.parquet`` under
   their partition path — a FILE GROUP is every file sharing a fileId,
-  and a COW snapshot read picks each group's newest base file whose
+  and a snapshot read picks each group's newest base file whose
   instant is committed and <= the as-of instant,
 * the five ``_hoodie_*`` meta columns real Hudi writes into every
   parquet file (commit time, seqno, record key, partition path, file
   name) — written here too, so the files are Hudi-shaped, not bare
   parquet.
 
+This module owns the timeline of COPY_ON_WRITE and MERGE_ON_READ tables
+alike: the instant allocator (``_next_instant``), the committed set
+(``completed_instants``), the commit (``_commit_instant``),
+``file_slices`` and the table services (clean, rollback, savepoint,
+restore).  ``hudi_mor.py`` imports them.
+
 Snapshot queries, time travel (as-of instant) and record-key UPSERT
 (COW: rewrite only the file groups holding matched keys) are supported;
-MERGE_ON_READ tables are REFUSED here and handled by ``hudi_mor.py``
-(log files, delta commits, compaction).
+reading MERGE_ON_READ tables is REFUSED here and handled by
+``hudi_mor.py`` (log files, delta commits, compaction).
 
 Scale note: reads list the TIMELINE (one small directory) plus the
 partitions the query touches; the per-group newest-instant pick is pure
@@ -31,6 +38,7 @@ COW write amplification real Hudi COW has.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -71,93 +79,191 @@ def _properties(root: str) -> dict:
     return props
 
 
+def _require_type(root: str, table_type: str, what: str) -> dict:
+    """The table's properties, or ``HudiFormatError`` when it is not of
+    ``table_type``: COW code planned on base files alone would give wrong
+    answers on a MERGE_ON_READ table (or orphan its log files), and the
+    MOR code has no work on a COW one."""
+    props = _properties(root)
+    ttype = props.get("hoodie.table.type", "COPY_ON_WRITE")
+    if ttype != table_type:
+        raise HudiFormatError(
+            f"table type {ttype}: {what} needs a {table_type} table "
+            "(hudi_format.py: COPY_ON_WRITE, hudi_mor.py: MERGE_ON_READ)"
+        )
+    return props
+
+
+_WRITE_ACTIONS = (".commit", ".deltacommit")
+
+
 def completed_instants(root: str) -> list[str]:
-    """Committed instant times, sorted (the timeline's completed set)."""
-    out = []
-    for name in os.listdir(_timeline_dir(root)):
-        if name.endswith(".commit"):
-            out.append(name[: -len(".commit")])
-    return sorted(out)
+    """Completed write instants, sorted: ``.commit`` (COW writes, MOR
+    compactions) and ``.deltacommit`` (MOR writes)."""
+    return sorted(
+        name.rpartition(".")[0]
+        for name in os.listdir(_timeline_dir(root))
+        if name.endswith(_WRITE_ACTIONS)
+    )
 
 
 def _next_instant(root: str) -> str:
-    """Monotonically increasing 17-digit instant (the spec's
-    yyyyMMddHHmmssSSS shape, deterministic here)."""
-    existing = completed_instants(root) if os.path.isdir(_timeline_dir(root)) else []
-    if not existing:
+    """The instant of the next action of ANY kind: one past the newest
+    instant a timeline file names, completed or pending, write or
+    service — so no two actions share an instant, and a crashed write's
+    leftover markers are stepped over (the spec's yyyyMMddHHmmssSSS
+    shape, deterministic here)."""
+    named = [
+        stem
+        for stem in (n.split(".")[0] for n in os.listdir(_timeline_dir(root)))
+        if len(stem) == 17 and stem.isdigit()
+    ]
+    if not named:
         return "20240101000000000"
-    return str(int(existing[-1]) + 1).zfill(17)
+    return str(int(max(named)) + 1).zfill(17)
 
 
-def _three_phase(root: str, instant: str, action: str, body: dict) -> None:
+def _three_phase(
+    root: str, instant: str, action: str, body: dict, placed: list | None = None
+) -> None:
     """The timeline's three-phase write of every action (commit,
     deltacommit, clean, rollback, savepoint, restore): requested ->
     inflight markers, then the completed ``<instant>.<action>``, each
     put-if-absent so a second writer of the same instant fails instead
-    of overwriting the first."""
+    of overwriting the first.  ``placed`` is a write attempt's undo list
+    (``_attempt``): it gets each marker this call lands and is emptied
+    once the completed action lands — from then on the attempt's files
+    belong to the table."""
+    placed = [] if placed is None else placed
     path = os.path.join(_timeline_dir(root), f"{instant}.{action}")
     for suffix in (".requested", ".inflight"):
         table_core.put_if_absent(path + suffix, "{}")
+        placed.append(path + suffix)
     table_core.put_if_absent(path, json.dumps(body))
+    placed.clear()
     for suffix in (".requested", ".inflight"):
         os.remove(path + suffix)
 
 
 def _commit_instant(
-    root: str, instant: str, stats: dict, extra_metadata: dict | None = None
+    root: str,
+    instant: str,
+    stats: dict,
+    action: str = "commit",
+    extra_metadata: dict | None = None,
+    placed: list | None = None,
 ) -> None:
-    """Three-phase timeline commit: requested -> inflight -> commit.
+    """Three-phase timeline commit of a write: ``.commit`` (COW writes,
+    MOR compactions) or ``.deltacommit`` (MOR writes).
     ``extra_metadata`` lands under the commit's ``extraMetadata`` map —
     where hudi's own streaming writers store their checkpoint key."""
-    body = {
-        "partitionToWriteStats": stats,
-        "operation": "upsert",
-        "compacted": False,
-    }
+    body = {"partitionToWriteStats": stats, "operation": action}
     if extra_metadata:
         body["extraMetadata"] = extra_metadata
-    _three_phase(root, instant, "commit", body)
+    _three_phase(root, instant, action, body, placed)
+
+
+@contextlib.contextmanager
+def _attempt():
+    """One write attempt's undo list: the data files and markers it
+    placed.  If anything fails before the completed instant lands, they
+    are removed and the error re-raised, so a writer that loses a race
+    (``FileExistsError`` at a data file or at the timeline) leaves the
+    table as it found it."""
+    placed: list[str] = []
+    try:
+        yield placed
+    except BaseException:
+        for path in placed:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path)
+        raise
+
+
+def _parse_base_file(path: str) -> tuple[str, str] | None:
+    """(file_id, instant) of a base file ``<fileId>_<writeToken>_<instant>.parquet``,
+    None for any other name — the one parse of the layout."""
+    name = os.path.basename(path)
+    if not name.endswith(".parquet"):
+        return None
+    parts = name[: -len(".parquet")].split("_")
+    return (parts[0], parts[2]) if len(parts) == 3 else None
+
+
+def _table_files(root: str):
+    """(partition_path, name, full_path) of every file outside the
+    ``.hoodie`` timeline and the other dot-directories."""
+    for dirpath, dirnames, files in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(".")]
+        rel_dir = os.path.relpath(dirpath, root)
+        for name in files:
+            yield "" if rel_dir == "." else rel_dir, name, os.path.join(dirpath, name)
 
 
 def _base_files(root: str) -> list[tuple[str, str, str, str]]:
     """(partition_path, file_id, instant, full_path) for every base file
     on disk — file-group membership comes from the NAME layout."""
     out = []
-    for dirpath, dirnames, files in os.walk(root):
-        if _HOODIE in dirpath:
-            continue
-        dirnames[:] = [d for d in dirnames if d != _HOODIE]
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue
-            stem = name[: -len(".parquet")]
-            parts = stem.split("_")
-            if len(parts) != 3:
-                continue
-            file_id, _token, instant = parts
-            rel_dir = os.path.relpath(dirpath, root)
-            out.append(
-                (
-                    "" if rel_dir == "." else rel_dir,
-                    file_id,
-                    instant,
-                    os.path.join(dirpath, name),
-                )
-            )
+    for part, name, path in _table_files(root):
+        parsed = _parse_base_file(name)
+        if parsed is not None:
+            out.append((part, *parsed, path))
     return out
 
 
-def snapshot_files(root: str, as_of: str | None = None) -> list[str]:
-    """COW snapshot: newest committed base file per file group at or
-    before the as-of instant."""
-    props = _properties(root)
-    ttype = props.get("hoodie.table.type", "COPY_ON_WRITE")
-    if ttype != "COPY_ON_WRITE":
-        raise HudiFormatError(
-            f"table type {ttype}: use sources/hudi_mor.py (log merge) — "
-            "refusing rather than returning base-file-only wrong answers"
-        )
+def _log_files(root: str) -> list[tuple[str, str, str, int, str]]:
+    """(partition_path, file_id, base_instant, version, full_path) for
+    every MERGE_ON_READ log file — membership from the NAME layout:
+    .<fileId>_<baseInstant>.log.<version>_<writeToken>"""
+    out = []
+    for part, name, path in _table_files(root):
+        # a table_core temp file (.<name>.<n>.tmp) is not a log file
+        if name.startswith(".") and ".log." in name and not name.endswith(".tmp"):
+            stem, _, tail = name[1:].partition(".log.")
+            file_id, _, base_instant = stem.rpartition("_")
+            out.append((part, file_id, base_instant, int(tail.split("_")[0]), path))
+    return out
+
+
+def file_slices(root: str, as_of: str | None = None) -> list[dict]:
+    """Per file group: the newest committed base file at or before
+    ``as_of`` plus the log files ATTACHED TO IT (matching baseInstant;
+    a COW slice has none).  Log blocks are instant-filtered at read time
+    (a block whose deltacommit is uncommitted or after ``as_of`` is
+    invisible)."""
     committed = set(completed_instants(root))
+    if as_of is not None:
+        committed = {i for i in committed if i <= as_of}
+    best: dict[tuple[str, str], tuple[str, str]] = {}
+    for part, file_id, instant, path in _base_files(root):
+        if instant not in committed:
+            continue  # uncommitted/in-flight write, invisible
+        key = (part, file_id)
+        if key not in best or instant > best[key][0]:
+            best[key] = (instant, path)
+    logs_by_slice: dict[tuple[str, str, str], list[tuple[int, str]]] = {}
+    for part, file_id, base_instant, version, path in _log_files(root):
+        logs_by_slice.setdefault((part, file_id, base_instant), []).append(
+            (version, path)
+        )
+    return [
+        {
+            "partition": part,
+            "file_id": file_id,
+            "base_instant": instant,
+            "base_file": path,
+            "log_files": [
+                p for _, p in sorted(logs_by_slice.get((part, file_id, instant), []))
+            ],
+        }
+        for (part, file_id), (instant, path) in sorted(best.items())
+    ]
+
+
+def _cow_slices(root: str, as_of: str | None = None) -> list[dict]:
+    """``file_slices`` of a COW snapshot, refusing MERGE_ON_READ tables
+    and time travel behind the cleaner horizon."""
+    _require_type(root, "COPY_ON_WRITE", "a base-file snapshot")
     if as_of is not None:
         horizon = clean_horizon(root)
         # a SAVEPOINTED instant stays readable behind the cleaner
@@ -173,17 +279,13 @@ def snapshot_files(root: str, as_of: str | None = None) -> list[str]:
                 f"({horizon}): the file versions were deleted by a .clean "
                 "action — refusing rather than returning a partial snapshot"
             )
-        committed = {i for i in committed if i <= as_of}
-    if not committed:
-        return []
-    best: dict[tuple[str, str], tuple[str, str]] = {}
-    for part, file_id, instant, path in _base_files(root):
-        if instant not in committed:
-            continue  # uncommitted/in-flight write, invisible
-        key = (part, file_id)
-        if key not in best or instant > best[key][0]:
-            best[key] = (instant, path)
-    return sorted(path for _, path in best.values())
+    return file_slices(root, as_of)
+
+
+def snapshot_files(root: str, as_of: str | None = None) -> list[str]:
+    """COW snapshot: newest committed base file per file group at or
+    before the as-of instant."""
+    return sorted(s["base_file"] for s in _cow_slices(root, as_of))
 
 
 def read_table(
@@ -197,6 +299,21 @@ def read_table(
         raise ValueError(f"no committed snapshot at or before {as_of!r}")
     df = spark.read.parquet(*files)
     return df.drop(*META_COLS) if drop_meta_cols else df
+
+
+def _incremental_end(root: str, begin_instant: str, end_instant: str | None) -> str:
+    """The end of an incremental pull ``(begin, end]``: the newest
+    committed instant unless given."""
+    committed = completed_instants(root)
+    if not committed:
+        raise ValueError("table has no committed instants")
+    if end_instant is None:
+        end_instant = committed[-1]
+    if begin_instant > end_instant:
+        raise ValueError(
+            f"begin {begin_instant!r} is after end {end_instant!r}"
+        )
+    return end_instant
 
 
 def read_incremental(
@@ -219,21 +336,12 @@ def read_incremental(
     only rows with commit time <= i) — an incremental pull off a
     100 TB table reads the recently-written file groups, not the
     table."""
-    committed = sorted(completed_instants(root))
-    if not committed:
-        raise ValueError("table has no committed instants")
-    if end_instant is None:
-        end_instant = committed[-1]
-    if begin_instant > end_instant:
-        raise ValueError(
-            f"begin {begin_instant!r} is after end {end_instant!r}"
-        )
-    files = [
-        p
-        for p in snapshot_files(root, as_of=end_instant)
-        if os.path.basename(p)[: -len(".parquet")].split("_")[2]
-        > begin_instant
-    ]
+    end_instant = _incremental_end(root, begin_instant, end_instant)
+    files = sorted(
+        s["base_file"]
+        for s in _cow_slices(root, as_of=end_instant)
+        if s["base_instant"] > begin_instant
+    )
     if not files:
         return local_frame(
             spark, [], read_table(spark, root, drop_meta_cols=drop_meta_cols).schema
@@ -253,11 +361,19 @@ _WRITE_TOKEN = "0-1-0"
 
 
 def _stage_base_files(
-    df: DataFrame, root: str, instant: str, route_col: str | None, group
+    df: DataFrame,
+    root: str,
+    instant: str,
+    route_col: str | None,
+    group,
+    placed: list[str],
 ) -> dict[str, list]:
     """Stage ``df`` and move each staged segment's ONE file into its file
     group as ``<fid>_0-1-0_<instant>.parquet``; returns the commit's
-    ``partitionToWriteStats``.  With ``route_col`` the write is one
+    ``partitionToWriteStats``.  Each file is placed put-if-absent
+    (``os.link``) and recorded in the attempt's ``placed`` list: a
+    racing writer's base file of the same name is never replaced, the
+    loser gets ``FileExistsError``.  With ``route_col`` the write is one
     ``partitionBy(route_col)`` job over ``repartition(route_col)`` —
     every value's rows land in one task, so one file per segment;
     without it ``coalesce(1)`` writes the single file.  ``group(f)``
@@ -278,14 +394,14 @@ def _stage_base_files(
     else:
         df, by = df.coalesce(1), []
     stats: dict[str, list] = {}
-    placed: set[str] = set()
+    segments: set[str] = set()
     abs_root = os.path.abspath(root)
     for f in table_core.write_staged(df, root, by, write_empty=True):
-        if f.dir in placed:  # repartition guarantees one task per segment
+        if f.dir in segments:  # repartition guarantees one task per segment
             raise HudiFormatError(
                 f"expected one base file for staged segment {f.dir!r}, got more"
             )
-        placed.add(f.dir)
+        segments.add(f.dir)
         part_path, disk_dir, fid = group(f)
         out_dir = os.path.abspath(os.path.join(root, disk_dir))
         if os.path.commonpath([abs_root, out_dir]) != abs_root:
@@ -294,7 +410,9 @@ def _stage_base_files(
             )
         os.makedirs(out_dir, exist_ok=True)
         target = os.path.join(out_dir, f"{fid}_{_WRITE_TOKEN}_{instant}.parquet")
-        shutil.move(f.path, target)
+        os.link(f.path, target)
+        placed.append(target)
+        os.unlink(f.path)
         stats.setdefault(part_path, []).append(
             {
                 "fileId": fid,
@@ -312,6 +430,7 @@ def _insert_file_groups(
     partition_col: str | None,
     instant: str,
     key_col: str,
+    placed: list[str],
 ) -> dict[str, list]:
     """New base file groups for ``df`` in ONE distributed write, with
     the five _hoodie_* meta columns populated the way real Hudi
@@ -354,7 +473,7 @@ def _insert_file_groups(
     )
     if not partition_col:
         return _stage_base_files(
-            with_meta, root, instant, None, lambda f: ("", "", fid)
+            with_meta, root, instant, None, lambda f: ("", "", fid), placed
         )
 
     def group(f):
@@ -364,7 +483,7 @@ def _insert_file_groups(
         return part_path, f.dir[len("__pp=") :], fid
 
     return _stage_base_files(
-        with_meta.withColumn("__pp", pp), root, instant, "__pp", group
+        with_meta.withColumn("__pp", pp), root, instant, "__pp", group, placed
     )
 
 
@@ -396,8 +515,9 @@ def create_table(
     per partition value (or one for the whole table)."""
     _init_table(root, name, "COPY_ON_WRITE", key_col, partition_col)
     instant = _next_instant(root)
-    stats = _insert_file_groups(df, root, partition_col, instant, key_col)
-    _commit_instant(root, instant, stats)
+    with _attempt() as placed:
+        stats = _insert_file_groups(df, root, partition_col, instant, key_col, placed)
+        _commit_instant(root, instant, stats, placed=placed)
     return instant
 
 
@@ -408,6 +528,7 @@ def _rewrite_file_groups(
     hit: list[tuple[str, str, str, str]],
     instant: str,
     key_col: str,
+    placed: list[str],
 ) -> dict[str, list]:
     """ALL matched COW file groups rewritten in ONE distributed job
     (r14 optimization, guide §1.2): one scan over every hit base file,
@@ -484,7 +605,7 @@ def _rewrite_file_groups(
             )
         return by_fid[key_v]
 
-    return _stage_base_files(merged, root, instant, "__fid", group)
+    return _stage_base_files(merged, root, instant, "__fid", group, placed)
 
 
 def upsert(
@@ -497,21 +618,23 @@ def upsert(
     """COW upsert: file groups holding matched record keys are rewritten
     at the new instant (old base files stay for time travel); unmatched
     incoming keys append as a new file group.  Returns the accounting."""
-    files = snapshot_files(root)
-    props = _properties(root)
-    partition_col = props.get("hoodie.table.partition.fields") or None
+    # the instant is taken before the snapshot is read: a write that
+    # commits after this read took the same instant, so one of the two
+    # fails put-if-absent
     instant = _next_instant(root)
+    slices = _cow_slices(root)
+    partition_col = _properties(root).get("hoodie.table.partition.fields") or None
     src = df.alias("s")
     # which file groups hold matched keys? resolve from the meta columns
     # "__hkey" not "k": a user key column literally named after the
     # internal alias must not make the anti-join ambiguous
-    existing = spark.read.parquet(*files).select(
+    existing = spark.read.parquet(*[s["base_file"] for s in slices]).select(
         F.col("_hoodie_record_key").alias("__hkey"),
         F.col("_hoodie_file_name").alias("fname"),
         F.col("_hoodie_partition_path").alias("ppath"),
     )
     hit_groups = {
-        (r.ppath, r.fname.split("_")[0])
+        (r.ppath, _parse_base_file(r.fname)[0])
         for r in existing.join(
             src.select(F.col(key_col).cast("string").alias("__hkey")),
             "__hkey",
@@ -524,36 +647,36 @@ def upsert(
     # on-disk dirs keep the writer-escaped segment; hit_groups /
     # commit stats / meta columns use the RAW partition value
     hit = []
-    for part, file_id, inst, path in _base_files(root):
+    for s in slices:
+        part = s["partition"]
         raw = part if part == "" else (table_core.unescape_path_name(part) or part)
-        if (raw, file_id) not in hit_groups:
-            continue
-        if path not in files:
-            continue  # superseded historical file
-        hit.append((raw, part, file_id, path))
-    rewritten = len(hit)
-    if hit:
-        for raw, wss in _rewrite_file_groups(
-            spark, src, root, hit, instant, key_col
-        ).items():
-            stats.setdefault(raw, []).extend(wss)
+        if (raw, s["file_id"]) in hit_groups:
+            hit.append((raw, part, s["file_id"], s["base_file"]))
     # pure inserts: keys not present anywhere -> one new file group
     new_rows = src.join(
         existing.select("__hkey").distinct(),
         F.col(f"s.{key_col}").cast("string") == F.col("__hkey"),
         "left_anti",
     )
-    n_new = new_rows.count()
-    if n_new:
-        # one distributed write covers every incoming partition value
-        for part, wss in _insert_file_groups(
-            new_rows, root, partition_col, instant, key_col
-        ).items():
-            stats.setdefault(part, []).extend(wss)
-    _commit_instant(root, instant, stats, extra_metadata=extra_metadata)
+    with _attempt() as placed:
+        if hit:
+            for raw, wss in _rewrite_file_groups(
+                spark, src, root, hit, instant, key_col, placed
+            ).items():
+                stats.setdefault(raw, []).extend(wss)
+        n_new = new_rows.count()
+        if n_new:
+            # one distributed write covers every incoming partition value
+            for part, wss in _insert_file_groups(
+                new_rows, root, partition_col, instant, key_col, placed
+            ).items():
+                stats.setdefault(part, []).extend(wss)
+        _commit_instant(
+            root, instant, stats, extra_metadata=extra_metadata, placed=placed
+        )
     return {
         "instant": instant,
-        "file_groups_rewritten": rewritten,
+        "file_groups_rewritten": len(hit),
         "new_rows": n_new,
     }
 
@@ -561,27 +684,8 @@ def upsert(
 # ---------------------------------------------------------------------------
 # table services: cleaner + rollback (Hudi timeline actions .clean /
 # .rollback — the services hudi-client runs to reclaim space and repair
-# failed writes; semantics per the public timeline docs)
-
-
-def _all_timeline_instants(root: str) -> list[str]:
-    """Every completed timeline action's instant (commit/clean/rollback
-    and MOR's deltacommit), so service actions never reuse an instant."""
-    out = []
-    for name in os.listdir(_timeline_dir(root)):
-        stem = name.split(".")[0]
-        if len(stem) == 17 and stem.isdigit() and not name.endswith(
-            (".requested", ".inflight")
-        ):
-            out.append(stem)
-    return sorted(out)
-
-
-def _next_service_instant(root: str) -> str:
-    existing = _all_timeline_instants(root)
-    if not existing:
-        return "20240101000000000"
-    return str(int(existing[-1]) + 1).zfill(17)
+# failed writes; semantics per the public timeline docs).  Each takes
+# its instant from ``_next_instant`` before it edits anything.
 
 
 def clean_horizon(root: str) -> str | None:
@@ -606,9 +710,13 @@ def clean(root: str, retain_file_versions: int = 1) -> dict:
     which time travel refuses (``read_table(as_of=...)`` checks it)
     instead of silently returning a snapshot missing cleaned groups.
     Metadata-only planning: the victim set comes from file NAMES and
-    the timeline, no data reads."""
+    the timeline, no data reads.  COPY_ON_WRITE only: on a
+    MERGE_ON_READ table it would orphan the log files of the base files
+    it deletes."""
     if retain_file_versions < 1:
         raise ValueError("retain_file_versions must be >= 1")
+    _require_type(root, "COPY_ON_WRITE", "clean")
+    instant = _next_instant(root)
     committed = set(completed_instants(root))
     # files pinned by savepoints are NEVER cleaned (Hudi's savepoint
     # contract: the savepointed snapshot stays restorable/readable)
@@ -616,9 +724,9 @@ def clean(root: str, retain_file_versions: int = 1) -> dict:
     for body in _savepoint_bodies(root).values():
         protected |= set(body.get("retainedFiles") or [])
     groups: dict[tuple[str, str], list[tuple[str, str]]] = {}
-    for part, file_id, instant, path in _base_files(root):
-        if instant in committed:
-            groups.setdefault((part, file_id), []).append((instant, path))
+    for part, file_id, fi, path in _base_files(root):
+        if fi in committed:
+            groups.setdefault((part, file_id), []).append((fi, path))
     deleted: list[str] = []
     earliest_retained = None
     for versions in groups.values():
@@ -634,7 +742,6 @@ def clean(root: str, retain_file_versions: int = 1) -> dict:
             # a snapshot read needs EVERY group at a version <= as_of;
             # the binding horizon is the NEWEST oldest-kept instant
             earliest_retained = oldest_kept
-    instant = _next_service_instant(root)
     _three_phase(
         root,
         instant,
@@ -671,12 +778,16 @@ def rollback(root: str, instant: str | None = None) -> dict:
     """ROLLBACK a failed (pending) instant — or, with an explicit
     ``instant``, the LATEST completed commit (Hudi only rolls back from
     the tail of the timeline): delete the base files the write stamped
-    with that instant, clear its timeline markers, and record a
+    with that instant, clear its timeline files, and record a
     completed ``.rollback`` action.  Readers never saw pending files
     (snapshot planning filters to committed instants), so a crash
     rollback is pure garbage collection; rolling back a completed
-    commit rewinds the table to the previous instant."""
+    commit rewinds the table to the previous instant.  COPY_ON_WRITE
+    only, like ``clean``."""
+    _require_type(root, "COPY_ON_WRITE", "rollback")
     tdir = _timeline_dir(root)
+    # taken before the target goes: the target may be the newest instant
+    ri = _next_instant(root)
     if instant is None:
         pend = pending_instants(root)
         if not pend:
@@ -697,14 +808,13 @@ def rollback(root: str, instant: str | None = None) -> dict:
         else:
             raise ValueError(f"unknown instant: {target}")
     deleted = []
-    for part, file_id, fi, path in _base_files(root):
+    for _part, _fid, fi, path in _base_files(root):
         if fi == target:
             os.remove(path)
             deleted.append(os.path.relpath(path, root))
     for name in list(os.listdir(tdir)):
         if name.split(".")[0] == target:
             os.remove(os.path.join(tdir, name))
-    ri = _next_service_instant(root)
     _three_phase(
         root,
         ri,
@@ -725,15 +835,14 @@ def rollback(root: str, instant: str | None = None) -> dict:
 # ---------------------------------------------------------------------------
 # savepoint / restore (Hudi's savepoint(), delete_savepoint(),
 # rollback_to_savepoint() — the table-service trio that makes a snapshot
-# restorable no matter what the cleaner or later writers do)
+# restorable no matter what the cleaner or later writers do), for both
+# table types: a MERGE_ON_READ slice adds its log files
 
 
 def _savepoint_bodies(root: str) -> dict[str, dict]:
     """savepointed commit instant -> completed .savepoint body."""
     out: dict[str, dict] = {}
     tdir = _timeline_dir(root)
-    if not os.path.isdir(tdir):
-        return out
     for name in os.listdir(tdir):
         if name.endswith(".savepoint"):
             with open(os.path.join(tdir, name)) as f:
@@ -748,10 +857,11 @@ def savepoints(root: str) -> list[str]:
 
 
 def savepoint(root: str, instant: str | None = None) -> dict:
-    """SAVEPOINT a committed instant (default: the latest): record a
-    completed ``.savepoint`` timeline action pinning the base files of
-    that snapshot.  The cleaner skips pinned files, time travel to the
-    savepointed instant keeps working behind the clean horizon, and
+    """SAVEPOINT a committed instant (default: the latest commit or
+    deltacommit): record a completed ``.savepoint`` timeline action
+    pinning the base and log files of that snapshot's file slices.
+    The cleaner skips pinned files, time travel to the savepointed
+    instant keeps working behind the clean horizon, and
     ``restore_to_savepoint`` can rewind the table to it.  Planning is
     metadata-only (file NAMES + timeline).  Reference analog: Hudi's
     ``create_savepoint`` call used before risky backfills; gluten scans
@@ -770,10 +880,12 @@ def savepoint(root: str, instant: str | None = None) -> dict:
             f"cannot savepoint {target}: behind the clean horizon "
             f"({horizon}) — its file versions are already deleted"
         )
+    si = _next_instant(root)
     retained = [
-        os.path.relpath(p, root) for p in snapshot_files(root, as_of=target)
+        os.path.relpath(p, root)
+        for s in file_slices(root, as_of=target)
+        for p in (s["base_file"], *s["log_files"])
     ]
-    si = _next_service_instant(root)
     _three_phase(
         root,
         si,
@@ -802,49 +914,61 @@ def delete_savepoint(root: str, instant: str) -> dict:
 
 def restore_to_savepoint(root: str, instant: str) -> dict:
     """RESTORE the table to a savepointed instant: physically delete
-    every base file written by a commit AFTER the savepoint, remove
-    those commits from the timeline, and record a completed
-    ``.restore`` action.  Unlike ``rollback`` (latest commit only),
-    restore rewinds ANY number of commits — the savepoint's pinned
-    files guarantee the target snapshot is complete even if a cleaner
-    ran in between.  This is Hudi's documented disaster-recovery path
-    (``rollback_to_savepoint`` procedure); incremental consumers
-    positioned after the savepoint lose their window, exactly like
-    upstream."""
+    every base file written AFTER the savepoint (compaction outputs
+    included), cut MERGE_ON_READ log files back to their blocks at or
+    before it (``hudi_mor._truncate_logs``: block surgery on a log file
+    appended to across the savepoint), remove the later commits and
+    deltacommits from the timeline, and record a completed ``.restore``
+    action.  Unlike ``rollback`` (latest commit only), restore rewinds
+    ANY number of commits — the savepoint's pinned files guarantee the
+    target snapshot is complete even if a cleaner ran in between.  Cost
+    is O(files + log bytes written since the savepoint).  This is
+    Hudi's documented disaster-recovery path (``rollback_to_savepoint``
+    procedure); incremental consumers positioned after the savepoint
+    lose their window, exactly like upstream."""
     if instant not in _savepoint_bodies(root):
         raise ValueError(
             f"instant {instant!r} is not savepointed — savepoint first "
             "(restore without a savepoint cannot prove the snapshot "
             "is still complete)"
         )
-    committed = completed_instants(root)
-    doomed_commits = [c for c in committed if c > instant]
+    ri = _next_instant(root)
+    doomed = [c for c in completed_instants(root) if c > instant]
     deleted: list[str] = []
     for _part, _fid, fi, path in _base_files(root):
         if fi > instant:
             os.remove(path)
-            deleted.append(os.path.relpath(path, root))
+            deleted.append(path)
+    logs_truncated = 0
+    logs = [path for *_, path in _log_files(root)]
+    if logs:
+        from incubator_gluten_spark.sources.hudi_mor import _truncate_logs
+
+        removed, logs_truncated = _truncate_logs(logs, instant)
+        deleted += removed
     tdir = _timeline_dir(root)
     for name in list(os.listdir(tdir)):
-        stem = name.split(".")[0]
-        if stem in doomed_commits and ".commit" in name:
+        stem, _, rest = name.partition(".")
+        if stem in doomed and rest.split(".")[0] in ("commit", "deltacommit"):
             os.remove(os.path.join(tdir, name))
-    ri = _next_service_instant(root)
+    deleted = sorted(os.path.relpath(p, root) for p in deleted)
     _three_phase(
         root,
         ri,
         "restore",
         {
             "restoredTo": instant,
-            "rolledBackCommits": doomed_commits,
-            "deleted": sorted(deleted),
+            "rolledBackCommits": doomed,
+            "deleted": deleted,
+            "logsTruncated": logs_truncated,
         },
     )
     return {
         "instant": ri,
         "restored_to": instant,
-        "commits_rolled_back": len(doomed_commits),
+        "commits_rolled_back": len(doomed),
         "files_deleted": len(deleted),
+        "logs_truncated": logs_truncated,
     }
 
 

@@ -17,8 +17,13 @@ the gluten-hudi jar this container lacks):
   [record count u32] then per record [length u32][avro binary], the
   record schema carried in the block's SCHEMA header (ordinal 2), the
   commit carried in INSTANT_TIME (ordinal 0);
-* timeline instants ``<instant>.deltacommit`` (three-phase, like the
-  COW module's ``.commit``), compaction as a ``.commit``.
+* timeline instants ``<instant>.deltacommit``, compaction as a
+  ``.commit``.
+
+The timeline (instants, commits, file slices, savepoint and restore)
+belongs to ``hudi_format.py`` and is imported from there; this module
+keeps the log format, the log decode, the MOR upsert and compaction, and
+the log-block surgery (``_truncate_logs``) that restore calls.
 
 No interop partner exists in this container (the jar is absent), so the
 READER is certified the same way the COW module's timeline reader is:
@@ -54,17 +59,25 @@ from pyspark.sql.window import Window
 
 from incubator_gluten_spark.session import local_frame
 from incubator_gluten_spark.sources import table_core
-from incubator_gluten_spark.sources.hudi_format import (
+from incubator_gluten_spark.sources.hudi_format import (  # noqa: F401 — re-exported timeline
     META_COLS,
     _WRITE_TOKEN,
     HudiFormatError,
+    _attempt,
     _base_files,
+    _commit_instant,
+    _incremental_end,
     _init_table,
     _insert_file_groups,
+    _log_files,
+    _next_instant,
     _properties,
+    _require_type,
     _stage_base_files,
-    _three_phase,
-    _timeline_dir,
+    completed_instants,
+    file_slices,
+    restore_to_savepoint,
+    savepoint,
 )
 
 LOG_MAGIC = b"#HUDI#"
@@ -182,97 +195,6 @@ def decode_avro_data_block_content(content: bytes, avro_schema: dict):
 
 
 # ---------------------------------------------------------------------------
-# timeline / file-slice resolution
-
-
-def completed_instants(root: str, actions=(".commit", ".deltacommit")) -> list[str]:
-    out = []
-    for name in os.listdir(_timeline_dir(root)):
-        for a in actions:
-            if name.endswith(a):
-                out.append(name[: -len(a)])
-    return sorted(out)
-
-
-def _next_instant(root: str) -> str:
-    existing = completed_instants(root)
-    if not existing:
-        return "20240101000000000"
-    return str(int(existing[-1]) + 1).zfill(17)
-
-
-def _commit_instant(root: str, instant: str, action: str, stats: dict) -> None:
-    _three_phase(
-        root, instant, action, {"partitionToWriteStats": stats, "operation": action}
-    )
-
-
-def _log_files(root: str) -> list[tuple[str, str, str, int, str]]:
-    """(partition_path, file_id, base_instant, version, full_path) for
-    every log file — membership from the NAME layout:
-    .<fileId>_<baseInstant>.log.<version>_<writeToken>"""
-    out = []
-    for dirpath, dirnames, files in os.walk(root):
-        if os.path.basename(_timeline_dir(root)) in dirpath:
-            continue
-        dirnames[:] = [d for d in dirnames if not d.startswith(".")]
-        for name in files:
-            if not (name.startswith(".") and ".log." in name):
-                continue
-            if name.endswith(".tmp"):
-                continue  # a table_core temp file, not a log file
-            stem, _, tail = name[1:].partition(".log.")
-            file_id, _, base_instant = stem.rpartition("_")
-            version = int(tail.split("_")[0])
-            rel_dir = os.path.relpath(dirpath, root)
-            out.append(
-                (
-                    "" if rel_dir == "." else rel_dir,
-                    file_id,
-                    base_instant,
-                    version,
-                    os.path.join(dirpath, name),
-                )
-            )
-    return out
-
-
-def file_slices(root: str, as_of: str | None = None) -> list[dict]:
-    """Per file group: the newest committed base file at or before
-    ``as_of`` plus the log files ATTACHED TO IT (matching baseInstant).
-    Log blocks are instant-filtered at read time (a block whose
-    deltacommit is uncommitted or after ``as_of`` is invisible)."""
-    committed = set(completed_instants(root))
-    if as_of is not None:
-        committed = {i for i in committed if i <= as_of}
-    best: dict[tuple[str, str], tuple[str, str]] = {}
-    for part, file_id, instant, path in _base_files(root):
-        if instant not in committed:
-            continue
-        key = (part, file_id)
-        if key not in best or instant > best[key][0]:
-            best[key] = (instant, path)
-    slices = []
-    logs_by_slice: dict[tuple[str, str, str], list[tuple[int, str]]] = {}
-    for part, file_id, base_instant, version, path in _log_files(root):
-        logs_by_slice.setdefault((part, file_id, base_instant), []).append(
-            (version, path)
-        )
-    for (part, file_id), (instant, path) in sorted(best.items()):
-        logs = sorted(logs_by_slice.get((part, file_id, instant), []))
-        slices.append(
-            {
-                "partition": part,
-                "file_id": file_id,
-                "base_instant": instant,
-                "base_file": path,
-                "log_files": [p for _, p in logs],
-            }
-        )
-    return slices
-
-
-# ---------------------------------------------------------------------------
 # reader
 
 
@@ -287,9 +209,7 @@ def _latest_rows(
     read_incremental (filters on it), and compact (PRESERVES it
     through the rewrite — the property incremental queries depend
     on)."""
-    props = _properties(root)
-    if props.get("hoodie.table.type") != "MERGE_ON_READ":
-        raise HudiFormatError("not a MERGE_ON_READ table — use hudi_format")
+    props = _require_type(root, "MERGE_ON_READ", "a log-merge read")
     key_col = props["hoodie.table.recordkey.fields"]
     slices = file_slices(root, as_of)
     if not slices:
@@ -351,15 +271,7 @@ def read_incremental(
     the new base files (its ``__instant`` column), exactly like real Hudi —
     an incremental consumer never re-reads a row because a table
     service rewrote it."""
-    committed = sorted(completed_instants(root))
-    if not committed:
-        raise ValueError("table has no committed instants")
-    if end_instant is None:
-        end_instant = committed[-1]
-    if begin_instant > end_instant:
-        raise ValueError(
-            f"begin {begin_instant!r} is after end {end_instant!r}"
-        )
+    end_instant = _incremental_end(root, begin_instant, end_instant)
     rows, data_cols = _latest_rows(spark, root, as_of=end_instant)
     return rows.filter(F.col("__instant") > begin_instant).select(*data_cols)
 
@@ -426,9 +338,10 @@ def create_table(
     the COW module, table type MOR."""
     _init_table(root, name, "MERGE_ON_READ", key_col, partition_col)
     instant = _next_instant(root)
-    # one distributed partitionBy write for every value (r7 verdict #4)
-    stats = _insert_file_groups(df, root, partition_col, instant, key_col)
-    _commit_instant(root, instant, "deltacommit", stats)
+    with _attempt() as placed:
+        # one distributed partitionBy write for every value (r7 verdict #4)
+        stats = _insert_file_groups(df, root, partition_col, instant, key_col, placed)
+        _commit_instant(root, instant, stats, "deltacommit", placed=placed)
     return instant
 
 
@@ -437,12 +350,11 @@ def upsert(spark: SparkSession, df: DataFrame, root: str, key_col: str) -> dict:
     slice — encoded and written on the EXECUTORS (applyInPandas over
     updates grouped by slice; real Hudi writers also write logs from
     tasks); inserts become new base file groups.  No base file is
-    rewritten."""
+    rewritten, and a log file is created exclusively, never appended to
+    or replaced, so a racing writer's log survives."""
     from incubator_gluten_spark.sources.avro import avro_schema_for
 
-    props = _properties(root)
-    if props.get("hoodie.table.type") != "MERGE_ON_READ":
-        raise HudiFormatError("not a MERGE_ON_READ table — use hudi_format")
+    props = _require_type(root, "MERGE_ON_READ", "a log append")
     partition_col = props.get("hoodie.table.partition.fields") or None
     instant = _next_instant(root)
     slices = file_slices(root)
@@ -485,33 +397,38 @@ def upsert(spark: SparkSession, df: DataFrame, root: str, key_col: str) -> dict:
             {HEADER_INSTANT_TIME: instant, HEADER_SCHEMA: schema_json},
             content,
         )
-        name = f".{file_id}_{base_instant}.log.{version}_0-1-0"
+        name = f".{file_id}_{base_instant}.log.{version}_{_WRITE_TOKEN}"
         out_dir = os.path.join(root_abs, part) if part else root_abs
-        with open(os.path.join(out_dir, name), "wb") as f:
+        path = os.path.join(out_dir, name)
+        with open(path, "xb") as f:
             f.write(block)
         return pd.DataFrame(
-            {"part": [part], "file_id": [file_id], "n": [len(rows)]}
+            {"part": [part], "file_id": [file_id], "n": [len(rows)], "path": [path]}
         )
 
-    accounting = (
-        updates.groupBy("__part", "__fname")
-        .applyInPandas(write_log, "part string, file_id string, n bigint")
-        .collect()
-    )
-    stats: dict[str, list] = {}
-    for r in accounting:
-        stats.setdefault(r["part"], []).append(
-            {"fileId": r["file_id"], "numUpdateWrites": r["n"], "log": True}
-        )
     inserts = routed.filter(F.col("__fname").isNull()).select(*data_cols)
-    n_new = inserts.count()
-    if n_new:
-        # one distributed write covers every incoming partition value
-        for part, wss in _insert_file_groups(
-            inserts, root, partition_col, instant, key_col
-        ).items():
-            stats.setdefault(part, []).extend(wss)
-    _commit_instant(root, instant, "deltacommit", stats)
+    stats: dict[str, list] = {}
+    with _attempt() as placed:
+        accounting = (
+            updates.groupBy("__part", "__fname")
+            .applyInPandas(
+                write_log, "part string, file_id string, n bigint, path string"
+            )
+            .collect()
+        )
+        for r in accounting:
+            placed.append(r["path"])
+            stats.setdefault(r["part"], []).append(
+                {"fileId": r["file_id"], "numUpdateWrites": r["n"], "log": True}
+            )
+        n_new = inserts.count()
+        if n_new:
+            # one distributed write covers every incoming partition value
+            for part, wss in _insert_file_groups(
+                inserts, root, partition_col, instant, key_col, placed
+            ).items():
+                stats.setdefault(part, []).extend(wss)
+        _commit_instant(root, instant, stats, "deltacommit", placed=placed)
     return {
         "instant": instant,
         "log_blocks_appended": len(accounting),
@@ -530,9 +447,9 @@ def compact(spark: SparkSession, root: str) -> dict:
     change-invisible to an incremental consumer)."""
     props = _properties(root)
     key_col = props["hoodie.table.recordkey.fields"]
+    instant = _next_instant(root)
     merged, data_cols = _latest_rows(spark, root)
     slices = file_slices(root)
-    instant = _next_instant(root)
     # route merged rows back to their file group via the record key
     base = spark.read.parquet(*[s["base_file"] for s in slices])
     route = base.select(
@@ -577,80 +494,26 @@ def compact(spark: SparkSession, root: str) -> dict:
         disk_dir = os.path.relpath(os.path.dirname(s["base_file"]), root)
         return s["partition"], disk_dir, s["file_id"]
 
-    stats = _stage_base_files(with_meta, root, instant, "__fid", group)
+    with _attempt() as placed:
+        stats = _stage_base_files(with_meta, root, instant, "__fid", group, placed)
+        _commit_instant(root, instant, stats, placed=placed)
     n = sum(len(wss) for wss in stats.values())
-    _commit_instant(root, instant, "commit", stats)
     return {"instant": instant, "file_groups_compacted": n}
 
 
 # ---------------------------------------------------------------------------
-# savepoint / restore (MOR flavor of hudi_format's COW trio: restore
-# must rewind LOG BLOCKS, not just base files)
+# restore's log-block surgery
 
 
-def savepoint(root: str, instant: str | None = None) -> dict:
-    """SAVEPOINT a committed MOR instant (default: the latest commit or
-    deltacommit): records a completed ``.savepoint`` timeline action
-    pinning the base AND log files of the instant's file slices, the
-    anchor ``restore_to_savepoint`` rewinds to.  Shares the COW
-    module's savepoint bookkeeping (one timeline, one body shape), so
-    ``hudi_format.savepoints`` / ``delete_savepoint`` work on both
-    table types."""
-    from incubator_gluten_spark.sources import hudi_format as hf
-
-    committed = completed_instants(root)
-    if not committed:
-        raise ValueError("no completed instants to savepoint")
-    target = committed[-1] if instant is None else instant
-    if target not in committed:
-        raise ValueError(f"instant {target!r} is not a completed instant")
-    if target in hf._savepoint_bodies(root):
-        raise ValueError(f"instant {target!r} is already savepointed")
-    retained: list[str] = []
-    for s in file_slices(root, as_of=target):
-        retained.append(os.path.relpath(s["base_file"], root))
-        retained.extend(
-            os.path.relpath(p, root) for p in s["log_files"]
-        )
-    si = hf._next_service_instant(root)
-    _three_phase(
-        root,
-        si,
-        "savepoint",
-        {"savepointedAt": target, "retainedFiles": sorted(retained)},
-    )
-    return {
-        "instant": si,
-        "savepointed_at": target,
-        "files_retained": len(retained),
-    }
-
-
-def restore_to_savepoint(root: str, instant: str) -> dict:
-    """RESTORE a MOR table to a savepointed instant: delete base files
-    committed after it (including compaction outputs), TRUNCATE log
-    files back to blocks whose deltacommit is at or before it (a log
-    file appended to across the savepoint keeps its earlier blocks and
-    loses the later ones — block surgery, not file deletion), drop the
-    rolled-back instants from the timeline, and record a completed
-    ``.restore`` action.  Cost is O(files + log bytes written since the
-    savepoint) — the log tail, never the table.  Reference analog:
-    Hudi's rollback_to_savepoint on MOR tables (log-block rollback)."""
-    from incubator_gluten_spark.sources import hudi_format as hf
-
-    if instant not in hf._savepoint_bodies(root):
-        raise ValueError(
-            f"instant {instant!r} is not savepointed — savepoint first"
-        )
-    committed = completed_instants(root)
-    doomed = [c for c in committed if c > instant]
+def _truncate_logs(log_paths: list[str], instant: str) -> tuple[list[str], int]:
+    """Cut each log file back to its blocks written at or before
+    ``instant`` — ``hudi_format.restore_to_savepoint``'s MERGE_ON_READ
+    step.  A log file appended to across the savepoint keeps its earlier
+    blocks (block surgery, not file deletion); one left with no block is
+    deleted.  Returns (deleted paths, number of files truncated)."""
     deleted: list[str] = []
-    for _part, _fid, fi, path in _base_files(root):
-        if fi > instant:
-            os.remove(path)
-            deleted.append(os.path.relpath(path, root))
-    logs_truncated = 0
-    for _part, _fid, _bi, _ver, path in _log_files(root):
+    truncated = 0
+    for path in log_paths:
         with open(path, "rb") as f:
             blocks = unpack_log_blocks(f.read())
         kept = [
@@ -662,36 +525,11 @@ def restore_to_savepoint(root: str, instant: str) -> dict:
             continue
         if not kept:
             os.remove(path)
-            deleted.append(os.path.relpath(path, root))
+            deleted.append(path)
         else:
             # atomic: a crash mid-truncation must not tear the log
             table_core.replace(
                 path, b"".join(pack_log_block(t, h, c) for t, h, c in kept)
             )
-            logs_truncated += 1
-    tdir = _timeline_dir(root)
-    for name in list(os.listdir(tdir)):
-        stem = name.split(".")[0]
-        if stem in doomed and (
-            ".commit" in name or ".deltacommit" in name
-        ):
-            os.remove(os.path.join(tdir, name))
-    ri = hf._next_service_instant(root)
-    _three_phase(
-        root,
-        ri,
-        "restore",
-        {
-            "restoredTo": instant,
-            "rolledBackCommits": doomed,
-            "deleted": sorted(deleted),
-            "logsTruncated": logs_truncated,
-        },
-    )
-    return {
-        "instant": ri,
-        "restored_to": instant,
-        "commits_rolled_back": len(doomed),
-        "files_deleted": len(deleted),
-        "logs_truncated": logs_truncated,
-    }
+            truncated += 1
+    return deleted, truncated

@@ -18,7 +18,7 @@ contract Hudi's own DeltaStreamer chains on:
 * record DELETES are invisible to a COW incremental pull (the rewritten
   file group simply lacks the record; real Hudi needs the CDC feature
   for delete capture) — documented parity with hudi's own source;
-* MERGE_ON_READ tables refuse (``snapshot_files`` raises — log-block
+* MERGE_ON_READ tables refuse (the COW snapshot raises — log-block
   merge belongs to sources/hudi_mor.py).
 
 Options: ``startingInstant``, ``maxCommitsPerBatch``.  Base-file pruning
@@ -37,14 +37,14 @@ semantics here are the public incremental-query contract.
 
 from __future__ import annotations
 
-import os
-
 from incubator_gluten_spark.sources.file_stream import (
     FileStreamDataSource,
     FileStreamReader,
 )
 from incubator_gluten_spark.sources.hudi_format import (
     META_COLS,
+    _cow_slices,
+    _parse_base_file,
     completed_instants,
     snapshot_files,
 )
@@ -52,17 +52,11 @@ from incubator_gluten_spark.sources.hudi_format import (
 __all__ = ["HudiStreamDataSource", "register_hudi_stream_source"]
 
 
-def _instant_of(path: str) -> str:
-    """The commit instant in a base-file name
-    (``<file_id>_<write_token>_<instant>.parquet``)."""
-    return os.path.basename(path)[: -len(".parquet")].split("_")[2]
-
-
 def _newest_base_file(files: list[str]) -> str:
     """Newest by the COMMIT INSTANT embedded in the base-file name —
     basenames START with the md5 file_id, so lexicographic max picks an
     arbitrary file group, not the latest write."""
-    return max(files, key=_instant_of)
+    return max(files, key=lambda path: _parse_base_file(path)[1])
 
 
 def _emit_table(path: str, lo: str, hi: str, names: list[str]):
@@ -95,9 +89,9 @@ class _HudiStreamReader(FileStreamReader):
         # name-pruned candidates of the as_of=hi snapshot: timeline and
         # directory walk only, no parquet read
         return [
-            (path, lo, hi, names)
-            for path in snapshot_files(self.root, as_of=hi)
-            if _instant_of(path) > lo
+            (s["base_file"], lo, hi, names)
+            for s in _cow_slices(self.root, as_of=hi)
+            if s["base_instant"] > lo
         ]
 
     @staticmethod

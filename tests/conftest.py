@@ -61,8 +61,9 @@ _SLOW_TESTS: set[str] = {
 
 # oracle-parity cases that stay in the fast tier although their file is
 # slow: one per table log that commits through sources/table_core.py,
-# the Delta commit's retry/conflict, checkpoint and vacuum paths, plus
-# the Iceberg v2 merge and delete-file rewrite commits
+# the Delta commit's retry/conflict, checkpoint and vacuum paths, the
+# Iceberg v2 merge and delete-file rewrite commits, and the Hudi
+# timeline's savepoint/restore on both table types
 _FAST_ORACLE_CASES: set[str] = {
     f"test_query_matches_oracle[{name}]"
     for name in (
@@ -72,6 +73,8 @@ _FAST_ORACLE_CASES: set[str] = {
         "src_iceberg_merge_mor",
         "src_iceberg_rewrite_posdel",
         "src_hudi_services",
+        "src_hudi_savepoint",
+        "src_hudi_mor_savepoint",
         "src_txnlog_conflict",
         "src_txnlog_checkpoint",
         "src_txnlog_vacuum",

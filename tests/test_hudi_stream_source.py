@@ -6,7 +6,6 @@ untouched records."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,14 +14,6 @@ from incubator_gluten_spark.sources import hudi_format as hf
 from incubator_gluten_spark.sources.hudi_stream import (
     register_hudi_stream_source,
 )
-
-BASE = f"/tmp/spark_graft_hudi_stream_{os.getpid()}"
-
-
-def _fresh(name: str) -> str:
-    root = os.path.join(BASE, name)
-    shutil.rmtree(root, ignore_errors=True)
-    return root
 
 
 def _run_available_now(spark, root: str, sink: str, ckpt: str) -> None:
@@ -40,15 +31,13 @@ def _run_available_now(spark, root: str, sink: str, ckpt: str) -> None:
     sq.awaitTermination()
 
 
-def test_checkpoint_resume_delivers_exactly_new_commit(spark):
+def test_checkpoint_resume_delivers_exactly_new_commit(spark, tmp_path):
     """First run delivers the bootstrap commit; after an insert-only
     upsert, resuming from the SAME checkpoint delivers exactly the new
     records — the offset-log exactly-once contract."""
     register_hudi_stream_source(spark)
-    root = _fresh("resume")
+    root = str(tmp_path / "resume")
     sink, ckpt = f"{root}_sink", f"{root}_ckpt"
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     df1 = spark.range(10).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
@@ -66,13 +55,13 @@ def test_checkpoint_resume_delivers_exactly_new_commit(spark):
     assert {r.k for r in got2.collect()} == set(range(15))
 
 
-def test_upsert_delivers_changed_records_only(spark):
+def test_upsert_delivers_changed_records_only(spark, tmp_path):
     """An upsert touching 3 of 10 records delivers exactly those 3 (at
     their NEW values) on the next batch — untouched records of the
     rewritten file group are not re-delivered (commit-time
     preservation, the record-level incremental contract)."""
     register_hudi_stream_source(spark)
-    root = _fresh("changed_only")
+    root = str(tmp_path / "changed_only")
     sink, ckpt = f"{root}_sink", f"{root}_ckpt"
     df1 = spark.range(10).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
@@ -94,11 +83,11 @@ def test_upsert_delivers_changed_records_only(spark):
     assert {r.v for r in rows if r.k == 1} == {2, 1000}
 
 
-def test_max_commits_per_batch_paces_backlog(spark, micro_batch):
+def test_max_commits_per_batch_paces_backlog(spark, micro_batch, tmp_path):
     """Three commits with maxCommitsPerBatch=1: each micro-batch
     advances one instant (paced backlog drain)."""
     register_hudi_stream_source(spark)
-    root = _fresh("paced")
+    root = str(tmp_path / "paced")
     df1 = spark.range(3).select(F.col("id").alias("k"), F.col("id").alias("v"))
     hf.create_table(df1, root, key_col="k")
     for lo in (3, 6):
@@ -126,11 +115,11 @@ def test_max_commits_per_batch_paces_backlog(spark, micro_batch):
     assert list(it) == [] and off2 == off
 
 
-def test_replay_between_offsets_is_deterministic(spark, micro_batch):
+def test_replay_between_offsets_is_deterministic(spark, micro_batch, tmp_path):
     """Re-planning (start, end] replays the same rows the live
     micro-batch delivered — the exactly-once recovery path."""
     register_hudi_stream_source(spark)
-    root = _fresh("replay")
+    root = str(tmp_path / "replay")
     df1 = spark.range(4).select(F.col("id").alias("k"), F.col("id").alias("v"))
     hf.create_table(df1, root, key_col="k")
     hf.upsert(
@@ -151,11 +140,11 @@ def test_replay_between_offsets_is_deterministic(spark, micro_batch):
     assert sorted(r[0] for r in live) == [2, 9]
 
 
-def test_mor_table_refuses(spark, micro_batch):
+def test_mor_table_refuses(spark, micro_batch, tmp_path):
     """A MERGE_ON_READ table refuses at schema/plan time instead of
     returning base-file-only wrong answers."""
     register_hudi_stream_source(spark)
-    root = _fresh("mor_refuse")
+    root = str(tmp_path / "mor_refuse")
     df1 = spark.range(3).select(F.col("id").alias("k"), F.col("id").alias("v"))
     hf.create_table(df1, root, key_col="k")
     props_path = os.path.join(root, ".hoodie", "hoodie.properties")
@@ -186,13 +175,13 @@ def test_newest_base_file_by_instant_not_basename():
     assert max(files, key=os.path.basename) != _newest_base_file(files)
 
 
-def test_partitioned_reader_per_file_and_executor_decode(spark):
+def test_partitioned_reader_per_file_and_executor_decode(spark, tmp_path):
     """One InputPartition per candidate base file; the engine-side
     micro-batch carries one partition per file and the record-level
     commit-time filter runs executor-side."""
     from incubator_gluten_spark.sources.hudi_stream import _HudiStreamReader
 
-    root = _fresh("part_reader")
+    root = str(tmp_path / "part_reader")
     df1 = spark.range(4).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
