@@ -38,10 +38,31 @@ case first and merely *works* on local[N]:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+
+# Per-process scratch roots, each with the pid that registered it: a
+# forked child inherits this dict and its exit handlers, and must not
+# delete its parent's directories when it exits normally.
+_SCRATCH_ROOTS: dict[str, int] = {}
+
+
+def remove_at_exit(path: str) -> None:
+    """Delete ``path`` (a directory this process owns) when the process
+    that calls this exits; safe to call more than once per path."""
+    _SCRATCH_ROOTS[path] = os.getpid()
+
+
+@atexit.register
+def _remove_scratch_roots() -> None:
+    for path, pid in _SCRATCH_ROOTS.items():
+        if pid == os.getpid():
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def _default_cpus() -> int:
@@ -71,6 +92,10 @@ def get_session(
     driver_memory = driver_memory or os.environ.get(
         "SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(24, half_gib))}g"
     )
+
+    warehouse = f"/tmp/spark_graft_warehouse_{os.getpid()}"
+    if "spark.sql.warehouse.dir" not in (extra_conf or {}):
+        remove_at_exit(warehouse)
 
     builder = (
         SparkSession.builder.master(master)
@@ -108,10 +133,9 @@ def get_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # --- managed-table warehouse: /tmp, because the in-memory catalog
         # forgets tables between sessions while their directories persist;
-        # one per process, so two sessions on a host never share a table
-        .config(
-            "spark.sql.warehouse.dir", f"/tmp/spark_graft_warehouse_{os.getpid()}"
-        )
+        # one per process, so two sessions on a host never share a table,
+        # and removed when the process exits
+        .config("spark.sql.warehouse.dir", warehouse)
         # --- determinism / interop
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")

@@ -147,9 +147,7 @@ def _seq_map_df(spark: SparkSession, data: list[tuple]) -> DataFrame:
 # rewrite_data_files runs the debt is unbounded; past the threshold the
 # hint is dropped and AQE sizes the join at runtime (the keys are plain
 # equi / null-safe-equi join keys, so a shuffled hash join is always
-# available — the sequence rule stays the residual either way).  Same
-# defect class and same cure as delta_protocol's
-# _MERGE_CDF_BROADCAST_MAX_FILES gate.
+# available — the sequence rule stays the residual either way).
 _DELETE_BROADCAST_MAX_BYTES = 8 << 20
 
 

@@ -60,7 +60,8 @@ _SLOW_TESTS: set[str] = {
 }
 
 # oracle-parity cases that stay in the fast tier although their file is
-# slow: one per table log that commits through sources/table_core.py,
+# slow: the one Delta MERGE (upsert, clause list, streaming upsert sink),
+# one per table log that commits through sources/table_core.py,
 # the Delta commit's retry/conflict, checkpoint and vacuum paths, the
 # Iceberg v2 merge and delete-file rewrite commits, and the Hudi
 # timeline's savepoint/restore on both table types
@@ -68,6 +69,9 @@ _FAST_ORACLE_CASES: set[str] = {
     f"test_query_matches_oracle[{name}]"
     for name in (
         "src_delta_merge",
+        "src_delta_merge_clauses",
+        "src_txnlog_merge",
+        "stream_delta_upsert_sink",
         "src_iceberg_refs",
         "src_iceberg_mor",
         "src_iceberg_merge_mor",

@@ -16,11 +16,13 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.session import remove_at_exit
 from incubator_gluten_spark.sources import iceberg_format as ice
 from incubator_gluten_spark.sources import iceberg_migrate as mig
 from incubator_gluten_spark.sources.avro import read_container
 
 BASE = f"/tmp/spark_graft_migrate_{os.getpid()}"
+remove_at_exit(BASE)
 
 
 def _fresh(name: str) -> str:

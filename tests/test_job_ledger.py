@@ -3,10 +3,12 @@ built, before its result is executed.  Each job pays planning, stage
 scheduling and JIT warm-up whatever the data size, so a job that comes
 back should fail a test, not only show in a benchmark.  The ceilings are
 the counts the entries launch today: ``src_delta_merge`` its create
-(with the range-layout sampling job) and its merge, ``dp_corpus_to_
-lakehouse`` its one partitioned write; the stream sink's batches run on
-the stream's own thread and job group, and its empty create, replay
-check and ``dp_text_stats`` launch none."""
+(with the range-layout sampling job) and its merge,
+``src_delta_merge_clauses`` the same create and its four-clause merge
+(whose clause metrics ride on the data write instead of a second run
+of the join), ``dp_corpus_to_lakehouse`` its one partitioned write;
+the stream sink's batches run on the stream's own thread and job group,
+and its empty create, replay check and ``dp_text_stats`` launch none."""
 
 from __future__ import annotations
 
@@ -16,6 +18,7 @@ from incubator_gluten_spark.plans import collect_all
 
 BUILD_JOBS = {
     "src_delta_merge": 9,
+    "src_delta_merge_clauses": 9,
     "stream_delta_sink": 0,
     "dp_corpus_to_lakehouse": 3,
     "dp_text_stats": 0,

@@ -12,12 +12,14 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from incubator_gluten_spark.session import remove_at_exit
 from incubator_gluten_spark.sources import delta_protocol as dp
 from incubator_gluten_spark.sources import iceberg_format as ice
 from incubator_gluten_spark.sources import uniform as uf
 from incubator_gluten_spark.sources.avro import read_container
 
 BASE = f"/tmp/spark_graft_uniform_{os.getpid()}"
+remove_at_exit(BASE)
 
 
 def _fresh(name: str) -> str:
